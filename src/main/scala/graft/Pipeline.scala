@@ -104,22 +104,44 @@ object Pipeline {
 
   /** Quarantine predicate shared by both fact flows (reference Pydantic
     * gate, config.py:79-108). */
-  private def validRow: Column =
+  private[graft] def validRow: Column =
     col("quarter_date").isNotNull && Quality.labelValid(col("quarter_label")) &&
       Quality.tickerValid(col("ticker"))
 
+  /** Natural key of both state tables. */
+  private[graft] val StateKeys: Seq[String] = Seq("ticker", "quarter_date")
+
+  /** Intra-batch winner order of each flow. Each covers every non-key
+    * column: rows tying on ALL of them are identical, so the last-write-
+    * wins pick is deterministic even for exact-duplicate batches. */
+  private[graft] val IncomePrecedence: Seq[Column] = Seq(col("revenue").desc_nulls_last,
+    col("eps").desc_nulls_last, col("gross_profit").desc_nulls_last, col("quarter_label").asc)
+  private[graft] val EstimatesPrecedence: Seq[Column] = Seq(
+    col("estimated_revenue").desc_nulls_last, col("estimated_eps").desc_nulls_last,
+    col("analyst_count").desc_nulls_last, col("quarter_label").asc)
+
+  /** The merged state a clean batch produces: the stored rows and the
+    * batch ranked in ONE window over one shuffle on [[StateKeys]] — batch
+    * rows beat stored rows, `precedence` picks among the batch's rows.
+    * Equal to deduplicating the batch first and then upserting it,
+    * because stored keys are unique and `precedence` covers every
+    * non-key column. Missing state = first run; any OTHER read failure
+    * rethrows (an empty bootstrap on a transient error would overwrite
+    * real state).
+    */
+  private[graft] def mergedState(spark: SparkSession, clean: DataFrame, statePath: String,
+                                 precedence: Seq[Column]): DataFrame =
+    Merge.mergeUpsert(Merge.readStateOrEmpty(spark, statePath, clean.schema),
+      clean, StateKeys, precedence)
+
   /** Merge a clean batch into the Parquet state table on the natural key
-    * (last-write-wins, deterministic intra-batch winner). */
+    * (last-write-wins, deterministic intra-batch winner). The read-back
+    * carries the written schema, so it runs no footer-inference job. */
   private def mergeToState(spark: SparkSession, clean: DataFrame, statePath: String,
                            precedence: Seq[Column]): DataFrame = {
-    val keys = Seq("ticker", "quarter_date")
-    val deduped = Merge.lastWriteWins(clean, keys, precedence)
-    // Missing path = first run; any OTHER read failure rethrows (an empty
-    // bootstrap on a transient error would overwrite real state).
-    val current = Merge.readStateOrEmpty(spark, statePath, deduped.schema)
-    val merged = Merge.mergeUpsert(current, deduped, keys)
+    val merged = mergedState(spark, clean, statePath, precedence)
     Sinks.atomicSwapWrite(spark, merged, statePath)
-    spark.read.parquet(statePath)
+    spark.read.schema(merged.schema).parquet(statePath)
   }
 
   /** Run the full income pipeline: normalize bronze, quarantine invalid
@@ -129,21 +151,18 @@ object Pipeline {
   def run(spark: SparkSession, bronzeIncomeDir: String, statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpIncome).json(bronzeIncomeDir)
     val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    // Precedence covers every non-key column: rows tying on ALL of them
-    // are identical, so the last-write-wins pick is deterministic even
-    // for exact-duplicate batches.
-    (mergeToState(spark, clean, statePath,
-      Seq(col("revenue").desc_nulls_last, col("eps").desc_nulls_last,
-        col("gross_profit").desc_nulls_last, col("quarter_label").asc)), bad)
+    (mergeToState(spark, clean, statePath, IncomePrecedence), bad)
   }
 
   /** Full reference flow through the custom DataSourceV2 source
     * (reference main.py:38-75 with extract.py's per-symbol GET as the
-    * extract stage): [[graft.sources.FmpSource]] plans one partition per
-    * symbol and prunes fetches for symbols Spark filters away, then the
-    * same normalize -> quarantine -> merge plan as [[run]]. The ONLY
-    * difference from [[run]] is the source node — the operator layer is
-    * source-agnostic, which is the point of the connector API.
+    * extract stage): [[graft.sources.FmpSource]] packs the symbols into
+    * `min(#symbols, defaultParallelism)` contiguous groups, one task per
+    * group (a failed task re-fetches its whole group), and prunes
+    * fetches for symbols Spark filters away; then the same normalize ->
+    * quarantine -> merge plan as [[run]]. The ONLY difference from
+    * [[run]] is the source node — the operator layer is source-agnostic,
+    * which is the point of the connector API.
     */
   def runFromSource(spark: SparkSession, root: String, symbols: Seq[String],
                     statePath: String): (DataFrame, DataFrame) = {
@@ -152,9 +171,7 @@ object Pipeline {
       .option("symbols", symbols.mkString(","))
       .option("dataset", "income").load()
     val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    (mergeToState(spark, clean, statePath,
-      Seq(col("revenue").desc_nulls_last, col("eps").desc_nulls_last,
-        col("gross_profit").desc_nulls_last, col("quarter_label").asc)), bad)
+    (mergeToState(spark, clean, statePath, IncomePrecedence), bad)
   }
 
   /** Run the analyst-estimates flow (reference S3+S11, load.py:163-200):
@@ -164,8 +181,6 @@ object Pipeline {
                    statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpEstimates).json(bronzeEstimatesDir)
     val (clean, bad) = Quality.quarantine(normalizeEstimates(bronze), validRow)
-    (mergeToState(spark, clean, statePath,
-      Seq(col("estimated_revenue").desc_nulls_last, col("estimated_eps").desc_nulls_last,
-        col("analyst_count").desc_nulls_last, col("quarter_label").asc)), bad)
+    (mergeToState(spark, clean, statePath, EstimatesPrecedence), bad)
   }
 }

@@ -243,9 +243,11 @@ private[graft] object QueriesVector {
     }),
 
     // ---- S1: per-symbol REST extract as a real DataSourceV2 ---------------
-    // graft.sources.FmpSource: one input partition per symbol, required-
-    // column pruning into the record parser, symbol predicates consumed as
-    // partition pruning (the TK4 fetch below never happens). Transport is
+    // graft.sources.FmpSource: the kept symbols packed into min(#symbols,
+    // defaultParallelism) contiguous groups, one task per group (a task
+    // retry re-fetches its group), required-column pruning into the record
+    // parser, symbol predicates consumed before packing (the TK4 fetch
+    // below never happens). Transport is
     // file-backed (no egress in this container); the staged JSONL per
     // sym_part directory is the fixture standing in for the HTTP body.
     // L2 normalization (the standard pre-ANN projection: unit vectors

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -24,14 +25,19 @@ import graft.model.Schemas
   * on the PUBLIC connector API: `TableProvider` -> `ScanBuilder` ->
   * `Batch` -> `PartitionReader`.
   *
-  * Scale shape: ONE input partition PER SYMBOL — each fetch is
-  * independent, so a thousand-symbol extract fans out across the cluster
-  * with no driver bottleneck, and Spark's retry machinery re-fetches a
-  * failed symbol alone. Pushdown is real: required-column pruning reaches
-  * the record parser (unrequested fields are never materialized), and
-  * `symbol = 'X'` / `symbol IN (...)` predicates prune whole partitions
-  * (the fetch for a filtered-out symbol never happens — the source-level
-  * twin of parquet partition pruning).
+  * Scale shape: the symbols left after pruning are PACKED into
+  * `min(#symbols, defaultParallelism)` input partitions — contiguous
+  * groups in the `symbols` option's order — and each task walks its
+  * group one fetch at a time. A task per symbol would pay one scheduling
+  * round per fetch for a few rows each; a task per core keeps every core
+  * fetching with no driver bottleneck. Retry granularity is therefore
+  * per request inside the task (HTTP backoff below) and per GROUP above
+  * it: Spark's task retry re-fetches the failed task's whole group.
+  * Pushdown is real: required-column pruning reaches the record parser
+  * (unrequested fields are never materialized), and `symbol = 'X'` /
+  * `symbol IN (...)` predicates drop symbols before packing (the fetch
+  * for a filtered-out symbol never happens — the source-level twin of
+  * parquet partition pruning).
   *
   * Transport is pluggable and BOTH transports are real:
   *
@@ -39,11 +45,11 @@ import graft.model.Schemas
   *    part files under `{root}/{endpoint}/sym_part=S/`, exactly what
   *    `df.write.partitionBy("sym_part").json(...)` stages.
   *  - `url` option — HTTP: one `GET {url}/{endpoint}/{symbol}` per
-  *    partition from the executor that owns it (the reference's exact
-  *    shape, extract.py:69-95), expecting a JSON array back; empty array
-  *    = symbol with no data (extract.py:88-92); 5xx responses retried
-  *    with backoff before failing the task (and Spark's task retry
-  *    re-fetches the one failed symbol on top). Exercised against a
+  *    symbol from the executor that owns its group (the reference's
+  *    exact shape, extract.py:69-95), expecting a JSON array back; empty
+  *    array = symbol with no data (extract.py:88-92); 5xx responses
+  *    retried with backoff before failing the task (and Spark's task
+  *    retry re-fetches the failed group on top). Exercised against a
   *    loopback [[LoopbackApiServer]] in-container (no egress), and
   *    pointable at any real endpoint outside.
   *
@@ -137,14 +143,22 @@ final class FmpScan(requiredSchema: StructType, opts: Map[String, String],
       case (None, None) =>
         throw new IllegalArgumentException("FmpSource requires option 'root' or 'url'")
     }
-    symbols.filter(s => symbolKeep.forall(_.contains(s)))
-      .map(s => FmpPartition(s, locate(s)): InputPartition)
+    val kept = symbols.distinct.filter(s => symbolKeep.forall(_.contains(s)))
+      .map(s => FmpFetch(s, locate(s))).toSeq
+    // min(#symbols, cores) contiguous groups, sizes differing by at most one.
+    val n = math.min(kept.size, SparkSession.active.sparkContext.defaultParallelism)
+    Array.tabulate[InputPartition](n)(i =>
+      FmpPartition(kept.slice(i * kept.size / n, (i + 1) * kept.size / n)))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new FmpReaderFactory(requiredSchema.fieldNames)
 }
 
-final case class FmpPartition(symbol: String, location: String) extends InputPartition
+/** One symbol's fetch: the symbol and where its records live. */
+final case class FmpFetch(symbol: String, location: String)
+
+/** One read task: a contiguous group of fetches, read in order. */
+final case class FmpPartition(fetches: Seq[FmpFetch]) extends InputPartition
 
 final class FmpReaderFactory(fields: Array[String]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -154,7 +168,8 @@ final class FmpReaderFactory(fields: Array[String]) extends PartitionReaderFacto
 final class FmpPartitionReader(partition: FmpPartition, fields: Array[String])
     extends PartitionReader[InternalRow] {
   private val mapper = new ObjectMapper()
-  private val records = FmpPartitionReader.records(partition.location, mapper)
+  private val records = partition.fetches.iterator
+    .flatMap(f => FmpPartitionReader.records(f.location, mapper))
   private var current: InternalRow = _
 
   override def next(): Boolean = {
@@ -185,14 +200,17 @@ object FmpPartitionReader {
   /** File transport: JSONL lines of every part file under the symbol's
     * staging directory, filename order. A missing directory is an empty
     * response (the reference treats a symbol with no data the same way,
-    * extract.py:88-92).
+    * extract.py:88-92). Each part file is read whole and closed before
+    * the next opens, so a task holds at most one descriptor however many
+    * symbols its group spans.
     */
   private def fileRecords(dir: String, mapper: ObjectMapper): Iterator[JsonNode] = {
     val d = new java.io.File(dir)
     if (!d.isDirectory) Iterator.empty
     else d.listFiles().filter(f => f.isFile && f.getName.startsWith("part-"))
       .sortBy(_.getName).iterator
-      .flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines())
+      .flatMap(f => scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
+        _.getLines().toVector))
       .map(_.trim).filter(_.nonEmpty)
       .map(mapper.readTree)
   }
@@ -211,8 +229,8 @@ object FmpPartitionReader {
     * 429's `Retry-After: <seconds>` header, when present and within the
     * cap, overrides the backoff (an HTTP-date Retry-After is ignored —
     * the linear backoff applies). A task-level failure after the
-    * retries still gets Spark's own task retry, which re-fetches this
-    * one symbol alone.
+    * retries still gets Spark's own task retry, which re-fetches the
+    * task's whole symbol group.
     */
   private def httpRecords(url: String, mapper: ObjectMapper,
                           maxAttempts: Int = 3): Iterator[JsonNode] = {

@@ -50,7 +50,7 @@ final class LoopbackApiServer(root: String, failFirst: Boolean = false,
         case e: Exception => respond(x, 500, e.toString)
       } finally x.close()
   })
-  // A small pool: partitions fetch concurrently (one per symbol), and a
+  // A small pool: partitions fetch concurrently (one per symbol group), and a
   // single-threaded server would serialize the fan-out the source exists
   // to provide. DAEMON threads, explicitly shut down in stop(): the
   // default factory's non-daemon workers would keep the whole JVM alive

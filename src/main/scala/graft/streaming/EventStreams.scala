@@ -162,17 +162,13 @@ object EventStreams {
           force(r)
           report(s"w$wave.$name", (System.nanoTime() - t0) / 1000000L)
           // Probe-mode plan evidence: when spark.graft.probePlanDir names
-          // a directory, each DataFrame stage's formatted plan is dumped
+          // a directory, each Dataset stage's formatted plan is dumped
           // there — how the optimization rounds commit before/after plans
           // for the per-wave fold (the gate's terminal read-back plan
           // cannot show the foreachBatch internals).
           sys.props.get("spark.graft.probePlanDir").foreach { d =>
             r match {
-              case df: DataFrame =>
-                java.nio.file.Files.writeString(
-                  java.nio.file.Path.of(d, s"w$wave.$name.txt"),
-                  df.queryExecution.explainString(
-                    org.apache.spark.sql.execution.FormattedMode))
+              case ds: Dataset[_] => dumpPlan(d, s"w$wave.$name.txt", ds)
               case _ => ()
             }
           }
@@ -228,6 +224,18 @@ object EventStreams {
       })(_ => ())
     } finally scope.close()
   }
+
+  /** Write `ds`'s formatted plan to `dir/file`, creating `dir`. Probe
+    * evidence only: an IO failure is reported and never fails the wave. */
+  private def dumpPlan(dir: String, file: String, ds: Dataset[_]): Unit =
+    try {
+      val d = java.nio.file.Files.createDirectories(java.nio.file.Path.of(dir))
+      java.nio.file.Files.writeString(d.resolve(file),
+        ds.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+    } catch {
+      case e @ (_: java.io.IOException | _: java.nio.file.InvalidPathException) =>
+        System.err.println(s"[probe] plan dump $file to $dir skipped: $e")
+    }
 
   /** Streaming hot-item profiling — the heavy-hitters member of the
     * incremental-state sinks: each micro-batch writes its ONE-ROW

@@ -132,6 +132,70 @@ class PipelineSpec extends SparkSpec {
     assert(a == b && a.size == 3, "source node must be the only difference")
   }
 
+  test("one-shuffle merge folds batches into the state dedup-then-upsert produces") {
+    def row(date: String, sym: String, rev: String, eps: String, gp: String) = {
+      def q(v: String) = if (v == "null") v else s""""$v""""
+      s"""{"date": "$date", "symbol": "$sym", "revenue": ${q(rev)}, "eps": ${q(eps)}, "grossProfit": ${q(gp)}}"""
+    }
+    val batches = Seq(
+      // Bootstrap: an intra-batch duplicate key, a pair tying on every
+      // column, and a revenue-null pair that eps decides.
+      Seq(row("2025-03-31", "TSLA", "21000000000", "0.40", "4000000000"),
+        row("2025-03-31", "TSLA", "21300000000", "0.45", "4100000000"),
+        row("2025-03-31", "RIVN", "1200000000", "-0.50", "100000000"),
+        row("2025-03-31", "RIVN", "1200000000", "-0.50", "100000000"),
+        row("2025-06-30", "LCID", "null", "-0.30", "90000000"),
+        row("2025-06-30", "LCID", "null", "-0.20", "90000000")),
+      // Restatements (a lower revenue still replaces the stored row),
+      // a duplicated restatement, a new key and a quarantined row.
+      Seq(row("2025-03-31", "TSLA", "20900000000", "0.39", "3900000000"),
+        row("2025-03-31", "RIVN", "1250000000", "-0.45", "110000000"),
+        row("2025-03-31", "RIVN", "1240000000", "-0.44", "110000000"),
+        row("2025-06-30", "TSLA", "22500000000", "0.52", "4500000000"),
+        row("invalid-date", "TSLA", "1", "1", "1")),
+      // An unchanged restatement, a null-revenue loser, and a new key
+      // arriving as an exact duplicate pair.
+      Seq(row("2025-06-30", "TSLA", "22500000000", "0.52", "4500000000"),
+        row("2025-06-30", "LCID", "null", "-0.10", "95000000"),
+        row("2025-06-30", "LCID", "800000000", "-0.25", "95000000"),
+        row("2025-09-30", "RIVN", "1500000000", "-0.40", "300000000"),
+        row("2025-09-30", "RIVN", "1500000000", "-0.40", "300000000")))
+    val tmp = Files.createTempDirectory("graft_fold").toString
+    val (stateRun, stateSrc) = (tmp + "/via_run", tmp + "/via_source")
+    def sorted(rows: Seq[org.apache.spark.sql.Row]) = rows.map(_.toSeq).sortBy(_.toString)
+    var expected = Seq.empty[org.apache.spark.sql.Row]
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      val flat = Files.createDirectories(java.nio.file.Paths.get(tmp, s"flat$i"))
+      Files.write(flat.resolve("bronze.json"), rows.mkString("\n").getBytes)
+      val bySymbol = rows.groupBy(r => r.split("\"symbol\": \"")(1).takeWhile(_ != '"'))
+      bySymbol.foreach { case (sym, rs) =>
+        val d = Files.createDirectories(
+          java.nio.file.Paths.get(tmp, s"src$i", "income-statement", s"sym_part=$sym"))
+        Files.write(d.resolve("part-0.json"), rs.mkString("\n").getBytes)
+      }
+      val viaRun = Pipeline.run(spark, flat.toString, stateRun)._1.collect().toSeq
+      val viaSrc = Pipeline.runFromSource(spark, s"$tmp/src$i",
+        bySymbol.keys.toSeq.sorted, stateSrc)._1.collect().toSeq
+      // The two-pass composition the merge replaced: deduplicate the
+      // clean batch, then upsert it into the previous state.
+      val bronze = spark.read.schema(Schemas.fmpIncome).json(flat.toString)
+      val (clean, _) = graft.ops.Quality.quarantine(
+        Pipeline.normalizeIncome(bronze), Pipeline.validRow)
+      val current = spark.createDataFrame(
+        java.util.Arrays.asList(expected: _*), clean.schema)
+      expected = graft.ops.Merge.mergeUpsert(current,
+        graft.ops.Merge.lastWriteWins(clean, Pipeline.StateKeys, Pipeline.IncomePrecedence),
+        Pipeline.StateKeys).collect().toSeq
+      assert(sorted(viaRun) == sorted(expected), s"Pipeline.run, batch $i")
+      assert(sorted(viaSrc) == sorted(expected), s"Pipeline.runFromSource, batch $i")
+    }
+    assert(expected.size == 5)
+    val latest = expected.map(r => (r.getString(0), r.getDate(1).toString) -> r).toMap
+    assert(latest(("TSLA", "2025-03-31")).getDecimal(3) == new java.math.BigDecimal("20900000000.00"))
+    assert(latest(("RIVN", "2025-03-31")).getDecimal(3) == new java.math.BigDecimal("1250000000.00"))
+    assert(latest(("LCID", "2025-06-30")).getDecimal(3) == new java.math.BigDecimal("800000000.00"))
+  }
+
   test("runEstimates: estimates flow merges into its own state table") {
     val dir = Files.createTempDirectory("graft_est").toString
     Files.write(java.nio.file.Paths.get(dir, "est.json"),

@@ -38,6 +38,30 @@ class PlanContractSpec extends SparkSpec {
     assert(p.contains("RunningWindowFunction") || p.contains("Window"))
   }
 
+  test("the pipeline merge ranks state and batch over ONE exchange on the state key") {
+    // Pipeline.mergeToState's plan: deduplicating the batch in its own
+    // window before the upsert would add a second exchange on the key.
+    import spark.implicits._
+    val statePath =
+      java.nio.file.Files.createTempDirectory("pipe_merge_plan").toString + "/state"
+    val bronze = spark.read.schema(graft.model.Schemas.fmpIncome).json(Seq(
+      """{"date": "2025-03-31", "symbol": "TSLA", "revenue": "21300000000", "eps": "0.45"}""",
+      """{"date": "2025-03-31", "symbol": "TSLA", "revenue": "21000000000", "eps": "0.40"}""")
+      .toDS())
+    val (clean, _) = graft.ops.Quality.quarantine(
+      Pipeline.normalizeIncome(bronze), Pipeline.validRow)
+    def merged() = Pipeline.mergedState(spark, clean, statePath, Pipeline.IncomePrecedence)
+    def exchanges(p: String) = "Exchange hashpartitioning\\([^)]*\\)".r.findAllIn(p).toSeq
+    // First run (no state yet), then against the written state.
+    val bootstrap = merged()
+    graft.io.Sinks.atomicSwapWrite(spark, bootstrap, statePath)
+    for (p <- Seq(bootstrap, merged()).map(_.queryExecution.executedPlan.toString)) {
+      val ex = exchanges(p)
+      assert(ex.size == 1, p)
+      assert(ex.head.matches("Exchange hashpartitioning\\(ticker#\\d+, quarter_date#\\d+, \\d+\\)"), p)
+    }
+  }
+
   test("interval_join_sessions is an equi-join, never a nested-loop theta join") {
     val p = plan("interval_join_sessions")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p.take(400))

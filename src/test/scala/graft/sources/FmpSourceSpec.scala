@@ -46,7 +46,43 @@ class FmpSourceSpec extends SparkSpec {
       IsNotNull("revenue")))
     assert(residual.toSeq == Seq(IsNotNull("revenue"))) // symbol filters consumed
     val parts = b.build().asInstanceOf[FmpScan].planInputPartitions()
-    assert(parts.map(_.asInstanceOf[FmpPartition].symbol).toSeq == Seq("BBB"))
+    assert(parts.toSeq.flatMap(_.asInstanceOf[FmpPartition].fetches.map(_.symbol)) == Seq("BBB"))
+  }
+
+  test("symbols pack into at most defaultParallelism contiguous groups, each planned once") {
+    val cores = spark.sparkContext.defaultParallelism
+    val symbols = (0 until 3 * cores + 1).map(i => f"S$i%03d")
+    val pruned = Set("S001", symbols.last)
+    def plan(keep: Seq[String]): Seq[Seq[FmpFetch]] = {
+      val b = new FmpScanBuilder(Schemas.fmpIncome,
+        Map("root" -> "/tmp/x", "endpoint" -> "e", "symbols" -> symbols.mkString(",")))
+      b.pushFilters(Array(In("symbol", keep.toArray[Any])))
+      b.build().asInstanceOf[FmpScan].planInputPartitions()
+        .toSeq.map(_.asInstanceOf[FmpPartition].fetches)
+    }
+    val kept = symbols.filterNot(pruned)
+    val groups = plan(kept)
+    assert(groups.size == cores)
+    // Every kept symbol once, in the option's order; pruned ones never.
+    assert(groups.flatten == kept.map(s => FmpFetch(s, s"/tmp/x/e/sym_part=$s")))
+    assert(groups.map(_.size).max - groups.map(_.size).min <= 1)
+    // The plan is a function of the options: planning again is identical.
+    assert(plan(kept) == groups)
+    // Fewer symbols than cores: one group per symbol.
+    assert(plan(Seq("S002", "S000")).map(_.map(_.symbol)) == Seq(Seq("S000"), Seq("S002")))
+  }
+
+  test("a full read leaves no descriptor open under the staging root") {
+    val root = stage()
+    assert(read(root, "AAA,BBB").collect().length == 3)
+    val real = java.nio.file.Paths.get(root).toRealPath().toString
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    val open = scala.util.Using.resource(java.nio.file.Files.list(fds)) { ls =>
+      import scala.jdk.CollectionConverters._
+      ls.iterator().asScala.toList.flatMap(l =>
+        scala.util.Try(java.nio.file.Files.readSymbolicLink(l).toString).toOption)
+    }.filter(_.startsWith(real))
+    assert(open.isEmpty, open.toString)
   }
 
   test("a symbol with no staged directory is an empty response") {

@@ -211,6 +211,37 @@ class EventStreamsSpec extends SparkSpec {
     assert(deltas200 == 1L)
   }
 
+  test("labelWave: a plan dump dir that cannot be created leaves the wave's output unchanged") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog by the river bank"),
+      (2L, "the quick brown fox jumps over the lazy dog by the river bank"),
+      (3L, "a lone document with its own private vocabulary entirely")).toDF("doc_id", "text")
+    val prop = "spark.graft.probePlanDir"
+    def wave(dumpDir: Option[String]): Set[(Long, Long)] = {
+      val tmp = Files.createTempDirectory("graft_lbl_dump").toString
+      val prev = sys.props.get(prop)
+      dumpDir.foreach(sys.props(prop) = _)
+      try EventStreams.labelWave(docs, "doc_id", "text", 0, tmp + "/index", tmp + "/labels",
+        probeStages = dumpDir.map(_ => (_: String, _: Long) => ()))
+      finally prev match {
+        case Some(v) => sys.props(prop) = v
+        case None => sys.props -= prop
+      }
+      spark.read.parquet(tmp + "/labels").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("rep")).toSet
+    }
+    val plain = wave(None)
+    assert(plain == Set(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    // A regular file where the dump dir's parent should be: creating the
+    // dir fails, and the failure must stay out of the wave.
+    val blocker = Files.createTempFile("graft_dump_blocker", ".txt")
+    assert(wave(Some(blocker.resolve("plans").toString)) == plain)
+    // A dump dir that does not exist yet is created and filled.
+    val fresh = Files.createTempDirectory("graft_dump").resolve("nested/plans")
+    assert(wave(Some(fresh.toString)) == plain)
+    assert(Files.list(fresh).count() > 0)
+  }
+
   test("bm25IndexSink: compaction cadence bounds state files; consolidated index scores like a rebuild") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
