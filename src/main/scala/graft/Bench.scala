@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every contract query against
   * `SPARK_GRAFT_SF_DIR`, forcing full execution through the `noop` sink
   * (unlike `count()`, noop cannot let Catalyst prune the projections being
@@ -74,7 +72,7 @@ object Bench {
   }
 
   /** JSON string literal: escapes backslash, quote, and control chars. */
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -137,23 +135,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Bench mode: incremental gates build their persisted state fixture
-    // once per JVM and reps measure the incremental operator against
-    // pre-existing state (the deployment shape) — see util.StateSeed.
-    // SPARK_GRAFT_NO_SEED restores the rebuild-every-rep behavior;
-    // Verify never seeds, so correctness gates stay self-contained.
-    val seedState = !sys.env.contains("SPARK_GRAFT_NO_SEED")
-    if (seedState) sys.props("spark.graft.seedState") = "1"
     // Captured BEFORE any Spark work: the artifact must describe the host
     // as the measurement found it, not as the suite left it.
     val hostState = hostStateJson()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench seeds state fixtures once per JVM so reps time the incremental
+    // operator (util.StateSeed); SPARK_GRAFT_NO_SEED rebuilds every rep.
+    val spark = GraftSession(cpus, seedState = true)
+    val seedState = GraftConf(spark).seedState
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: JVM/codegen/parquet-footer costs land here, not on the
     // alphabetically-first query.
@@ -161,15 +149,7 @@ object Bench {
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    // Optional comma-separated subset for local iteration
-    // (SPARK_GRAFT_ONLY=corpus_clean,csv_roundtrip); unset = full contract.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in the contract: ${unknown.mkString(", ")}")
-    }
+    val only = GraftSession.onlyGates()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // Median-of-N per query (default 3, SPARK_GRAFT_REPS to override): a

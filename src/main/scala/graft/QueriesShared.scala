@@ -37,13 +37,12 @@ private[graft] object QueriesShared {
     * keeps task retries deterministic. Applied ONLY to multi-stage
     * pipelines that already shuffle; the deliberately shuffle-free
     * scan-side gates (text_*, sampling) keep their zero-exchange shape.
+    * The session's `spark.graft.noWiden` ([[GraftConf]]) restores the
+    * raw scan — the A/B switch for pricing the widening, and the
+    * invariance spec's proof that it never changes a row.
     */
   def widen(s: SparkSession, df: DataFrame): DataFrame = {
-    // SPARK_GRAFT_NO_WIDEN restores the raw scan — the A/B harness for
-    // pricing the widening (and proving result-invariance either way);
-    // the system property is the in-JVM escape for invariance tests.
-    if (sys.env.contains("SPARK_GRAFT_NO_WIDEN") ||
-        sys.props.contains("spark.graft.noWiden")) return df
+    if (GraftConf(s).noWiden) return df
     val cores = s.sparkContext.defaultParallelism
     // Planned-split count as the parallelism proxy (one planner pass over
     // scan metadata, no jobs). Known blind spot (round-17 advice): a
@@ -97,7 +96,8 @@ private[graft] object QueriesShared {
     * [[withShufflePartitions]]) but becomes the bottleneck exactly where
     * the rung is expensive: at sf10 the stream-stream interval join ran
     * 4.1x faster at 32 partitions than at 8 (217.8 -> 52.8 s,
-    * StreamPartsProbe, identical output), because 8 partitions cap the
+    * identical output; SCALE.md "Streaming shuffle partitions sized to
+    * the input"), because 8 partitions cap the
     * stateful stages at a quarter of the box. The rule keeps 8 through
     * sf1 (events 16 MB -> 8) and widens to the core count at sf10
     * (162 MB -> 32) — the local-mode analogue of sizing
@@ -105,23 +105,13 @@ private[graft] object QueriesShared {
     * ~2-3x total cores with AQE coalescing at 100 TB). Partition count
     * never changes results — stateful ops are key-partitioned whatever
     * the count — which is what makes this a pure throughput knob.
+    *
+    * The session's `spark.graft.streamParts` ([[GraftConf]]) overrides
+    * the rule: the small test SFs all resolve to 8, so the widened path
+    * is proven by forcing 32 and re-running the full oracle compare.
     */
-  def streamParts(s: SparkSession, dir: String, table: String = "events"): Int = {
-    // Operator override, and the invariance harness: the small test SFs
-    // all resolve to 8, so the widened path is proven by forcing 32 and
-    // re-running the full oracle compare (every streaming gate must
-    // hash-match DuckDB at BOTH widths — partition count is a throughput
-    // knob precisely because results never depend on it).
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map { v =>
-      // Validated here, not deep inside the first streaming gate: a
-      // non-numeric or non-positive override must name the env var
-      // instead of surfacing as a NumberFormatException or an obscure
-      // Spark shuffle-partition error.
-      val n = v.trim.toIntOption.getOrElse(sys.error(
-        s"SPARK_GRAFT_STREAM_PARTS must be a positive integer, got '$v'"))
-      require(n >= 1, s"SPARK_GRAFT_STREAM_PARTS must be >= 1, got $n")
-      n
-    }.getOrElse {
+  def streamParts(s: SparkSession, dir: String, table: String = "events"): Int =
+    GraftConf(s).streamParts.getOrElse {
       val bytes =
         try {
           val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
@@ -130,7 +120,6 @@ private[graft] object QueriesShared {
         } catch { case _: Throwable => 0L }
       sizeStreamParts(bytes, s.sparkContext.defaultParallelism)
     }
-  }
 
   /** The [[streamParts]] arithmetic, pure for testing:
     * `max(8, min(cores, bytes / 4 MB))` — the 8-partition floor wins
@@ -229,7 +218,7 @@ private[graft] object QueriesShared {
     * never uses this — constructing the labels IS that gate's operator.
     */
   def docClusterLabelTable(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.StateSeed.root("graft_doclabels", dir) { root =>
+    val root = graft.util.StateSeed.root(s, "graft_doclabels", dir) { root =>
       docClusterReps(s, dir).write.parquet(root + "/labels")
     }
     s.read.parquet(root + "/labels")

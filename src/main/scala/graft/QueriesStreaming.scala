@@ -41,7 +41,7 @@ private[graft] object QueriesStreaming {
     */
   private def docWaves(s: SparkSession, dir: String, docs: DataFrame,
                        tag: String, filesPerWave: Int = 1): String =
-    graft.util.StateSeed.root(tag, dir) { root =>
+    graft.util.StateSeed.root(s, tag, dir) { root =>
       Tables.stageWaves(s, docs, pmod(col("doc_id"), lit(2)), 2, tag,
         filesPerWave = filesPerWave, destDir = Some(root))
       ()

@@ -437,7 +437,7 @@ private[graft] object QueriesText {
       import graft.text.Bm25
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val terms = Bm25.queryTerms(Bm25Queries)
-      val root = graft.util.StateSeed.root("graft_bm25", dir) { root =>
+      val root = graft.util.StateSeed.root(s, "graft_bm25", dir) { root =>
         val (tfE, stE) = Bm25.buildIndex(
           docs.where(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text", terms)
         tfE.write.parquet(root + "/tf")
@@ -470,7 +470,7 @@ private[graft] object QueriesText {
       import graft.text.Bm25
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val terms = Bm25.queryTerms(Bm25Queries)
-      val root = graft.util.StateSeed.root("graft_bm25_c", dir) { root =>
+      val root = graft.util.StateSeed.root(s, "graft_bm25_c", dir) { root =>
         def tick(): Seq[graft.ops.Compact.TieredStats] =
           Seq("/tf", "/stats").map { sub =>
             graft.ops.Compact.compactTiered(s, root + sub)
@@ -558,7 +558,7 @@ private[graft] object QueriesText {
       // maintains) runs through StateSeed: fresh per call in Verify,
       // built once per JVM under the bench's seeded mode so reps time
       // the incremental fold, not fixture construction.
-      val root = graft.util.StateSeed.root("graft_incdedup", dir) { root =>
+      val root = graft.util.StateSeed.root(s, "graft_incdedup", dir) { root =>
         val st = Dedup.collapsedIndex(docs.where(pmod(col("doc_id"), lit(2)) === 0),
           "doc_id", "text", n = 3, maxDocFreq = 100L, hashFn = Dedup.Md5Hash60)
         // Persisted state = BOTH halves of the collapsed index.
@@ -584,7 +584,7 @@ private[graft] object QueriesText {
     // asserted inline so a no-op "compaction" fails loudly.
     "dedup_incremental_compacted" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val root = graft.util.StateSeed.root("graft_incdedup_c", dir) { root =>
+      val root = graft.util.StateSeed.root(s, "graft_incdedup_c", dir) { root =>
         val st = Dedup.collapsedIndex(docs.where(pmod(col("doc_id"), lit(2)) === 0),
           "doc_id", "text", n = 3, maxDocFreq = 100L, hashFn = Dedup.Md5Hash60)
         st.repIdx.repartition(48).write.parquet(root + "/rep_index")
@@ -625,7 +625,7 @@ private[graft] object QueriesText {
       // land on disk. Runs through StateSeed — fresh per call in
       // Verify, once per JVM under the bench's seeded mode, so bench
       // reps time the incremental fold, not history-state construction.
-      val root = graft.util.StateSeed.root("graft_inccc", dir) { root =>
+      val root = graft.util.StateSeed.root(s, "graft_inccc", dir) { root =>
         val hist = docs.where(pmod(col("doc_id"), lit(2)) === 0)
         val hc = Dedup.exactCollapse(hist, "doc_id", "text", cache = df => df.persist())
         val hidx = Dedup.countedShingleIndexCollapsed(hc, n = 3, maxDocFreq = 100L,

@@ -107,7 +107,7 @@ private[graft] object QueriesVector {
     // ever re-pairing history.
     "dedup_embedding_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = graft.util.StateSeed.root("graft_incvec", dir) { root =>
+      val root = graft.util.StateSeed.root(s, "graft_incvec", dir) { root =>
         Similarity.lshBucketTable(emb.where(pmod(col("vec_id"), lit(2)) === 0),
             "vec_id", "embedding", dim = 64, nbits = 4, seeds = lshSeeds)
           .write.parquet(root + "/buckets")

@@ -11,6 +11,12 @@ object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The RDD a `checkpoint()`/`localCheckpoint()` result scans (its `LogicalRDD`). */
+  def checkpointedRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.logical.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.get
+
   /** Register a temp function builder on a live session (the function
     * registry sits behind `private[sql] sessionState`). */
   def registerFunction(spark: SparkSession, name: String,

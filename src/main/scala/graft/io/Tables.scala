@@ -264,7 +264,7 @@ object Tables {
     // events table to scratch every rep — cumulative dirty-page churn
     // that arms this box's reclaim storms (SCALE.md round-14) and was
     // the in-JVM monotone rep rise on streaming_join_late.
-    val waveDir = graft.util.StateSeed.root(
+    val waveDir = graft.util.StateSeed.root(spark,
       s"graft_waves_n${nWaves}_$waveKey", dir) { root =>
       // Wave boundaries are computed in NANOS (micros * 1000) even though
       // the normalized column is micros: the DuckDB oracle's replica of the

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.DoubleType
   * executes exactly once. The first form of these audits counted |approx|,
   * |exact| and the intersection as three separate aggregates — three jobs
   * that re-executed the UNPERSISTED pair/top-k pipelines feeding them
-  * (the approx side twice, the exact side twice); RecallSplitProbe
-  * measured that recompute as the stage that kept the SAMPLED audit —
+  * (the approx side twice, the exact side twice); SCALE.md (Text
+  * dedup, "Round-9 audit-cost finding") records that recompute as the stage that kept the SAMPLED audit —
   * the form that runs at 100 TB — at ~80% of the full audit's cost.
   *
   * All ratios are derived from integer counts (hit/total), never from

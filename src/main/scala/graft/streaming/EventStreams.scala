@@ -137,51 +137,25 @@ object EventStreams {
       .start()
 
   /** One wave of the label-maintenance fold — the foreachBatch body of
-    * [[corpusLabelSink]], callable directly so probes (and batch-mode
-    * backfills) can drive waves without the Structured Streaming
-    * machinery and attribute the gate's wall between the fold itself and
-    * micro-batch overhead. `probeStages`, when set, FORCES each stage
-    * (all persisted, so no recompute) and reports (stage, ms) — probe
-    * mode only; the production path stays fully lazy.
+    * [[corpusLabelSink]], callable directly so batch-mode backfills (and
+    * specs) can drive waves without the Structured Streaming machinery.
     */
   def labelWave(batch: DataFrame, idCol: String, textCol: String, wave: Int,
                 stateIndexPath: String, labelsPath: String,
                 threshold: Double = 0.5, maxDocFreq: Long = 100L,
-                hashFn: Column => Column = graft.text.Dedup.Md5Hash60,
-                probeStages: Option[(String, Long) => Unit] = None): Unit = {
+                hashFn: Column => Column = graft.text.Dedup.Md5Hash60): Unit = {
     val spark = batch.sparkSession
     val repIdxPath = stateIndexPath + "/rep_index"
     val membershipPath = stateIndexPath + "/membership"
     val scope = new graft.util.CacheScope
-    def stage[T](name: String)(f: => T)(force: T => Unit): T =
-      probeStages match {
-        case None => f
-        case Some(report) =>
-          val t0 = System.nanoTime()
-          val r = f
-          force(r)
-          report(s"w$wave.$name", (System.nanoTime() - t0) / 1000000L)
-          // Probe-mode plan evidence: when spark.graft.probePlanDir names
-          // a directory, each Dataset stage's formatted plan is dumped
-          // there — how the optimization rounds commit before/after plans
-          // for the per-wave fold (the gate's terminal read-back plan
-          // cannot show the foreachBatch internals).
-          sys.props.get("spark.graft.probePlanDir").foreach { d =>
-            r match {
-              case ds: Dataset[_] => dumpPlan(d, s"w$wave.$name.txt", ds)
-              case _ => ()
-            }
-          }
-          r
-      }
     try {
       // scope.truncate (round-18): same rationale as corpusDedupSink —
       // the wave's index/pairs/prior/fold intermediates are each read by
       // several downstream branches, and the persist-only shape re-paid
       // Catalyst analysis of the whole upstream per consumer.
-      val bi = stage("index")(graft.text.Dedup.collapsedIndex(
+      val bi = graft.text.Dedup.collapsedIndex(
         batch, idCol, textCol, n = 3, maxDocFreq, hashFn,
-        cache = scope.truncate))(b => { b.repIdx.count(); b.membership.count() })
+        cache = scope.truncate)
       def readState(path: String, schema: StructType): DataFrame =
         Merge.readStateOrEmpty(spark, path, schema.add("wave", IntegerType))
           .where(col("wave") < wave).drop("wave")
@@ -193,22 +167,21 @@ object EventStreams {
       val state = graft.text.Dedup.CollapsedIndex(
         readState(repIdxPath, bi.repIdx.schema),
         readState(membershipPath, bi.membership.schema))
-      val pairs = stage("pairs")(scope.truncate(
-        graft.text.Dedup.incrementalNearDupPairsCollapsed(bi, state, threshold)))(
-        _.count())
+      val pairs = scope.truncate(
+        graft.text.Dedup.incrementalNearDupPairsCollapsed(bi, state, threshold))
       val labelSchema = new StructType()
         .add("doc_id", LongType).add("rep", LongType)
       val deltas = Merge.readStateOrEmpty(spark, labelsPath,
           labelSchema.add("wave", IntegerType))
         .where(col("wave") < wave)
-      val prior = stage("prior")(scope.truncate(graft.ops.Windows.topKPerGroup(
-        deltas, Seq("doc_id"), Seq(col("wave").desc), k = 1).drop("wave")))(_.count())
+      val prior = scope.truncate(graft.ops.Windows.topKPerGroup(
+        deltas, Seq("doc_id"), Seq(col("wave").desc), k = 1).drop("wave"))
       // Batch side pre-contracted through its exact-dup membership:
       // the fold iterates over unique batch texts, not batch docs.
-      val updated = stage("fold")(scope.truncate(
+      val updated = scope.truncate(
         graft.text.Dedup.clusterRepresentativesIncrementalCollapsed(
           prior, bi.membership.select(col("doc_id"), col("rep_id")), pairs,
-          cache = scope.persist)))(_.count())
+          cache = scope.persist))
       val changed = updated
         .join(prior.select(col("doc_id"), col("rep").as("_old")), Seq("doc_id"))
         .where(col("rep") =!= col("_old"))
@@ -217,25 +190,11 @@ object EventStreams {
         .join(batch.select(col(idCol).as("doc_id")), Seq("doc_id"))
         .select(col("doc_id"), col("rep"))
         .unionByName(changed)
-      stage("write")({
-        writeWave(delta, labelsPath)
-        writeWave(bi.membership, membershipPath)
-        writeWave(bi.repIdx, repIdxPath)
-      })(_ => ())
+      writeWave(delta, labelsPath)
+      writeWave(bi.membership, membershipPath)
+      writeWave(bi.repIdx, repIdxPath)
     } finally scope.close()
   }
-
-  /** Write `ds`'s formatted plan to `dir/file`, creating `dir`. Probe
-    * evidence only: an IO failure is reported and never fails the wave. */
-  private def dumpPlan(dir: String, file: String, ds: Dataset[_]): Unit =
-    try {
-      val d = java.nio.file.Files.createDirectories(java.nio.file.Path.of(dir))
-      java.nio.file.Files.writeString(d.resolve(file),
-        ds.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
-    } catch {
-      case e @ (_: java.io.IOException | _: java.nio.file.InvalidPathException) =>
-        System.err.println(s"[probe] plan dump $file to $dir skipped: $e")
-    }
 
   /** Streaming hot-item profiling — the heavy-hitters member of the
     * incremental-state sinks: each micro-batch writes its ONE-ROW

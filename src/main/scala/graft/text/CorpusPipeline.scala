@@ -44,7 +44,10 @@ object CorpusPipeline {
     * the per-doc evidence window (and thereby the LM fold's per-group
     * buffer — see [[LanguageModel.unigramSurprisal]]): each doc is
     * scored over its first N tokens, the length tier a web corpus needs
-    * against pathological multi-GB documents.
+    * against pathological multi-GB documents. When both LM tiers are
+    * armed they share one tokenization unless the session sets
+    * `spark.graft.noLmShare` ([[graft.GraftConf]]); rows are identical
+    * either way.
     *
     * `cache` governs the LM/span tf intermediates and the shingle index;
     * the post-exact-dedup frame goes through `exactCache` (default
@@ -79,13 +82,10 @@ object CorpusPipeline {
     // bigram pairs, vocabulary), and post-widening that kernel time is
     // the tier sum's largest term. Scores are bit-identical (same
     // scoring folds, same exact vocabulary count), which
-    // OptimizationInvarianceSpec pins via the escape hatch
-    // (SPARK_GRAFT_NO_LMSHARE env / spark.graft.noLmShare sysprop — also
-    // the A/B harness).
+    // OptimizationInvarianceSpec pins with `noLmShare` on and off.
     val shareLm = !maxSurprisal.isPosInfinity &&
       !maxBigramSurprisal.isPosInfinity &&
-      !sys.env.contains("SPARK_GRAFT_NO_LMSHARE") &&
-      !sys.props.contains("spark.graft.noLmShare")
+      !graft.GraftConf(docs.sparkSession).noLmShare
     val lmTiers: Seq[(Double, DataFrame)] =
       if (shareLm) {
         val (uni, bi) = LanguageModel.sharedSurprisal(
@@ -137,8 +137,9 @@ object CorpusPipeline {
     // action's plan (the formatted plan measured ~1 MB), so Catalyst
     // re-analysis/optimization became a real term of the gate's wall.
     // localCheckpoint materializes the same blocks a persist would AND
-    // cuts the plan to a scan of them. SPARK_GRAFT_NO_PLANCUT restores
-    // the persist-only shape (the A/B harness). Routed through the
+    // cuts the plan to a scan of them. The session's
+    // `spark.graft.noPlanCut` restores the persist-only shape (the A/B
+    // switch; see CacheScope.truncate). Routed through the
     // `exactCache` parameter (default = truncate) so callers managing
     // their own persistence are not force-checkpointed — note that with
     // the default, BUILDING this DataFrame eagerly executes the whole

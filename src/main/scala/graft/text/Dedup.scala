@@ -599,7 +599,8 @@ object Dedup {
     * construction, usually a few thousand edges per wave, and the
     * distributed pointer-jumping loop pays several driver-synchronized
     * Spark jobs PER ROUND for it — measured as the dominant stage of the
-    * streaming label gate (LabelSinkProbe). Below [[SmallGraphEdges]]
+    * streaming label gate (SCALE.md, "Round-9:
+    * `streaming_cluster_labels_live` profiled and cut"). Below [[SmallGraphEdges]]
     * edges a single collect + union-find (union-by-min-root, so every
     * tree's root IS its component's min id; path-halving finds) produces
     * the identical labeling in microseconds. The distributed loop

@@ -39,7 +39,8 @@ object LanguageModel {
     * term-count side loses its small-relation estimate (the join
     * degrades from broadcast to a 25 M-row sort-merge at sf10):
     * measured 229 s end-to-end vs ~21 s with the persist at 500 k docs
-    * (`LmFoldProbe` splits the stages).
+    * (stage split in SCALE.md, "Round-12: `text_lm_surprisal` decade
+    * row, and a measured persist lesson").
     *
     * Memory bound of the per-doc fold: `collect_list(struct(term, lp))`
     * buffers ONE document's DISTINCT-term list on the task that owns
@@ -103,8 +104,8 @@ object LanguageModel {
     val uniTf = cache(tfFromToks(toks))
     val uni = surprisalFromTf(uniTf, docIds)
     // Deliberately NOT materializing `toks` itself: the token projection
-    // of a 100 TB corpus is corpus-sized, and TokenShareProbe (round 16)
-    // measured its cache build+read at or above the recompute cost — so
+    // of a 100 TB corpus is corpus-sized, and round 16 (SCALE.md, "The
+    // shared-tokens economy in corpus_clean") measured its cache build+read at or above the recompute cost — so
     // the two tf builds each re-tokenize (2 passes), while the third
     // pass (the vocabulary) is eliminated for free by counting distinct
     // terms of the already-cached unigram tf (the same exact integer).

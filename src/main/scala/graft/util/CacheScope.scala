@@ -1,7 +1,10 @@
 package graft.util
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.storage.StorageLevel
 
 /** Tracks persisted intermediates so composed pipelines can release them
   * deterministically. The dedup/corpus flows persist multiply-referenced
@@ -16,50 +19,38 @@ import org.apache.spark.sql.DataFrame
   * finally scope.close()
   * }}}
   *
+  * The scope holds one release per thing it took — a persisted frame, or
+  * the handle of a cut — so `close()` frees exactly those and nothing
+  * another caller cached, whatever runs concurrently on the session.
   * The default `CacheScope.untracked` preserves the old behavior (persist
   * with no handle) for one-shot jobs where session teardown reclaims
   * everything anyway.
   */
 final class CacheScope {
-  private val frames = ArrayBuffer.empty[DataFrame]
-  private val rdds = ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+  private val releases = ArrayBuffer.empty[() => Unit]
 
   /** Persist and track `df`; released by [[close]]. */
-  def persist(df: DataFrame): DataFrame = synchronized {
+  def persist(df: DataFrame): DataFrame = {
     val p = df.persist()
-    frames += p
+    synchronized { releases += (() => p.unpersist(false)) }
     p
   }
 
-  /** [[CacheScope.truncate]] with tracked release: the checkpointed
-    * blocks are found by diffing `getPersistentRDDs` around the cut (the
-    * checkpointed RDD is internal to the returned Dataset, so there is
-    * no public handle) and unpersisted by [[close]] like any tracked
-    * persist. The diff assumes no CONCURRENT persists from other threads
-    * of the same SparkContext race this call — true for the micro-batch
-    * sink folds this exists for (one foreachBatch body at a time) and
-    * for the single-threaded query registries; a multi-tenant session
-    * should use untracked [[CacheScope.truncate]] + ContextCleaner
-    * instead. After close() a truncated frame is NOT recomputable
-    * (lineage is cut) — callers must be done with it, the same contract
-    * Bench's between-rep cleanup already imposes.
+  /** [[CacheScope.truncate]], released by [[close]]. After close() a
+    * truncated frame is NOT recomputable (lineage is cut) — callers must
+    * be done with it, the same contract Bench's between-rep cleanup
+    * already imposes.
     */
-  def truncate(df: DataFrame): DataFrame = synchronized {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val c = CacheScope.truncate(df)
-    val added = sc.getPersistentRDDs -- before
-    if (added.nonEmpty) rdds ++= added.values
-    else frames += c // persist-fallback path (noPlanCut): track the frame
+  def truncate(df: DataFrame): DataFrame = {
+    val (c, release) = CacheScope.cut(df)
+    synchronized { releases += release }
     c
   }
 
-  /** Unpersist every tracked frame and RDD (non-blocking), forget them. */
+  /** Run every tracked release (non-blocking), forget them. */
   def close(): Unit = synchronized {
-    frames.foreach(_.unpersist(false))
-    frames.clear()
-    rdds.foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
-    rdds.clear()
+    releases.foreach(r => try r() catch { case NonFatal(_) => () })
+    releases.clear()
   }
 }
 
@@ -75,8 +66,8 @@ object CacheScope {
     * re-analysis, measured as ~25% of `corpus_clean`'s wall with its
     * ~1 MB formatted plan). Blocks are reclaimed by the ContextCleaner
     * when references expire, and Bench's between-rep cleanup unpersists
-    * them like any tracked persist. `SPARK_GRAFT_NO_PLANCUT` restores
-    * the persist-only shape — the A/B harness.
+    * them like any tracked persist. The session's `spark.graft.noPlanCut`
+    * ([[graft.GraftConf]]) restores the persist-only shape — the A/B switch.
     *
     * Fault-tolerance contract: `localCheckpoint` stores blocks
     * executor-locally with lineage CUT, so on a real cluster an executor
@@ -85,28 +76,43 @@ object CacheScope {
     * bench/verify harness (one process, no executor loss short of JVM
     * death) and on static-executor clusters that accept fail-and-retry
     * at the job level; deployments that need recomputability set
-    * `SPARK_GRAFT_RELIABLE_CHECKPOINT` (env or the
-    * `spark.graft.reliableCheckpoint` system property) to route the same
-    * cut through reliable `checkpoint()` — same plan truncation, blocks
-    * on the checkpoint dir (`spark.graft.checkpointDir` sysprop, or a
-    * local scratch dir as the self-contained default) instead of
-    * executor memory. Results are identical in all three modes
+    * `spark.graft.reliableCheckpoint=true` to route the same cut through
+    * reliable `checkpoint()` — same plan truncation, blocks on the
+    * context's checkpoint dir (else `spark.graft.checkpointDir`, else a
+    * local scratch dir) instead of executor memory. The eager checkpoint
+    * job is the only evaluation of the upstream (CacheScopeSpec pins
+    * once per row). Results are identical in all three modes
     * (OptimizationInvarianceSpec pins this).
     */
-  val truncate: DataFrame => DataFrame = (df: DataFrame) =>
-    // The system property is the in-JVM escape (plan-shape tests inspect
-    // the composed, un-truncated plan); the env var is the A/B harness.
-    if (sys.env.contains("SPARK_GRAFT_NO_PLANCUT") ||
-        sys.props.contains("spark.graft.noPlanCut")) df.persist()
-    else if (sys.env.contains("SPARK_GRAFT_RELIABLE_CHECKPOINT") ||
-             sys.props.contains("spark.graft.reliableCheckpoint")) {
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(sys.props.getOrElse("spark.graft.checkpointDir",
-          Scratch.dir("graft_reliable_ckpt")))
-      df.checkpoint()
-    } else df.localCheckpoint()
+  val truncate: DataFrame => DataFrame = (df: DataFrame) => cut(df)._1
 
   /** No caching at all — for callers managing their own persistence. */
   val none: DataFrame => DataFrame = identity
+
+  /** The [[truncate]] result and the release of exactly what it took: the
+    * cut RDD and its checkpoint files, or under noPlanCut the persist
+    * (none if `df` was already cached — that cache is someone else's). */
+  private def cut(df: DataFrame): (DataFrame, () => Unit) = {
+    val conf = graft.GraftConf(df.sparkSession)
+    val sc = df.sparkSession.sparkContext
+    if (conf.noPlanCut) {
+      val owned = df.storageLevel == StorageLevel.NONE
+      val p = df.persist()
+      (p, () => if (owned) { p.unpersist(false); () })
+    } else {
+      val c = if (!conf.reliableCheckpoint) df.localCheckpoint() else {
+        if (sc.getCheckpointDir.isEmpty)
+          sc.setCheckpointDir(conf.checkpointDir.getOrElse(Scratch.dir("graft_reliable_ckpt")))
+        df.checkpoint()
+      }
+      val rdd = GraftShims.checkpointedRdd(c)
+      (c, () => {
+        rdd.unpersist(false)
+        rdd.getCheckpointFile.foreach { f => // reliable mode only
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+        }
+      })
+    }
+  }
 }

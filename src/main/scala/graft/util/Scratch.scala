@@ -8,21 +8,14 @@ import java.util.Comparator
   * scratch dirs live under ONE per-process root that a shutdown hook
   * removes recursively — repeated Bench/Verify loops previously leaked a
   * fresh `/tmp/graft_*` directory per query invocation and never deleted
-  * any of them.
+  * any of them. The root lives under `java.io.tmpdir`; point that at a
+  * specific filesystem (a RAM-backed tmpfs, a fast local SSD on a
+  * cluster node) with `-Djava.io.tmpdir=...`.
   */
 object Scratch {
 
   private lazy val root: Path = {
-    // SPARK_GRAFT_SCRATCH_DIR points scratch at a specific filesystem
-    // (e.g. a RAM-backed tmpfs, or a fast local SSD on a cluster node) —
-    // the per-process root still lives in its own random subdirectory
-    // and is removed on exit. Default: java.io.tmpdir, unchanged.
-    val base = sys.env.get("SPARK_GRAFT_SCRATCH_DIR").map(Path.of(_))
-    base.foreach(Files.createDirectories(_))
-    val r = base match {
-      case Some(b) => Files.createTempDirectory(b, "graft_scratch_")
-      case None    => Files.createTempDirectory("graft_scratch_")
-    }
+    val r = Files.createTempDirectory("graft_scratch_")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(r)))
     r
   }

@@ -11,11 +11,11 @@ package graft.util
   * measures mostly fixture construction (state is rebuilt every rep),
   * which buries the operator cost the benchmark exists to track.
   *
-  * When the `spark.graft.seedState` system property is set (Bench sets
-  * it; Verify never does), `root` builds each (tag, sfDir) state ONCE
-  * per JVM and returns the same on-disk root to later calls — reps then
-  * measure the incremental operator against pre-existing state, the
-  * deployment shape. State construction is deterministic in sfDir, so
+  * When the session passed to `root` has `spark.graft.seedState=true`
+  * ([[graft.GraftConf]]; Bench's session sets it, Verify's never does),
+  * `root` builds each (tag, sfDir) state ONCE per JVM and returns the
+  * same on-disk root to later calls — reps then measure the incremental
+  * operator against pre-existing state, the deployment shape. State construction is deterministic in sfDir, so
   * reuse cannot change any result, only its timing; the bench artifact
   * records `"seeded_state"` so numbers are never compared across modes
   * unknowingly.
@@ -32,8 +32,6 @@ object StateSeed {
     */
   private val touched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def enabled: Boolean = sys.props.contains("spark.graft.seedState")
-
   /** Tags accessed since the previous drain (cleared by the call). */
   def drainTouched(): Seq[String] = {
     import scala.jdk.CollectionConverters._
@@ -43,15 +41,13 @@ object StateSeed {
   }
 
   /** A state root for `tag` at `sfDir`: fresh-built per call normally,
-    * built once and reused when seeding is enabled.
+    * built once and reused when `spark` seeds state.
     */
-  def root(tag: String, sfDir: String)(build: String => Unit): String = {
+  def root(spark: org.apache.spark.sql.SparkSession, tag: String, sfDir: String)(
+      build: String => Unit): String = {
     touched.add(tag)
-    if (!enabled) { val r = Scratch.dir(tag); build(r); r }
-    else cache.computeIfAbsent(s"$tag|$sfDir", _ => {
-      val r = Scratch.dir(tag)
-      build(r)
-      r
-    })
+    def fresh(): String = { val r = Scratch.dir(tag); build(r); r }
+    if (!graft.GraftConf(spark).seedState) fresh()
+    else cache.computeIfAbsent(s"$tag|$sfDir", _ => fresh())
   }
 }

@@ -7,7 +7,7 @@ import graft.SparkSpec
   * (`CacheScope.truncate`), and round-18's shared LM tokenization
   * (`CorpusPipeline`) — are pure throughput changes, so every gate they
   * touch must produce BIT-IDENTICAL rows with the optimizations disabled
-  * through their escape hatches. This pins the claim the A/B harness
+  * through their session switches ([[GraftConf]]). This pins the claim the A/B harness
   * relies on (and the oracle re-proves externally) inside the suite, so a
   * future edit that makes any path result-affecting fails here first.
   */
@@ -19,15 +19,9 @@ class OptimizationInvarianceSpec extends SparkSpec {
     Queries.queries(name)(spark, dir)
       .collect().map(_.toString).sorted.toSeq
 
-  private def withProps[T](props: String*)(f: => T): T = {
-    props.foreach(p => sys.props(p) = "1")
-    try f
-    finally props.foreach { p => sys.props.remove(p); () }
-  }
-
   private def withDisabled[T](f: => T): T =
-    withProps("spark.graft.noWiden", "spark.graft.noPlanCut",
-      "spark.graft.noLmShare")(f)
+    withConf(GraftConf.NoWiden -> "true", GraftConf.NoPlanCut -> "true",
+      GraftConf.NoLmShare -> "true")(f)
 
   // One gate per adopted-optimization family — plus every widened gate
   // (round-17 advice: corpus_filter_report and dedup_ngram_spans_clean
@@ -51,7 +45,7 @@ class OptimizationInvarianceSpec extends SparkSpec {
     test(s"$gate: reliable-checkpoint mode produces identical rows") {
       val local = sortedRows(gate)
       val reliable =
-        withProps("spark.graft.reliableCheckpoint")(sortedRows(gate))
+        withConf(GraftConf.ReliableCheckpoint -> "true")(sortedRows(gate))
       assert(local == reliable,
         s"$gate rows differ between localCheckpoint and reliable checkpoint")
     }

@@ -429,8 +429,7 @@ class PlanContractSpec extends SparkSpec {
     // checkpointed blocks, and the LM tier executes inside the truncated
     // subplan. Pin the LM-tier properties on the COMPOSED plan via the
     // truncation escape hatch, then pin the shipped shape separately.
-    sys.props("spark.graft.noPlanCut") = "1"
-    val composed = try plan("corpus_clean") finally sys.props.remove("spark.graft.noPlanCut")
+    val composed = withConf(GraftConf.NoPlanCut -> "true")(plan("corpus_clean"))
     // Multiply-read frames (post-exact corpus, LM tf) are persisted, not
     // re-derived per consumer (the round-12 lesson: the un-persisted tf
     // composition degraded 10x at sf10).

@@ -22,4 +22,17 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sqlDate(s: String): java.sql.Date = java.sql.Date.valueOf(s)
+
+  /** Run `f` with session confs `kvs` set, restoring each key's prior
+    * value (or its absence) after — [[GraftConf]] switches stay scoped
+    * to the spec that sets them. */
+  def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -17,16 +17,8 @@ class WaveSeedSpec extends SparkSpec {
 
   private val src = "/root/testdata/sf0.001"
 
-  private def withSeeding[T](on: Boolean)(body: => T): T = {
-    val prev = sys.props.get("spark.graft.seedState")
-    if (on) sys.props("spark.graft.seedState") = "1"
-    else sys.props -= "spark.graft.seedState"
-    try body
-    finally prev match {
-      case Some(v) => sys.props("spark.graft.seedState") = v
-      case None => sys.props -= "spark.graft.seedState"
-    }
-  }
+  private def withSeeding[T](on: Boolean)(body: => T): T =
+    withConf(graft.GraftConf.SeedState -> on.toString)(body)
 
   private def deliver(name: String): (Set[Seq[Any]], Int) = {
     val q = Tables.lateWavedEventsStream(spark, src, nWaves = 4)
