@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 
 import graft.model.Schemas
 import graft.ops.{Merge, Normalize, Quality}
-import graft.io.Sinks
 
 /** The flagship end-to-end DAG (reference main.py:38-75, SURVEY.md §3.1),
   * as ONE lazy plan per stage instead of the reference's eager loops:
@@ -120,38 +119,15 @@ object Pipeline {
     col("estimated_revenue").desc_nulls_last, col("estimated_eps").desc_nulls_last,
     col("analyst_count").desc_nulls_last, col("quarter_label").asc)
 
-  /** The merged state a clean batch produces: the stored rows and the
-    * batch ranked in ONE window over one shuffle on [[StateKeys]] — batch
-    * rows beat stored rows, `precedence` picks among the batch's rows.
-    * Equal to deduplicating the batch first and then upserting it,
-    * because stored keys are unique and `precedence` covers every
-    * non-key column. Missing state = first run; any OTHER read failure
-    * rethrows (an empty bootstrap on a transient error would overwrite
-    * real state).
-    */
-  private[graft] def mergedState(spark: SparkSession, clean: DataFrame, statePath: String,
-                                 precedence: Seq[Column]): DataFrame =
-    Merge.mergeUpsert(Merge.readStateOrEmpty(spark, statePath, clean.schema),
-      clean, StateKeys, precedence)
-
-  /** Merge a clean batch into the Parquet state table on the natural key
-    * (last-write-wins, deterministic intra-batch winner). The read-back
-    * carries the written schema, so it runs no footer-inference job. */
-  private def mergeToState(spark: SparkSession, clean: DataFrame, statePath: String,
-                           precedence: Seq[Column]): DataFrame = {
-    val merged = mergedState(spark, clean, statePath, precedence)
-    Sinks.atomicSwapWrite(spark, merged, statePath)
-    spark.read.schema(merged.schema).parquet(statePath)
-  }
-
   /** Run the full income pipeline: normalize bronze, quarantine invalid
-    * rows, merge into the Parquet state table (last-write-wins on the
-    * natural key), and return (loadedState, quarantined).
+    * rows, merge into the Parquet state table ([[Merge.mergeInto]]:
+    * last-write-wins on the natural key, batch rows beat stored rows),
+    * and return (loadedState, quarantined).
     */
   def run(spark: SparkSession, bronzeIncomeDir: String, statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpIncome).json(bronzeIncomeDir)
     val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    (mergeToState(spark, clean, statePath, IncomePrecedence), bad)
+    (Merge.mergeInto(spark, statePath, clean, StateKeys, IncomePrecedence), bad)
   }
 
   /** Full reference flow through the custom DataSourceV2 source
@@ -171,7 +147,7 @@ object Pipeline {
       .option("symbols", symbols.mkString(","))
       .option("dataset", "income").load()
     val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    (mergeToState(spark, clean, statePath, IncomePrecedence), bad)
+    (Merge.mergeInto(spark, statePath, clean, StateKeys, IncomePrecedence), bad)
   }
 
   /** Run the analyst-estimates flow (reference S3+S11, load.py:163-200):
@@ -181,6 +157,6 @@ object Pipeline {
                    statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpEstimates).json(bronzeEstimatesDir)
     val (clean, bad) = Quality.quarantine(normalizeEstimates(bronze), validRow)
-    (mergeToState(spark, clean, statePath, EstimatesPrecedence), bad)
+    (Merge.mergeInto(spark, statePath, clean, StateKeys, EstimatesPrecedence), bad)
   }
 }

@@ -304,9 +304,8 @@ private[graft] object QueriesCore {
       Merge.lastWriteWins(ev.where(col("event_type").isin("click", "view")),
           Seq("user_id", "event_type"), prec)
         .write.partitionBy("event_type").parquet(statePath)
-      Merge.mergeIntoPartitionedState(s, statePath,
-          ev.where(col("event_type") === "purchase"),
-          Seq("user_id", "event_type"), prec, "event_type")
+      Merge.mergeInto(s, statePath, ev.where(col("event_type") === "purchase"),
+          Seq("user_id", "event_type"), prec, partitionCol = Some("event_type"))
         .select(col("user_id"), col("event_type"), col("event_id"), col("ts"), col("value"))
     }),
 

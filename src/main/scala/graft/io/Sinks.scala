@@ -1,8 +1,9 @@
 package graft.io
 
-import java.net.URI
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+
+import graft.ops.Compact
 
 /** Sinks: atomic Parquet state-table swap (the engine's replacement for
   * the reference's transactional upsert, load.py:36-48) and the ordered
@@ -10,36 +11,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Sinks {
 
-  /** Write `df` to `tablePath` via staged swap: write to a `_tmp` sibling,
-    * stage the live table aside to `_old`, rename `_tmp` into place. The
-    * swap is crash-safe for the WRITER — every rename's boolean result is
-    * checked (HDFS/object-store renames report failure by returning
-    * false, not throwing), and a failed publish restores `_old` so the
-    * previous generation survives any single failure. It is NOT atomic
-    * for CONCURRENT readers: there is a window between the two renames
-    * where `tablePath` does not exist — single-writer with reader-retry
-    * is the contract (a real multi-reader deployment wants Delta/Iceberg
-    * or a manifest indirection; SURVEY.md §4).
+  /** Replace the table at `tablePath` with `df` through
+    * [[graft.ops.Compact]]'s swap protocol ([[graft.ops.Compact.swapIn]]):
+    * recover any interrupted earlier swap, write `df` into
+    * `<tablePath>__compact_tmp`, then swap it in behind a manifest (or
+    * publish it directly when no table exists yet). A process death
+    * at any step leaves state the next write or state read
+    * ([[graft.ops.Merge.readStateOrEmpty]]) completes or rolls back, so
+    * the previous generation is never lost. It is NOT atomic for
+    * CONCURRENT readers: between the swap's two directory moves
+    * `tablePath` does not exist — single-writer with reader-retry is the
+    * contract (a real multi-reader deployment wants Delta/Iceberg or a
+    * manifest indirection; SURVEY.md §4).
     */
   def atomicSwapWrite(spark: SparkSession, df: DataFrame, tablePath: String): Unit = {
-    val tmp  = tablePath + "_tmp"
-    val old  = tablePath + "_old"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val fs = FileSystem.get(new URI(tablePath), spark.sparkContext.hadoopConfiguration)
-    val target = new Path(tablePath)
-    val oldP   = new Path(old)
-    if (fs.exists(oldP) && !fs.delete(oldP, true))
-      throw new java.io.IOException(s"atomicSwapWrite: cannot delete stale $old; table unchanged")
-    val hadTarget = fs.exists(target)
-    if (hadTarget && !fs.rename(target, oldP))
-      throw new java.io.IOException(s"atomicSwapWrite: cannot stage $tablePath aside; table unchanged")
-    if (!fs.rename(new Path(tmp), target)) {
-      val restored = !hadTarget || fs.rename(oldP, target)
-      throw new java.io.IOException(
-        s"atomicSwapWrite: cannot publish $tmp over $tablePath; " +
-          (if (restored) "previous generation restored" else s"RESTORE FAILED — recover manually from $old"))
-    }
-    fs.delete(oldP, true)
+    Compact.swapIn(spark, tablePath)(df.write.mode(SaveMode.Overwrite).parquet(_))
     // Invalidate cached file listings so subsequent reads see the new
     // generation. (DataFrames created BEFORE the swap hold the old file
     // list and will fail — swap semantics, same as any non-ACID overwrite;

@@ -13,8 +13,10 @@ import org.apache.spark.sql.SparkSession
   * distributed job, preserving rows, schema, and any hive-style partition
   * layout, then swaps the rewrite in via two directory renames.
   *
-  * Crash-safety contract (all three entry points): original files NEVER
-  * leave the live table tree until the directory swap has completed. The
+  * Crash-safety contract of the engine's one directory swap (all three
+  * entry points, and every whole-table state write through [[swapIn]]):
+  * original files NEVER leave the live table tree until the swap has
+  * completed. The
   * rewrite stages in `<path>__compact_tmp` together with a `_GRAFT_KEEP`
   * manifest naming the untouched files to carry over; the swap renames
   * `<path>` aside to `<path>__compact_old` (the complete original) and
@@ -22,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   * metadata rename, after which `old` and the manifest are removed. A
   * crash at ANY point leaves either the intact original at `<path>` (or
   * whole at `__compact_old`) or a manifest recording exactly which moves
-  * remain — [[recover]] runs at the top of every tick and completes or
+  * remain — [[recover]] runs at the top of every swap and before every
+  * state read ([[graft.ops.Merge.readStateOrEmpty]]) and completes or
   * rolls back the interrupted swap before new work starts, so committed
   * history is never deleted. The swap is still NOT atomic versus
   * concurrent readers (plain parquet dirs have no transaction log):
@@ -126,8 +129,8 @@ object Compact {
   }
 
   /** Completes or rolls back an interrupted swap before a tick starts.
-    * Runs at the top of every entry point; a clean table is a cheap
-    * no-op (two existence checks). The cases, by surviving evidence:
+    * Runs at the top of every swap and state read; a clean table is a
+    * cheap no-op (two existence checks). The cases, by surviving evidence:
     *
     *  - `<path>/_GRAFT_KEEP` exists: the swap-in completed but the
     *    post-swap carry-over was interrupted — finish the manifest's
@@ -146,8 +149,7 @@ object Compact {
     *    swap; it holds only copies, so it is safe to drop.
     */
   private[ops] def recover(fs: FileSystem, p: Path): Unit = {
-    val tmp = new Path(p.toString + "__compact_tmp")
-    val old = new Path(p.toString + "__compact_old")
+    val (tmp, old) = staged(p)
     val manifest = new Path(p, KeepManifest)
     if (fs.exists(p) && fs.exists(manifest)) {
       readManifest(fs, manifest).foreach { case Keep(s, d) =>
@@ -194,16 +196,20 @@ object Compact {
     } else fs.delete(tmp, true)
   }
 
-  /** The directory-level swap shared by all three forms. `tmp` holds the
-    * finished rewrite (copies only — no originals); `moves` are the
+  /** Table `p`'s rewrite dir and staged-aside original. */
+  private def staged(p: Path): (Path, Path) =
+    (new Path(p.toString + "__compact_tmp"), new Path(p.toString + "__compact_old"))
+
+  /** The directory-level swap every rewrite goes through. `tmp` holds
+    * the finished rewrite (copies only — no originals); `moves` are the
     * untouched files to carry over from the staged-aside original AFTER
     * the swap. Writes the manifest, swaps `p -> old, tmp -> p`, then
     * re-homes the kept files by metadata rename and clears `old`. If the
     * swap-in itself fails, `old` is still the complete original and the
     * rollback rename restores it whole.
     */
-  private def stageAndSwap(fs: FileSystem, p: Path, tmp: Path, old: Path,
-                           moves: Seq[Keep]): Unit = {
+  private def stageAndSwap(fs: FileSystem, p: Path, moves: Seq[Keep]): Unit = {
+    val (tmp, old) = staged(p)
     require(!fs.exists(old),
       s"compact: $old exists after recovery — refusing to overwrite history")
     writeManifest(fs, new Path(tmp, KeepManifest), moves)
@@ -222,6 +228,24 @@ object Compact {
     }
     fs.delete(old, true)
     fs.delete(new Path(p, KeepManifest), false)
+  }
+
+  /** Replaces the table at `path` with what `write` stages in the tmp
+    * dir: [[recover]], `write(tmp)`, then [[stageAndSwap]] with no
+    * carry-overs — or one publish rename when no table exists yet (a
+    * crash before it leaves only tmp, which [[recover]] drops). Returns
+    * what `write` returns.
+    */
+  private[graft] def swapIn[T](spark: SparkSession, path: String)(write: String => T): T = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(fs, p)
+    val (tmp, _) = staged(p)
+    val out = write(tmp.toString)
+    if (fs.exists(p)) stageAndSwap(fs, p, Nil)
+    else if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"compact: cannot publish $tmp as $p")
+    out
   }
 
   /** Size-tiered (LSM-style) compaction of an UNPARTITIONED parquet
@@ -255,13 +279,10 @@ object Compact {
         val df = spark.read.parquet(small.map(_.toString): _*)
         val rows = df.count()
         val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-        val tmp = new Path(path + "__compact_tmp")
-        val old = new Path(path + "__compact_old")
-        fs.delete(tmp, true)
+        val (tmp, _) = staged(p)
         df.repartition(nOut).write.mode("overwrite").parquet(tmp.toString)
         val rewritten = listData(fs, tmp).map(_._1.getName)
-        stageAndSwap(fs, p, tmp, old,
-          big.map(f => Keep(f.getName, f.getName)))
+        stageAndSwap(fs, p, big.map(f => Keep(f.getName, f.getName)))
         val after = dataFiles(fs, p)
         val rowsBack = spark.read.parquet(
           rewritten.map(n => new Path(p, n).toString): _*).count()
@@ -329,10 +350,7 @@ object Compact {
       return TieredStats(0L, 0L, before, before, 0, before)
     val smallSet = small.toSet
     val bytes = committed.collect { case (f, len) if smallSet(f) => len }.sum
-    val tmp = new Path(path + "__compact_tmp")
-    val old = new Path(path + "__compact_old")
-    fs.delete(tmp, true)
-    val mergedDir = new Path(tmp, "wave=-1")
+    val mergedDir = new Path(staged(p)._1, "wave=-1")
     val rows =
       if (small.isEmpty) { fs.mkdirs(mergedDir); 0L }
       else {
@@ -354,7 +372,7 @@ object Compact {
       big.map(f => Keep(s"${f.getParent.getName}/${f.getName}",
                         s"wave=-1/${f.getName}")) ++
         currentDirs.map(d => Keep(d.getPath.getName, d.getPath.getName)).toSeq
-    stageAndSwap(fs, p, tmp, old, moves)
+    stageAndSwap(fs, p, moves)
     val after = dataFiles(fs, p)
     if (rewritten.nonEmpty) {
       val rowsBack = spark.read.parquet(
@@ -372,8 +390,7 @@ object Compact {
     * Returns the row count and before/after data-file counts; row count
     * is read back from the REWRITTEN table so the stat doubles as a
     * cheap post-swap sanity check. Full rewrite, zero carry-overs — the
-    * swap uses the same crash-safe [[stageAndSwap]]/[[recover]] protocol
-    * as the tiered forms (with an empty manifest).
+    * same [[swapIn]] the state-table writes go through.
     */
   def compactParquet(spark: SparkSession, path: String,
                      partitionCols: Seq[String] = Nil,
@@ -381,26 +398,24 @@ object Compact {
     require(targetRows > 0, "targetRows must be positive")
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, p)
-    require(fs.exists(p), s"compactParquet: no table at $path")
-    val before = dataFiles(fs, p)
-    val df = spark.read.parquet(path)
-    val rows = df.count()
-    val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-    // Repartition by the partition columns so each hive partition is
-    // written by the tasks that own its rows (no thousand-task fan-out
-    // of tiny files); unpartitioned tables get a plain nOut-way shuffle.
-    val shaped =
-      if (partitionCols.nonEmpty)
-        df.repartition(nOut, partitionCols.map(df.col): _*)
-      else df.repartition(nOut)
-    val tmp = new Path(path + "__compact_tmp")
-    val old = new Path(path + "__compact_old")
-    fs.delete(tmp, true)
-    val writer = shaped.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(tmp.toString)
-    stageAndSwap(fs, p, tmp, old, Nil)
+    val (rows, before) = swapIn(spark, path) { tmp =>
+      require(fs.exists(p), s"compactParquet: no table at $path")
+      val before = dataFiles(fs, p)
+      val df = spark.read.parquet(path)
+      val rows = df.count()
+      val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
+      // Repartition by the partition columns so each hive partition is
+      // written by the tasks that own its rows (no thousand-task fan-out
+      // of tiny files); unpartitioned tables get a plain nOut-way shuffle.
+      val shaped =
+        if (partitionCols.nonEmpty)
+          df.repartition(nOut, partitionCols.map(df.col): _*)
+        else df.repartition(nOut)
+      val writer = shaped.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
+       else writer).parquet(tmp)
+      (rows, before)
+    }
     val after = dataFiles(fs, p)
     val rowsAfter = spark.read.parquet(path).count()
     require(rowsAfter == rows,

@@ -1,9 +1,12 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.io.Sinks
 
 /** MERGE / dedup operators — the reference's most distinctive semantics
   * (SURVEY.md §2.7): last-write-wins upsert on a natural key
@@ -29,50 +32,61 @@ object Merge {
 
   /** MERGE (upsert) of `incoming` into `current` on a natural key
     * (reference load.py:122-154 + schema.sql:30): incoming beats current on
-    * key collision; within each side the caller's `precedence` breaks ties.
+    * key collision; within each side the caller's `precedence` breaks ties
+    * (`incomingWins = false`: across both sides, see [[mergeInto]]).
     * Equivalent to SQL `MERGE ... WHEN MATCHED UPDATE WHEN NOT MATCHED
     * INSERT` with last-write-wins. Returns the merged state.
     */
   def mergeUpsert(current: DataFrame, incoming: DataFrame, keys: Seq[String],
-                  precedence: Seq[Column] = Seq.empty): DataFrame = {
+                  precedence: Seq[Column] = Seq.empty,
+                  incomingWins: Boolean = true): DataFrame = {
     val tagged = current.withColumn("_src", lit(0))
       .unionByName(incoming.withColumn("_src", lit(1)))
-    lastWriteWins(tagged, keys, col("_src").desc +: precedence).drop("_src")
+    val rank = if (incomingWins) col("_src").desc +: precedence else precedence
+    lastWriteWins(tagged, keys, rank).drop("_src")
   }
 
-  /** Partition-scoped MERGE into a hive-partitioned Parquet state table:
-    * only partitions PRESENT IN THE BATCH are read (partition-pruned
-    * scan), merged, and rewritten (dynamic partition overwrite) — merge
-    * cost is proportional to touched partitions, not table size. The
-    * full-table swap ([[graft.io.Sinks.atomicSwapWrite]]) is the fallback
-    * for unpartitioned state; THIS is the form that holds at 100 TB,
-    * where a daily batch touches a handful of date partitions.
-    *
-    * `partitionCol` must be part of every row (it need not be part of
-    * `keys`, but keys must not straddle partitions — the natural key
-    * determines the partition in a sane layout).
-    */
   /** Read an existing state table, or an empty frame ONLY when the path
-    * genuinely does not exist (first run). Every other failure —
+    * genuinely does not exist (first run). An interrupted swap is
+    * recovered first ([[Compact.recover]]), so a table staged aside
+    * mid-swap never reads as a first run. Every other failure —
     * permissions, transient FS error, corrupt footer — rethrows: treating
     * it as "first run" would let the subsequent overwrite replace real
     * state with batch-only contents, which at 100 TB is the incident that
     * deletes a state table.
     */
   private[graft] def readStateOrEmpty(spark: SparkSession, statePath: String,
-                                      schema: StructType): DataFrame =
+                                      schema: StructType): DataFrame = {
+    val p = new Path(statePath)
+    Compact.recover(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
     try spark.read.parquet(statePath)
     catch {
       case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
+  }
 
-  /** `incomingWins = true` (default) is the reference's upsert contract:
+  /** MERGE `incoming` into the Parquet state table at `statePath` — the
+    * one code path that writes merged state: stored and batch rows ranked
+    * in ONE window ([[mergeUpsert]]), written, and read back with the
+    * written schema. The batch needs no dedup of its own: stored keys are
+    * unique, so one window over state ∪ batch picks the winner a batch
+    * dedup first would.
+    *
+    * `incomingWins = true` (default) is the reference's upsert contract:
     * a batch row replaces the stored row for its key outright, with
     * `precedence` breaking ties only WITHIN the batch. `false` ranks
     * state and batch rows together under `precedence` alone — the
     * TOTAL-ORDER form an at-least-once streaming sink needs, where a
     * replayed old wave must never regress a newer stored winner.
+    *
+    * Without `partitionCol` the whole table is swapped
+    * ([[graft.io.Sinks.atomicSwapWrite]]). With it, the merge is
+    * partition-scoped into a hive-partitioned table: only partitions
+    * PRESENT IN THE BATCH are read (partition-pruned scan), merged, and
+    * rewritten (dynamic partition overwrite) — merge cost is proportional
+    * to touched partitions, not table size; THIS is the form that holds
+    * at 100 TB, where a daily batch touches a handful of date partitions.
     *
     * CONTRACT: `partitionCol` must be functionally dependent on `keys`
     * (typically it IS one of them, or a deterministic bucket of one) —
@@ -86,11 +100,25 @@ object Merge {
     * checkable here, and post-dedup batches are one row per key, so a
     * runtime probe could not see a cross-batch violation either.
     */
-  def mergeIntoPartitionedState(spark: SparkSession,
-                                statePath: String, incoming: DataFrame,
-                                keys: Seq[String], precedence: Seq[Column],
-                                partitionCol: String,
-                                incomingWins: Boolean = true): DataFrame = {
+  def mergeInto(spark: SparkSession, statePath: String, incoming: DataFrame,
+                keys: Seq[String], precedence: Seq[Column],
+                incomingWins: Boolean = true,
+                partitionCol: Option[String] = None): DataFrame = {
+    val schema = partitionCol match {
+      case None =>
+        val merged = mergeUpsert(readStateOrEmpty(spark, statePath, incoming.schema),
+          incoming, keys, precedence, incomingWins)
+        Sinks.atomicSwapWrite(spark, merged, statePath)
+        merged.schema
+      case Some(pc) => mergeTouched(spark, statePath, incoming, keys, precedence, incomingWins, pc)
+    }
+    spark.read.schema(schema).parquet(statePath)
+  }
+
+  /** [[mergeInto]]'s partition-scoped layout; returns the written schema. */
+  private def mergeTouched(spark: SparkSession, statePath: String, incoming: DataFrame,
+                           keys: Seq[String], precedence: Seq[Column],
+                           incomingWins: Boolean, partitionCol: String): StructType = {
     // The incoming plan is read THREE times below (touched-partition
     // collect, merge union, staging write) — uncached, a heavy upstream
     // (e.g. a streaming batch dedup) executes three times per merge
@@ -113,11 +141,7 @@ object Merge {
     val current = readStateOrEmpty(spark, statePath, inc.schema)
       .where(touchedPred) // partition-pruned
       .select(inc.columns.map(col): _*)
-    val rank = if (incomingWins) col("_src").desc +: precedence else precedence
-    val merged = lastWriteWins(
-      current.withColumn("_src", lit(0))
-        .unionByName(inc.withColumn("_src", lit(1))),
-      keys, rank).drop("_src")
+    val merged = mergeUpsert(current, inc, keys, precedence, incomingWins)
     // The merged plan READS statePath and the commit below OVERWRITES the
     // same touched partitions: stage the merged rows to a sibling
     // directory and re-read THAT for the overwrite, so the write never
@@ -126,22 +150,15 @@ object Merge {
     // blocks whose release would be GC-driven, and a mid-commit failure
     // leaves the staged copy on disk for recovery. Cost: one extra
     // write+read of the TOUCHED partitions only.
-    val staging = statePath + "_staging"
-    merged.write.mode("overwrite").parquet(staging)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try spark.read.parquet(staging)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(statePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    val staging = new Path(statePath + "_staging")
+    merged.write.mode("overwrite").parquet(staging.toString)
+    spark.read.parquet(staging.toString).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(statePath)
     // Success: drop the staging copy (left in place on failure).
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+    staging.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(staging, true)
     spark.catalog.refreshByPath(statePath)
-    spark.read.parquet(statePath)
+    merged.schema
     } finally inc.unpersist()
   }
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.ops.Merge
-import graft.io.Sinks
 
 /** Structured Streaming operators over the events stream (SURVEY.md §2.10
   * stretch scope): the reference is pure batch, so these are the engine's
@@ -378,33 +377,6 @@ object EventStreams {
         col("purchase_id"), col("purchase_ts"), col("purchase_value"))
   }
 
-  /** Incremental MERGE sink: each micro-batch is last-write-wins-merged
-    * into the Parquet state table on `keys` (streaming O-M1 —
-    * `readStream -> foreachBatch { merge }`, the seam SURVEY.md §2.10
-    * identified). The winner per key is decided by `precedence` (which
-    * must be a total order, e.g. event time desc + unique id desc) across
-    * state AND batch — NOT by arrival order, so replays/out-of-order
-    * micro-batches converge to the same state as a batch dedup over all
-    * events (exactly-once-equivalent semantics on top of an at-least-once
-    * source).
-    */
-  /** Partition-scoped twin of [[mergeSink]] — the form that holds at
-    * 100 TB standing state: each micro-batch reads ONLY the hive
-    * partitions its rows touch (partition-pruned scan) and rewrites only
-    * those (dynamic overwrite), so per-batch cost is proportional to the
-    * touched partitions, never the table ([[mergeSink]]'s full
-    * read + swap is O(history) per batch). Precedence ranks state and
-    * batch rows in ONE total order (`incomingWins = false`), so
-    * at-least-once replays — including an OLD wave replayed after a
-    * newer one — converge to the same winners as the batch LWW dedup
-    * over all events, exactly like the unpartitioned sink. That
-    * convergence claim additionally requires `partitionCol` to be
-    * functionally dependent on `keys` (the gate passes `event_type`,
-    * which IS a key): the partition-pruned state read cannot see a
-    * winner stored under a different partition value, so a key whose
-    * partition could change between waves would be duplicated or
-    * regressed — see [[graft.ops.Merge.mergeIntoPartitionedState]].
-    */
   /** Streaming BM25 retrieval-index maintenance: each micro-batch of
     * documents is tokenized ONCE and appended to the persisted index as
     * a slice — tf rows for the query vocabulary plus one exact-integer
@@ -602,6 +574,17 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .start()
 
+  /** Partition-scoped twin of [[mergeSink]] — the form that holds at
+    * 100 TB standing state: each micro-batch is one
+    * [[graft.ops.Merge.mergeInto]] with `partitionCol`, which reads and
+    * rewrites ONLY the hive partitions the batch touches, so per-batch
+    * cost is proportional to the touched partitions, never the table
+    * ([[mergeSink]]'s full read + swap is O(history) per batch). The same
+    * total order as [[mergeSink]] carries the dedup and the replay
+    * convergence — which here additionally requires `partitionCol` to be
+    * functionally dependent on `keys` (the gate passes `event_type`, which
+    * IS a key; see [[graft.ops.Merge.mergeInto]]'s contract).
+    */
   def mergeSinkPartitioned(stream: DataFrame, statePath: String,
                            keys: Seq[String], precedence: Seq[Column],
                            partitionCol: String,
@@ -610,29 +593,35 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        Merge.mergeIntoPartitionedState(batch.sparkSession, statePath,
-          Merge.lastWriteWins(batch, keys, precedence),
-          keys, precedence, partitionCol, incomingWins = false)
+        Merge.mergeInto(batch.sparkSession, statePath, batch, keys, precedence,
+          incomingWins = false, partitionCol = Some(partitionCol))
         ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
 
+  /** Incremental MERGE sink: each micro-batch is last-write-wins-merged
+    * into the Parquet state table on `keys` by one
+    * [[graft.ops.Merge.mergeInto]] (streaming O-M1 — `readStream ->
+    * foreachBatch { merge }`, the seam SURVEY.md §2.10 identified). The
+    * winner per key is decided by `precedence`, which must be a total
+    * order (e.g. event time desc + unique id desc), over state AND batch
+    * rows in one window (`incomingWins = false`) — NOT by arrival order.
+    * The total order carries the dedup (LWW(state ∪ LWW(batch)) =
+    * LWW(state ∪ batch)), and replays/out-of-order micro-batches converge
+    * to the same state as a batch dedup over all events (exactly-once-
+    * equivalent semantics on top of an at-least-once source), also after
+    * a process death mid-swap (the next batch recovers the swap first).
+    */
   def mergeSink(stream: DataFrame, statePath: String, keys: Seq[String],
                 precedence: Seq[Column], checkpoint: String): StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val deduped = Merge.lastWriteWins(batch, keys, precedence)
-        // Missing path = first micro-batch; any OTHER read failure must
-        // fail the batch (an empty bootstrap on a transient error would
-        // swap real state away) — the retry then re-reads healthy state.
-        val current = Merge.readStateOrEmpty(spark, statePath, deduped.schema)
-        val merged = Merge.lastWriteWins(
-          current.unionByName(deduped), keys, precedence)
-        Sinks.atomicSwapWrite(spark, merged, statePath)
+        Merge.mergeInto(batch.sparkSession, statePath, batch, keys, precedence,
+          incomingWins = false)
+        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -20,6 +20,37 @@ class PlanContractSpec extends SparkSpec {
   private def hasSort(p: String): Boolean =
     p.linesIterator.exists(l => l.matches(".*[+:]- Sort .*") || l.startsWith("Sort "))
 
+  /** Runs `body` and returns the executed plans of the queries it ran
+    * that satisfy `keep`. Listener delivery is async: polls until at
+    * least one kept plan has arrived (or 15 s pass). */
+  private def plansRunBy(keep: String => Boolean)(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      def kept() = plans.iterator().asScala.toSeq.filter(keep)
+      val deadline = System.nanoTime() + 15000000000L
+      while (System.nanoTime() < deadline && kept().isEmpty) Thread.sleep(100)
+      kept()
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** An executed adaptive plan prints its final plan and then its
+    * initial one; keep the final plan only. */
+  private def finalPlan(p: String): String = {
+    val i = p.indexOf("== Final Plan ==")
+    val j = p.indexOf("== Initial Plan ==")
+    if (i < 0) p else p.substring(i, if (j > i) j else p.length)
+  }
+
   test("join_fk_resolve broadcasts the dim side (hinted)") {
     assert(plan("join_fk_resolve").contains("BroadcastHashJoin"))
   }
@@ -39,26 +70,41 @@ class PlanContractSpec extends SparkSpec {
   }
 
   test("the pipeline merge ranks state and batch over ONE exchange on the state key") {
-    // Pipeline.mergeToState's plan: deduplicating the batch in its own
-    // window before the upsert would add a second exchange on the key.
+    // The frame Merge.mergeInto writes: deduplicating the batch in its own
+    // window before ranking it against the state would add a second
+    // exchange on the key. Pinned for the pipeline's incoming-wins upsert
+    // and for the streaming sinks' total order (incomingWins = false).
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val statePath =
-      java.nio.file.Files.createTempDirectory("pipe_merge_plan").toString + "/state"
     val bronze = spark.read.schema(graft.model.Schemas.fmpIncome).json(Seq(
       """{"date": "2025-03-31", "symbol": "TSLA", "revenue": "21300000000", "eps": "0.45"}""",
       """{"date": "2025-03-31", "symbol": "TSLA", "revenue": "21000000000", "eps": "0.40"}""")
       .toDS())
     val (clean, _) = graft.ops.Quality.quarantine(
       Pipeline.normalizeIncome(bronze), Pipeline.validRow)
-    def merged() = Pipeline.mergedState(spark, clean, statePath, Pipeline.IncomePrecedence)
+    val events = Seq((1L, "click", 1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
+      (1L, "click", 2L, java.sql.Timestamp.valueOf("2024-01-01 10:05:00"), 2.0))
+      .toDF("user_id", "event_type", "event_id", "ts", "value")
+    val inputs = Seq(
+      (clean, Pipeline.StateKeys, Pipeline.IncomePrecedence, true),
+      (events, Seq("user_id", "event_type"), Seq(col("ts").desc, col("event_id").desc), false))
     def exchanges(p: String) = "Exchange hashpartitioning\\([^)]*\\)".r.findAllIn(p).toSeq
-    // First run (no state yet), then against the written state.
-    val bootstrap = merged()
-    graft.io.Sinks.atomicSwapWrite(spark, bootstrap, statePath)
-    for (p <- Seq(bootstrap, merged()).map(_.queryExecution.executedPlan.toString)) {
-      val ex = exchanges(p)
-      assert(ex.size == 1, p)
-      assert(ex.head.matches("Exchange hashpartitioning\\(ticker#\\d+, quarter_date#\\d+, \\d+\\)"), p)
+    for ((batch, keys, precedence, incomingWins) <- inputs) {
+      val statePath =
+        java.nio.file.Files.createTempDirectory("pipe_merge_plan").toString + "/state"
+      val keyed = keys.map(k => s"$k#\\d+L?").mkString("Exchange hashpartitioning\\(", ", ", ", \\d+\\)")
+      // First run (no state yet), then against the written state.
+      for (_ <- 1 to 2) {
+        val written = plansRunBy(p => p.contains("InsertIntoHadoopFsRelationCommand") &&
+            p.contains("state__compact_tmp")) {
+          graft.ops.Merge.mergeInto(spark, statePath, batch, keys, precedence, incomingWins)
+        }
+        assert(written.size == 1, written)
+        val p = finalPlan(written.head)
+        val ex = exchanges(p)
+        assert(ex.size == 1, p)
+        assert(ex.head.matches(keyed), p)
+      }
     }
   }
 
@@ -340,53 +386,33 @@ class PlanContractSpec extends SparkSpec {
   }
 
   test("partitioned merge reads state partition-pruned and consumes the persisted batch") {
-    // The 100 TB property of mergeIntoPartitionedState: per-batch cost is
-    // O(touched partitions). The state scan must carry a real partition
-    // filter (pruning at the file index, not a post-scan Filter) and the
-    // incoming side must come back from the persist (InMemoryTableScan),
-    // not a re-execution of its upstream. The touched-only dynamic
-    // overwrite is pinned behaviorally in MergeQualitySpec (untouched
-    // partition files stay byte-identical).
+    // The 100 TB property of Merge.mergeInto's partition-scoped layout:
+    // per-batch cost is O(touched partitions). The state scan must carry
+    // a real partition filter (pruning at the file index, not a post-scan
+    // Filter) and the incoming side must come back from the persist
+    // (InMemoryTableScan), not a re-execution of its upstream. The
+    // touched-only dynamic overwrite is pinned behaviorally in
+    // MergeQualitySpec (untouched partition files stay byte-identical).
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val statePath =
       java.nio.file.Files.createTempDirectory("pmerge_plan").toString + "/state"
     Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0)).toDF("k", "part", "v")
       .write.partitionBy("part").parquet(statePath)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
+    // The staging-write plan is the one that reads state + persisted batch.
+    val mp = plansRunBy(p => p.contains("InMemoryTableScan") && p.contains("PartitionFilters")) {
+      graft.ops.Merge.mergeInto(spark, statePath, batch,
+        Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
     }
-    spark.listenerManager.register(listener)
-    try {
-      val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
-      graft.ops.Merge.mergeIntoPartitionedState(spark, statePath, batch,
-        Seq("k"), Seq(col("v").desc), "part")
-      // Listener delivery is async: poll until the staging-write plan
-      // (the one that reads state + persisted batch) has arrived.
-      def captured(): Seq[String] = {
-        import scala.jdk.CollectionConverters._
-        plans.iterator().asScala.toSeq
-      }
-      def mergePlans(): Seq[String] = captured().filter(p =>
-        p.contains("InMemoryTableScan") && p.contains("PartitionFilters"))
-      val deadline = System.nanoTime() + 15000000000L
-      while (System.nanoTime() < deadline && mergePlans().isEmpty) Thread.sleep(100)
-      val mp = mergePlans()
-      assert(mp.nonEmpty,
-        s"no captured plan combines the persisted batch with a state scan:\n${captured().mkString("\n---\n").take(1200)}")
-      // The state scan's partition filter names the touched value and the
-      // filter bracket is non-empty (a full-scan read would show
-      // `PartitionFilters: []`).
-      assert(mp.exists(p => p.linesIterator.exists(l =>
-          l.contains("PartitionFilters: [") && !l.contains("PartitionFilters: []") &&
-            l.contains("/state") && !l.contains("_staging"))),
-        s"state scan is not partition-pruned:\n${mp.head.take(1200)}")
-    } finally spark.listenerManager.unregister(listener)
+    assert(mp.nonEmpty, "no captured plan combines the persisted batch with a state scan")
+    // The state scan's partition filter names the touched value and the
+    // filter bracket is non-empty (a full-scan read would show
+    // `PartitionFilters: []`).
+    assert(mp.exists(p => p.linesIterator.exists(l =>
+        l.contains("PartitionFilters: [") && !l.contains("PartitionFilters: []") &&
+          l.contains("/state") && !l.contains("_staging"))),
+      s"state scan is not partition-pruned:\n${mp.head.take(1200)}")
   }
 
   test("dedup_prefix_contained: one materialized range partitioning, per-range window, " +

@@ -41,7 +41,7 @@ class MergeQualitySpec extends SparkSpec {
     assert(got == Map("TSLA" -> 1.0, "RIVN" -> 3.0))
   }
 
-  test("mergeIntoPartitionedState rewrites only touched partitions") {
+  test("mergeInto by partition rewrites only touched partitions") {
     val statePath = java.nio.file.Files.createTempDirectory("pmerge").toString + "/state"
     val seed = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0))
       .toDF("k", "part", "v")
@@ -51,8 +51,8 @@ class MergeQualitySpec extends SparkSpec {
       dirA.listFiles().map(f => f.getName -> f.lastModified()).toMap
     }
     val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
-    val merged = Merge.mergeIntoPartitionedState(spark, statePath, batch,
-      Seq("k"), Seq(col("v").desc), "part")
+    val merged = Merge.mergeInto(spark, statePath, batch,
+      Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
     val got = merged.select("k", "part", "v").collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
     assert(got == Map(1L -> (("A", 10.0)), 2L -> (("B", 99.0)),
@@ -64,7 +64,7 @@ class MergeQualitySpec extends SparkSpec {
     assert(filesBefore == filesAfter, "untouched partition files must not be rewritten")
   }
 
-  test("mergeIntoPartitionedState keeps existing null-partition state rows") {
+  test("mergeInto by partition keeps existing null-partition state rows") {
     val statePath = java.nio.file.Files.createTempDirectory("pmerge_null").toString + "/state"
     val seed = Seq((1L, Option("A"), 10.0), (2L, Option.empty[String], 20.0),
       (3L, Option.empty[String], 30.0)).toDF("k", "part", "v")
@@ -73,8 +73,8 @@ class MergeQualitySpec extends SparkSpec {
     // (k=2, k=3) must survive the merge — isin(null) alone would drop
     // them while dynamic overwrite still rewrites the default partition.
     val batch = Seq((2L, Option.empty[String], 99.0)).toDF("k", "part", "v")
-    val merged = Merge.mergeIntoPartitionedState(spark, statePath, batch,
-      Seq("k"), Seq(col("v").desc), "part")
+    val merged = Merge.mergeInto(spark, statePath, batch,
+      Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
     val got = merged.select("k", "v").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0))

@@ -160,9 +160,9 @@ class EventStreamsSpec extends SparkSpec {
       (1L, "click") -> (3L, 7.0), (2L, "view") -> (2L, 5.0)))
     // At-least-once worst case: the OLD wave replays AFTER the newer one.
     // Total-order precedence (incomingWins = false) must keep event 3.
-    graft.ops.Merge.mergeIntoPartitionedState(spark, statePath,
+    graft.ops.Merge.mergeInto(spark, statePath,
       Seq(event(1, "2024-01-01 10:00:00", 1, "click", 1.0)).toDF(),
-      keys, prec, "event_type", incomingWins = false)
+      keys, prec, incomingWins = false, partitionCol = Some("event_type"))
     assert(state() == afterWaves, "replayed old wave regressed the state")
   }
 
