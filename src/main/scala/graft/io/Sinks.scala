@@ -7,25 +7,31 @@ import graft.ops.Compact
 
 /** Sinks: atomic Parquet state-table swap (the engine's replacement for
   * the reference's transactional upsert, load.py:36-48) and the ordered
-  * single-file CSV export (transform.py:281-289).
+  * single-file CSV export (transform.py:281-289). State tables are
+  * written zstd-compressed through [[StateFiles.write]].
   */
 object Sinks {
 
-  /** Replace the table at `tablePath` with `df` through
-    * [[graft.ops.Compact]]'s swap protocol ([[graft.ops.Compact.swapIn]]):
-    * recover any interrupted earlier swap, write `df` into
-    * `<tablePath>__compact_tmp`, then swap it in behind a manifest (or
-    * publish it directly when no table exists yet). A process death
-    * at any step leaves state the next write or state read
-    * ([[graft.ops.Merge.readStateOrEmpty]]) completes or rolls back, so
-    * the previous generation is never lost. It is NOT atomic for
-    * CONCURRENT readers: between the swap's two directory moves
-    * `tablePath` does not exist — single-writer with reader-retry is the
-    * contract (a real multi-reader deployment wants Delta/Iceberg or a
-    * manifest indirection; SURVEY.md §4).
+  /** Replace the table at `tablePath` with `df` plus the table's data
+    * files named in `keep`, through [[graft.ops.Compact]]'s swap protocol
+    * ([[graft.ops.Compact.swapIn]]): recover any interrupted earlier swap,
+    * write `df` into `<tablePath>__compact_tmp` with the one state writer
+    * ([[StateFiles.write]], zstd), then swap it in behind a manifest that
+    * lists the kept files, which move over from the staged-aside table by
+    * rename (or publish it directly when no table exists yet). This is
+    * how [[graft.ops.Merge.mergeInto]] rewrites only the files a batch
+    * can touch. A process death at any step leaves state the next write
+    * or state read ([[graft.ops.Merge.readStateOrEmpty]]) completes or
+    * rolls back, so the previous generation is never lost. It is NOT
+    * atomic for CONCURRENT readers: between the swap's two directory
+    * moves `tablePath` does not exist, and kept files join the table
+    * after the swap-in — single-writer with reader-retry is the contract
+    * (a real multi-reader deployment wants Delta/Iceberg or a manifest
+    * indirection; SURVEY.md §4).
     */
-  def atomicSwapWrite(spark: SparkSession, df: DataFrame, tablePath: String): Unit = {
-    Compact.swapIn(spark, tablePath)(df.write.mode(SaveMode.Overwrite).parquet(_))
+  def atomicSwapWrite(spark: SparkSession, df: DataFrame, tablePath: String,
+                      keep: Seq[Path] = Nil): Unit = {
+    Compact.swapIn(spark, tablePath, keep)(StateFiles.write(df, _))
     // Invalidate cached file listings so subsequent reads see the new
     // generation. (DataFrames created BEFORE the swap hold the old file
     // list and will fail — swap semantics, same as any non-ACID overwrite;

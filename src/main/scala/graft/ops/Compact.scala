@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.io.StateFiles
+
 /** State-table compaction (SCALE.md "incremental ingestion"): every
   * incremental wave — `corpusDedupSink`'s per-micro-batch appends, the
   * batch gates' state writes — adds `shuffle.partitions` parquet files to
@@ -11,12 +13,15 @@ import org.apache.spark.sql.SparkSession
   * long before data volume does (the classic small-file problem). This
   * rewrites a parquet directory down to a bounded file count as a fully
   * distributed job, preserving rows, schema, and any hive-style partition
-  * layout, then swaps the rewrite in via two directory renames.
+  * layout, then swaps the rewrite in via two directory renames. Every
+  * rewrite is written zstd-compressed through the one state writer
+  * ([[graft.io.StateFiles.write]]).
   *
   * Crash-safety contract of the engine's one directory swap (all three
-  * entry points, and every whole-table state write through [[swapIn]]):
-  * original files NEVER leave the live table tree until the swap has
-  * completed. The
+  * entry points, and every flat state write through [[swapIn]] —
+  * including [[Merge.mergeInto]], which rewrites only the files a batch
+  * can touch and carries the rest over as kept files): original files
+  * NEVER leave the live table tree until the swap has completed. The
   * rewrite stages in `<path>__compact_tmp` together with a `_GRAFT_KEEP`
   * manifest naming the untouched files to carry over; the swap renames
   * `<path>` aside to `<path>__compact_old` (the complete original) and
@@ -70,7 +75,9 @@ object Compact {
     n
   }
 
-  private def listData(fs: FileSystem, root: Path): Seq[(Path, Long)] = {
+  /** Every data file under `root` with its length (names starting with
+    * `_` or `.` — markers, manifests, checksums — are not data). */
+  private[graft] def listData(fs: FileSystem, root: Path): Seq[(Path, Long)] = {
     val it = fs.listFiles(root, true)
     val out = Seq.newBuilder[(Path, Long)]
     while (it.hasNext) {
@@ -93,8 +100,8 @@ object Compact {
     * already accumulated `maxFiles` top-tier outputs. Returns
     * (toMerge, toKeep), or None for a no-op tick.
     */
-  private def selectSmallSpan(files: Seq[(Path, Long)], spanFrac: Double,
-                              minMerge: Int, maxFiles: Int)
+  private[graft] def selectSmallSpan(files: Seq[(Path, Long)], spanFrac: Double = 0.5,
+                                     minMerge: Int = 2, maxFiles: Int = 8)
       : Option[(Seq[Path], Seq[Path])] = {
     if (files.isEmpty) return None
     val largest = files.map(_._2).max
@@ -231,18 +238,25 @@ object Compact {
   }
 
   /** Replaces the table at `path` with what `write` stages in the tmp
-    * dir: [[recover]], `write(tmp)`, then [[stageAndSwap]] with no
-    * carry-overs — or one publish rename when no table exists yet (a
-    * crash before it leaves only tmp, which [[recover]] drops). Returns
-    * what `write` returns.
+    * dir plus the table's data files named in `keep`: [[recover]],
+    * `write(tmp)`, then [[stageAndSwap]] carrying each kept file over
+    * under its own name — or one publish rename when no table exists
+    * yet (a crash before it leaves only tmp, which [[recover]] drops).
+    * `keep` names files directly under `path`; Spark's part-file names
+    * are unique per write, so a kept file never collides with a staged
+    * one. Returns what `write` returns.
     */
-  private[graft] def swapIn[T](spark: SparkSession, path: String)(write: String => T): T = {
+  private[graft] def swapIn[T](spark: SparkSession, path: String, keep: Seq[Path] = Nil)
+                              (write: String => T): T = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, p)
+    val qp = fs.makeQualified(p)
+    require(keep.forall(f => fs.makeQualified(f).getParent == qp),
+      s"compact: kept files must sit directly under $path")
     val (tmp, _) = staged(p)
     val out = write(tmp.toString)
-    if (fs.exists(p)) stageAndSwap(fs, p, Nil)
+    if (fs.exists(p)) stageAndSwap(fs, p, keep.map(f => Keep(f.getName, f.getName)))
     else if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"compact: cannot publish $tmp as $p")
     out
@@ -280,7 +294,7 @@ object Compact {
         val rows = df.count()
         val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
         val (tmp, _) = staged(p)
-        df.repartition(nOut).write.mode("overwrite").parquet(tmp.toString)
+        StateFiles.write(df.repartition(nOut), tmp.toString)
         val rewritten = listData(fs, tmp).map(_._1.getName)
         stageAndSwap(fs, p, big.map(f => Keep(f.getName, f.getName)))
         val after = dataFiles(fs, p)
@@ -360,7 +374,7 @@ object Compact {
         val df = spark.read.parquet(small.map(_.toString): _*)
         val n = df.count()
         val nOut = math.max(1L, (n + targetRows - 1) / targetRows).toInt
-        df.repartition(nOut).write.mode("overwrite").parquet(mergedDir.toString)
+        StateFiles.write(df.repartition(nOut), mergedDir.toString)
         fs.delete(new Path(mergedDir, "_SUCCESS"), false)
         n
       }
@@ -411,9 +425,7 @@ object Compact {
         if (partitionCols.nonEmpty)
           df.repartition(nOut, partitionCols.map(df.col): _*)
         else df.repartition(nOut)
-      val writer = shaped.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-       else writer).parquet(tmp)
+      StateFiles.write(shaped, tmp, partitionCols)
       (rows, before)
     }
     val after = dataFiles(fs, p)

@@ -1,12 +1,16 @@
 package graft.ops
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
-import graft.io.Sinks
+import graft.io.{Sinks, StateFiles}
 
 /** MERGE / dedup operators — the reference's most distinctive semantics
   * (SURVEY.md §2.7): last-write-wins upsert on a natural key
@@ -68,10 +72,11 @@ object Merge {
 
   /** MERGE `incoming` into the Parquet state table at `statePath` — the
     * one code path that writes merged state: stored and batch rows ranked
-    * in ONE window ([[mergeUpsert]]), written, and read back with the
-    * written schema. The batch needs no dedup of its own: stored keys are
-    * unique, so one window over state ∪ batch picks the winner a batch
-    * dedup first would.
+    * in ONE window ([[mergeUpsert]]), written zstd-compressed
+    * ([[graft.io.StateFiles.write]]), and read back with the written
+    * schema. The batch needs no dedup of its own: stored keys are unique,
+    * so one window over state ∪ batch picks the winner a batch dedup
+    * first would.
     *
     * `incomingWins = true` (default) is the reference's upsert contract:
     * a batch row replaces the stored row for its key outright, with
@@ -80,13 +85,29 @@ object Merge {
     * TOTAL-ORDER form an at-least-once streaming sink needs, where a
     * replayed old wave must never regress a newer stored winner.
     *
-    * Without `partitionCol` the whole table is swapped
-    * ([[graft.io.Sinks.atomicSwapWrite]]). With it, the merge is
-    * partition-scoped into a hive-partitioned table: only partitions
-    * PRESENT IN THE BATCH are read (partition-pruned scan), merged, and
-    * rewritten (dynamic partition overwrite) — merge cost is proportional
-    * to touched partitions, not table size; THIS is the form that holds
-    * at 100 TB, where a daily batch touches a handful of date partitions.
+    * Without `partitionCol` (a flat table) only the state files that can
+    * hold a batch key are rewritten: each file's Parquet footer gives
+    * its min/max per key column, the batch's range comes from an
+    * `observe` on the job that materializes the persisted batch, and a
+    * file is left alone when some key column's ranges are disjoint. The
+    * rule is conservative — a file without key statistics, or with nulls
+    * in a key column when the batch has null keys, counts as touched —
+    * so the result equals a whole-table merge. Touched files, the small
+    * untouched files [[Compact.selectSmallSpan]] picks (so appended
+    * slices fold back in) and the batch are merged and written; every
+    * other file is carried over by [[graft.io.Sinks.atomicSwapWrite]]'s
+    * manifest swap, which [[Compact.recover]] completes or rolls back
+    * after a process death. The state schema comes from the footers too,
+    * so the batch-materializing job replaces Spark's schema-inference
+    * job one for one; appended rows are written in the stored column
+    * order.
+    *
+    * With `partitionCol`, the merge is partition-scoped into a
+    * hive-partitioned table: only partitions PRESENT IN THE BATCH are
+    * read (partition-pruned scan), merged, and rewritten (dynamic
+    * partition overwrite) — merge cost is proportional to touched
+    * partitions, not table size; THIS is the form that holds at 100 TB,
+    * where a daily batch touches a handful of date partitions.
     *
     * CONTRACT: `partitionCol` must be functionally dependent on `keys`
     * (typically it IS one of them, or a deterministic bucket of one) —
@@ -105,27 +126,94 @@ object Merge {
                 incomingWins: Boolean = true,
                 partitionCol: Option[String] = None): DataFrame = {
     val schema = partitionCol match {
-      case None =>
-        val merged = mergeUpsert(readStateOrEmpty(spark, statePath, incoming.schema),
-          incoming, keys, precedence, incomingWins)
-        Sinks.atomicSwapWrite(spark, merged, statePath)
-        merged.schema
+      case None => mergeFiles(spark, statePath, incoming, keys, precedence, incomingWins)
       case Some(pc) => mergeTouched(spark, statePath, incoming, keys, precedence, incomingWins, pc)
     }
     spark.read.schema(schema).parquet(statePath)
   }
 
-  /** [[mergeInto]]'s partition-scoped layout; returns the written schema. */
+  /** [[mergeInto]]'s flat layout; returns the written schema. */
+  private def mergeFiles(spark: SparkSession, statePath: String, incoming: DataFrame,
+                         keys: Seq[String], precedence: Seq[Column],
+                         incomingWins: Boolean): StructType = {
+    val p = new Path(statePath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    Compact.recover(fs, p)
+    val files = if (fs.exists(p)) Compact.listData(fs, p) else Nil
+    if (files.isEmpty) {
+      // First run: nothing stored, nothing to compare the batch with.
+      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], incoming.schema)
+      val merged = mergeUpsert(empty, incoming, keys, precedence, incomingWins)
+      Sinks.atomicSwapWrite(spark, merged, statePath)
+      return merged.schema
+    }
+    val qp = fs.makeQualified(p)
+    require(files.forall(_._1.getParent == qp),
+      s"mergeInto: $statePath is partitioned — pass its partitionCol")
+    val keyTypes = keys.map(k => k -> incoming.schema(k).dataType)
+    val footers = files.map { case (f, _) => f -> StateFiles.footer(conf, f, keyTypes) }
+    val schema = footers.head._2.schema.getOrElse(spark.read.parquet(statePath).schema)
+    // The batch is read by the range job below and by the rewrite.
+    persisted(incoming) { inc =>
+      val obs = Observation()
+      inc.observe(obs, count(lit(1)).as("rows"), StateFiles.rangeColumns(keyTypes): _*)
+        .write.format("noop").mode("overwrite").save()
+      val observed = Await.result(obs.future, Duration.Inf)
+      val batch = StateFiles.batchRanges(observed, keyTypes)
+      val touched = footers.collect {
+        case (f, footer) if StateFiles.mayHold(footer, batch, keys) => f
+      }.toSet
+      val untouched = files.filterNot(f => touched(f._1))
+      val (span, kept) = Compact.selectSmallSpan(untouched).getOrElse((Nil, untouched.map(_._1)))
+      val rewrite = files.map(_._1).filter(touched) ++ span
+      if (rewrite.isEmpty && observed.getAs[Long]("rows") == 0) schema // nothing to write
+      else {
+        val current =
+          if (rewrite.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+          else spark.read.schema(schema).parquet(rewrite.map(_.toString): _*)
+        val merged = mergeUpsert(current, inc, keys, precedence, incomingWins)
+          .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+        Sinks.atomicSwapWrite(spark, merged, statePath, kept)
+        merged.schema
+      }
+    }
+  }
+
+  /** Runs `f` on `df` persisted; the persist is released afterwards
+    * unless the caller already held one. */
+  private def persisted[T](df: DataFrame)(f: DataFrame => T): T = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    val p = if (owned) df.persist() else df
+    try f(p) finally if (owned) p.unpersist()
+  }
+
+  /** [[mergeInto]]'s partition-scoped layout; returns the written schema.
+    *
+    * The merged rows are staged in `<state>_staging` before the dynamic
+    * overwrite publishes them. Spark's overwrite commit deletes each
+    * touched partition before it moves the new one in, so a process
+    * death between the two leaves the partition missing — with its only
+    * surviving copy in the staging dir. So a complete staging dir (one
+    * with `_SUCCESS`) found at entry is re-published before the pruned
+    * read; an incomplete one never reached the overwrite and is dropped.
+    */
   private def mergeTouched(spark: SparkSession, statePath: String, incoming: DataFrame,
                            keys: Seq[String], precedence: Seq[Column],
                            incomingWins: Boolean, partitionCol: String): StructType = {
+    val staging = new Path(statePath + "_staging")
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(staging, "_SUCCESS"))) {
+      StateFiles.write(spark.read.parquet(staging.toString), statePath, Seq(partitionCol))
+      spark.catalog.refreshByPath(statePath)
+    }
+    fs.delete(staging, true)
     // The incoming plan is read THREE times below (touched-partition
     // collect, merge union, staging write) — uncached, a heavy upstream
     // (e.g. a streaming batch dedup) executes three times per merge
     // (measured 1.5× the whole sink wall at sf10). Persisted for exactly
     // this call; released before returning.
-    val inc = incoming.persist()
-    try {
+    persisted(incoming) { inc =>
     val touched = inc.select(partitionCol).distinct()
       .collect().map(_.get(0)).toSeq
     // Null-safe membership: a null partition value in the batch lands in
@@ -148,18 +236,15 @@ object Merge {
     // races its own input (some Spark paths reject the self-overwrite
     // outright). Unlike localCheckpoint, staging holds no executor cache
     // blocks whose release would be GC-driven, and a mid-commit failure
-    // leaves the staged copy on disk for recovery. Cost: one extra
-    // write+read of the TOUCHED partitions only.
-    val staging = new Path(statePath + "_staging")
-    merged.write.mode("overwrite").parquet(staging.toString)
-    spark.read.parquet(staging.toString).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(statePath)
+    // leaves the staged copy on disk for the next call to re-publish.
+    // Cost: one extra write+read of the TOUCHED partitions only.
+    StateFiles.write(merged, staging.toString)
+    StateFiles.write(spark.read.parquet(staging.toString), statePath, Seq(partitionCol))
     // Success: drop the staging copy (left in place on failure).
-    staging.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(staging, true)
+    fs.delete(staging, true)
     spark.catalog.refreshByPath(statePath)
     merged.schema
-    } finally inc.unpersist()
+    }
   }
 
   /** Insert-if-absent (reference load.py:65-74, `ON CONFLICT DO NOTHING`

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.io.StateFiles
 import graft.ops.Merge
 
 /** Structured Streaming operators over the events stream (SURVEY.md §2.10
@@ -70,17 +71,12 @@ object EventStreams {
           def readState(path: String, schema: StructType): DataFrame =
             Merge.readStateOrEmpty(spark, path, schema.add("wave", IntegerType))
               .where(col("wave") < wave).drop("wave")
-          def writeWave(df: DataFrame, path: String): Unit =
-            df.withColumn("wave", lit(wave))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("wave").parquet(path)
           val state = graft.text.Dedup.CollapsedIndex(
             readState(repIdxPath, bi.repIdx.schema),
             readState(membershipPath, bi.membership.schema))
           val pairs = graft.text.Dedup.incrementalNearDupPairsCollapsed(bi, state, threshold)
-          writeWave(graft.text.Dedup.incrementalAccept(batch.select(col(idCol)), pairs),
-            acceptedPath)
+          StateFiles.writeWave(
+            graft.text.Dedup.incrementalAccept(batch.select(col(idCol)), pairs), acceptedPath, wave)
           // Fault-injection seam for the restart gate: a throw HERE is
           // the worst partial failure — accepted wave committed, index
           // waves not — and replay after restart must converge anyway.
@@ -91,10 +87,10 @@ object EventStreams {
             .where(col("wave") === wave)
             .select(col(idCol).as("doc_id"))
           val accMembership = bi.membership.join(acceptedIds, Seq("doc_id"))
-          writeWave(accMembership, membershipPath)
-          writeWave(bi.repIdx.join(accMembership.select(col("rep_id").as("doc_id")).distinct(),
-              Seq("doc_id"))
-            .select(col("doc_id"), col("shingle"), col("nsh")), repIdxPath)
+          StateFiles.writeWave(accMembership, membershipPath, wave)
+          StateFiles.writeWave(
+            bi.repIdx.join(accMembership.select(col("rep_id").as("doc_id")).distinct(), Seq("doc_id"))
+              .select(col("doc_id"), col("shingle"), col("nsh")), repIdxPath, wave)
         } finally scope.close()
       }
       .trigger(Trigger.AvailableNow())
@@ -158,11 +154,6 @@ object EventStreams {
       def readState(path: String, schema: StructType): DataFrame =
         Merge.readStateOrEmpty(spark, path, schema.add("wave", IntegerType))
           .where(col("wave") < wave).drop("wave")
-      def writeWave(df: DataFrame, path: String): Unit =
-        df.withColumn("wave", lit(wave))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("wave").parquet(path)
       val state = graft.text.Dedup.CollapsedIndex(
         readState(repIdxPath, bi.repIdx.schema),
         readState(membershipPath, bi.membership.schema))
@@ -189,9 +180,9 @@ object EventStreams {
         .join(batch.select(col(idCol).as("doc_id")), Seq("doc_id"))
         .select(col("doc_id"), col("rep"))
         .unionByName(changed)
-      writeWave(delta, labelsPath)
-      writeWave(bi.membership, membershipPath)
-      writeWave(bi.repIdx, repIdxPath)
+      StateFiles.writeWave(delta, labelsPath, wave)
+      StateFiles.writeWave(bi.membership, membershipPath, wave)
+      StateFiles.writeWave(bi.repIdx, repIdxPath, wave)
     } finally scope.close()
   }
 
@@ -213,11 +204,7 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Profile.hhSummarize(batch, itemCol, k)
-          .withColumn("wave", lit(batchId.toInt))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("wave").parquet(statePath)
+        StateFiles.writeWave(graft.ops.Profile.hhSummarize(batch, itemCol, k), statePath, batchId)
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -420,14 +407,8 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (tf, stats) = graft.text.Bm25.buildIndex(batch, idCol, textCol, terms)
-        val wave = batchId.toInt
-        def writeWave(df: DataFrame, path: String): Unit =
-          df.withColumn("wave", lit(wave))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("wave").parquet(path)
-        writeWave(tf, statePath + "/tf")
-        writeWave(stats, statePath + "/stats")
+        StateFiles.writeWave(tf, statePath + "/tf", batchId)
+        StateFiles.writeWave(stats, statePath + "/stats", batchId)
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           Seq("/tf", "/stats").foreach { sub =>
             graft.ops.Compact.consolidateWaves(
@@ -463,11 +444,8 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.LanguageModel.tfSlice(batch, idCol, textCol, maxDocTokens)
-          .withColumn("wave", lit(batchId.toInt))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("wave").parquet(statePath + "/tf")
+        StateFiles.writeWave(graft.text.LanguageModel.tfSlice(batch, idCol, textCol, maxDocTokens),
+          statePath + "/tf", batchId)
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           graft.ops.Compact.consolidateWaves(
             batch.sparkSession, statePath + "/tf", currentWave = batchId,
@@ -504,15 +482,10 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        def writeWave(df: DataFrame, path: String): Unit =
-          df.withColumn("wave", lit(batchId.toInt))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("wave").parquet(path)
-        writeWave(graft.text.LanguageModel
-          .bigramTfSlice(batch, idCol, textCol, maxDocTokens), statePath + "/bitf")
-        writeWave(graft.text.LanguageModel
-          .tfSlice(batch, idCol, textCol, maxDocTokens), statePath + "/tf")
+        StateFiles.writeWave(graft.text.LanguageModel
+          .bigramTfSlice(batch, idCol, textCol, maxDocTokens), statePath + "/bitf", batchId)
+        StateFiles.writeWave(graft.text.LanguageModel
+          .tfSlice(batch, idCol, textCol, maxDocTokens), statePath + "/tf", batchId)
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           Seq("/bitf", "/tf").foreach { sub =>
             graft.ops.Compact.consolidateWaves(
@@ -560,11 +533,8 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.SpanDedup.windowSlice(batch, idCol, textCol, w)
-          .withColumn("wave", lit(batchId.toInt))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("wave").parquet(statePath + "/win")
+        StateFiles.writeWave(graft.text.SpanDedup.windowSlice(batch, idCol, textCol, w),
+          statePath + "/win", batchId)
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           graft.ops.Compact.consolidateWaves(
             batch.sparkSession, statePath + "/win", currentWave = batchId,

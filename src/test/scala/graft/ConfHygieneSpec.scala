@@ -11,7 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `src/main/scala` reads env vars or JVM properties except the entry
   * points and their one session builder. Session-conf writes are held
   * to a ratchet: only [[GraftSession]] may write confs, apart from the
-  * per-file sites still pinned in `ConfWritesLeft`. */
+  * per-file sites still pinned in `ConfWritesLeft`. Parquet writes under
+  * `graft/ops`, `graft/io` and `graft/streaming` are held to a second
+  * ratchet: they go through the one state writer
+  * ([[graft.io.StateFiles]]), apart from the sites pinned in
+  * `ParquetWritesLeft`. */
 class ConfHygieneSpec extends AnyFunSuite {
 
   private val EntryPoints =
@@ -26,19 +30,49 @@ class ConfHygieneSpec extends AnyFunSuite {
     * UTC settings of the events reads. Lower a pin when a site goes. */
   private val ConfWritesLeft = Map("graft/QueriesShared.scala" -> 2, "graft/io/Tables.scala" -> 4)
 
-  /** `(file, "file:line: text")` for every line under `root` matching
-    * `pattern`, outside the files in `exempt` (paths relative to root). */
-  private def hits(root: Path, pattern: Regex, exempt: Set[String]): Seq[(String, String)] = {
+  /** A DataFrame write chain ending in a Parquet write, within one
+    * statement: `.write`, then a `.` call (possibly lines later), and
+    * `.parquet(` before any `;`, `{` or `}`. */
+  private val ParquetWrite = """\.write(?=\s*\.)[^;{}]*?\.parquet\(""".r
+
+  /** The directories whose Parquet writes must go through the writer. */
+  private val StateDirs = Seq("graft/ops/", "graft/io/", "graft/streaming/")
+
+  /** The one state writer. */
+  private val Writer = "graft/io/StateFiles.scala"
+
+  /** Parquet writes outside the writer, per file: the wave-fixture
+    * staging of the event inputs. Lower a pin when a site goes. */
+  private val ParquetWritesLeft = Map("graft/io/Tables.scala" -> 2)
+
+  /** `(path relative to root, file)` for every Scala file under `root`. */
+  private def scalaFiles(root: Path): Seq[(String, Path)] = {
     val files = Files.walk(root)
     try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
       .map(f => root.relativize(f).toString.replace('\\', '/') -> f)
-      .filterNot { case (rel, _) => exempt(rel) }
-      .flatMap { case (rel, f) =>
-        Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (line, i) if pattern.findFirstIn(line).isDefined => rel -> s"$f:${i + 1}: ${line.trim}"
-        }
-      }
     finally files.close()
+  }
+
+  /** `(file, "file:line: text")` for every line under `root` matching
+    * `pattern`, outside the files in `exempt` (paths relative to root). */
+  private def hits(root: Path, pattern: Regex, exempt: Set[String]): Seq[(String, String)] =
+    scalaFiles(root).filterNot { case (rel, _) => exempt(rel) }.flatMap { case (rel, f) =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if pattern.findFirstIn(line).isDefined => rel -> s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+
+  /** Every file whose hit count differs from its pin in `pins` (zero for
+    * files not pinned): a header line, then the file's hits. */
+  private def ratchet(found: Seq[(String, String)], pins: Map[String, Int],
+                      what: String): Seq[String] = {
+    val byFile = found.groupBy(_._1)
+    (byFile.keySet ++ pins.keySet).toSeq.sorted.flatMap { file =>
+      val fileHits = byFile.getOrElse(file, Nil).map(_._2)
+      val pinned = pins.getOrElse(file, 0)
+      if (fileHits.size == pinned) Nil
+      else s"$file: $pinned $what pinned, ${fileHits.size} found" +: fileHits
+    }
   }
 
   /** Every env/property read under `root`, except in the entry points. */
@@ -47,14 +81,22 @@ class ConfHygieneSpec extends AnyFunSuite {
   /** Every conf write in a file whose write count differs from its pin
     * (zero for files not in `ConfWritesLeft`), plus pinned files that
     * no longer have their count. */
-  private def confWriteViolations(root: Path): Seq[String] = {
-    val byFile = hits(root, ConfWrite, Set("graft/GraftSession.scala")).groupBy(_._1)
-    (byFile.keySet ++ ConfWritesLeft.keySet).toSeq.sorted.flatMap { file =>
-      val found = byFile.getOrElse(file, Nil).map(_._2)
-      val pinned = ConfWritesLeft.getOrElse(file, 0)
-      if (found.size == pinned) Nil
-      else s"$file: $pinned conf writes pinned, ${found.size} found" +: found
-    }
+  private def confWriteViolations(root: Path): Seq[String] =
+    ratchet(hits(root, ConfWrite, Set("graft/GraftSession.scala")), ConfWritesLeft, "conf writes")
+
+  /** Every Parquet write chain under the state dirs outside the writer,
+    * reported at the line of its `.write`, held to `ParquetWritesLeft`. */
+  private def parquetWriteViolations(root: Path): Seq[String] = {
+    val found = scalaFiles(root)
+      .filter { case (rel, _) => StateDirs.exists(rel.startsWith) && rel != Writer }
+      .flatMap { case (rel, f) =>
+        val text = Files.readString(f)
+        ParquetWrite.findAllMatchIn(text).map { m =>
+          val line = text.substring(0, m.start).count(_ == '\n')
+          rel -> s"$f:${line + 1}: ${text.linesIterator.drop(line).next().trim}"
+        }
+      }
+    ratchet(found, ParquetWritesLeft, "Parquet writes")
   }
 
   private def mainRoot: Path = {
@@ -73,6 +115,31 @@ class ConfHygieneSpec extends AnyFunSuite {
     val found = confWriteViolations(mainRoot)
     assert(found.isEmpty,
       "library code must not write the caller's session confs:\n" + found.mkString("\n"))
+  }
+
+  test("state Parquet writes go through the one writer, apart from the pinned sites") {
+    val found = parquetWriteViolations(mainRoot)
+    assert(found.isEmpty,
+      "write state through graft.io.StateFiles (zstd, one writer):\n" + found.mkString("\n"))
+  }
+
+  test("the Parquet-write check names the file and line of a write chain") {
+    val root = Files.createTempDirectory("graft_hygiene_writes")
+    Seq("graft/ops", "graft/io", "graft/text").foreach(d => Files.createDirectories(root.resolve(d)))
+    Files.writeString(root.resolve("graft/ops/Sink.scala"),
+      "object Sink {\n  spark.read.parquet(p)\n  out.write(bytes); x.parquet(q)\n" +
+        "  df.writeStream.start()\n  df.withColumn(\"w\", lit(1))\n    .write.mode(\"overwrite\")\n" +
+        "    .partitionBy(\"w\").parquet(p)\n}\n")
+    Files.writeString(root.resolve(Writer), "df.write.option(\"compression\", c).parquet(p)\n")
+    Files.writeString(root.resolve("graft/io/Tables.scala"), "df.write.parquet(a)\n" * 3)
+    Files.writeString(root.resolve("graft/text/Index.scala"), "df.write.parquet(a)\n")
+    val found = parquetWriteViolations(root)
+    assert(found.head == "graft/io/Tables.scala: 2 Parquet writes pinned, 3 found", found)
+    val sink = found.dropWhile(!_.startsWith("graft/ops/Sink.scala"))
+    assert(sink.head == "graft/ops/Sink.scala: 0 Parquet writes pinned, 1 found", found)
+    assert(sink(1).contains("graft/ops/Sink.scala:6: .write.mode"), found)
+    assert(found.size == 6, found)
+    assert(!found.exists(w => w.contains("StateFiles") || w.contains("Index.scala")), found)
   }
 
   test("the check names the file and line of a read, and spares the entry points") {

@@ -26,20 +26,36 @@ class StateSwapRecoverySpec extends SparkSpec {
     "table staged aside, no table",
     "rewrite published, old table still present")
 
-  /** Leaves `statePath` as a swap of `rewrite` over it leaves it when the
-    * process dies after `stage`. The swap's steps: stage the rewrite and
-    * its (empty) carry-over manifest in `__compact_tmp`; move the table
-    * to `__compact_old`; move the rewrite in. */
-  private def interrupt(statePath: String, rewrite: DataFrame, stage: String): Unit = {
+  /** A swap that carries files over, interrupted after the swap-in moved
+    * the first of them back into the table and before it moved the rest. */
+  private val HalfMoved = "rewrite published, kept files half moved"
+
+  /** Leaves `statePath` as a swap of `rewrite` over it, carrying the
+    * table's data files `keep` over, leaves it when the process dies
+    * after `stage`. The swap's steps: stage the rewrite and its carry-over
+    * manifest in `__compact_tmp`; move the table to `__compact_old`; move
+    * the rewrite in; move each kept file from `__compact_old` back in. */
+  private def interrupt(statePath: String, rewrite: DataFrame, stage: String,
+                        keep: Seq[String] = Nil): Unit = {
     val (table, tmp, old) =
       (new Path(statePath), new Path(statePath + "__compact_tmp"), new Path(statePath + "__compact_old"))
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     rewrite.write.parquet(tmp.toString)
-    fs.create(new Path(tmp, "_GRAFT_KEEP"), true).close()
+    val manifest = fs.create(new Path(tmp, "_GRAFT_KEEP"), true)
+    try manifest.write(keep.map(k => s"$k\t$k\n").mkString.getBytes("UTF-8"))
+    finally manifest.close()
     if (stage != Stages(0)) assert(fs.rename(table, old))
-    if (stage == Stages(2)) assert(fs.rename(tmp, table))
+    if (stage == Stages(2) || stage == HalfMoved) assert(fs.rename(tmp, table))
+    if (stage == HalfMoved) {
+      assert(keep.size >= 2, keep)
+      assert(fs.rename(new Path(old, keep.head), new Path(table, keep.head)))
+    }
     assert(fs.exists(tmp) || fs.exists(old))
   }
+
+  /** Data file names directly under `dir`. */
+  private def dataFiles(dir: String): Set[String] =
+    new java.io.File(dir).list().filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
 
   private def assertNoStaging(statePath: String): Unit =
     for (suffix <- Seq("__compact_tmp", "__compact_old"))
@@ -77,6 +93,30 @@ class StateSwapRecoverySpec extends SparkSpec {
       assertNoStaging(statePath)
     }
 
+  // Two 2024 quarters, each merged alone: files no later batch can touch.
+  private lazy val bronze2024 = Seq("2024-03-31", "2024-06-30").map(d => bronze(
+    s"""{"date": "$d", "symbol": "TSLA", "revenue": 21300000000, "eps": 0.45, "grossProfit": 4000000000}"""))
+
+  test(s"Pipeline.run retry after an interrupted swap: $HalfMoved") {
+    val expectedPath = Files.createTempDirectory("graft_swap_ref").toString + "/s"
+    (bronze2024 :+ bronzeA).foreach(Pipeline.run(spark, _, expectedPath))
+    val expected = rows(Pipeline.run(spark, bronzeB, expectedPath)._1)
+
+    val statePath = Files.createTempDirectory("graft_swap_pipe").toString + "/s"
+    bronze2024.foreach(Pipeline.run(spark, _, statePath))
+    val kept = dataFiles(statePath).toSeq.sorted
+    Pipeline.run(spark, bronzeA, statePath)
+    assert(kept.size == 2 && kept.toSet.subsetOf(dataFiles(statePath)))
+    // Batch B's swap rewrites the 2025 rows and carries both 2024 files over.
+    val rewrite = spark.read.parquet(expectedPath)
+      .except(spark.read.parquet(kept.map(statePath + "/" + _): _*))
+    interrupt(statePath, rewrite, HalfMoved, kept)
+    val (state, _) = Pipeline.run(spark, bronzeB, statePath)
+    assert(rows(state) == expected)
+    assert(expected.size == 6)
+    assertNoStaging(statePath)
+  }
+
   private def ev(id: Long, t: String, user: Long, typ: String, v: Double) =
     Event(id, java.sql.Timestamp.valueOf(t), user, typ, v)
 
@@ -92,23 +132,73 @@ class StateSwapRecoverySpec extends SparkSpec {
     ev(5, "2024-01-01 09:00:00", 3, "click", 5.0),
     ev(6, "2024-01-01 11:00:00", 4, "view", 6.0))
 
+  // Users no later wave touches, each merged alone.
+  private val wavesOld = Seq(
+    Seq(ev(7, "2024-01-01 08:00:00", 10, "click", 7.0), ev(8, "2024-01-01 08:00:00", 11, "view", 8.0)),
+    Seq(ev(9, "2024-01-01 08:00:00", 20, "click", 9.0), ev(10, "2024-01-01 08:00:00", 21, "view", 10.0)))
+
+  /** Runs `waves` through one `mergeSink` replay batch into `statePath`. */
+  private def sinkBatch(statePath: String, waves: Seq[Event]): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event]
+    input.addData(waves: _*)
+    val ckpt = Files.createTempDirectory("graft_swap_ckpt").toString
+    val q = EventStreams.mergeSink(input.toDF(), statePath, Keys, Precedence, ckpt)
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty, q.exception)
+  }
+
+  test(s"mergeSink replay after an interrupted swap: $HalfMoved") {
+    val expected = Merge.lastWriteWins((wavesOld.flatten ++ wavesA ++ wavesB).toDF(), Keys, Precedence)
+    val statePath = Files.createTempDirectory("graft_swap_sink").toString + "/s"
+    wavesOld.foreach(w =>
+      Merge.mergeInto(spark, statePath, w.toDF(), Keys, Precedence, incomingWins = false))
+    val kept = dataFiles(statePath).toSeq.sorted
+    Merge.mergeInto(spark, statePath, wavesA.toDF(), Keys, Precedence, incomingWins = false)
+    assert(kept.size == 2 && kept.toSet.subsetOf(dataFiles(statePath)))
+    val cols = expected.columns.toIndexedSeq.map(col)
+    val rewrite = expected.except(spark.read.parquet(kept.map(statePath + "/" + _): _*).select(cols: _*))
+    interrupt(statePath, rewrite, HalfMoved, kept)
+    sinkBatch(statePath, wavesB)
+    val state = spark.read.parquet(statePath)
+    assert(rows(state.select(cols: _*)) == rows(expected))
+    assert(state.count() == 8)
+    assertNoStaging(statePath)
+  }
+
   for (stage <- Stages)
     test(s"mergeSink replay after an interrupted swap: $stage") {
       val expected = Merge.lastWriteWins((wavesA ++ wavesB).toDF(), Keys, Precedence)
       val statePath = Files.createTempDirectory("graft_swap_sink").toString + "/s"
       Merge.mergeInto(spark, statePath, wavesA.toDF(), Keys, Precedence, incomingWins = false)
       interrupt(statePath, expected, stage)
-
-      implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[Event]
-      input.addData(wavesB: _*)
-      val ckpt = Files.createTempDirectory("graft_swap_ckpt").toString
-      val q = EventStreams.mergeSink(input.toDF(), statePath, Keys, Precedence, ckpt)
-      q.awaitTermination(60000)
-      assert(q.exception.isEmpty, q.exception)
+      sinkBatch(statePath, wavesB)
       val state = spark.read.parquet(statePath)
       assert(rows(state.select(expected.columns.toIndexedSeq.map(col): _*)) == rows(expected))
       assert(state.count() == 4)
       assertNoStaging(statePath)
     }
+
+  test("partitioned mergeInto after a death between the overwrite's delete and its move") {
+    def merge(path: String, df: DataFrame) = Merge.mergeInto(spark, path, df, Seq("k"),
+      Seq(col("v").desc), partitionCol = Some("part")).select("k", "part", "v")
+    val a = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "B", 30.0), (5L, "C", 50.0)).toDF("k", "part", "v")
+    val b = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
+    val expectedPath = Files.createTempDirectory("graft_pmerge_ref").toString + "/s"
+    merge(expectedPath, a)
+    val expected = rows(merge(expectedPath, b))
+
+    val statePath = Files.createTempDirectory("graft_pmerge").toString + "/s"
+    merge(statePath, a)
+    // Batch B staged its merged rows of partition B; the overwrite commit
+    // then deleted part=B and died before moving the new copy in.
+    spark.read.parquet(expectedPath).where(col("part") === "B").select("k", "part", "v")
+      .write.parquet(statePath + "_staging")
+    val fs = new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(statePath, "part=B"), true))
+    val state = merge(statePath, b) // the retry of batch B
+    assert(rows(state) == expected)
+    assert(expected.size == 5)
+    assert(!Files.exists(Paths.get(statePath + "_staging")), "_staging left behind")
+  }
 }

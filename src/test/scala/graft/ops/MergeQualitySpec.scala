@@ -64,6 +64,82 @@ class MergeQualitySpec extends SparkSpec {
     assert(filesBefore == filesAfter, "untouched partition files must not be rewritten")
   }
 
+  /** Data files directly under `dir`: name -> length. */
+  private def dataFiles(dir: String): Map[String, Long] =
+    new java.io.File(dir).listFiles().filter(f => f.isFile && !f.getName.startsWith("_") &&
+      !f.getName.startsWith(".")).map(f => f.getName -> f.length).toMap
+
+  private val Keys = Seq("ticker", "quarter")
+  private def history = batch((for (t <- Seq("AAA", "BBB", "CCC"); q <- 1 to 4)
+    yield (t, s"2024-Q$q", q.toDouble, 1)): _*)
+  private def mergeQ(statePath: String, b: org.apache.spark.sql.DataFrame) =
+    Merge.mergeInto(spark, statePath, b, Keys, Seq(col("prio").desc))
+  private def revenues(df: org.apache.spark.sql.DataFrame): Map[(String, String), Double] =
+    df.collect().map(r => (r.getAs[String]("ticker"), r.getAs[String]("quarter")) ->
+      r.getAs[Double]("revenue")).toMap
+
+  test("mergeInto: an insert-only batch leaves every stored file byte-identical " +
+    "and writes only the batch") {
+    val statePath = java.nio.file.Files.createTempDirectory("fmerge_insert").toString + "/state"
+    mergeQ(statePath, history)
+    val before = dataFiles(statePath)
+    // Every batch quarter sorts after the stored ones: no stored file can hold its keys.
+    val insert = batch(("AAA", "2025-Q1", 5.0, 1), ("CCC", "2025-Q1", 6.0, 1))
+    val merged = mergeQ(statePath, insert)
+    val after = dataFiles(statePath)
+    assert(before.toSet.subsetOf(after.toSet), s"stored files changed: $before -> $after")
+    val added = (after.keySet -- before.keySet).toSeq
+    assert(added.nonEmpty && added.forall(_.endsWith(".zstd.parquet")), added)
+    assert(spark.read.parquet(added.map(statePath + "/" + _): _*).count() == 2)
+    assert(revenues(merged) == revenues(history) ++ revenues(insert))
+  }
+
+  test("mergeInto: a batch that overlaps one stored file rewrites only that file") {
+    val statePath = java.nio.file.Files.createTempDirectory("fmerge_one").toString + "/state"
+    mergeQ(statePath, history)
+    val historyFiles = dataFiles(statePath).keySet
+    mergeQ(statePath, batch(("AAA", "2025-Q1", 5.0, 1)))
+    val before = dataFiles(statePath)
+    val slice = before.keySet -- historyFiles
+    assert(slice.size == 1)
+    // Restates a 2024 key: only the history files' ranges hold 2024 quarters.
+    val restate = batch(("BBB", "2024-Q2", 99.0, 1))
+    val merged = mergeQ(statePath, restate)
+    val after = dataFiles(statePath)
+    assert(after(slice.head) == before(slice.head), "the 2025 slice must be carried over")
+    assert(historyFiles.forall(f => !after.contains(f)), "the overlapped file must be rewritten")
+    assert(after.size == 2, after)
+    assert(revenues(merged) ==
+      revenues(history) + ((("AAA", "2025-Q1"), 5.0)) + ((("BBB", "2024-Q2"), 99.0)))
+  }
+
+  test("mergeInto: a stored file whose footer has no key statistics is rewritten") {
+    val statePath = java.nio.file.Files.createTempDirectory("fmerge_nostats").toString + "/state"
+    history.write.option("parquet.column.statistics.enabled", "false").parquet(statePath)
+    val before = dataFiles(statePath)
+    val f = new org.apache.hadoop.fs.Path(statePath, before.keys.head)
+    val footer = graft.io.StateFiles.footer(spark.sparkContext.hadoopConfiguration, f,
+      history.schema.fields.toSeq.filter(s => Keys.contains(s.name)).map(s => s.name -> s.dataType))
+    assert(footer.ranges.isEmpty && footer.schema.isDefined, footer)
+    // Disjoint from the stored keys, yet nothing proves it: the file is touched.
+    val insert = batch(("AAA", "2025-Q1", 5.0, 1))
+    val merged = mergeQ(statePath, insert)
+    assert(before.keySet.intersect(dataFiles(statePath).keySet).isEmpty)
+    assert(revenues(merged) == revenues(history) ++ revenues(insert))
+  }
+
+  test("mergeInto: null keys in the batch touch a stored file with null keys") {
+    val statePath = java.nio.file.Files.createTempDirectory("fmerge_null").toString + "/state"
+    val stored = Seq((Option("AAA"), "2024-Q1", 1.0, 1), (Option.empty[String], "2024-Q1", 2.0, 1))
+      .toDF("ticker", "quarter", "revenue", "prio")
+    mergeQ(statePath, stored)
+    // The batch's only ticker is null: its non-null ticker range is empty,
+    // so only the null counts say the stored null-ticker row is its key.
+    val merged = mergeQ(statePath, Seq((Option.empty[String], "2024-Q1", 9.0, 1))
+      .toDF("ticker", "quarter", "revenue", "prio"))
+    assert(revenues(merged) == Map((("AAA", "2024-Q1"), 1.0), ((null, "2024-Q1"), 9.0)))
+  }
+
   test("mergeInto by partition keeps existing null-partition state rows") {
     val statePath = java.nio.file.Files.createTempDirectory("pmerge_null").toString + "/state"
     val seed = Seq((1L, Option("A"), 10.0), (2L, Option.empty[String], 20.0),
