@@ -8,7 +8,6 @@ import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Observation, 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.io.{Sinks, StateFiles}
 
@@ -88,8 +87,8 @@ object Merge {
     * Without `partitionCol` (a flat table) only the state files that can
     * hold a batch key are rewritten: each file's Parquet footer gives
     * its min/max per key column, the batch's range comes from an
-    * `observe` on the job that materializes the persisted batch, and a
-    * file is left alone when some key column's ranges are disjoint. The
+    * `observe` on one job over the batch's key columns, and a file is
+    * left alone when some key column's ranges are disjoint. The
     * rule is conservative — a file without key statistics, or with nulls
     * in a key column when the batch has null keys, counts as touched —
     * so the result equals a whole-table merge. Touched files, the small
@@ -98,9 +97,10 @@ object Merge {
     * other file is carried over by [[graft.io.Sinks.atomicSwapWrite]]'s
     * manifest swap, which [[Compact.recover]] completes or rolls back
     * after a process death. The state schema comes from the footers too,
-    * so the batch-materializing job replaces Spark's schema-inference
-    * job one for one; appended rows are written in the stored column
-    * order.
+    * so the range job replaces Spark's schema-inference job one for one;
+    * appended rows are written in the stored column order. The batch is
+    * evaluated twice (key columns only for the range), so its keys must
+    * be deterministic — as a file scan or a `foreachBatch` batch is.
     *
     * With `partitionCol`, the merge is partition-scoped into a
     * hive-partitioned table: only partitions PRESENT IN THE BATCH are
@@ -154,38 +154,32 @@ object Merge {
     val keyTypes = keys.map(k => k -> incoming.schema(k).dataType)
     val footers = files.map { case (f, _) => f -> StateFiles.footer(conf, f, keyTypes) }
     val schema = footers.head._2.schema.getOrElse(spark.read.parquet(statePath).schema)
-    // The batch is read by the range job below and by the rewrite.
-    persisted(incoming) { inc =>
-      val obs = Observation()
-      inc.observe(obs, count(lit(1)).as("rows"), StateFiles.rangeColumns(keyTypes): _*)
-        .write.format("noop").mode("overwrite").save()
-      val observed = Await.result(obs.future, Duration.Inf)
-      val batch = StateFiles.batchRanges(observed, keyTypes)
-      val touched = footers.collect {
-        case (f, footer) if StateFiles.mayHold(footer, batch, keys) => f
-      }.toSet
-      val untouched = files.filterNot(f => touched(f._1))
-      val (span, kept) = Compact.selectSmallSpan(untouched).getOrElse((Nil, untouched.map(_._1)))
-      val rewrite = files.map(_._1).filter(touched) ++ span
-      if (rewrite.isEmpty && observed.getAs[Long]("rows") == 0) schema // nothing to write
-      else {
-        val current =
-          if (rewrite.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-          else spark.read.schema(schema).parquet(rewrite.map(_.toString): _*)
-        val merged = mergeUpsert(current, inc, keys, precedence, incomingWins)
-          .select(schema.fieldNames.toIndexedSeq.map(col): _*)
-        Sinks.atomicSwapWrite(spark, merged, statePath, kept)
-        merged.schema
-      }
+    // The range job reads only the key columns, so it prunes the batch's
+    // scan to them; the rewrite evaluates the batch again in full. Not
+    // persisting it measured faster on market_etl (the cache build cost
+    // more than the second scan saved).
+    val obs = Observation()
+    incoming.select(keys.map(col): _*)
+      .observe(obs, count(lit(1)).as("rows"), StateFiles.rangeColumns(keyTypes): _*)
+      .write.format("noop").mode("overwrite").save()
+    val observed = Await.result(obs.future, Duration.Inf)
+    val batch = StateFiles.batchRanges(observed, keyTypes)
+    val touched = footers.collect {
+      case (f, footer) if StateFiles.mayHold(footer, batch, keys) => f
+    }.toSet
+    val untouched = files.filterNot(f => touched(f._1))
+    val (span, kept) = Compact.selectSmallSpan(untouched).getOrElse((Nil, untouched.map(_._1)))
+    val rewrite = files.map(_._1).filter(touched) ++ span
+    if (rewrite.isEmpty && observed.getAs[Long]("rows") == 0) schema // nothing to write
+    else {
+      val current =
+        if (rewrite.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        else spark.read.schema(schema).parquet(rewrite.map(_.toString): _*)
+      val merged = mergeUpsert(current, incoming, keys, precedence, incomingWins)
+        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+      Sinks.atomicSwapWrite(spark, merged, statePath, kept)
+      merged.schema
     }
-  }
-
-  /** Runs `f` on `df` persisted; the persist is released afterwards
-    * unless the caller already held one. */
-  private def persisted[T](df: DataFrame)(f: DataFrame => T): T = {
-    val owned = df.storageLevel == StorageLevel.NONE
-    val p = if (owned) df.persist() else df
-    try f(p) finally if (owned) p.unpersist()
   }
 
   /** [[mergeInto]]'s partition-scoped layout; returns the written schema.
@@ -213,7 +207,8 @@ object Merge {
     // (e.g. a streaming batch dedup) executes three times per merge
     // (measured 1.5× the whole sink wall at sf10). Persisted for exactly
     // this call; released before returning.
-    persisted(incoming) { inc =>
+    val inc = incoming.persist()
+    try {
     val touched = inc.select(partitionCol).distinct()
       .collect().map(_.get(0)).toSeq
     // Null-safe membership: a null partition value in the batch lands in
@@ -244,7 +239,7 @@ object Merge {
     fs.delete(staging, true)
     spark.catalog.refreshByPath(statePath)
     merged.schema
-    }
+    } finally inc.unpersist()
   }
 
   /** Insert-if-absent (reference load.py:65-74, `ON CONFLICT DO NOTHING`

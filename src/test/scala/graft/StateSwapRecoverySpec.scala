@@ -112,7 +112,7 @@ class StateSwapRecoverySpec extends SparkSpec {
       .except(spark.read.parquet(kept.map(statePath + "/" + _): _*))
     interrupt(statePath, rewrite, HalfMoved, kept)
     val (state, _) = Pipeline.run(spark, bronzeB, statePath)
-    assert(rows(state) == expected)
+    assert(rows(state) == expected && state.count() == 6)
     assert(expected.size == 6)
     assertNoStaging(statePath)
   }

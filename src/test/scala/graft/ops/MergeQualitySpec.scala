@@ -74,9 +74,13 @@ class MergeQualitySpec extends SparkSpec {
     yield (t, s"2024-Q$q", q.toDouble, 1)): _*)
   private def mergeQ(statePath: String, b: org.apache.spark.sql.DataFrame) =
     Merge.mergeInto(spark, statePath, b, Keys, Seq(col("prio").desc))
-  private def revenues(df: org.apache.spark.sql.DataFrame): Map[(String, String), Double] =
-    df.collect().map(r => (r.getAs[String]("ticker"), r.getAs[String]("quarter")) ->
-      r.getAs[Double]("revenue")).toMap
+  /** Revenue per key; fails on a key held twice. */
+  private def revenues(df: org.apache.spark.sql.DataFrame): Map[(String, String), Double] = {
+    val got = df.collect().map(r => (r.getAs[String]("ticker"), r.getAs[String]("quarter")) ->
+      r.getAs[Double]("revenue"))
+    assert(got.map(_._1).distinct.length == got.length, s"a key is held twice: ${got.toSeq}")
+    got.toMap
+  }
 
   test("mergeInto: an insert-only batch leaves every stored file byte-identical " +
     "and writes only the batch") {
