@@ -147,6 +147,21 @@ object StateFiles {
     Footer(schema, ranges.toMap)
   }
 
+  /** Runs `batch`'s `keys` columns through one job and returns the row of
+    * its key ranges that [[batchRanges]] reads, plus its row count
+    * (`rows`). The ranges are aggregated in the scan's tasks (`observe`)
+    * and read from the plan's metrics, so the job is a plain Spark job,
+    * not a SQL execution: the driver builds no plan description or graph
+    * for it, and Spark's SQL status store retains none.
+    */
+  def observeRanges(batch: DataFrame, keys: Seq[(String, DataType)]): Row = {
+    val qe = batch.select(keys.map(k => col(k._1)): _*)
+      .observe("graft_key_ranges", count(lit(1)).as("rows"), rangeColumns(keys): _*)
+      .queryExecution
+    qe.toRdd.count()
+    qe.observedMetrics("graft_key_ranges")
+  }
+
   /** The batch-side [[KeyRange]]s: `row` holds, for the i-th entry of
     * `keys` with a [[comparable]] form, the columns `lo<i>`, `hi<i>` and
     * `null<i>` that [[rangeColumns]] computes.
@@ -157,8 +172,40 @@ object StateFiles {
       name -> KeyRange(opt(s"lo$i"), opt(s"hi$i"), Option(row.getAs[Any](s"null$i")).contains(true))
     }.toMap
 
+  /** The rewrite's guard on the batch: a filter condition that holds for
+    * a row whose `keys` lie inside the ranges observed in `row` (as
+    * [[batchRanges]] reads it) and raises an error for any other row,
+    * also for a null key where the observation saw none. The touched
+    * files were chosen from those ranges, so a batch that evaluates to
+    * other keys the second time fails the merge instead of holding a key
+    * twice (its stored row sits in a carried-over file). The ranges sit
+    * in functions, not literals: Spark inlines long literals into the
+    * generated code, so each batch's bounds would compile the whole
+    * batch-side stage anew.
+    */
+  def inObservedRanges(row: Row, keys: Seq[(String, DataType)]): Column = {
+    val ranges = batchRanges(row, keys)
+    val inside = keys.flatMap { case (name, dt) =>
+      for (c <- comparable(col(name), dt); r <- ranges.get(name)) yield {
+        def holds(v: Any): Boolean =
+          if (v == null) r.hasNulls
+          else (for (lo <- r.min; hi <- r.max) yield {
+            val x = rangeValue(v)
+            compare(lo, x) <= 0 && compare(x, hi) <= 0
+          }).getOrElse(false)
+        if (dt == StringType) udf((v: String) => holds(v)).apply(c)
+        else udf((v: java.lang.Long) => holds(v)).apply(c)
+      }
+    }
+    if (inside.isEmpty) lit(true)
+    else when(!inside.reduce(_ && _), raise_error(lit(
+      "mergeInto: a batch key lies outside the key range observed on the batch's " +
+        "first evaluation; the batch must evaluate to the same keys each time")))
+      .otherwise(lit(true))
+  }
+
   /** Aggregates whose result row [[batchRanges]] reads. */
-  def rangeColumns(keys: Seq[(String, DataType)]): Seq[Column] =
+  private def rangeColumns(keys: Seq[(String, DataType)]): Seq[Column] =
     keys.zipWithIndex.flatMap { case ((name, dt), i) =>
       comparable(col(name), dt).toSeq.flatMap(c =>
         Seq(min(c).as(s"lo$i"), max(c).as(s"hi$i"), max(col(name).isNull).as(s"null$i")))

@@ -1,10 +1,7 @@
 package graft.ops
 
-import scala.concurrent.Await
-import scala.concurrent.duration.Duration
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -86,21 +83,24 @@ object Merge {
     *
     * Without `partitionCol` (a flat table) only the state files that can
     * hold a batch key are rewritten: each file's Parquet footer gives
-    * its min/max per key column, the batch's range comes from an
-    * `observe` on one job over the batch's key columns, and a file is
-    * left alone when some key column's ranges are disjoint. The
-    * rule is conservative — a file without key statistics, or with nulls
-    * in a key column when the batch has null keys, counts as touched —
-    * so the result equals a whole-table merge. Touched files, the small
-    * untouched files [[Compact.selectSmallSpan]] picks (so appended
-    * slices fold back in) and the batch are merged and written; every
-    * other file is carried over by [[graft.io.Sinks.atomicSwapWrite]]'s
-    * manifest swap, which [[Compact.recover]] completes or rolls back
-    * after a process death. The state schema comes from the footers too,
+    * its min/max per key column, the batch's range comes from one job
+    * over the batch's key columns ([[graft.io.StateFiles.observeRanges]]),
+    * and a file is left alone when some key column's ranges are disjoint.
+    * The rule is conservative — a file without key statistics, or with
+    * nulls in a key column when the batch has null keys, counts as
+    * touched — so the result equals a whole-table merge. Touched files,
+    * the small untouched files [[Compact.selectSmallSpan]] picks (so
+    * appended slices fold back in) and the batch are merged and written;
+    * every other file is carried over by
+    * [[graft.io.Sinks.atomicSwapWrite]]'s manifest swap, which
+    * [[Compact.recover]] completes or rolls back after a process death. The state schema comes from the footers too,
     * so the range job replaces Spark's schema-inference job one for one;
     * appended rows are written in the stored column order. The batch is
     * evaluated twice (key columns only for the range), so its keys must
-    * be deterministic — as a file scan or a `foreachBatch` batch is.
+    * be deterministic — as a file scan or a `foreachBatch` batch is; a
+    * source read over HTTP is fetched twice. The rewrite checks every
+    * batch row against the observed range and fails the merge, before
+    * anything is swapped in, on a key outside it.
     *
     * With `partitionCol`, the merge is partition-scoped into a
     * hive-partitioned table: only partitions PRESENT IN THE BATCH are
@@ -158,11 +158,7 @@ object Merge {
     // scan to them; the rewrite evaluates the batch again in full. Not
     // persisting it measured faster on market_etl (the cache build cost
     // more than the second scan saved).
-    val obs = Observation()
-    incoming.select(keys.map(col): _*)
-      .observe(obs, count(lit(1)).as("rows"), StateFiles.rangeColumns(keyTypes): _*)
-      .write.format("noop").mode("overwrite").save()
-    val observed = Await.result(obs.future, Duration.Inf)
+    val observed = StateFiles.observeRanges(incoming, keyTypes)
     val batch = StateFiles.batchRanges(observed, keyTypes)
     val touched = footers.collect {
       case (f, footer) if StateFiles.mayHold(footer, batch, keys) => f
@@ -175,7 +171,8 @@ object Merge {
       val current =
         if (rewrite.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         else spark.read.schema(schema).parquet(rewrite.map(_.toString): _*)
-      val merged = mergeUpsert(current, incoming, keys, precedence, incomingWins)
+      val guarded = incoming.where(StateFiles.inObservedRanges(observed, keyTypes))
+      val merged = mergeUpsert(current, guarded, keys, precedence, incomingWins)
         .select(schema.fieldNames.toIndexedSeq.map(col): _*)
       Sinks.atomicSwapWrite(spark, merged, statePath, kept)
       merged.schema
@@ -191,17 +188,21 @@ object Merge {
     * surviving copy in the staging dir. So a complete staging dir (one
     * with `_SUCCESS`) found at entry is re-published before the pruned
     * read; an incomplete one never reached the overwrite and is dropped.
+    * Dropping deletes `_SUCCESS` before the rest, so a delete cut short
+    * leaves an incomplete dir, never a marked subset of the rows.
     */
   private def mergeTouched(spark: SparkSession, statePath: String, incoming: DataFrame,
                            keys: Seq[String], precedence: Seq[Column],
                            incomingWins: Boolean, partitionCol: String): StructType = {
     val staging = new Path(statePath + "_staging")
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(staging, "_SUCCESS"))) {
+    val success = new Path(staging, "_SUCCESS")
+    def dropStaging(): Unit = { fs.delete(success, false); fs.delete(staging, true) }
+    if (fs.exists(success)) {
       StateFiles.write(spark.read.parquet(staging.toString), statePath, Seq(partitionCol))
       spark.catalog.refreshByPath(statePath)
     }
-    fs.delete(staging, true)
+    dropStaging()
     // The incoming plan is read THREE times below (touched-partition
     // collect, merge union, staging write) — uncached, a heavy upstream
     // (e.g. a streaming batch dedup) executes three times per merge
@@ -236,7 +237,7 @@ object Merge {
     StateFiles.write(merged, staging.toString)
     StateFiles.write(spark.read.parquet(staging.toString), statePath, Seq(partitionCol))
     // Success: drop the staging copy (left in place on failure).
-    fs.delete(staging, true)
+    dropStaging()
     spark.catalog.refreshByPath(statePath)
     merged.schema
     } finally inc.unpersist()

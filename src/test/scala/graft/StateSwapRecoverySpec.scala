@@ -11,6 +11,21 @@ import graft.ops.Merge
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
+/** The local file system, except that while [[DyingStagingDelete.armed]]
+  * a recursive delete of an existing `*_staging` dir fails without
+  * deleting anything: a process death at the start of that delete. */
+class DyingStagingDelete extends org.apache.hadoop.fs.LocalFileSystem {
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    if (DyingStagingDelete.armed && recursive && f.getName.endsWith("_staging") && exists(f))
+      throw new java.io.IOException(s"process died deleting $f")
+    super.delete(f, recursive)
+  }
+}
+
+object DyingStagingDelete {
+  @volatile var armed = false
+}
+
 /** Crash-restart contract of the whole-table state swap
   * ([[graft.io.Sinks.atomicSwapWrite]] over [[graft.ops.Compact]]'s
   * protocol). Each case leaves on disk what a process death at one step
@@ -200,5 +215,50 @@ class StateSwapRecoverySpec extends SparkSpec {
     assert(rows(state) == expected)
     assert(expected.size == 5)
     assert(!Files.exists(Paths.get(statePath + "_staging")), "_staging left behind")
+  }
+
+  test("partitioned mergeInto after a death while dropping a published staging dir") {
+    def merge(path: String, df: DataFrame) = Merge.mergeInto(spark, path, df, Seq("k"),
+      Seq(col("v").desc), partitionCol = Some("part")).select("k", "part", "v")
+    val a = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "B", 30.0), (5L, "C", 50.0)).toDF("k", "part", "v")
+    val b = Seq((1L, "A", 11.0), (2L, "B", 99.0), (4L, "B", 40.0), (6L, "B", 60.0), (7L, "B", 70.0))
+      .toDF("k", "part", "v")
+    val c = Seq((8L, "C", 80.0)).toDF("k", "part", "v")
+    val expectedPath = Files.createTempDirectory("graft_pdrop_ref").toString + "/s"
+    Seq(a, b).foreach(merge(expectedPath, _))
+    val expected = rows(merge(expectedPath, c))
+
+    val statePath = Files.createTempDirectory("graft_pdrop").toString + "/s"
+    val staging = statePath + "_staging"
+    merge(statePath, a)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[DyingStagingDelete].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    // Uncoalesced, batch B's staging copy holds a part file per key.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      DyingStagingDelete.armed = true
+      // Batch B is published; the process dies dropping its staging copy.
+      intercept[java.io.IOException](merge(statePath, b))
+    } finally {
+      DyingStagingDelete.armed = false
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    // The delete got as far as one part file before the death: one that
+    // shares a partition with another, so the rest hold part of it.
+    val parts = new java.io.File(staging).listFiles().filter(_.getName.startsWith("part-")).toSeq
+      .map(f => f -> spark.read.parquet(f.getPath).select("part").distinct().collect().map(_.getString(0)).toSet)
+    val deleted = parts.collectFirst {
+      case (f, ps) if parts.exists { case (g, qs) => g != f && ps.intersect(qs).nonEmpty } => f
+    }
+    assert(deleted.exists(_.delete()), parts)
+    val marked = Files.exists(Paths.get(staging, "_SUCCESS"))
+    val state = merge(statePath, c)
+    assert(rows(state) == expected)
+    assert(expected.size == 8)
+    assert(!marked, "a half-deleted staging dir must not be marked complete")
+    assert(!Files.exists(Paths.get(staging)), "_staging left behind")
   }
 }

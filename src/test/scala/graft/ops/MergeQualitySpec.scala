@@ -144,6 +144,25 @@ class MergeQualitySpec extends SparkSpec {
     assert(revenues(merged) == Map((("AAA", "2024-Q1"), 1.0), ((null, "2024-Q1"), 9.0)))
   }
 
+  test("mergeInto: a batch whose keys change between its evaluations fails the merge") {
+    val statePath = java.nio.file.Files.createTempDirectory("fmerge_drift").toString + "/state"
+    mergeQ(statePath, history)
+    val before = dataFiles(statePath)
+    val input = java.nio.file.Files.createTempDirectory("fmerge_drift_in").toString + "/b"
+    batch(("AAA", "2025-Q1", 5.0, 1)).write.parquet(input)
+    // The first evaluation sees 2025-Q1, which no stored file holds; every
+    // later one restates 2024-Q1, whose stored row sits in a kept file.
+    MergeQualitySpec.calls.set(0)
+    val drift = udf((q: String) =>
+      if (MergeQualitySpec.calls.getAndIncrement() == 0) q else "2024-Q1").asNondeterministic()
+    val drifting = spark.read.parquet(input).withColumn("quarter", drift(col("quarter")))
+    val e = intercept[Exception](mergeQ(statePath, drifting))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("outside the key range")), e)
+    assert(dataFiles(statePath) == before, "a failed merge must leave the state as it was")
+    assert(revenues(spark.read.parquet(statePath)) == revenues(history))
+  }
+
   test("mergeInto by partition keeps existing null-partition state rows") {
     val statePath = java.nio.file.Files.createTempDirectory("pmerge_null").toString + "/state"
     val seed = Seq((1L, Option("A"), 10.0), (2L, Option.empty[String], 20.0),
@@ -275,4 +294,9 @@ class MergeQualitySpec extends SparkSpec {
     val aClamped = got.filter(_._1.contains("a")).map(_._3).sorted.toSeq
     assert(aClamped.zip(Seq(1.2, 2.0, 2.8)).forall { case (g, e) => math.abs(g - e) < 1e-9 })
   }
+}
+
+object MergeQualitySpec {
+  /** Calls of the drifting test's key function, across its evaluations. */
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
 }
