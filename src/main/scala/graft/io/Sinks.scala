@@ -13,13 +13,14 @@ import graft.ops.Compact
 object Sinks {
 
   /** Replace the table at `tablePath` with `df` plus the table's data
-    * files named in `keep`, through [[graft.ops.Compact]]'s swap protocol
-    * ([[graft.ops.Compact.swapIn]]): recover any interrupted earlier swap,
-    * write `df` into `<tablePath>__compact_tmp` with the one state writer
-    * ([[StateFiles.write]], zstd), then swap it in behind a manifest that
-    * lists the kept files, which move over from the staged-aside table by
-    * rename (or publish it directly when no table exists yet). This is
-    * how [[graft.ops.Merge.mergeInto]] rewrites only the files a batch
+    * files named in `keep`, through [[graft.ops.Compact.swapIn]]: recover
+    * any interrupted earlier swap, write `df` into
+    * `<tablePath>__compact_tmp` with the one state writer
+    * ([[StateFiles.write]], zstd; hive-partitioned by `partitionBy`), then
+    * swap it in behind a manifest that lists the kept files, which move
+    * over from the staged-aside table by rename, into their own partition
+    * directories (or publish it directly when no table exists yet). This
+    * is how [[graft.ops.Merge.mergeInto]] rewrites only the files a batch
     * can touch. A process death at any step leaves state the next write
     * or state read ([[graft.ops.Merge.readStateOrEmpty]]) completes or
     * rolls back, so the previous generation is never lost. It is NOT
@@ -30,8 +31,8 @@ object Sinks {
     * indirection; SURVEY.md §4).
     */
   def atomicSwapWrite(spark: SparkSession, df: DataFrame, tablePath: String,
-                      keep: Seq[Path] = Nil): Unit = {
-    Compact.swapIn(spark, tablePath, keep)(StateFiles.write(df, _))
+                      keep: Seq[Path] = Nil, partitionBy: Seq[String] = Nil): Unit = {
+    Compact.swapIn(spark, tablePath, keep)(StateFiles.write(df, _, partitionBy))
     // Invalidate cached file listings so subsequent reads see the new
     // generation. (DataFrames created BEFORE the swap hold the old file
     // list and will fail — swap semantics, same as any non-ACID overwrite;

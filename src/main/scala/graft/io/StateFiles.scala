@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -145,6 +146,24 @@ object StateFiles {
       else None
     }
     Footer(schema, ranges.toMap)
+  }
+
+  /** A hive partition directory `<col>=<value>` as a file range: the
+    * one value of the partition column, of type `dt`, that every row
+    * under the directory holds, parsed from `value` as Spark writes it
+    * (path-escaped; the default partition holds the nulls). None for a
+    * type without a [[comparable]] form or a value that does not parse:
+    * the directory's files then always count as holding the batch's keys.
+    */
+  def partitionRange(dt: DataType, value: String): Option[KeyRange] = {
+    val v = ExternalCatalogUtils.unescapePathName(value)
+    if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) Some(KeyRange(None, None, hasNulls = true))
+    else (dt match {
+      case StringType => Some(v.getBytes(UTF_8))
+      case DateType => scala.util.Try(java.time.LocalDate.parse(v).toEpochDay).toOption
+      case ByteType | ShortType | IntegerType | LongType => v.toLongOption
+      case _ => None
+    }).map(x => KeyRange(Some(x), Some(x), hasNulls = false))
   }
 
   /** Runs `batch`'s `keys` columns through one job and returns the row of

@@ -17,11 +17,13 @@ import graft.io.StateFiles
   * rewrite is written zstd-compressed through the one state writer
   * ([[graft.io.StateFiles.write]]).
   *
-  * Crash-safety contract of the engine's one directory swap (all three
-  * entry points, and every flat state write through [[swapIn]] —
-  * including [[Merge.mergeInto]], which rewrites only the files a batch
-  * can touch and carries the rest over as kept files): original files
-  * NEVER leave the live table tree until the swap has completed. The
+  * Crash-safety contract of the engine's one directory swap, which every
+  * state rewrite goes through — the three compactions here and
+  * [[Merge.mergeInto]] in both its flat and its hive-partitioned layout,
+  * which rewrites only the files a batch can touch and carries the rest
+  * over as kept files. [[recover]] is the only crash recovery merged or
+  * compacted state has: original files NEVER leave the live table tree
+  * until the swap has completed. The
   * rewrite stages in `<path>__compact_tmp` together with a `_GRAFT_KEEP`
   * manifest naming the untouched files to carry over; the swap renames
   * `<path>` aside to `<path>__compact_old` (the complete original) and
@@ -63,17 +65,6 @@ object Compact {
     * own listings and Spark's parquet scans.
     */
   private val KeepManifest = "_GRAFT_KEEP"
-
-  private def dataFiles(fs: FileSystem, root: Path): Int = {
-    val it = fs.listFiles(root, true)
-    var n = 0
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) n += 1
-    }
-    n
-  }
 
   /** Every data file under `root` with its length (names starting with
     * `_` or `.` — markers, manifests, checksums — are not data). */
@@ -240,11 +231,12 @@ object Compact {
   /** Replaces the table at `path` with what `write` stages in the tmp
     * dir plus the table's data files named in `keep`: [[recover]],
     * `write(tmp)`, then [[stageAndSwap]] carrying each kept file over
-    * under its own name — or one publish rename when no table exists
-    * yet (a crash before it leaves only tmp, which [[recover]] drops).
-    * `keep` names files directly under `path`; Spark's part-file names
-    * are unique per write, so a kept file never collides with a staged
-    * one. Returns what `write` returns.
+    * under its own relative path — or one publish rename when no table
+    * exists yet (a crash before it leaves only tmp, which [[recover]]
+    * drops). `keep` names files directly under `path` or one partition
+    * directory down (`part=A/<file>`); Spark's part-file names are unique
+    * per write, so a kept file never collides with a staged one. Returns
+    * what `write` returns.
     */
   private[graft] def swapIn[T](spark: SparkSession, path: String, keep: Seq[Path] = Nil)
                               (write: String => T): T = {
@@ -252,11 +244,18 @@ object Compact {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, p)
     val qp = fs.makeQualified(p)
-    require(keep.forall(f => fs.makeQualified(f).getParent == qp),
-      s"compact: kept files must sit directly under $path")
+    val moves = keep.map { f =>
+      val q = fs.makeQualified(f)
+      val rel =
+        if (q.getParent == qp) q.getName
+        else if (q.getParent.getParent == qp) s"${q.getParent.getName}/${q.getName}"
+        else throw new IllegalArgumentException(
+          s"compact: kept file $f must sit at most one directory under $path")
+      Keep(rel, rel)
+    }
     val (tmp, _) = staged(p)
     val out = write(tmp.toString)
-    if (fs.exists(p)) stageAndSwap(fs, p, keep.map(f => Keep(f.getName, f.getName)))
+    if (fs.exists(p)) stageAndSwap(fs, p, moves)
     else if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"compact: cannot publish $tmp as $p")
     out
@@ -293,11 +292,11 @@ object Compact {
         val df = spark.read.parquet(small.map(_.toString): _*)
         val rows = df.count()
         val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-        val (tmp, _) = staged(p)
-        StateFiles.write(df.repartition(nOut), tmp.toString)
-        val rewritten = listData(fs, tmp).map(_._1.getName)
-        stageAndSwap(fs, p, big.map(f => Keep(f.getName, f.getName)))
-        val after = dataFiles(fs, p)
+        val rewritten = swapIn(spark, path, big) { tmp =>
+          StateFiles.write(df.repartition(nOut), tmp)
+          listData(fs, new Path(tmp)).map(_._1.getName)
+        }
+        val after = listData(fs, p).size
         val rowsBack = spark.read.parquet(
           rewritten.map(n => new Path(p, n).toString): _*).count()
         require(rowsBack == rows,
@@ -346,7 +345,7 @@ object Compact {
     val (currentDirs, committedDirs) = waveDirs.partition(
       _.getPath.getName == s"wave=$currentWave")
     val committed = committedDirs.flatMap(d => listData(fs, d.getPath)).toSeq
-    val before = dataFiles(fs, p)
+    val before = listData(fs, p).size
     // Re-homing is unconditional (directory count must not grow with
     // wave count — a no-op tick per wave would leave one wave=N dir per
     // micro-batch forever); only the REWRITE is size-tiered. A small
@@ -387,7 +386,7 @@ object Compact {
                         s"wave=-1/${f.getName}")) ++
         currentDirs.map(d => Keep(d.getPath.getName, d.getPath.getName)).toSeq
     stageAndSwap(fs, p, moves)
-    val after = dataFiles(fs, p)
+    val after = listData(fs, p).size
     if (rewritten.nonEmpty) {
       val rowsBack = spark.read.parquet(
         rewritten.map(n => new Path(new Path(qp, "wave=-1"), n).toString): _*).count()
@@ -414,7 +413,7 @@ object Compact {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (rows, before) = swapIn(spark, path) { tmp =>
       require(fs.exists(p), s"compactParquet: no table at $path")
-      val before = dataFiles(fs, p)
+      val before = listData(fs, p).size
       val df = spark.read.parquet(path)
       val rows = df.count()
       val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
@@ -428,7 +427,7 @@ object Compact {
       StateFiles.write(shaped, tmp, partitionCols)
       (rows, before)
     }
-    val after = dataFiles(fs, p)
+    val after = listData(fs, p).size
     val rowsAfter = spark.read.parquet(path).count()
     require(rowsAfter == rows,
       s"compactParquet: row count changed $rows -> $rowsAfter at $path")

@@ -544,16 +544,17 @@ object EventStreams {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Partition-scoped twin of [[mergeSink]] — the form that holds at
-    * 100 TB standing state: each micro-batch is one
-    * [[graft.ops.Merge.mergeInto]] with `partitionCol`, which reads and
-    * rewrites ONLY the hive partitions the batch touches, so per-batch
-    * cost is proportional to the touched partitions, never the table
-    * ([[mergeSink]]'s full read + swap is O(history) per batch). The same
-    * total order as [[mergeSink]] carries the dedup and the replay
-    * convergence — which here additionally requires `partitionCol` to be
-    * functionally dependent on `keys` (the gate passes `event_type`, which
-    * IS a key; see [[graft.ops.Merge.mergeInto]]'s contract).
+  /** Hive-partitioned twin of [[mergeSink]]: each micro-batch is one
+    * [[graft.ops.Merge.mergeInto]] with `partitionCol`, the same
+    * touched-file merge and manifest swap as [[mergeSink]]'s flat state,
+    * with each partition directory's value as one more range — so a
+    * batch reads and rewrites only the files of partitions it holds and
+    * per-batch cost is proportional to the touched files, never the
+    * table. The same total order as [[mergeSink]] carries the dedup and
+    * the replay convergence — which here additionally requires
+    * `partitionCol` to be functionally dependent on `keys` (the gate
+    * passes `event_type`, which IS a key; see
+    * [[graft.ops.Merge.mergeInto]]'s contract).
     */
   def mergeSinkPartitioned(stream: DataFrame, statePath: String,
                            keys: Seq[String], precedence: Seq[Column],

@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft/ops`, `graft/io` and `graft/streaming` are held to a second
   * ratchet: they go through the one state writer
   * ([[graft.io.StateFiles]]), apart from the sites pinned in
-  * `ParquetWritesLeft`. */
+  * `ParquetWritesLeft`. File-system renames and deletes there are held
+  * to a third: state moves only through the one swap protocol
+  * ([[graft.ops.Compact]]), apart from the sites pinned in
+  * `FsMovesLeft`. */
 class ConfHygieneSpec extends AnyFunSuite {
 
   private val EntryPoints =
@@ -44,6 +47,15 @@ class ConfHygieneSpec extends AnyFunSuite {
   /** Parquet writes outside the writer, per file: the wave-fixture
     * staging of the event inputs. Lower a pin when a site goes. */
   private val ParquetWritesLeft = Map("graft/io/Tables.scala" -> 2)
+
+  private val FsMove = """\.(rename|delete)\(""".r
+
+  /** The one swap protocol, exempt from `FsMove`. */
+  private val Swap = "graft/ops/Compact.scala"
+
+  /** Renames and deletes outside the swap, per file: the wave-fixture
+    * staging rename and the orphaned bucketed-table reclaim. */
+  private val FsMovesLeft = Map("graft/io/Tables.scala" -> 1, "graft/io/Sinks.scala" -> 1)
 
   /** `(path relative to root, file)` for every Scala file under `root`. */
   private def scalaFiles(root: Path): Seq[(String, Path)] = {
@@ -99,6 +111,11 @@ class ConfHygieneSpec extends AnyFunSuite {
     ratchet(found, ParquetWritesLeft, "Parquet writes")
   }
 
+  /** Every rename or delete under the state dirs, held to `FsMovesLeft`. */
+  private def fsMoveViolations(root: Path): Seq[String] =
+    ratchet(hits(root, FsMove, Set(Swap)).filter { case (rel, _) => StateDirs.exists(rel.startsWith) },
+      FsMovesLeft, "renames/deletes")
+
   private def mainRoot: Path = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
@@ -121,6 +138,31 @@ class ConfHygieneSpec extends AnyFunSuite {
     val found = parquetWriteViolations(mainRoot)
     assert(found.isEmpty,
       "write state through graft.io.StateFiles (zstd, one writer):\n" + found.mkString("\n"))
+  }
+
+  test("state files move only through the one swap, apart from the pinned sites") {
+    val found = fsMoveViolations(mainRoot)
+    assert(found.isEmpty,
+      "move or drop state through graft.ops.Compact's swap:\n" + found.mkString("\n"))
+  }
+
+  test("the rename/delete check names the file and line, and spares the swap") {
+    val root = Files.createTempDirectory("graft_hygiene_moves")
+    def put(rel: String, text: String): Unit = {
+      Files.createDirectories(root.resolve(rel).getParent)
+      Files.writeString(root.resolve(rel), text)
+    }
+    put("graft/ops/Merge.scala", "fs.exists(p)\nfs.delete(staging, true)\n")
+    put(Swap, "fs.rename(p, old)\nfs.delete(old, true)\n")
+    put("graft/io/Tables.scala", "fs.rename(part, dest)\n")
+    put("graft/io/Sinks.scala", "fs.delete(a, true)\n" * 2)
+    put("graft/streaming/Sink.scala", "f.renameTo(g)\n")
+    put("graft/text/Index.scala", "fs.delete(a, true)\n")
+    val found = fsMoveViolations(root).map(_.replace(s"$root/", ""))
+    assert(found == Seq("graft/io/Sinks.scala: 1 renames/deletes pinned, 2 found",
+      "graft/io/Sinks.scala:1: fs.delete(a, true)", "graft/io/Sinks.scala:2: fs.delete(a, true)",
+      "graft/ops/Merge.scala: 0 renames/deletes pinned, 1 found",
+      "graft/ops/Merge.scala:2: fs.delete(staging, true)"), found)
   }
 
   test("the Parquet-write check names the file and line of a write chain") {

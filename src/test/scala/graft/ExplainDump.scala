@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for named contract queries to files —
-  * the plan evidence the optimization rounds commit under `plans/rNN/`.
+  * the plan evidence an optimization round cites, regenerated on demand
+  * rather than committed (the round-17/18 dumps are in git history at
+  * `e8077fc:plans/r17/`, `e8077fc:plans/r18/`).
   * Usage: `Test/runMain graft.ExplainDump <sfDir> <outDir> <suffix> <q1,q2,...>`
   * (writes `<outDir>/<query>_<suffix>.txt`).
   */

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 import graft.SparkSpec
 
 /** Plan-shape regression contract: the physical properties SCALE.md and
@@ -23,20 +26,20 @@ class PlanContractSpec extends SparkSpec {
   /** Runs `body` and returns the executed plans of the queries it ran
     * that satisfy `keep`. Listener delivery is async: polls until at
     * least one kept plan has arrived (or 15 s pass). */
-  private def plansRunBy(keep: String => Boolean)(body: => Unit): Seq[String] = {
+  private def plansRunBy(keep: String => Boolean)(body: => Unit): Seq[SparkPlan] = {
     import scala.jdk.CollectionConverters._
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        plans.add(qe.executedPlan)
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
       body
-      def kept() = plans.iterator().asScala.toSeq.filter(keep)
+      def kept() = plans.iterator().asScala.toSeq.filter(p => keep(p.toString))
       val deadline = System.nanoTime() + 15000000000L
       while (System.nanoTime() < deadline && kept().isEmpty) Thread.sleep(100)
       kept()
@@ -102,7 +105,7 @@ class PlanContractSpec extends SparkSpec {
           graft.ops.Merge.mergeInto(spark, statePath, batch, keys, precedence, incomingWins)
         }
         assert(written.size == 1, written)
-        val p = finalPlan(written.head)
+        val p = finalPlan(written.head.toString)
         val ex = exchanges(p)
         assert(ex.size == 1, p)
         assert(ex.head.matches(keyed), p)
@@ -388,34 +391,33 @@ class PlanContractSpec extends SparkSpec {
       s"lambda must divide by the projected norm attribute:\n${p.take(800)}")
   }
 
-  test("partitioned merge reads state partition-pruned and consumes the persisted batch") {
-    // The 100 TB property of Merge.mergeInto's partition-scoped layout:
-    // per-batch cost is O(touched partitions). The state scan must carry
-    // a real partition filter (pruning at the file index, not a post-scan
-    // Filter) and the incoming side must come back from the persist
-    // (InMemoryTableScan), not a re-execution of its upstream. The
-    // touched-only dynamic overwrite is pinned behaviorally in
-    // MergeQualitySpec (untouched partition files stay byte-identical).
+  test("partitioned merge rewrites only the touched partition's files under one key exchange") {
+    // Merge.mergeInto's partitioned layout: per-batch cost is O(touched
+    // files). The carry-over of untouched partitions is pinned in
+    // MergeQualitySpec (their files stay byte-identical).
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val statePath =
       java.nio.file.Files.createTempDirectory("pmerge_plan").toString + "/state"
     Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0)).toDF("k", "part", "v")
       .write.partitionBy("part").parquet(statePath)
+    // The batch's key range (2..4) overlaps the part=C file's key: only
+    // the partition range proves that file untouched.
     val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
-    // The staging-write plan is the one that reads state + persisted batch.
-    val mp = plansRunBy(p => p.contains("InMemoryTableScan") && p.contains("PartitionFilters")) {
+    val written = plansRunBy(p => p.contains("InsertIntoHadoopFsRelationCommand") &&
+        p.contains("state__compact_tmp")) {
       graft.ops.Merge.mergeInto(spark, statePath, batch,
         Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
     }
-    assert(mp.nonEmpty, "no captured plan combines the persisted batch with a state scan")
-    // The state scan's partition filter names the touched value and the
-    // filter bracket is non-empty (a full-scan read would show
-    // `PartitionFilters: []`).
-    assert(mp.exists(p => p.linesIterator.exists(l =>
-        l.contains("PartitionFilters: [") && !l.contains("PartitionFilters: []") &&
-          l.contains("/state") && !l.contains("_staging"))),
-      s"state scan is not partition-pruned:\n${mp.head.take(1200)}")
+    assert(written.size == 1, written)
+    val p = finalPlan(written.head.toString)
+    val ex = "Exchange hashpartitioning\\([^)]*\\)".r.findAllIn(p).toSeq
+    assert(ex.size == 1 && ex.head.matches("Exchange hashpartitioning\\(k#\\d+L?, \\d+\\)"), p)
+    object Aqe extends AdaptiveSparkPlanHelper
+    val scanned = Aqe.collect(written.head) {
+      case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+    }.flatten
+    assert(scanned.nonEmpty && scanned.forall(_.contains("/state/part=B/")), scanned)
   }
 
   test("dedup_prefix_contained: one materialized range partitioning, per-range window, " +

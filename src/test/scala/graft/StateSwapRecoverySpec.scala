@@ -11,27 +11,13 @@ import graft.ops.Merge
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
-/** The local file system, except that while [[DyingStagingDelete.armed]]
-  * a recursive delete of an existing `*_staging` dir fails without
-  * deleting anything: a process death at the start of that delete. */
-class DyingStagingDelete extends org.apache.hadoop.fs.LocalFileSystem {
-  override def delete(f: Path, recursive: Boolean): Boolean = {
-    if (DyingStagingDelete.armed && recursive && f.getName.endsWith("_staging") && exists(f))
-      throw new java.io.IOException(s"process died deleting $f")
-    super.delete(f, recursive)
-  }
-}
-
-object DyingStagingDelete {
-  @volatile var armed = false
-}
-
-/** Crash-restart contract of the whole-table state swap
+/** Crash-restart contract of the one state swap
   * ([[graft.io.Sinks.atomicSwapWrite]] over [[graft.ops.Compact]]'s
-  * protocol). Each case leaves on disk what a process death at one step
-  * of a batch's swap leaves, then re-runs that batch — as a caller's retry
-  * or a streaming replay of the uncommitted batch would — and asserts the
-  * state equals the uninterrupted run's, with no staging dir left.
+  * protocol), for flat and hive-partitioned merge state alike. Each case
+  * leaves on disk what a process death at one step of a batch's swap
+  * leaves, then re-runs that batch — as a caller's retry or a streaming
+  * replay of the uncommitted batch would — and asserts the state equals
+  * the uninterrupted run's, with no staging dir left.
   */
 class StateSwapRecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -45,17 +31,18 @@ class StateSwapRecoverySpec extends SparkSpec {
     * the first of them back into the table and before it moved the rest. */
   private val HalfMoved = "rewrite published, kept files half moved"
 
-  /** Leaves `statePath` as a swap of `rewrite` over it, carrying the
-    * table's data files `keep` over, leaves it when the process dies
-    * after `stage`. The swap's steps: stage the rewrite and its carry-over
+  /** Leaves `statePath` as a swap of `rewrite` (hive-partitioned by
+    * `partitionBy`) over it, carrying the table's data files `keep` (paths
+    * relative to the table) over, leaves it when the process dies after
+    * `stage`. The swap's steps: stage the rewrite and its carry-over
     * manifest in `__compact_tmp`; move the table to `__compact_old`; move
     * the rewrite in; move each kept file from `__compact_old` back in. */
   private def interrupt(statePath: String, rewrite: DataFrame, stage: String,
-                        keep: Seq[String] = Nil): Unit = {
+                        keep: Seq[String] = Nil, partitionBy: Seq[String] = Nil): Unit = {
     val (table, tmp, old) =
       (new Path(statePath), new Path(statePath + "__compact_tmp"), new Path(statePath + "__compact_old"))
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rewrite.write.parquet(tmp.toString)
+    rewrite.write.partitionBy(partitionBy: _*).parquet(tmp.toString)
     val manifest = fs.create(new Path(tmp, "_GRAFT_KEEP"), true)
     try manifest.write(keep.map(k => s"$k\t$k\n").mkString.getBytes("UTF-8"))
     finally manifest.close()
@@ -63,6 +50,7 @@ class StateSwapRecoverySpec extends SparkSpec {
     if (stage == Stages(2) || stage == HalfMoved) assert(fs.rename(tmp, table))
     if (stage == HalfMoved) {
       assert(keep.size >= 2, keep)
+      fs.mkdirs(new Path(table, keep.head).getParent)
       assert(fs.rename(new Path(old, keep.head), new Path(table, keep.head)))
     }
     assert(fs.exists(tmp) || fs.exists(old))
@@ -194,71 +182,36 @@ class StateSwapRecoverySpec extends SparkSpec {
       assertNoStaging(statePath)
     }
 
-  test("partitioned mergeInto after a death between the overwrite's delete and its move") {
-    def merge(path: String, df: DataFrame) = Merge.mergeInto(spark, path, df, Seq("k"),
-      Seq(col("v").desc), partitionCol = Some("part")).select("k", "part", "v")
-    val a = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "B", 30.0), (5L, "C", 50.0)).toDF("k", "part", "v")
-    val b = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
-    val expectedPath = Files.createTempDirectory("graft_pmerge_ref").toString + "/s"
-    merge(expectedPath, a)
-    val expected = rows(merge(expectedPath, b))
+  /** One `mergeInto` of `df` into the state at `path`, partitioned by `part`. */
+  private def mergeParts(path: String, df: DataFrame): DataFrame = Merge.mergeInto(spark, path,
+    df, Seq("k"), Seq(col("v").desc), partitionCol = Some("part")).select("k", "part", "v")
 
-    val statePath = Files.createTempDirectory("graft_pmerge").toString + "/s"
-    merge(statePath, a)
-    // Batch B staged its merged rows of partition B; the overwrite commit
-    // then deleted part=B and died before moving the new copy in.
-    spark.read.parquet(expectedPath).where(col("part") === "B").select("k", "part", "v")
-      .write.parquet(statePath + "_staging")
-    val fs = new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new Path(statePath, "part=B"), true))
-    val state = merge(statePath, b) // the retry of batch B
-    assert(rows(state) == expected)
-    assert(expected.size == 5)
-    assert(!Files.exists(Paths.get(statePath + "_staging")), "_staging left behind")
-  }
+  private def parts(rows: (Long, String, Double)*): DataFrame = rows.toDF("k", "part", "v")
 
-  test("partitioned mergeInto after a death while dropping a published staging dir") {
-    def merge(path: String, df: DataFrame) = Merge.mergeInto(spark, path, df, Seq("k"),
-      Seq(col("v").desc), partitionCol = Some("part")).select("k", "part", "v")
-    val a = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "B", 30.0), (5L, "C", 50.0)).toDF("k", "part", "v")
-    val b = Seq((1L, "A", 11.0), (2L, "B", 99.0), (4L, "B", 40.0), (6L, "B", 60.0), (7L, "B", 70.0))
-      .toDF("k", "part", "v")
-    val c = Seq((8L, "C", 80.0)).toDF("k", "part", "v")
-    val expectedPath = Files.createTempDirectory("graft_pdrop_ref").toString + "/s"
-    Seq(a, b).foreach(merge(expectedPath, _))
-    val expected = rows(merge(expectedPath, c))
+  private val partsA = parts((1L, "A", 10.0), (2L, "B", 20.0), (3L, "B", 30.0), (5L, "C", 50.0))
+  private val partsB = parts((2L, "B", 99.0), (4L, "B", 40.0))
 
-    val statePath = Files.createTempDirectory("graft_pdrop").toString + "/s"
-    val staging = statePath + "_staging"
-    merge(statePath, a)
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.file.impl", classOf[DyingStagingDelete].getName)
-    conf.setBoolean("fs.file.impl.disable.cache", true)
-    // Uncoalesced, batch B's staging copy holds a part file per key.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      DyingStagingDelete.armed = true
-      // Batch B is published; the process dies dropping its staging copy.
-      intercept[java.io.IOException](merge(statePath, b))
-    } finally {
-      DyingStagingDelete.armed = false
-      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-      conf.unset("fs.file.impl")
-      conf.unset("fs.file.impl.disable.cache")
+  // Two partitions no later batch touches, each merged alone: every
+  // swap of batch B carries both files over, and a half-moved carry-over
+  // re-homes the first into a new part=X dir.
+  private val partsOld = Seq(parts((10L, "X", 1.0)), parts((20L, "Y", 2.0)))
+
+  for (stage <- Stages :+ HalfMoved)
+    test(s"partitioned mergeInto retry after an interrupted swap: $stage") {
+      val expectedPath = Files.createTempDirectory("graft_pswap_ref").toString + "/s"
+      (partsOld :+ partsA).foreach(mergeParts(expectedPath, _))
+      val expected = rows(mergeParts(expectedPath, partsB))
+
+      val statePath = Files.createTempDirectory("graft_pswap").toString + "/s"
+      partsOld.foreach(mergeParts(statePath, _))
+      val kept = Seq("X", "Y").flatMap(p => dataFiles(s"$statePath/part=$p").map(f => s"part=$p/$f"))
+      mergeParts(statePath, partsA)
+      assert(kept.size == 2 && kept.forall(f => Files.exists(Paths.get(statePath, f))), kept)
+      val rewrite = spark.read.parquet(expectedPath).where(!col("part").isin("X", "Y"))
+      interrupt(statePath, rewrite, stage, kept, Seq("part"))
+      val state = mergeParts(statePath, partsB)
+      assert(rows(state) == expected && state.count() == 7)
+      assert(expected.size == 7)
+      assertNoStaging(statePath)
     }
-    // The delete got as far as one part file before the death: one that
-    // shares a partition with another, so the rest hold part of it.
-    val parts = new java.io.File(staging).listFiles().filter(_.getName.startsWith("part-")).toSeq
-      .map(f => f -> spark.read.parquet(f.getPath).select("part").distinct().collect().map(_.getString(0)).toSet)
-    val deleted = parts.collectFirst {
-      case (f, ps) if parts.exists { case (g, qs) => g != f && ps.intersect(qs).nonEmpty } => f
-    }
-    assert(deleted.exists(_.delete()), parts)
-    val marked = Files.exists(Paths.get(staging, "_SUCCESS"))
-    val state = merge(statePath, c)
-    assert(rows(state) == expected)
-    assert(expected.size == 8)
-    assert(!marked, "a half-deleted staging dir must not be marked complete")
-    assert(!Files.exists(Paths.get(staging)), "_staging left behind")
-  }
 }

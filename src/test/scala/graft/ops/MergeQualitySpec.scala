@@ -1,5 +1,8 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -41,33 +44,15 @@ class MergeQualitySpec extends SparkSpec {
     assert(got == Map("TSLA" -> 1.0, "RIVN" -> 3.0))
   }
 
-  test("mergeInto by partition rewrites only touched partitions") {
-    val statePath = java.nio.file.Files.createTempDirectory("pmerge").toString + "/state"
-    val seed = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0))
-      .toDF("k", "part", "v")
-    seed.write.partitionBy("part").parquet(statePath)
-    val filesBefore = {
-      val dirA = new java.io.File(s"$statePath/part=A")
-      dirA.listFiles().map(f => f.getName -> f.lastModified()).toMap
-    }
-    val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
-    val merged = Merge.mergeInto(spark, statePath, batch,
-      Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
-    val got = merged.select("k", "part", "v").collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
-    assert(got == Map(1L -> (("A", 10.0)), 2L -> (("B", 99.0)),
-      3L -> (("C", 30.0)), 4L -> (("B", 40.0))))
-    val filesAfter = {
-      val dirA = new java.io.File(s"$statePath/part=A")
-      dirA.listFiles().map(f => f.getName -> f.lastModified()).toMap
-    }
-    assert(filesBefore == filesAfter, "untouched partition files must not be rewritten")
+  /** Data files under `dir`, in partition directories too: path relative
+    * to `dir` -> length. */
+  private def dataFiles(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator.asScala.map(_.toFile).filter(f => f.isFile && !f.getName.startsWith("_") &&
+      !f.getName.startsWith(".")).map(f => root.relativize(f.toPath).toString -> f.length).toMap
+    finally files.close()
   }
-
-  /** Data files directly under `dir`: name -> length. */
-  private def dataFiles(dir: String): Map[String, Long] =
-    new java.io.File(dir).listFiles().filter(f => f.isFile && !f.getName.startsWith("_") &&
-      !f.getName.startsWith(".")).map(f => f.getName -> f.length).toMap
 
   private val Keys = Seq("ticker", "quarter")
   private def history = batch((for (t <- Seq("AAA", "BBB", "CCC"); q <- 1 to 4)
@@ -144,24 +129,27 @@ class MergeQualitySpec extends SparkSpec {
     assert(revenues(merged) == Map((("AAA", "2024-Q1"), 1.0), ((null, "2024-Q1"), 9.0)))
   }
 
-  test("mergeInto: a batch whose keys change between its evaluations fails the merge") {
-    val statePath = java.nio.file.Files.createTempDirectory("fmerge_drift").toString + "/state"
-    mergeQ(statePath, history)
-    val before = dataFiles(statePath)
-    val input = java.nio.file.Files.createTempDirectory("fmerge_drift_in").toString + "/b"
-    batch(("AAA", "2025-Q1", 5.0, 1)).write.parquet(input)
-    // The first evaluation sees 2025-Q1, which no stored file holds; every
-    // later one restates 2024-Q1, whose stored row sits in a kept file.
-    MergeQualitySpec.calls.set(0)
-    val drift = udf((q: String) =>
-      if (MergeQualitySpec.calls.getAndIncrement() == 0) q else "2024-Q1").asNondeterministic()
-    val drifting = spark.read.parquet(input).withColumn("quarter", drift(col("quarter")))
-    val e = intercept[Exception](mergeQ(statePath, drifting))
-    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-    assert(messages.exists(m => m != null && m.contains("outside the key range")), e)
-    assert(dataFiles(statePath) == before, "a failed merge must leave the state as it was")
-    assert(revenues(spark.read.parquet(statePath)) == revenues(history))
-  }
+  for ((layout, partitionCol) <- Seq("" -> None, ", partitioned by quarter" -> Some("quarter")))
+    test(s"mergeInto: a batch whose keys change between its evaluations fails the merge$layout") {
+      val statePath = java.nio.file.Files.createTempDirectory("fmerge_drift").toString + "/state"
+      def merge(b: DataFrame) =
+        Merge.mergeInto(spark, statePath, b, Keys, Seq(col("prio").desc), partitionCol = partitionCol)
+      merge(history)
+      val before = dataFiles(statePath)
+      val input = java.nio.file.Files.createTempDirectory("fmerge_drift_in").toString + "/b"
+      batch(("AAA", "2025-Q1", 5.0, 1)).write.parquet(input)
+      // The first evaluation sees 2025-Q1, which no stored file holds; every
+      // later one restates 2024-Q1, whose stored row sits in a kept file.
+      MergeQualitySpec.calls.set(0)
+      val drift = udf((q: String) =>
+        if (MergeQualitySpec.calls.getAndIncrement() == 0) q else "2024-Q1").asNondeterministic()
+      val drifting = spark.read.parquet(input).withColumn("quarter", drift(col("quarter")))
+      val e = intercept[Exception](merge(drifting))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(messages.exists(m => m != null && m.contains("outside the key range")), e)
+      assert(dataFiles(statePath) == before, "a failed merge must leave the state as it was")
+      assert(revenues(spark.read.parquet(statePath)) == revenues(history))
+    }
 
   test("mergeInto by partition keeps existing null-partition state rows") {
     val statePath = java.nio.file.Files.createTempDirectory("pmerge_null").toString + "/state"
@@ -171,12 +159,55 @@ class MergeQualitySpec extends SparkSpec {
     // The batch touches the null partition: existing null-partition rows
     // (k=2, k=3) must survive the merge — isin(null) alone would drop
     // them while dynamic overwrite still rewrites the default partition.
-    val batch = Seq((2L, Option.empty[String], 99.0)).toDF("k", "part", "v")
-    val merged = Merge.mergeInto(spark, statePath, batch,
-      Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
-    val got = merged.select("k", "v").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0))
+    def merge(rows: (Long, Option[String], Double)*) = Merge.mergeInto(spark, statePath,
+      rows.toDF("k", "part", "v"), Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
+      .select("k", "v").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(merge((2L, None, 99.0)) == Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0))
+    // Null and non-null partition values in one batch: both the default
+    // partition and part=A are touched, and part=B is new.
+    assert(merge((3L, None, 77.0), (1L, Some("A"), 11.0), (4L, Some("B"), 40.0)) ==
+      Map(1L -> 11.0, 2L -> 99.0, 3L -> 77.0, 4L -> 40.0))
+  }
+
+  /** Merges `seed`, then `batch`, into a state keyed by `k` and
+    * partitioned by `part`. Every file outside the partition directory
+    * `touchedDir` must stay byte-identical; returns `v` per key, failing
+    * on a key held twice. */
+  private def mergeParts(seed: DataFrame, batch: DataFrame, touchedDir: String): Map[Long, Double] = {
+    val statePath = java.nio.file.Files.createTempDirectory("pmerge_dirs").toString + "/state"
+    def merge(df: DataFrame) =
+      Merge.mergeInto(spark, statePath, df, Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
+    merge(seed)
+    val untouched = dataFiles(statePath).filterNot(_._1.startsWith(touchedDir + "/"))
+    assert(untouched.size >= 2, untouched)
+    val got = merge(batch).collect().map(r => r.getAs[Long]("k") -> r.getAs[Double]("v"))
+    val after = dataFiles(statePath)
+    assert(untouched.toSet.subsetOf(after.toSet), s"untouched partition files changed: $after")
+    assert(got.map(_._1).distinct.length == got.length, s"a key is held twice: ${got.toSeq}")
+    got.toMap
+  }
+
+  // In each batch below the key range overlaps the keys of an untouched
+  // partition's file, so only the partition directory's value keeps that
+  // file out of the rewrite.
+  test("mergeInto by partition rewrites only touched partitions") {
+    val seed = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0)).toDF("k", "part", "v")
+    val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
+    assert(mergeParts(seed, batch, "part=B") == Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0, 4L -> 40.0))
+  }
+
+  test("mergeInto by partition reads escaped string and date values from their directories") {
+    // Spark writes "a/b" as part=a%2Fb and "c:d" as part=c%3Ad.
+    val strings = Seq((1L, "a/b", 1.0), (2L, "c:d", 2.0), (3L, "e", 3.0)).toDF("k", "part", "v")
+    val stringBatch = Seq((1L, "a/b", 9.0), (4L, "a/b", 4.0)).toDF("k", "part", "v")
+    assert(mergeParts(strings, stringBatch, "part=a%2Fb") ==
+      Map(1L -> 9.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0))
+    def dated(rows: (Long, String, Double)*) =
+      rows.toDF("k", "day", "v").select(col("k"), to_date(col("day")).as("part"), col("v"))
+    val dates = dated((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0), (3L, "2024-01-03", 3.0))
+    val dateBatch = dated((2L, "2024-01-02", 9.0), (4L, "2024-01-02", 4.0))
+    assert(mergeParts(dates, dateBatch, "part=2024-01-02") ==
+      Map(1L -> 1.0, 2L -> 9.0, 3L -> 3.0, 4L -> 4.0))
   }
 
   test("state bootstrap: missing path is first-run-empty, corrupt state FAILS the merge") {
