@@ -23,9 +23,9 @@ import graft.io.StateFiles
   * which rewrites only the files a batch can touch and carries the rest
   * over as kept files. [[recover]] is the only crash recovery merged or
   * compacted state has: original files NEVER leave the live table tree
-  * until the swap has completed. The
-  * rewrite stages in `<path>__compact_tmp` together with a `_GRAFT_KEEP`
-  * manifest naming the untouched files to carry over; the swap renames
+  * until the swap has completed. The rewrite stages in
+  * `<path>__compact_tmp` together with a `_GRAFT_KEEP` manifest naming
+  * the untouched files to carry over; the swap renames
   * `<path>` aside to `<path>__compact_old` (the complete original) and
   * `tmp` in; only then do the kept files move `old -> <path>` by
   * metadata rename, after which `old` and the manifest are removed. A

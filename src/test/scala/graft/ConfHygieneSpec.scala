@@ -148,10 +148,9 @@ class ConfHygieneSpec extends AnyFunSuite {
 
   test("the rename/delete check names the file and line, and spares the swap") {
     val root = Files.createTempDirectory("graft_hygiene_moves")
-    def put(rel: String, text: String): Unit = {
-      Files.createDirectories(root.resolve(rel).getParent)
-      Files.writeString(root.resolve(rel), text)
-    }
+    Seq("ops", "io", "streaming", "text")
+      .foreach(d => Files.createDirectories(root.resolve(s"graft/$d")))
+    def put(rel: String, text: String) = Files.writeString(root.resolve(rel), text)
     put("graft/ops/Merge.scala", "fs.exists(p)\nfs.delete(staging, true)\n")
     put(Swap, "fs.rename(p, old)\nfs.delete(old, true)\n")
     put("graft/io/Tables.scala", "fs.rename(part, dest)\n")

@@ -185,7 +185,6 @@ class StateSwapRecoverySpec extends SparkSpec {
   /** One `mergeInto` of `df` into the state at `path`, partitioned by `part`. */
   private def mergeParts(path: String, df: DataFrame): DataFrame = Merge.mergeInto(spark, path,
     df, Seq("k"), Seq(col("v").desc), partitionCol = Some("part")).select("k", "part", "v")
-
   private def parts(rows: (Long, String, Double)*): DataFrame = rows.toDF("k", "part", "v")
 
   private val partsA = parts((1L, "A", 10.0), (2L, "B", 20.0), (3L, "B", 30.0), (5L, "C", 50.0))
@@ -210,8 +209,7 @@ class StateSwapRecoverySpec extends SparkSpec {
       val rewrite = spark.read.parquet(expectedPath).where(!col("part").isin("X", "Y"))
       interrupt(statePath, rewrite, stage, kept, Seq("part"))
       val state = mergeParts(statePath, partsB)
-      assert(rows(state) == expected && state.count() == 7)
-      assert(expected.size == 7)
+      assert(expected.size == 7 && rows(state) == expected && state.count() == 7)
       assertNoStaging(statePath)
     }
 }

@@ -157,11 +157,9 @@ class MergeQualitySpec extends SparkSpec {
       (3L, Option.empty[String], 30.0)).toDF("k", "part", "v")
     seed.write.partitionBy("part").parquet(statePath)
     // The batch touches the null partition: existing null-partition rows
-    // (k=2, k=3) must survive the merge — isin(null) alone would drop
-    // them while dynamic overwrite still rewrites the default partition.
-    def merge(rows: (Long, Option[String], Double)*) = Merge.mergeInto(spark, statePath,
-      rows.toDF("k", "part", "v"), Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
-      .select("k", "v").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // (k=2, k=3) must survive the merge, each key held once.
+    def merge(rows: (Long, Option[String], Double)*) = values(Merge.mergeInto(spark, statePath,
+      rows.toDF("k", "part", "v"), Seq("k"), Seq(col("v").desc), partitionCol = Some("part")))
     assert(merge((2L, None, 99.0)) == Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0))
     // Null and non-null partition values in one batch: both the default
     // partition and part=A are touched, and part=B is new.
@@ -180,9 +178,14 @@ class MergeQualitySpec extends SparkSpec {
     merge(seed)
     val untouched = dataFiles(statePath).filterNot(_._1.startsWith(touchedDir + "/"))
     assert(untouched.size >= 2, untouched)
-    val got = merge(batch).collect().map(r => r.getAs[Long]("k") -> r.getAs[Double]("v"))
-    val after = dataFiles(statePath)
-    assert(untouched.toSet.subsetOf(after.toSet), s"untouched partition files changed: $after")
+    val got = values(merge(batch))
+    assert(untouched.toSet.subsetOf(dataFiles(statePath).toSet), "untouched partition files changed")
+    got
+  }
+
+  /** `v` per `k`; fails on a key held twice. */
+  private def values(df: DataFrame): Map[Long, Double] = {
+    val got = df.collect().map(r => r.getAs[Long]("k") -> r.getAs[Double]("v"))
     assert(got.map(_._1).distinct.length == got.length, s"a key is held twice: ${got.toSeq}")
     got.toMap
   }
