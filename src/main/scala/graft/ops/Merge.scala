@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.io.{Sinks, StateFiles}
 
@@ -122,7 +122,11 @@ object Merge {
                 keys: Seq[String], precedence: Seq[Column],
                 incomingWins: Boolean = true,
                 partitionCol: Option[String] = None): DataFrame = {
-    val schema = mergeFiles(spark, statePath, incoming, keys, precedence, incomingWins, partitionCol)
+    // Spark writes an empty partition string as the default partition,
+    // which reads back null: merge the batch as the table will hold it.
+    val batch = partitionCol.filter(incoming.schema(_).dataType == StringType)
+      .fold(incoming)(pc => incoming.withColumn(pc, when(col(pc) =!= "", col(pc))))
+    val schema = mergeFiles(spark, statePath, batch, keys, precedence, incomingWins, partitionCol)
     spark.read.schema(schema).parquet(statePath)
   }
 

@@ -165,6 +165,8 @@ class MergeQualitySpec extends SparkSpec {
     // partition and part=A are touched, and part=B is new.
     assert(merge((3L, None, 77.0), (1L, Some("A"), 11.0), (4L, Some("B"), 40.0)) ==
       Map(1L -> 11.0, 2L -> 99.0, 3L -> 77.0, 4L -> 40.0))
+    // An empty string is stored in the default partition too (it reads back null).
+    assert(merge((2L, Some(""), 55.0)) == Map(1L -> 11.0, 2L -> 55.0, 3L -> 77.0, 4L -> 40.0))
   }
 
   /** Merges `seed`, then `batch`, into a state keyed by `k` and
