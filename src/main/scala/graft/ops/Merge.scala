@@ -53,7 +53,7 @@ object Merge {
     * permissions, transient FS error, corrupt footer — rethrows: treating
     * it as "first run" would let the subsequent overwrite replace real
     * state with batch-only contents, which at 100 TB is the incident that
-    * wipes out a state table.
+    * deletes a state table.
     */
   private[graft] def readStateOrEmpty(spark: SparkSession, statePath: String,
                                       schema: StructType): DataFrame = {
@@ -85,16 +85,20 @@ object Merge {
     * (`partitionCol`): only the state files that can hold a batch key
     * are rewritten. Each file's Parquet footer gives its min/max per key
     * column, and its `<partitionCol>=<v>` directory the range [v, v]
-    * (the default partition: nulls only); the batch's ranges of the same
+    * (the default partition: nulls only) — for a string, date or
+    * integral `partitionCol` only: a directory of any other type counts
+    * as holding every batch value, so its files are kept out of the
+    * rewrite by their key ranges alone. The batch's ranges of the same
     * columns come from one job over just those columns
     * ([[graft.io.StateFiles.observeRanges]]), and a file is left alone
     * when some column's ranges are disjoint. The rule is conservative — a
     * file without key statistics, or with nulls in a key column when the
     * batch has null keys, counts as touched — so the result equals a
     * whole-table merge. Touched files, the small untouched files
-    * [[Compact.selectSmallSpan]] picks (so appended slices fold back in)
-    * and the batch are merged and written; every other file is carried
-    * over by [[graft.io.Sinks.atomicSwapWrite]]'s manifest swap, which
+    * [[Compact.selectSmallSpan]] picks in each directory the batch may
+    * write to (so appended slices fold back in) and the batch are merged
+    * and written; every other file is carried over by
+    * [[graft.io.Sinks.atomicSwapWrite]]'s manifest swap, which
     * [[Compact.recover]] completes or rolls back after a process death.
     * The state schema comes from the footers too, so the range job
     * replaces Spark's schema-inference job one for one; appended rows are
@@ -158,28 +162,33 @@ object Merge {
     val rangeCols = (keys ++ partitionCol).distinct
     val keyTypes = rangeCols.map(k => k -> incoming.schema(k).dataType)
     val fileKeys = keyTypes.filterNot(k => partitionCol.contains(k._1))
+    val dirRanges = files.map(_._1.getParent).distinct.map(d => d -> partitionCol.flatMap(pc =>
+      StateFiles.partitionRange(incoming.schema(pc).dataType, d.getName.stripPrefix(pc + "="))
+        .map(pc -> _)).toMap).toMap
     val footers = files.map { case (f, _) =>
       val footer = StateFiles.footer(conf, f, fileKeys)
-      f -> partitionCol.fold(footer) { pc =>
-        val dir = StateFiles.partitionRange(incoming.schema(pc).dataType,
-          f.getParent.getName.stripPrefix(pc + "="))
-        footer.copy(ranges = footer.ranges ++ dir.map(pc -> _))
-      }
+      f -> footer.copy(ranges = footer.ranges ++ dirRanges(f.getParent))
     }
     val stored = footers.head._2.schema.getOrElse(spark.read.parquet(statePath).schema)
     val schema = partitionCol.fold(stored)(pc =>
       StructType(stored.filterNot(_.name == pc) :+ incoming.schema(pc)))
     // The range job reads only the key columns, so it prunes the batch's
     // scan to them; the rewrite evaluates the batch again in full. Not
-    // caching it measured faster on market_etl (the cache build cost
+    // persisting it measured faster on market_etl (the cache build cost
     // more than the second scan saved).
     val observed = StateFiles.observeRanges(incoming, keyTypes)
     val batch = StateFiles.batchRanges(observed, keyTypes)
     val touched = footers.collect {
       case (f, footer) if StateFiles.mayHold(footer, batch, rangeCols) => f
     }.toSet
-    val untouched = files.filterNot(f => touched(f._1))
-    val (span, kept) = Compact.selectSmallSpan(untouched).getOrElse((Nil, untouched.map(_._1)))
+    // Small untouched files fold back in within their own directory, and
+    // only in one the batch may write to: a partition outside the batch's
+    // range keeps every file. A flat table is one such directory.
+    val (span, kept) = files.filterNot(f => touched(f._1)).groupBy(_._1.getParent).toSeq
+      .map { case (dir, in) =>
+        val written = StateFiles.mayHold(StateFiles.Footer(None, dirRanges(dir)), batch, partitionBy)
+        Option.when(written)(Compact.selectSmallSpan(in)).flatten.getOrElse((Nil, in.map(_._1)))
+      }.unzip match { case (s, k) => (s.flatten, k.flatten) }
     val rewrite = files.map(_._1).filter(touched) ++ span
     if (rewrite.isEmpty && observed.getAs[Long]("rows") == 0) schema // nothing to write
     else {

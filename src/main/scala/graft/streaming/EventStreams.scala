@@ -548,9 +548,10 @@ object EventStreams {
     * [[graft.ops.Merge.mergeInto]] with `partitionCol`, the same
     * touched-file merge and manifest swap as [[mergeSink]]'s flat state,
     * with each partition directory's value as one more range — so a
-    * batch reads and rewrites only the files of partitions it holds and
-    * per-batch cost is proportional to the touched files, never the
-    * table. The same total order as [[mergeSink]] carries the dedup and
+    * batch reads and rewrites only the files whose partition value and
+    * key ranges overlap its own, plus small files in those partitions;
+    * a partition outside the batch's range is never rewritten. The same
+    * total order as [[mergeSink]] carries the dedup and
     * the replay convergence — which here additionally requires
     * `partitionCol` to be functionally dependent on `keys` (the gate
     * passes `event_type`, which IS a key; see

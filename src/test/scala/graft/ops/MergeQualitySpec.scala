@@ -196,9 +196,12 @@ class MergeQualitySpec extends SparkSpec {
   // partition's file, so only the partition directory's value keeps that
   // file out of the rewrite.
   test("mergeInto by partition rewrites only touched partitions") {
-    val seed = Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0)).toDF("k", "part", "v")
-    val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
-    assert(mergeParts(seed, batch, "part=B") == Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0, 4L -> 40.0))
+    // Twelve partitions, eight of them far smaller than the other four:
+    // the small files of partitions the batch skips stay as they are.
+    val seed = for (k <- 0L until 3000L if k % 12 < 4 || k < 24) yield (k, f"p${k % 12}%02d", k.toDouble)
+    val batch = Seq((17L, "p05", 99.0), (3005L, "p05", 1.0)).toDF("k", "part", "v")
+    assert(mergeParts(seed.toDF("k", "part", "v"), batch, "part=p05") ==
+      seed.map(r => r._1 -> r._3).toMap ++ Map(17L -> 99.0, 3005L -> 1.0))
   }
 
   test("mergeInto by partition reads escaped string and date values from their directories") {
