@@ -128,7 +128,7 @@ object Compact {
 
   /** Completes or rolls back an interrupted swap before a tick starts.
     * Runs at the top of every swap and state read; a clean table is a
-    * cheap no-op (two existence checks). The cases, by surviving evidence:
+    * cheap no-op (a few existence checks). The cases, by surviving evidence:
     *
     *  - `<path>/_GRAFT_KEEP` exists: the swap-in completed but the
     *    post-swap carry-over was interrupted — finish the manifest's
@@ -145,8 +145,15 @@ object Compact {
     *    collision fails loudly with both copies left on disk.
     *  - only `__compact_tmp` exists: a rewrite that never reached the
     *    swap; it holds only copies, so it is safe to drop.
+    *
+    * A marked (`_SUCCESS`) `<path>_staging` is a partitioned merge an
+    * older build never published; it may hold the only copy of a
+    * partition, so it fails the call.
     */
   private[ops] def recover(fs: FileSystem, p: Path): Unit = {
+    val staging = new Path(p.toString + "_staging")
+    if (fs.exists(new Path(staging, "_SUCCESS"))) throw new java.io.IOException(
+      s"compact recover: publish $staging into $p by hand (StateFiles.write with its partition column), then drop it")
     val (tmp, old) = staged(p)
     val manifest = new Path(p, KeepManifest)
     if (fs.exists(p) && fs.exists(manifest)) {
@@ -246,11 +253,9 @@ object Compact {
     val qp = fs.makeQualified(p)
     val moves = keep.map { f =>
       val q = fs.makeQualified(f)
-      val rel =
-        if (q.getParent == qp) q.getName
-        else if (q.getParent.getParent == qp) s"${q.getParent.getName}/${q.getName}"
-        else throw new IllegalArgumentException(
-          s"compact: kept file $f must sit at most one directory under $path")
+      require(q.getParent == qp || q.getParent.getParent == qp,
+        s"compact: kept file $f must sit at most one directory under $path")
+      val rel = if (q.getParent == qp) q.getName else s"${q.getParent.getName}/${q.getName}"
       Keep(rel, rel)
     }
     val (tmp, _) = staged(p)

@@ -212,4 +212,13 @@ class StateSwapRecoverySpec extends SparkSpec {
       assert(expected.size == 7 && rows(state) == expected && state.count() == 7)
       assertNoStaging(statePath)
     }
+
+  test("partitioned mergeInto fails, state unchanged, on a marked staging dir an older build left") {
+    val statePath = Files.createTempDirectory("graft_pswap_legacy").toString + "/s"
+    val before = rows(mergeParts(statePath, partsA))
+    partsB.write.parquet(statePath + "_staging")
+    val e = intercept[java.io.IOException](mergeParts(statePath, partsB))
+    assert(e.getMessage.contains(statePath + "_staging"), e.getMessage)
+    assert(rows(spark.read.parquet(statePath).select("k", "part", "v")) == before)
+  }
 }
