@@ -569,13 +569,12 @@ private[graft] object QueriesStreaming {
       s.read.parquet(out)
     }),
 
-    // Partition-scoped streaming MERGE: the 100 TB form of the merge
-    // sink — each of the three waves reads and rewrites ONLY the hive
-    // partitions it touches (partition-pruned scan + dynamic overwrite;
-    // the plain sink re-reads and swaps the WHOLE state per wave). One
-    // total order over state+batch rows, so re-batching and replays
-    // cannot change a winner: the oracle is the identical batch LWW
-    // dedup the other merge gates share.
+    // Partition-scoped streaming MERGE: each of the three waves rewrites
+    // only the state files it can touch, pruned by their partition
+    // directory and key ranges, and carries the rest over by the manifest
+    // swap. One total order over state+batch rows, so re-batching and
+    // replays cannot change a winner: the oracle is the identical batch
+    // LWW dedup the other merge gates share.
     "streaming_merge_partitioned" -> ((s, dir) => {
       val ckpt = graft.util.Scratch.dir("graft_smergep_ck")
       val statePath = graft.util.Scratch.dir("graft_smergep_state") + "/state"
