@@ -148,37 +148,45 @@ object StateFiles {
     Footer(schema, ranges.toMap)
   }
 
-  /** A hive partition directory `<col>=<value>` as a file range: the
-    * one value of the partition column, of type `dt`, that every row
-    * under the directory holds, parsed from `value` as Spark writes it
-    * (path-escaped; the default partition holds the nulls). None for a
-    * type without a [[comparable]] form or a value that does not parse:
-    * the directory's files then always count as holding the batch's keys.
-    */
-  def partitionRange(dt: DataType, value: String): Option[KeyRange] = {
-    val v = ExternalCatalogUtils.unescapePathName(value)
-    if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) Some(KeyRange(None, None, hasNulls = true))
-    else (dt match {
-      case StringType => Some(v.getBytes(UTF_8))
-      case DateType => scala.util.Try(java.time.LocalDate.parse(v).toEpochDay).toOption
-      case ByteType | ShortType | IntegerType | LongType => v.toLongOption
-      case _ => None
-    }).map(x => KeyRange(Some(x), Some(x), hasNulls = false))
-  }
-
   /** Runs `batch`'s `keys` columns through one job and returns the row of
     * its key ranges that [[batchRanges]] reads, plus its row count
-    * (`rows`). The ranges are aggregated in the scan's tasks (`observe`)
-    * and read from the plan's metrics, so the job is a plain Spark job,
-    * not a SQL execution: the driver builds no plan description or graph
-    * for it, and Spark's SQL status store retains none.
+    * (`rows`) and, with `partitionCol`, the partition values that
+    * [[partitionHeld]] reads. The ranges are aggregated in the scan's
+    * tasks (`observe`) and read from the plan's metrics, so the job is a
+    * plain Spark job, not a SQL execution: the driver builds no plan
+    * description or graph for it, and Spark's SQL status store retains
+    * none.
     */
-  def observeRanges(batch: DataFrame, keys: Seq[(String, DataType)]): Row = {
-    val qe = batch.select(keys.map(k => col(k._1)): _*)
-      .observe("graft_key_ranges", count(lit(1)).as("rows"), rangeColumns(keys): _*)
+  def observeRanges(batch: DataFrame, keys: Seq[(String, DataType)],
+                    partitionCol: Option[String] = None): Row = {
+    // A partition value as Spark's writer names its directory: cast to
+    // a string in the session time zone (null is the default partition).
+    val parts = partitionCol.toSeq.flatMap(pc =>
+      Seq(collect_set(col(pc).cast(StringType)).as("parts"), max(col(pc).isNull).as("partNulls")))
+    val qe = batch.select((keys.map(_._1) ++ partitionCol).distinct.map(col): _*)
+      .observe("graft_key_ranges", count(lit(1)).as("rows"), rangeColumns(keys) ++ parts: _*)
       .queryExecution
     qe.toRdd.count()
     qe.observedMetrics("graft_key_ranges")
+  }
+
+  /** Whether the batch observed in `row` holds a row of a hive partition
+    * directory `<partitionCol>=<value>` (the value path-escaped as Spark
+    * writes it; the default partition holds the nulls).
+    */
+  def partitionHeld(row: Row, partitionCol: String): Path => Boolean = {
+    val held = inPartitions(row)
+    dir => {
+      val v = ExternalCatalogUtils.unescapePathName(dir.getName.stripPrefix(partitionCol + "="))
+      held(if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else v)
+    }
+  }
+
+  /** Membership in the partition values observed in `row`, null too. */
+  private def inPartitions(row: Row): String => Boolean = {
+    val parts = row.getAs[Seq[String]]("parts").toSet
+    val nulls = Option(row.getAs[Any]("partNulls")).contains(true)
+    v => if (v == null) nulls else parts(v)
   }
 
   /** The batch-side [[KeyRange]]s: `row` holds, for the i-th entry of
@@ -193,8 +201,9 @@ object StateFiles {
 
   /** The rewrite's guard on the batch: a filter condition that holds for
     * a row whose `keys` lie inside the ranges observed in `row` (as
-    * [[batchRanges]] reads it) and raises an error for any other row,
-    * also for a null key where the observation saw none. The touched
+    * [[batchRanges]] reads it), and whose `partitionCol` value is one the
+    * observation saw, and raises an error for any other row, also for a
+    * null key where the observation saw none. The touched
     * files were chosen from those ranges, so a batch that evaluates to
     * other keys the second time fails the merge instead of holding a key
     * twice (its stored row sits in a carried-over file). The ranges sit
@@ -202,8 +211,10 @@ object StateFiles {
     * generated code, so each batch's bounds would compile the whole
     * batch-side stage anew.
     */
-  def inObservedRanges(row: Row, keys: Seq[(String, DataType)]): Column = {
+  def inObservedRanges(row: Row, keys: Seq[(String, DataType)],
+                       partitionCol: Option[String] = None): Column = {
     val ranges = batchRanges(row, keys)
+    val inPart = partitionCol.map(pc => udf(inPartitions(row)).apply(col(pc).cast(StringType)))
     val inside = keys.flatMap { case (name, dt) =>
       for (c <- comparable(col(name), dt); r <- ranges.get(name)) yield {
         def holds(v: Any): Boolean =
@@ -216,8 +227,9 @@ object StateFiles {
         else udf((v: java.lang.Long) => holds(v)).apply(c)
       }
     }
-    if (inside.isEmpty) lit(true)
-    else when(!inside.reduce(_ && _), raise_error(lit(
+    val checks = inside ++ inPart
+    if (checks.isEmpty) lit(true)
+    else when(!checks.reduce(_ && _), raise_error(lit(
       "mergeInto: a batch key lies outside the key range observed on the batch's " +
         "first evaluation; the batch must evaluate to the same keys each time")))
       .otherwise(lit(true))

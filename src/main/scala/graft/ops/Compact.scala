@@ -153,7 +153,8 @@ object Compact {
   private[ops] def recover(fs: FileSystem, p: Path): Unit = {
     val staging = new Path(p.toString + "_staging")
     if (fs.exists(new Path(staging, "_SUCCESS"))) throw new java.io.IOException(
-      s"compact recover: publish $staging into $p by hand (StateFiles.write with its partition column), then drop it")
+      s"compact recover: publish $staging into $p by hand (StateFiles.write by its " +
+        "partition column), then drop it")
     val (tmp, old) = staged(p)
     val manifest = new Path(p, KeepManifest)
     if (fs.exists(p) && fs.exists(manifest)) {

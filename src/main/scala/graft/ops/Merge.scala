@@ -84,19 +84,17 @@ object Merge {
     * One algorithm for a flat table and a hive-partitioned one
     * (`partitionCol`): only the state files that can hold a batch key
     * are rewritten. Each file's Parquet footer gives its min/max per key
-    * column, and its `<partitionCol>=<v>` directory the range [v, v]
-    * (the default partition: nulls only) — for a string, date or
-    * integral `partitionCol` only: a directory of any other type counts
-    * as holding every batch value, so its files are kept out of the
-    * rewrite by their key ranges alone. The batch's ranges of the same
-    * columns come from one job over just those columns
-    * ([[graft.io.StateFiles.observeRanges]]), and a file is left alone
-    * when some column's ranges are disjoint. The rule is conservative — a
-    * file without key statistics, or with nulls in a key column when the
-    * batch has null keys, counts as touched — so the result equals a
-    * whole-table merge. Touched files, the small untouched files
-    * [[Compact.selectSmallSpan]] picks in each directory the batch may
-    * write to (so appended slices fold back in) and the batch are merged
+    * column; the batch's ranges of the same columns, and the partition
+    * values it holds, come from one job over just those columns
+    * ([[graft.io.StateFiles.observeRanges]]). A file is left alone when
+    * its `<partitionCol>=<v>` directory holds a value the batch does not
+    * (the default partition: null), or when some key column's ranges
+    * are disjoint. The rule is conservative — a file without key
+    * statistics, or with nulls in a key column when the batch has null
+    * keys, counts as touched — so the result equals a whole-table merge.
+    * Touched files, the small untouched files
+    * [[Compact.selectSmallSpan]] picks in each directory the batch
+    * writes to (so appended slices fold back in) and the batch are merged
     * and written; every other file is carried over by
     * [[graft.io.Sinks.atomicSwapWrite]]'s manifest swap, which
     * [[Compact.recover]] completes or rolls back after a process death.
@@ -107,7 +105,7 @@ object Merge {
     * — as a file scan or a `foreachBatch` batch is; a source read over
     * HTTP is fetched twice. The rewrite checks every batch row against
     * the observed range and fails the merge, before anything is swapped
-    * in, on a key outside it.
+    * in, on a key or partition value outside it.
     *
     * CONTRACT: `partitionCol` must be functionally dependent on `keys`
     * (typically it IS one of them, or a deterministic bucket of one) —
@@ -159,16 +157,8 @@ object Merge {
           f.getParent.getParent == qp && f.getParent.getName.startsWith(pc + "=") },
         s"mergeInto: $statePath is not partitioned by $pc alone")
     }
-    val rangeCols = (keys ++ partitionCol).distinct
-    val keyTypes = rangeCols.map(k => k -> incoming.schema(k).dataType)
-    val fileKeys = keyTypes.filterNot(k => partitionCol.contains(k._1))
-    val dirRanges = files.map(_._1.getParent).distinct.map(d => d -> partitionCol.flatMap(pc =>
-      StateFiles.partitionRange(incoming.schema(pc).dataType, d.getName.stripPrefix(pc + "="))
-        .map(pc -> _)).toMap).toMap
-    val footers = files.map { case (f, _) =>
-      val footer = StateFiles.footer(conf, f, fileKeys)
-      f -> footer.copy(ranges = footer.ranges ++ dirRanges(f.getParent))
-    }
+    val keyTypes = keys.map(k => k -> incoming.schema(k).dataType)
+    val footers = files.map { case (f, _) => f -> StateFiles.footer(conf, f, keyTypes) }
     val stored = footers.head._2.schema.getOrElse(spark.read.parquet(statePath).schema)
     val schema = partitionCol.fold(stored)(pc =>
       StructType(stored.filterNot(_.name == pc) :+ incoming.schema(pc)))
@@ -176,18 +166,20 @@ object Merge {
     // scan to them; the rewrite evaluates the batch again in full. Not
     // persisting it measured faster on market_etl (the cache build cost
     // more than the second scan saved).
-    val observed = StateFiles.observeRanges(incoming, keyTypes)
+    val observed = StateFiles.observeRanges(incoming, keyTypes, partitionCol)
     val batch = StateFiles.batchRanges(observed, keyTypes)
+    // The directories the batch writes to: a flat table's root, or each
+    // partition whose value the batch holds.
+    val written = partitionCol.fold((_: Path) => true)(StateFiles.partitionHeld(observed, _))
     val touched = footers.collect {
-      case (f, footer) if StateFiles.mayHold(footer, batch, rangeCols) => f
+      case (f, footer) if written(f.getParent) && StateFiles.mayHold(footer, batch, keys) => f
     }.toSet
     // Small untouched files fold back in within their own directory, and
-    // only in one the batch may write to: a partition outside the batch's
-    // range keeps every file. A flat table is one such directory.
+    // only in one the batch writes to: a partition it skips keeps every file.
     val (span, kept) = files.filterNot(f => touched(f._1)).groupBy(_._1.getParent).toSeq
       .map { case (dir, in) =>
-        val written = StateFiles.mayHold(StateFiles.Footer(None, dirRanges(dir)), batch, partitionBy)
-        Option.when(written)(Compact.selectSmallSpan(in)).flatten.getOrElse((Nil, in.map(_._1)))
+        Option.when(written(dir))(Compact.selectSmallSpan(in)).flatten
+          .getOrElse((Nil, in.map(_._1)))
       }.unzip match { case (s, k) => (s.flatten, k.flatten) }
     val rewrite = files.map(_._1).filter(touched) ++ span
     if (rewrite.isEmpty && observed.getAs[Long]("rows") == 0) schema // nothing to write
@@ -196,7 +188,7 @@ object Merge {
         if (rewrite.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         else spark.read.schema(schema).option("basePath", statePath)
           .parquet(rewrite.map(_.toString): _*)
-      val guarded = incoming.where(StateFiles.inObservedRanges(observed, keyTypes))
+      val guarded = incoming.where(StateFiles.inObservedRanges(observed, keyTypes, partitionCol))
       val merged = mergeUpsert(current, guarded, keys, precedence, incomingWins)
         .select(schema.fieldNames.toIndexedSeq.map(col): _*)
       Sinks.atomicSwapWrite(spark, merged, statePath, kept, partitionBy)

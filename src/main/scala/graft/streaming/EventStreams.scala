@@ -547,10 +547,10 @@ object EventStreams {
   /** Hive-partitioned twin of [[mergeSink]]: each micro-batch is one
     * [[graft.ops.Merge.mergeInto]] with `partitionCol`, the same
     * touched-file merge and manifest swap as [[mergeSink]]'s flat state,
-    * with each partition directory's value as one more range — so a
-    * batch reads and rewrites only the files whose partition value and
-    * key ranges overlap its own, plus small files in those partitions;
-    * a partition outside the batch's range is never rewritten. The same
+    * within the partition directories whose value the batch holds — so
+    * a batch reads and rewrites only those partitions' files whose key
+    * ranges overlap its own, plus their small files; a partition the
+    * batch does not hold is never rewritten. The same
     * total order as [[mergeSink]] carries the dedup and
     * the replay convergence — which here additionally requires
     * `partitionCol` to be functionally dependent on `keys` (the gate

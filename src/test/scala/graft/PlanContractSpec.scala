@@ -402,7 +402,7 @@ class PlanContractSpec extends SparkSpec {
     Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0)).toDF("k", "part", "v")
       .write.partitionBy("part").parquet(statePath)
     // The batch's key range (2..4) overlaps the part=C file's key: only
-    // the partition range proves that file untouched.
+    // its partition value proves that file untouched.
     val batch = Seq((2L, "B", 99.0), (4L, "B", 40.0)).toDF("k", "part", "v")
     val written = plansRunBy(p => p.contains("InsertIntoHadoopFsRelationCommand") &&
         p.contains("state__compact_tmp")) {

@@ -213,7 +213,7 @@ class StateSwapRecoverySpec extends SparkSpec {
       assertNoStaging(statePath)
     }
 
-  test("partitioned mergeInto fails, state unchanged, on a marked staging dir an older build left") {
+  test("partitioned mergeInto fails, state unchanged, on a marked staging dir of an older build") {
     val statePath = Files.createTempDirectory("graft_pswap_legacy").toString + "/s"
     val before = rows(mergeParts(statePath, partsA))
     partsB.write.parquet(statePath + "_staging")

@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -170,15 +170,16 @@ class MergeQualitySpec extends SparkSpec {
   }
 
   /** Merges `seed`, then `batch`, into a state keyed by `k` and
-    * partitioned by `part`. Every file outside the partition directory
-    * `touchedDir` must stay byte-identical; returns `v` per key, failing
+    * partitioned by `part`. Every file outside the partition directories
+    * `touchedDirs` must stay byte-identical; returns `v` per key, failing
     * on a key held twice. */
-  private def mergeParts(seed: DataFrame, batch: DataFrame, touchedDir: String): Map[Long, Double] = {
+  private def mergeParts(seed: DataFrame, batch: DataFrame, touchedDirs: String*): Map[Long, Double] = {
     val statePath = java.nio.file.Files.createTempDirectory("pmerge_dirs").toString + "/state"
     def merge(df: DataFrame) =
       Merge.mergeInto(spark, statePath, df, Seq("k"), Seq(col("v").desc), partitionCol = Some("part"))
     merge(seed)
-    val untouched = dataFiles(statePath).filterNot(_._1.startsWith(touchedDir + "/"))
+    val untouched =
+      dataFiles(statePath).filterNot(f => touchedDirs.exists(d => f._1.startsWith(d + "/")))
     assert(untouched.size >= 2, untouched)
     val got = values(merge(batch))
     assert(untouched.toSet.subsetOf(dataFiles(statePath).toSet), "untouched partition files changed")
@@ -196,26 +197,31 @@ class MergeQualitySpec extends SparkSpec {
   // partition's file, so only the partition directory's value keeps that
   // file out of the rewrite.
   test("mergeInto by partition rewrites only touched partitions") {
-    // Twelve partitions, eight of them far smaller than the other four:
-    // the small files of partitions the batch skips stay as they are.
-    val seed = for (k <- 0L until 3000L if k % 12 < 4 || k < 24) yield (k, f"p${k % 12}%02d", k.toDouble)
-    val batch = Seq((17L, "p05", 99.0), (3005L, "p05", 1.0)).toDF("k", "part", "v")
-    assert(mergeParts(seed.toDF("k", "part", "v"), batch, "part=p05") ==
-      seed.map(r => r._1 -> r._3).toMap ++ Map(17L -> 99.0, 3005L -> 1.0))
+    // Twelve partitions, eight of them far smaller than the other four.
+    // The batch holds p05 and p09: the partitions between them, and the
+    // small files of every partition it skips, stay as they are.
+    val seed =
+      for (k <- 0L until 3000L if k % 12 < 4 || k < 24) yield (k, f"p${k % 12}%02d", k.toDouble)
+    val batch =
+      Seq((17L, "p05", 99.0), (3005L, "p05", 1.0), (21L, "p09", 7.0)).toDF("k", "part", "v")
+    assert(mergeParts(seed.toDF("k", "part", "v"), batch, "part=p05", "part=p09") ==
+      seed.map(r => r._1 -> r._3).toMap ++ Map(17L -> 99.0, 3005L -> 1.0, 21L -> 7.0))
   }
 
-  test("mergeInto by partition reads escaped string and date values from their directories") {
-    // Spark writes "a/b" as part=a%2Fb and "c:d" as part=c%3Ad.
-    val strings = Seq((1L, "a/b", 1.0), (2L, "c:d", 2.0), (3L, "e", 3.0)).toDF("k", "part", "v")
-    val stringBatch = Seq((1L, "a/b", 9.0), (4L, "a/b", 4.0)).toDF("k", "part", "v")
-    assert(mergeParts(strings, stringBatch, "part=a%2Fb") ==
-      Map(1L -> 9.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0))
-    def dated(rows: (Long, String, Double)*) =
-      rows.toDF("k", "day", "v").select(col("k"), to_date(col("day")).as("part"), col("v"))
-    val dates = dated((1L, "2024-01-01", 1.0), (2L, "2024-01-02", 2.0), (3L, "2024-01-03", 3.0))
-    val dateBatch = dated((2L, "2024-01-02", 9.0), (4L, "2024-01-02", 4.0))
-    assert(mergeParts(dates, dateBatch, "part=2024-01-02") ==
-      Map(1L -> 1.0, 2L -> 9.0, 3L -> 3.0, 4L -> 4.0))
+  test("mergeInto by partition reads escaped string, date and timestamp directory values") {
+    // Spark writes "a/b" as part=a%2Fb, "c:d" as part=c%3Ad, and a
+    // timestamp's colons escaped too.
+    for ((as, (x, y, z), dir) <- Seq[(Column => Column, (String, String, String), String)](
+        (c => c, ("a/b", "c:d", "e"), "part=a%2Fb"),
+        (to_date(_), ("2024-01-01", "2024-01-02", "2024-01-03"), "part=2024-01-01"),
+        (to_timestamp(_), ("2024-01-01 10:30:00", "2024-01-01 11:00:00", "2024-01-02 00:00:00"),
+          "part=2024-01-01 10%3A30%3A00"))) {
+      def rows(r: (Long, String, Double)*) =
+        r.toDF("k", "s", "v").select(col("k"), as(col("s")).as("part"), col("v"))
+      val seed = rows((1L, x, 1.0), (2L, y, 2.0), (3L, z, 3.0))
+      assert(mergeParts(seed, rows((1L, x, 9.0), (4L, x, 4.0)), dir) ==
+        Map(1L -> 9.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0))
+    }
   }
 
   test("state bootstrap: missing path is first-run-empty, corrupt state FAILS the merge") {
