@@ -50,14 +50,6 @@ object TextAnalysis {
   def subwordCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
-  /** Stopword vote for one language: how many tokens are in `stopwords`.
-    * Codegen'd set-membership loop ([[graft.functions.TextExpressions]]):
-    * the `size(filter(toks, isin))` built-in form is CodegenFallback and
-    * runs interpreted once per language list per document.
-    */
-  def stopwordHits(toks: Column, stopwords: Seq[String]): Column =
-    graft.functions.TextExpressions.countInSet(toks, stopwords)
-
   /** Tiny per-language stopword lists for the n-gram/stopword language-ID
     * heuristic. Deliberately small and literal: language ID at corpus scale
     * is a scan-side expression, not a model call.
