@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.io.Tables
@@ -29,6 +30,63 @@ private[graft] object QueriesStreaming {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
       .exists(t => String.valueOf(t.getMessage).contains(needle))
 
+  /** The one start path of the streaming gates: `query` is built and
+    * started with `spark.sql.shuffle.partitions` at [[streamParts]] of
+    * `table` (a streaming query fixes its stateful partition count when
+    * it starts), then drained.
+    */
+  private def runStream(s: SparkSession, dir: String, table: String = "events")
+                       (query: => StreamingQuery): Unit =
+    withShufflePartitions(s, streamParts(s, dir, table))(query.awaitTermination())
+
+  /** A sink-to-Parquet gate: `stream` appended (Append mode, AvailableNow)
+    * to a fresh Parquet table, checkpointed and stored under scratch
+    * dirs named by `tag`, and read back once drained.
+    */
+  private def appendParquet(s: SparkSession, dir: String, tag: String)
+                           (stream: => DataFrame): DataFrame = {
+    val ckpt = graft.util.Scratch.dir(tag + "_ck")
+    val out = graft.util.Scratch.dir(tag + "_out") + "/t"
+    runStream(s, dir) {
+      stream.writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .format("parquet").option("path", out).start()
+    }
+    s.read.parquet(out)
+  }
+
+  /** A restart gate: `sink(chaos)` runs until `chaos` throws at batch 1
+    * (`what` names the point it fails at) and must die of exactly that
+    * failure; the same sink then restarts from the unchanged checkpoint,
+    * which REPLAYS batch 1 (foreachBatch is at-least-once), and drains.
+    */
+  private def crashAndReplay(s: SparkSession, dir: String, gate: String, what: String)
+                            (sink: (Long => Unit) => StreamingQuery): Unit = {
+    val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val chaos: Long => Unit = b =>
+      if (b == 1L && tripped.compareAndSet(false, true))
+        throw new RuntimeException(s"injected: $what")
+    runStream(s, dir, "documents") {
+      val q1 = sink(chaos)
+      try { q1.awaitTermination(); throw new IllegalStateException(
+        s"$gate: the injected failure never fired")
+      } catch {
+        case e: StreamingQueryException if causeChainContains(e, "injected") => () // the planned crash
+      }
+      sink(chaos)
+    }
+  }
+
+  /** The compaction cadence ran: wave 0 of each table in `subs` under
+    * `statePath` was consolidated into `wave=-1`. */
+  private def requireConsolidated(statePath: String, subs: String*): Unit =
+    subs.foreach { sub =>
+      require(new java.io.File(statePath + sub + "/wave=-1").isDirectory &&
+        !new java.io.File(statePath + sub + "/wave=0").exists(),
+        s"compaction cadence did not consolidate $sub wave 0")
+    }
+
   /** Two-wave document staging as a StateSeed fixture: the wave split is
     * pure fixture construction, deterministic in (sfDir, tag), so Bench
     * (seeding on) builds it once per JVM and reps time the streaming
@@ -38,14 +96,53 @@ private[graft] object QueriesStreaming {
     * correctness gates stay self-contained. Per-rep re-staging also
     * re-wrote the corpus to scratch every rep — the dirty-page churn
     * that arms this box's reclaim storms (SCALE.md round-14).
+    *
+    * Returns a stream over the staged docs that delivers one wave per
+    * micro-batch: `filesPerWave` salted files per wave, matched by
+    * `maxFilesPerTrigger` (more than one file per wave parallelizes the
+    * fixture write and the batch read at scale — the round-10 fix for
+    * the event gates).
     */
   private def docWaves(s: SparkSession, dir: String, docs: DataFrame,
-                       tag: String, filesPerWave: Int = 1): String =
-    graft.util.StateSeed.root(s, tag, dir) { root =>
+                       tag: String, filesPerWave: Int = 1): DataFrame = {
+    val root = graft.util.StateSeed.root(s, tag, dir) { root =>
       Tables.stageWaves(s, docs, pmod(col("doc_id"), lit(2)), 2, tag,
         filesPerWave = filesPerWave, destDir = Some(root))
       ()
     }
+    s.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", filesPerWave.toString).parquet(root)
+  }
+
+  /** A streaming MERGE gate: `events` merged by
+    * [[graft.streaming.EventStreams.mergeSink]] into a fresh state table
+    * on (user_id, event_type), the latest (ts, event_id) winning — the
+    * order every merge oracle replicates.
+    */
+  private def mergeEvents(s: SparkSession, dir: String, tag: String, events: => DataFrame,
+                          partitionCol: Option[String] = None): DataFrame = {
+    val ckpt = graft.util.Scratch.dir(tag + "_ck")
+    val statePath = graft.util.Scratch.dir(tag + "_state") + "/state"
+    val cols = Seq("user_id", "event_type", "event_id", "ts", "value").map(col)
+    runStream(s, dir) {
+      graft.streaming.EventStreams.mergeSink(events.select(cols: _*), statePath,
+        keys = Seq("user_id", "event_type"),
+        precedence = Seq(col("ts").desc, col("event_id").desc),
+        checkpoint = ckpt, partitionCol = partitionCol)
+    }
+    s.read.parquet(statePath).select(cols: _*)
+  }
+
+  /** The sessions [[graft.streaming.EventStreams.sessionize]] emits over
+    * `events` at the 30-minute gap the batch twin uses. */
+  private def streamSessions(s: SparkSession, events: DataFrame,
+                             watermark: String = "0 seconds"): DataFrame = {
+    import s.implicits._
+    graft.streaming.EventStreams.sessionize(
+      events.select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value")).as[graft.streaming.EventStreams.Event],
+      gapMs = 30L * 60 * 1000, watermark).toDF()
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "events_tumbling" -> ((s, dir) =>
@@ -62,22 +159,11 @@ private[graft] object QueriesStreaming {
     // emits exactly the windows the final watermark (= max event time at
     // 0s delay) has closed, so the oracle is the batch aggregate minus
     // windows whose end is past the last event.
-    "streaming_tumbling_live" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_stream_ck")
-      val out = graft.util.Scratch.dir("graft_stream_out") + "/agg"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
-          .tumblingAgg(Tables.eventsStream(s, dir), watermark = "0 seconds")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
+    "streaming_tumbling_live" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_stream")(graft.streaming.EventStreams
+          .tumblingAgg(Tables.eventsStream(s, dir), watermark = "0 seconds"))
         .select(col("hour_start"), col("event_type"), col("cnt"),
-          col("sum_value").cast(DoubleType).as("sum_value"))
-    }),
+          col("sum_value").cast(DoubleType).as("sum_value"))),
 
     // LIVE twin of events_sliding: watermarked sliding aggregate over the
     // file stream, AvailableNow, Append mode — emits exactly the windows
@@ -85,45 +171,23 @@ private[graft] object QueriesStreaming {
     // event expands into two overlapping windows BEFORE the stateful agg,
     // so emission is per-window: the younger of an event's two windows
     // can stay open (unemitted) while the older one closes.
-    "streaming_sliding_live" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_sslide_ck")
-      val out = graft.util.Scratch.dir("graft_sslide_out") + "/agg"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
-          .slidingAgg(Tables.eventsStream(s, dir), watermark = "0 seconds")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
+    "streaming_sliding_live" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_sslide")(graft.streaming.EventStreams
+          .slidingAgg(Tables.eventsStream(s, dir), watermark = "0 seconds"))
         .select(col("win_start"), col("event_type"), col("cnt"),
-          col("sum_value").cast(DoubleType).as("sum_value"))
-    }),
+          col("sum_value").cast(DoubleType).as("sum_value"))),
 
     // Late/out-of-order twin of the sliding aggregate: displaced rows are
     // late-filtered PER (row, window) assignment — an in-watermark late
     // row folds into its still-open window(s) while its already-closed
     // older window drops it, the overlap behavior the tumbling late gate
     // can never exercise (EventStreamsSpec pins the two-window boundary).
-    "streaming_sliding_late" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_sslate2_ck")
-      val out = graft.util.Scratch.dir("graft_sslate2_out") + "/agg"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
+    "streaming_sliding_late" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_sslate2")(graft.streaming.EventStreams
           .slidingAgg(Tables.lateWavedEventsStream(s, dir, nWaves = 4),
-            watermark = "96 hours")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
+            watermark = "96 hours"))
         .select(col("win_start"), col("event_type"), col("cnt"),
-          col("sum_value").cast(DoubleType).as("sum_value"))
-    }),
+          col("sum_value").cast(DoubleType).as("sum_value"))),
 
     // Sliding 2-hour windows on a 1-hour slide: each event lands in two
     // overlapping windows (streaming-compatible semantics in batch).
@@ -135,20 +199,16 @@ private[graft] object QueriesStreaming {
         .select(col("window.start").as("win_start"), col("event_type"),
           col("cnt"), col("sum_value"))),
 
-    // Backward as-of join (SURVEY.md §7.6): each click gets the latest
-    // prior purchase value of the same user. Single-shuffle union+window
-    // form — no range explosion on hot keys.
+    // Batch gap sessions; oracle: the lag + running-sum session SQL.
     "events_sessionize" -> ((s, dir) => batchSessions(s, dir)),
 
-    // SQL-surface parity: the same engine running `spark.sql` over temp
-    // views (per-nation revenue by quarter — the flagship shape in SQL).
     // Streaming retrieval-index maintenance: the LIVE twin of
     // text_bm25_incremental. Two document waves (even ids, then odd)
     // flow through bm25IndexSink — each micro-batch appends its (tf,
     // stats) slice to the persisted index (O(batch) per wave, history
     // never re-tokenized, waves replay-safe via dynamic partition
-    // overwrite) — with the sink's COMPACTION CADENCE armed: wave 1's
-    // tick consolidates wave 0's slice files into the reserved wave=-1
+    // overwrite) — with the sink's COMPACTION CADENCE: wave 1's tick
+    // consolidates wave 0's slice files into the reserved wave=-1
     // partition (size-tiered Compact.consolidateWaves; the current wave
     // is never touched, it may still replay), so an unattended stream
     // stays bounded in file count. Scoring the consolidated index must
@@ -159,25 +219,14 @@ private[graft] object QueriesStreaming {
       import graft.text.Bm25
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val terms = Bm25.queryTerms(QueriesText.Bm25Queries)
-      // Parallel wave staging (the round-10 fix for the event gates):
-      // k salted files per wave, matched by maxFilesPerTrigger so one
-      // trigger still consumes exactly one wave — single-file waves
-      // serialize the fixture write AND the batch read at scale.
-      val waveDir = docWaves(s, dir, docs, "graft_bm25w",
-        filesPerWave = Tables.WaveStageFiles)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", Tables.WaveStageFiles.toString).parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_bm25w", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_bm25w_state")
       val ckpt = graft.util.Scratch.dir("graft_bm25w_ck")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
+      runStream(s, dir, "documents") {
         graft.streaming.EventStreams.bm25IndexSink(stream, "doc_id", "text",
-          terms, statePath, ckpt, compactEvery = 2, compactMaxFiles = 4)
-          .awaitTermination()
+          terms, statePath, ckpt)
       }
-      // The tick really merged: wave 0's slices were re-homed.
-      require(new java.io.File(statePath + "/tf/wave=-1").isDirectory &&
-        !new java.io.File(statePath + "/tf/wave=0").exists(),
-        "compaction cadence did not consolidate wave 0")
+      requireConsolidated(statePath, "/tf")
       Bm25.scoreIndex(
         s.read.parquet(statePath + "/tf").drop("wave"),
         Bm25.foldStats(s.read.parquet(statePath + "/stats").drop("wave")),
@@ -200,36 +249,15 @@ private[graft] object QueriesStreaming {
       import graft.text.Bm25
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val terms = Bm25.queryTerms(QueriesText.Bm25Queries)
-      val waveDir = docWaves(s, dir, docs, "graft_bm25rw",
-        filesPerWave = Tables.WaveStageFiles)
-      def stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", Tables.WaveStageFiles.toString).parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_bm25rw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_bm25rw_state")
       val ckpt = graft.util.Scratch.dir("graft_bm25rw_ck")
-      val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val chaos: Long => Unit = b =>
-        if (b == 1L && tripped.compareAndSet(false, true))
-          throw new RuntimeException(
-            "injected: both sidecars written and compacted, tick commit lost")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
-        val q1 = graft.streaming.EventStreams.bm25IndexSink(stream, "doc_id",
-          "text", terms, statePath, ckpt, compactEvery = 2, compactMaxFiles = 4,
-          chaosAfterTick = chaos)
-        try { q1.awaitTermination(); throw new IllegalStateException(
-          "streaming_bm25_restart: the injected failure never fired")
-        } catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException
-            if causeChainContains(e, "injected") => () // the planned crash
-        }
+      crashAndReplay(s, dir, "streaming_bm25_restart",
+          "both sidecars written and compacted, tick commit lost") { chaos =>
         graft.streaming.EventStreams.bm25IndexSink(stream, "doc_id", "text",
-          terms, statePath, ckpt, compactEvery = 2, compactMaxFiles = 4,
-          chaosAfterTick = chaos).awaitTermination()
+          terms, statePath, ckpt, chaosAfterTick = chaos)
       }
-      Seq("/tf", "/stats").foreach { sub =>
-        require(new java.io.File(statePath + sub + "/wave=-1").isDirectory &&
-          !new java.io.File(statePath + sub + "/wave=0").exists(),
-          s"replayed compaction tick did not converge on $sub")
-      }
+      requireConsolidated(statePath, "/tf", "/stats")
       Bm25.scoreIndex(
         s.read.parquet(statePath + "/tf").drop("wave"),
         Bm25.foldStats(s.read.parquet(statePath + "/stats").drop("wave")),
@@ -239,26 +267,19 @@ private[graft] object QueriesStreaming {
     // Streaming corpus-LM maintenance: the LIVE twin of
     // text_lm_surprisal. Two document waves flow through lmIndexSink —
     // each micro-batch appends its (doc, term, tf) slice (O(batch) per
-    // wave, history never re-tokenized, replay-safe, cadence armed so
-    // wave 0 consolidates into wave=-1). Scoring the FOLDED index must
+    // wave, history never re-tokenized, replay-safe, the cadence
+    // consolidating wave 0 into wave=-1). Scoring the FOLDED index must
     // reproduce the one-shot corpus surprisal bit-for-bit: same oracle
     // as text_lm_surprisal.
     "streaming_lm_live" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val waveDir = docWaves(s, dir, docs, "graft_lmw",
-        filesPerWave = Tables.WaveStageFiles)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", Tables.WaveStageFiles.toString).parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_lmw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_lmw_state")
       val ckpt = graft.util.Scratch.dir("graft_lmw_ck")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
-        graft.streaming.EventStreams.lmIndexSink(stream, "doc_id", "text",
-          statePath, ckpt, compactEvery = 2, compactMaxFiles = 4)
-          .awaitTermination()
+      runStream(s, dir, "documents") {
+        graft.streaming.EventStreams.lmIndexSink(stream, "doc_id", "text", statePath, ckpt)
       }
-      require(new java.io.File(statePath + "/tf/wave=-1").isDirectory &&
-        !new java.io.File(statePath + "/tf/wave=0").exists(),
-        "compaction cadence did not consolidate wave 0")
+      requireConsolidated(statePath, "/tf")
       graft.text.LanguageModel.surprisalFromTf(
         graft.util.CacheScope.untracked(
           s.read.parquet(statePath + "/tf").drop("wave")),
@@ -269,28 +290,19 @@ private[graft] object QueriesStreaming {
     // The same two document waves flow through lmBigramIndexSink — each
     // micro-batch appends its (doc, w1, w2, tf) bigram slice plus the
     // unigram slice the smoothing vocabulary derives from (O(batch) per
-    // wave, history never re-tokenized, replay-safe, cadence armed so
-    // wave 0 consolidates into wave=-1 on BOTH slices). Scoring the
+    // wave, history never re-tokenized, replay-safe, the cadence
+    // consolidating wave 0 into wave=-1 on BOTH slices). Scoring the
     // folded index must reproduce the one-shot corpus bigram surprisal
     // bit-for-bit: same oracle as text_lm_bigram.
     "streaming_lm_bigram_live" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val waveDir = docWaves(s, dir, docs, "graft_lmbw",
-        filesPerWave = Tables.WaveStageFiles)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", Tables.WaveStageFiles.toString).parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_lmbw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_lmbw_state")
       val ckpt = graft.util.Scratch.dir("graft_lmbw_ck")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
-        graft.streaming.EventStreams.lmBigramIndexSink(stream, "doc_id", "text",
-          statePath, ckpt, compactEvery = 2, compactMaxFiles = 4)
-          .awaitTermination()
+      runStream(s, dir, "documents") {
+        graft.streaming.EventStreams.lmBigramIndexSink(stream, "doc_id", "text", statePath, ckpt)
       }
-      Seq("/bitf", "/tf").foreach { sub =>
-        require(new java.io.File(statePath + sub + "/wave=-1").isDirectory &&
-          !new java.io.File(statePath + sub + "/wave=0").exists(),
-          s"compaction cadence did not consolidate $sub wave 0")
-      }
+      requireConsolidated(statePath, "/bitf", "/tf")
       val utf = s.read.parquet(statePath + "/tf").drop("wave")
       graft.text.LanguageModel.bigramSurprisalFromTf(
         graft.util.CacheScope.untracked(
@@ -303,28 +315,22 @@ private[graft] object QueriesStreaming {
     // dedup_ngram_spans. The same two document waves flow through
     // spanIndexSink — each micro-batch appends its 20-byte
     // window-fingerprint slice (O(batch) per wave; history never
-    // re-tokenized; replay-safe wave overwrite; cadence armed so wave 0
-    // consolidates into wave=-1). Scoring the folded index must
+    // re-tokenized; replay-safe wave overwrite; the cadence
+    // consolidating wave 0 into wave=-1). Scoring the folded index must
     // reproduce the one-shot span stats bit-for-bit — this is what
     // makes ExactSubstr dedup deployable on an ingest stream: a new
     // doc's spans are checked against the WHOLE standing corpus at
     // append cost.
     "streaming_span_dedup_live" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val waveDir = docWaves(s, dir, docs, "graft_spanw",
-        filesPerWave = Tables.WaveStageFiles)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", Tables.WaveStageFiles.toString).parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_spanw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_spanw_state")
       val ckpt = graft.util.Scratch.dir("graft_spanw_ck")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
+      runStream(s, dir, "documents") {
         graft.streaming.EventStreams.spanIndexSink(stream, "doc_id", "text",
-          w = 8, statePath, ckpt, compactEvery = 2, compactMaxFiles = 4)
-          .awaitTermination()
+          w = 8, statePath, ckpt)
       }
-      require(new java.io.File(statePath + "/win/wave=-1").isDirectory &&
-        !new java.io.File(statePath + "/win/wave=0").exists(),
-        "compaction cadence did not consolidate wave 0")
+      requireConsolidated(statePath, "/win")
       graft.text.SpanDedup.ngramSpanStatsFromSlice(
         graft.util.CacheScope.untracked(
           s.read.parquet(statePath + "/win").drop("wave")),
@@ -332,7 +338,7 @@ private[graft] object QueriesStreaming {
     }),
 
     // The SAME span-index maintenance killed mid-stream and restarted,
-    // with the compaction cadence armed: the injected failure lands at
+    // with the compaction cadence: the injected failure lands at
     // the worst replay point — wave 1 is written AND wave 0 is already
     // consolidated into wave=-1, but the checkpoint never commits the
     // tick — then a second run from the unchanged checkpoint REPLAYS
@@ -343,34 +349,15 @@ private[graft] object QueriesStreaming {
     // uninterrupted one-shot span stats'.
     "streaming_span_dedup_restart" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val waveDir = docWaves(s, dir, docs, "graft_spanrw",
-        filesPerWave = Tables.WaveStageFiles)
-      def stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", Tables.WaveStageFiles.toString).parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_spanrw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_spanrw_state")
       val ckpt = graft.util.Scratch.dir("graft_spanrw_ck")
-      val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val chaos: Long => Unit = b =>
-        if (b == 1L && tripped.compareAndSet(false, true))
-          throw new RuntimeException(
-            "injected: wave written and compacted, tick commit lost")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
-        val q1 = graft.streaming.EventStreams.spanIndexSink(stream, "doc_id",
-          "text", w = 8, statePath, ckpt, compactEvery = 2, compactMaxFiles = 4,
-          chaosAfterTick = chaos)
-        try { q1.awaitTermination(); throw new IllegalStateException(
-          "streaming_span_dedup_restart: the injected failure never fired")
-        } catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException
-            if causeChainContains(e, "injected") => () // the planned crash
-        }
+      crashAndReplay(s, dir, "streaming_span_dedup_restart",
+          "wave written and compacted, tick commit lost") { chaos =>
         graft.streaming.EventStreams.spanIndexSink(stream, "doc_id", "text",
-          w = 8, statePath, ckpt, compactEvery = 2, compactMaxFiles = 4,
-          chaosAfterTick = chaos).awaitTermination()
+          w = 8, statePath, ckpt, chaosAfterTick = chaos)
       }
-      require(new java.io.File(statePath + "/win/wave=-1").isDirectory &&
-        !new java.io.File(statePath + "/win/wave=0").exists(),
-        "replayed compaction tick did not converge to the consolidated layout")
+      requireConsolidated(statePath, "/win")
       graft.text.SpanDedup.ngramSpanStatsFromSlice(
         graft.util.CacheScope.untracked(
           s.read.parquet(statePath + "/win").drop("wave")),
@@ -379,15 +366,13 @@ private[graft] object QueriesStreaming {
 
     "streaming_dedup_incremental_live" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val waveDir = docWaves(s, dir, docs, "graft_incw")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_incw")
       val statePath = graft.util.Scratch.dir("graft_incw_state") + "/index"
       val acceptedPath = graft.util.Scratch.dir("graft_incw_acc") + "/accepted"
       val ckpt = graft.util.Scratch.dir("graft_incw_ck")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
+      runStream(s, dir, "documents") {
         graft.streaming.EventStreams.corpusDedupSink(stream, "doc_id", "text",
-          statePath, acceptedPath, ckpt).awaitTermination()
+          statePath, acceptedPath, ckpt)
       }
       s.read.parquet(acceptedPath)
     }),
@@ -401,15 +386,13 @@ private[graft] object QueriesStreaming {
     // the SAME full-recompute fixpoint oracle as the batch gate.
     "streaming_cluster_labels_live" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val waveDir = docWaves(s, dir, docs, "graft_lblw")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_lblw")
       val statePath = graft.util.Scratch.dir("graft_lblw_state") + "/index"
       val labelsPath = graft.util.Scratch.dir("graft_lblw_lbl") + "/labels"
       val ckpt = graft.util.Scratch.dir("graft_lblw_ck")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
+      runStream(s, dir, "documents") {
         graft.streaming.EventStreams.corpusLabelSink(stream, "doc_id", "text",
-          statePath, labelsPath, ckpt).awaitTermination()
+          statePath, labelsPath, ckpt)
       }
       graft.ops.Windows.topKPerGroup(s.read.parquet(labelsPath),
           Seq("doc_id"), Seq(col("wave").desc), k = 1)
@@ -426,37 +409,20 @@ private[graft] object QueriesStreaming {
     // uninterrupted run's.
     "streaming_dedup_restart" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val waveDir = docWaves(s, dir, docs, "graft_rsw")
-      def stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(waveDir)
+      val stream = docWaves(s, dir, docs, "graft_rsw")
       val statePath = graft.util.Scratch.dir("graft_rsw_state") + "/index"
       val acceptedPath = graft.util.Scratch.dir("graft_rsw_acc") + "/accepted"
       val ckpt = graft.util.Scratch.dir("graft_rsw_ck")
-      val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val chaos: Long => Unit = b =>
-        if (b == 1L && tripped.compareAndSet(false, true))
-          throw new RuntimeException(
-            "injected: accepted wave committed, index waves lost")
-      withShufflePartitions(s, streamParts(s, dir, "documents")) {
-        val q1 = graft.streaming.EventStreams.corpusDedupSink(stream, "doc_id",
-          "text", statePath, acceptedPath, ckpt, chaosAfterAccept = chaos)
-        try { q1.awaitTermination(); throw new IllegalStateException(
-          "streaming_dedup_restart: the injected failure never fired")
-        } catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException
-            if causeChainContains(e, "injected") => () // the planned crash
-        }
+      crashAndReplay(s, dir, "streaming_dedup_restart",
+          "accepted wave committed, index waves lost") { chaos =>
         graft.streaming.EventStreams.corpusDedupSink(stream, "doc_id", "text",
           statePath, acceptedPath, ckpt, chaosAfterAccept = chaos)
-          .awaitTermination()
       }
       s.read.parquet(acceptedPath)
     }),
 
-    // Sketch-based near-dup. Gate configuration uses the md5-derived
-    // 60-bit term hash (Dedup.Md5Hash60) so DuckDB can replicate the
-    // MinHash signatures, banding, and verification EXACTLY; production
-    // default stays xxhash64.
+    // Events joined to their batch sessions by time range; oracle: the
+    // session SQL joined on the [session_start, session_end] interval.
     "interval_join_sessions" -> ((s, dir) => {
       val sess = batchSessions(s, dir)
         .select(col("user_id"), col("session_seq"),
@@ -467,25 +433,13 @@ private[graft] object QueriesStreaming {
         .select(col("event_id"), col("user_id"), col("ts"), col("session_seq"))
     }),
 
-    // ---- per-key quota cap ------------------------------------------------
-    // First-N-per-key cap (per-domain / per-user quota of corpus
-    // curation): WindowGroupLimit keeps k rows per group in memory.
-    "streaming_dedup_live" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_sdedup_ck")
-      val out = graft.util.Scratch.dir("graft_sdedup_out") + "/t"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
-          .dedupStream(Tables.eventsStream(s, dir), watermark = "2 hours")
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("ts"), col("value"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-    }),
+    // Watermarked streaming dedup on the natural key; oracle: every
+    // events row once.
+    "streaming_dedup_live" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_sdedup")(graft.streaming.EventStreams
+        .dedupStream(Tables.eventsStream(s, dir), watermark = "2 hours")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("ts"), col("value")))),
 
     // ---- live custom-state sessionization ----------------------------------
     // flatMapGroupsWithState executed for real. A session emits either
@@ -500,46 +454,16 @@ private[graft] object QueriesStreaming {
     // relies on the file source delivering all files in ONE batch
     // (maxFilesPerTrigger unset — see EventStreams.sessionize's
     // single-wave ordering contract).
-    "streaming_sessionize_live" -> ((s, dir) => {
-      import s.implicits._
-      val ckpt = graft.util.Scratch.dir("graft_ssess_ck")
-      val out = graft.util.Scratch.dir("graft_ssess_out") + "/t"
-      val evs = Tables.eventsStream(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams.sessionize(evs, gapMs = 30L * 60 * 1000)
-          .toDF()
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-    }),
+    "streaming_sessionize_live" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_ssess")(streamSessions(s, Tables.eventsStream(s, dir)))),
 
     // ---- live incremental MERGE sink ---------------------------------------
     // foreachBatch MERGE into Parquet state, executed for real: the
     // winner per key is a total order over state AND batch, so the final
     // state equals a batch last-write-wins dedup over all events no
     // matter how the stream micro-batched (the convergence contract).
-    "streaming_merge_live" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_smerge_ck")
-      val statePath = graft.util.Scratch.dir("graft_smerge_state") + "/state"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams.mergeSink(
-          Tables.eventsStream(s, dir)
-            .select(col("user_id"), col("event_type"), col("event_id"),
-              col("ts"), col("value")),
-          statePath, keys = Seq("user_id", "event_type"),
-          precedence = Seq(col("ts").desc, col("event_id").desc),
-          checkpoint = ckpt)
-        q.awaitTermination()
-      }
-      s.read.parquet(statePath)
-    }),
+    "streaming_merge_live" -> ((s, dir) =>
+      mergeEvents(s, dir, "graft_smerge", Tables.eventsStream(s, dir))),
 
     // ---- multi-wave delivery twins ----------------------------------------
     // The same sessionize / merge pipelines driven through the waved
@@ -549,25 +473,9 @@ private[graft] object QueriesStreaming {
     // wave, and the merge folds three partial states. The oracles are
     // IDENTICAL to the _live twins: re-batching must not change a single
     // answer — that is the cross-micro-batch state contract.
-    "streaming_sessionize_waves" -> ((s, dir) => {
-      import s.implicits._
-      val ckpt = graft.util.Scratch.dir("graft_ssessw_ck")
-      val out = graft.util.Scratch.dir("graft_ssessw_out") + "/t"
-      val evs = Tables.wavedEventsStream(s, dir, nWaves = 3)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams.sessionize(evs, gapMs = 30L * 60 * 1000)
-          .toDF()
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-    }),
+    "streaming_sessionize_waves" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_ssessw")(
+        streamSessions(s, Tables.wavedEventsStream(s, dir, nWaves = 3)))),
 
     // Partition-scoped streaming MERGE: each of the three waves rewrites
     // only the state files it can touch, pruned by their partition
@@ -575,39 +483,12 @@ private[graft] object QueriesStreaming {
     // swap. One total order over state+batch rows, so re-batching and
     // replays cannot change a winner: the oracle is the identical batch
     // LWW dedup the other merge gates share.
-    "streaming_merge_partitioned" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_smergep_ck")
-      val statePath = graft.util.Scratch.dir("graft_smergep_state") + "/state"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        graft.streaming.EventStreams.mergeSinkPartitioned(
-          Tables.wavedEventsStream(s, dir, nWaves = 3)
-            .select(col("user_id"), col("event_type"), col("event_id"),
-              col("ts"), col("value")),
-          statePath, keys = Seq("user_id", "event_type"),
-          precedence = Seq(col("ts").desc, col("event_id").desc),
-          partitionCol = "event_type", checkpoint = ckpt)
-          .awaitTermination()
-      }
-      s.read.parquet(statePath)
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          col("ts"), col("value"))
-    }),
+    "streaming_merge_partitioned" -> ((s, dir) =>
+      mergeEvents(s, dir, "graft_smergep", Tables.wavedEventsStream(s, dir, nWaves = 3),
+        partitionCol = Some("event_type"))),
 
-    "streaming_merge_waves" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_smergew_ck")
-      val statePath = graft.util.Scratch.dir("graft_smergew_state") + "/state"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams.mergeSink(
-          Tables.wavedEventsStream(s, dir, nWaves = 3)
-            .select(col("user_id"), col("event_type"), col("event_id"),
-              col("ts"), col("value")),
-          statePath, keys = Seq("user_id", "event_type"),
-          precedence = Seq(col("ts").desc, col("event_id").desc),
-          checkpoint = ckpt)
-        q.awaitTermination()
-      }
-      s.read.parquet(statePath)
-    }),
+    "streaming_merge_waves" -> ((s, dir) =>
+      mergeEvents(s, dir, "graft_smergew", Tables.wavedEventsStream(s, dir, nWaves = 3))),
 
     // ---- late/out-of-order delivery twins ---------------------------------
     // The same pipelines driven through the LATE fixture
@@ -620,60 +501,19 @@ private[graft] object QueriesStreaming {
     // time-ordered waves fixture can never exercise. The oracles replicate
     // the delivery schedule and per-wave watermark sequence exactly
     // (boundary rules pinned by EventStreamsSpec's late-semantics probes).
-    "streaming_tumbling_late" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_stlate_ck")
-      val out = graft.util.Scratch.dir("graft_stlate_out") + "/agg"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
+    "streaming_tumbling_late" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_stlate")(graft.streaming.EventStreams
           .tumblingAgg(Tables.lateWavedEventsStream(s, dir, nWaves = 4),
-            watermark = "96 hours")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
+            watermark = "96 hours"))
         .select(col("hour_start"), col("event_type"), col("cnt"),
-          col("sum_value").cast(DoubleType).as("sum_value"))
-    }),
+          col("sum_value").cast(DoubleType).as("sum_value"))),
 
-    "streaming_sessionize_late" -> ((s, dir) => {
-      import s.implicits._
-      val ckpt = graft.util.Scratch.dir("graft_sslate_ck")
-      val out = graft.util.Scratch.dir("graft_sslate_out") + "/t"
-      val evs = Tables.lateWavedEventsStream(s, dir, nWaves = 4)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[graft.streaming.EventStreams.Event]
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
-          .sessionize(evs, gapMs = 30L * 60 * 1000, watermark = "96 hours")
-          .toDF()
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-    }),
+    "streaming_sessionize_late" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_sslate")(streamSessions(s,
+        Tables.lateWavedEventsStream(s, dir, nWaves = 4), watermark = "96 hours"))),
 
-    "streaming_merge_late" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_smlate_ck")
-      val statePath = graft.util.Scratch.dir("graft_smlate_state") + "/state"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams.mergeSink(
-          Tables.lateWavedEventsStream(s, dir, nWaves = 4)
-            .select(col("user_id"), col("event_type"), col("event_id"),
-              col("ts"), col("value")),
-          statePath, keys = Seq("user_id", "event_type"),
-          precedence = Seq(col("ts").desc, col("event_id").desc),
-          checkpoint = ckpt)
-        q.awaitTermination()
-      }
-      s.read.parquet(statePath)
-    }),
+    "streaming_merge_late" -> ((s, dir) =>
+      mergeEvents(s, dir, "graft_smlate", Tables.lateWavedEventsStream(s, dir, nWaves = 4))),
 
     // ---- live heavy-hitter sketch maintenance -----------------------------
     // Three waved micro-batches each write their one-row Misra-Gries
@@ -684,11 +524,10 @@ private[graft] object QueriesStreaming {
     "streaming_heavy_hitters_live" -> ((s, dir) => {
       val ckpt = graft.util.Scratch.dir("graft_shh_ck")
       val statePath = graft.util.Scratch.dir("graft_shh_state") + "/state"
-      withShufflePartitions(s, streamParts(s, dir)) {
+      runStream(s, dir) {
         graft.streaming.EventStreams.heavyHittersSink(
-          Tables.wavedEventsStream(s, dir, nWaves = 3)
-            .select(col("user_id")),
-          "user_id", k = 120 * 16, statePath, ckpt).awaitTermination()
+          Tables.wavedEventsStream(s, dir, nWaves = 3).select(col("user_id")),
+          "user_id", k = 120 * 16, statePath, ckpt)
       }
       graft.ops.Profile.hhResolve(
         Tables.events(s, dir).select(col("user_id")),
@@ -702,20 +541,9 @@ private[graft] object QueriesStreaming {
     // Clicks joined to same-user purchases within the prior hour, both
     // sides watermarked (bounded join state) — the streaming as-of window,
     // executed for real and graded against the batch theta-join oracle.
-    "streaming_join_live" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_sjoin_ck")
-      val out = graft.util.Scratch.dir("graft_sjoin_out") + "/t"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
-          .clickPurchaseJoin(Tables.eventsStream(s, dir), watermark = "2 hours")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-    }),
+    "streaming_join_live" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_sjoin")(graft.streaming.EventStreams
+        .clickPurchaseJoin(Tables.eventsStream(s, dir), watermark = "2 hours"))),
 
     // Late/out-of-order twin of the stream-stream interval join: rows
     // displaced two waves arrive behind the in-order waves' watermark.
@@ -726,21 +554,10 @@ private[graft] object QueriesStreaming {
     // never remove a row a surviving input could need (see the oracle's
     // derivation comment). EventStreamsSpec pins the drop-vs-match rule
     // per side on a controlled fixture.
-    "streaming_join_late" -> ((s, dir) => {
-      val ckpt = graft.util.Scratch.dir("graft_sjlate_ck")
-      val out = graft.util.Scratch.dir("graft_sjlate_out") + "/t"
-      withShufflePartitions(s, streamParts(s, dir)) {
-        val q = graft.streaming.EventStreams
-          .clickPurchaseJoin(Tables.lateWavedEventsStream(s, dir, nWaves = 4),
-            watermark = "96 hours")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet").option("path", out).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(out)
-    })
+    "streaming_join_late" -> ((s, dir) =>
+      appendParquet(s, dir, "graft_sjlate")(graft.streaming.EventStreams
+        .clickPurchaseJoin(Tables.lateWavedEventsStream(s, dir, nWaves = 4),
+          watermark = "96 hours")))
   )
 
   val oracleSql: Map[String, String] = Map(

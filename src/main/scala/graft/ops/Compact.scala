@@ -66,6 +66,13 @@ object Compact {
     */
   private val KeepManifest = "_GRAFT_KEEP"
 
+  /** Rows per file a compaction writes. */
+  private val TargetRows = 4000000L
+
+  /** The file count past which [[consolidateWaves]] merges a flat tier
+    * whole (see [[selectSmallSpan]]). */
+  private val WaveMaxFiles = 4
+
   /** Every data file under `root` with its length (names starting with
     * `_` or `.` — markers, manifests, checksums — are not data). */
   private[graft] def listData(fs: FileSystem, root: Path): Seq[(Path, Long)] = {
@@ -80,24 +87,24 @@ object Compact {
     out.result()
   }
 
-  /** The size-tier policy shared by [[compactTiered]] and
-    * [[consolidateWaves]]: merge the files below `spanFrac` of the
-    * largest (the freshly-appended slices — a previously compacted file
-    * towers over them), keep the top tier untouched. A flat tier (all
-    * files within a factor of each other, e.g. the very first
-    * compaction) degenerates to a full merge once the file count
-    * exceeds `maxFiles` — the LSM "major compaction", whose amortized
-    * cost stays bounded because it only fires when minor merges have
-    * already accumulated `maxFiles` top-tier outputs. Returns
-    * (toMerge, toKeep), or None for a no-op tick.
+  /** The size-tier policy shared by [[compactTiered]],
+    * [[consolidateWaves]] and [[Merge.mergeInto]]: when at least two
+    * files are below half the largest (the freshly-appended slices — a
+    * previously compacted file towers over them), merge those and keep
+    * the top tier untouched. A flat tier (all files within a factor of
+    * each other, e.g. the very first compaction) degenerates to a full
+    * merge once the file count exceeds `maxFiles` — the LSM "major
+    * compaction", whose amortized cost stays bounded because it only
+    * fires when minor merges have already accumulated `maxFiles`
+    * top-tier outputs. Returns (toMerge, toKeep), or None for a no-op
+    * tick.
     */
-  private[graft] def selectSmallSpan(files: Seq[(Path, Long)], spanFrac: Double = 0.5,
-                                     minMerge: Int = 2, maxFiles: Int = 8)
+  private[graft] def selectSmallSpan(files: Seq[(Path, Long)], maxFiles: Int = 8)
       : Option[(Seq[Path], Seq[Path])] = {
     if (files.isEmpty) return None
     val largest = files.map(_._2).max
-    val (small, big) = files.partition(_._2 < (largest * spanFrac).toLong)
-    if (small.size >= minMerge) Some((small.map(_._1), big.map(_._1)))
+    val (small, big) = files.partition(_._2 < (largest * 0.5).toLong)
+    if (small.size >= 2) Some((small.map(_._1), big.map(_._1)))
     else if (files.size > maxFiles) Some((files.map(_._1), Nil))
     else None
   }
@@ -277,10 +284,7 @@ object Compact {
     * the full-rewrite form for one-shot use and hive-partitioned
     * layouts.
     */
-  def compactTiered(spark: SparkSession, path: String,
-                    targetRows: Long = 4000000L, spanFrac: Double = 0.5,
-                    minMerge: Int = 2, maxFiles: Int = 8): TieredStats = {
-    require(targetRows > 0, "targetRows must be positive")
+  def compactTiered(spark: SparkSession, path: String): TieredStats = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, p)
@@ -289,7 +293,7 @@ object Compact {
     require(files.forall(_._1.getParent == fs.makeQualified(p)),
       s"compactTiered: $path is partitioned — use consolidateWaves/compactParquet")
     val before = files.size
-    selectSmallSpan(files, spanFrac, minMerge, maxFiles) match {
+    selectSmallSpan(files) match {
       case None =>
         TieredStats(0L, 0L, before, before, 0, before)
       case Some((small, big)) =>
@@ -297,7 +301,7 @@ object Compact {
         val bytes = files.collect { case (f, len) if smallSet(f) => len }.sum
         val df = spark.read.parquet(small.map(_.toString): _*)
         val rows = df.count()
-        val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
+        val nOut = math.max(1L, (rows + TargetRows - 1) / TargetRows).toInt
         val rewritten = swapIn(spark, path, big) { tmp =>
           StateFiles.write(df.repartition(nOut), tmp)
           listData(fs, new Path(tmp)).map(_._1.getName)
@@ -335,10 +339,7 @@ object Compact {
     * before the next tick — is recovered without losing committed
     * history.
     */
-  def consolidateWaves(spark: SparkSession, path: String, currentWave: Long,
-                       targetRows: Long = 4000000L, spanFrac: Double = 0.5,
-                       minMerge: Int = 2, maxFiles: Int = 8): TieredStats = {
-    require(targetRows > 0, "targetRows must be positive")
+  def consolidateWaves(spark: SparkSession, path: String, currentWave: Long): TieredStats = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, p)
@@ -361,7 +362,7 @@ object Compact {
     // rename, zero bytes read.
     val outside = committed.filterNot(_._1.getParent.getName == "wave=-1")
     val (small, big) =
-      selectSmallSpan(committed, spanFrac, minMerge, maxFiles) match {
+      selectSmallSpan(committed, WaveMaxFiles) match {
         case Some((s, b)) => (s, b)
         case None         => (Nil, committed.map(_._1))
       }
@@ -378,7 +379,7 @@ object Compact {
         // the wave=-1 dir the write lands in.
         val df = spark.read.parquet(small.map(_.toString): _*)
         val n = df.count()
-        val nOut = math.max(1L, (n + targetRows - 1) / targetRows).toInt
+        val nOut = math.max(1L, (n + TargetRows - 1) / TargetRows).toInt
         StateFiles.write(df.repartition(nOut), mergedDir.toString)
         fs.delete(new Path(mergedDir, "_SUCCESS"), false)
         n
@@ -413,7 +414,7 @@ object Compact {
     */
   def compactParquet(spark: SparkSession, path: String,
                      partitionCols: Seq[String] = Nil,
-                     targetRows: Long = 4000000L): Stats = {
+                     targetRows: Long = TargetRows): Stats = {
     require(targetRows > 0, "targetRows must be positive")
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.io.StateFiles
-import graft.ops.Merge
+import graft.ops.{Compact, Merge}
+import graft.text.Dedup.CollapsedIndex
 
 /** Structured Streaming operators over the events stream (SURVEY.md §2.10
   * stretch scope): the reference is pure batch, so these are the engine's
@@ -19,6 +20,61 @@ import graft.ops.Merge
   */
 object EventStreams {
 
+  /** Waves between compaction ticks of the index sinks' state. */
+  private val CompactEvery = 2
+
+  /** One micro-batch as a wave of wave-partitioned state: the batch, and
+    * its id as the `wave=N` partition each of its writes lands in. The
+    * one handle every wave-partitioned sink reads, writes and compacts
+    * its state through, so all of them share one replay contract
+    * (foreachBatch is AT-LEAST-ONCE):
+    *  - a write dynamically overwrites its own wave, so a retried batch
+    *    REPLACES its rows instead of appending a second copy;
+    *  - a read sees only the committed waves before this one, so a retry
+    *    after a partial failure never reads its own half-written rows;
+    *  - a compaction tick folds only those committed waves into
+    *    `wave=-1` and never touches the current wave, which may still
+    *    replay.
+    */
+  private final case class WaveState(batch: DataFrame, wave: Int) {
+    private def spark = batch.sparkSession
+
+    /** The rows of the waves before this one at `path` (none on a first
+      * run), with their `wave` column. */
+    def prior(path: String, schema: StructType): DataFrame =
+      Merge.readStateOrEmpty(spark, path, schema.add("wave", IntegerType))
+        .where(col("wave") < wave)
+
+    /** Writes `df` as this wave of the table at `path`. */
+    def write(path: String, df: DataFrame): Unit = StateFiles.writeWave(df, path, wave)
+
+    /** The compaction cadence: on every [[CompactEvery]]-th wave, each
+      * table in `paths` folds its committed waves into `wave=-1`
+      * ([[graft.ops.Compact.consolidateWaves]], size-tiered, so the
+      * rewrite is bounded by the span appended since the last tick). */
+    def compact(paths: String*): Unit =
+      if (wave % CompactEvery == CompactEvery - 1)
+        paths.foreach(p => Compact.consolidateWaves(spark, p, currentWave = wave))
+  }
+
+  /** The one start path of the foreachBatch sinks: Update mode, the
+    * checkpoint, and an AvailableNow trigger (drain what the source
+    * holds, then stop), with `body` run once per micro-batch. */
+  private def drive(stream: DataFrame, checkpoint: String)(body: WaveState => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Update())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch((batch: DataFrame, batchId: Long) => body(WaveState(batch, batchId.toInt)))
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** The collapsed near-dup index the waves before `w` wrote under
+    * `stateIndexPath`: the state side of the dedup and label folds. */
+  private def priorIndex(w: WaveState, stateIndexPath: String, bi: CollapsedIndex): CollapsedIndex =
+    CollapsedIndex(
+      w.prior(stateIndexPath + "/rep_index", bi.repIdx.schema).drop("wave"),
+      w.prior(stateIndexPath + "/membership", bi.membership.schema).drop("wave"))
+
   /** Continuous corpus ingestion with incremental near-dup dedup: each
     * micro-batch of documents is paired against the PERSISTED
     * accepted-corpus shingle index plus itself
@@ -28,13 +84,11 @@ object EventStreams {
     * corpus's history is never re-paired against itself, and a crawl
     * can dedup-ingest forever at per-batch cost.
     *
-    * Replay safety (foreachBatch is AT-LEAST-ONCE): every output is
-    * partitioned by `wave` (= batchId) and written with DYNAMIC partition
-    * overwrite, so a retried batch REPLACES its own wave instead of
-    * appending a second copy of it; and the state reads exclude the
-    * current wave, so a retry after a partial failure (accepted wave
-    * committed, index wave not) never pairs the batch against its own
-    * half-written rows. The accepted-ids read-back is still re-read from
+    * Replay safety is [[WaveState]]'s: every output is one wave of a
+    * wave-partitioned table and the state reads exclude the current
+    * wave, so a retry after a partial failure (accepted wave committed,
+    * index wave not) replaces its own rows and never pairs the batch
+    * against them. The accepted-ids read-back is still re-read from
     * disk (partition-pruned to the current wave) before the index writes
     * so no write races its own input plan.
     */
@@ -44,64 +98,51 @@ object EventStreams {
                       maxDocFreq: Long = 100L,
                       hashFn: Column => Column = graft.text.Dedup.Md5Hash60,
                       chaosAfterAccept: Long => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val repIdxPath = stateIndexPath + "/rep_index"
-        val membershipPath = stateIndexPath + "/membership"
-        val scope = new graft.util.CacheScope
-        try {
-          // Collapsed on BOTH sides: candidate generation runs at
-          // representative grain (a duplicate-heavy stream would
-          // otherwise pay quadratic candidates per wave), and the state
-          // stores the rep index plus the doc->rep membership.
-          //
-          // scope.persist, NOT scope.truncate: the round-18 paired A/B
-          // (streaming_dedup_incremental_live 6.59 vs 6.53 s mean-of-2
-          // medians, _restart 9.22 vs 8.83) measured the eager per-wave
-          // checkpoints flat-to-worse here — this sink's downstream per
-          // wave is short (pairs -> accept -> two writes), so the persist
-          // pipeline overlaps what eager cuts serialize. labelWave below
-          // is the fold where truncation measured a real win.
-          val bi = graft.text.Dedup.collapsedIndex(
-            batch, idCol, textCol, n = 3, maxDocFreq, hashFn, cache = scope.persist)
-          val wave = batchId.toInt
-          def readState(path: String, schema: StructType): DataFrame =
-            Merge.readStateOrEmpty(spark, path, schema.add("wave", IntegerType))
-              .where(col("wave") < wave).drop("wave")
-          val state = graft.text.Dedup.CollapsedIndex(
-            readState(repIdxPath, bi.repIdx.schema),
-            readState(membershipPath, bi.membership.schema))
-          val pairs = graft.text.Dedup.incrementalNearDupPairsCollapsed(bi, state, threshold)
-          StateFiles.writeWave(
-            graft.text.Dedup.incrementalAccept(batch.select(col(idCol)), pairs), acceptedPath, wave)
-          // Fault-injection seam for the restart gate: a throw HERE is
-          // the worst partial failure — accepted wave committed, index
-          // waves not — and replay after restart must converge anyway.
-          chaosAfterAccept(batchId)
-          // Re-read survivors from disk so the state writes never race
-          // their own input plan.
-          val acceptedIds = spark.read.parquet(acceptedPath)
-            .where(col("wave") === wave)
-            .select(col(idCol).as("doc_id"))
-          val accMembership = bi.membership.join(acceptedIds, Seq("doc_id"))
-          StateFiles.writeWave(accMembership, membershipPath, wave)
-          StateFiles.writeWave(
-            bi.repIdx.join(accMembership.select(col("rep_id").as("doc_id")).distinct(), Seq("doc_id"))
-              .select(col("doc_id"), col("shingle"), col("nsh")), repIdxPath, wave)
-        } finally scope.close()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drive(docs, checkpoint) { w =>
+      val batch = w.batch
+      val scope = new graft.util.CacheScope
+      try {
+        // Collapsed on BOTH sides: candidate generation runs at
+        // representative grain (a duplicate-heavy stream would
+        // otherwise pay quadratic candidates per wave), and the state
+        // stores the rep index plus the doc->rep membership.
+        //
+        // scope.persist, NOT scope.truncate: the round-18 paired A/B
+        // (streaming_dedup_incremental_live 6.59 vs 6.53 s mean-of-2
+        // medians, _restart 9.22 vs 8.83) measured the eager per-wave
+        // checkpoints flat-to-worse here — this sink's downstream per
+        // wave is short (pairs -> accept -> two writes), so the persist
+        // pipeline overlaps what eager cuts serialize. labelWave below
+        // is the fold where truncation measured a real win.
+        val bi = graft.text.Dedup.collapsedIndex(
+          batch, idCol, textCol, n = 3, maxDocFreq, hashFn, cache = scope.persist)
+        val pairs = graft.text.Dedup.incrementalNearDupPairsCollapsed(
+          bi, priorIndex(w, stateIndexPath, bi), threshold)
+        w.write(acceptedPath,
+          graft.text.Dedup.incrementalAccept(batch.select(col(idCol)), pairs))
+        // Fault-injection seam for the restart gate: a throw HERE is
+        // the worst partial failure — accepted wave committed, index
+        // waves not — and replay after restart must converge anyway.
+        chaosAfterAccept(w.wave)
+        // Re-read survivors from disk so the state writes never race
+        // their own input plan.
+        val acceptedIds = batch.sparkSession.read.parquet(acceptedPath)
+          .where(col("wave") === w.wave)
+          .select(col(idCol).as("doc_id"))
+        val accMembership = bi.membership.join(acceptedIds, Seq("doc_id"))
+        w.write(stateIndexPath + "/membership", accMembership)
+        w.write(stateIndexPath + "/rep_index",
+          bi.repIdx.join(accMembership.select(col("rep_id").as("doc_id")).distinct(), Seq("doc_id"))
+            .select(col("doc_id"), col("shingle"), col("nsh")))
+      } finally scope.close()
+    }
 
   /** Streaming CLUSTER-LABEL maintenance ("registry mode"): every wave is
     * ingested, and the persisted near-dup cluster labeling is folded
     * forward via [[graft.text.Dedup.clusterRepresentativesIncremental]] —
     * batch pairs map through the prior labels, CC runs over the
-    * contracted graph only, so each micro-batch costs
-    * O(batch + touched components) regardless of corpus age.
+    * contracted graph only, so the fold costs O(batch + touched
+    * components) whatever the corpus's age.
     *
     * State: the accumulated collapsed index (as [[corpusDedupSink]]) plus
     * a label DELTA table — wave w writes (doc_id, rep) rows only for the
@@ -111,37 +152,36 @@ object EventStreams {
     * empty state degenerates to full CC over the first batch — no special
     * bootstrap path.
     *
-    * Replay safety matches [[corpusDedupSink]]: every output is
-    * wave-partitioned and dynamically overwritten, and all state reads
-    * exclude the current wave, so an at-least-once retry replaces its own
-    * wave's rows and never reads its own partial output.
+    * The state READS are not bounded that way: each wave scans every
+    * prior wave's `rep_index` and `membership` files, and the prior
+    * labeling is a top-1 per doc over every label delta ever written, so
+    * a wave costs more as the stream ages (these tables have no
+    * compaction cadence).
+    *
+    * Replay safety is [[WaveState]]'s, as in [[corpusDedupSink]].
     */
   def corpusLabelSink(docs: DataFrame, idCol: String, textCol: String,
                       stateIndexPath: String, labelsPath: String,
                       checkpoint: String, threshold: Double = 0.5,
                       maxDocFreq: Long = 100L,
                       hashFn: Column => Column = graft.text.Dedup.Md5Hash60): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        labelWave(batch, idCol, textCol, batchId.toInt, stateIndexPath,
-          labelsPath, threshold, maxDocFreq, hashFn)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drive(docs, checkpoint) { w =>
+      labelWave(w.batch, idCol, textCol, w.wave, stateIndexPath,
+        labelsPath, threshold, maxDocFreq, hashFn)
+    }
 
   /** One wave of the label-maintenance fold — the foreachBatch body of
     * [[corpusLabelSink]], callable directly so batch-mode backfills (and
     * specs) can drive waves without the Structured Streaming machinery.
+    * Its costs are [[corpusLabelSink]]'s: the fold and the label write
+    * scale with the batch and the components it touches, the state reads
+    * with every wave written before `wave`.
     */
   def labelWave(batch: DataFrame, idCol: String, textCol: String, wave: Int,
                 stateIndexPath: String, labelsPath: String,
                 threshold: Double = 0.5, maxDocFreq: Long = 100L,
                 hashFn: Column => Column = graft.text.Dedup.Md5Hash60): Unit = {
-    val spark = batch.sparkSession
-    val repIdxPath = stateIndexPath + "/rep_index"
-    val membershipPath = stateIndexPath + "/membership"
+    val w = WaveState(batch, wave)
     val scope = new graft.util.CacheScope
     try {
       // scope.truncate (round-18): same rationale as corpusDedupSink —
@@ -151,19 +191,10 @@ object EventStreams {
       val bi = graft.text.Dedup.collapsedIndex(
         batch, idCol, textCol, n = 3, maxDocFreq, hashFn,
         cache = scope.truncate)
-      def readState(path: String, schema: StructType): DataFrame =
-        Merge.readStateOrEmpty(spark, path, schema.add("wave", IntegerType))
-          .where(col("wave") < wave).drop("wave")
-      val state = graft.text.Dedup.CollapsedIndex(
-        readState(repIdxPath, bi.repIdx.schema),
-        readState(membershipPath, bi.membership.schema))
-      val pairs = scope.truncate(
-        graft.text.Dedup.incrementalNearDupPairsCollapsed(bi, state, threshold))
-      val labelSchema = new StructType()
-        .add("doc_id", LongType).add("rep", LongType)
-      val deltas = Merge.readStateOrEmpty(spark, labelsPath,
-          labelSchema.add("wave", IntegerType))
-        .where(col("wave") < wave)
+      val pairs = scope.truncate(graft.text.Dedup.incrementalNearDupPairsCollapsed(
+        bi, priorIndex(w, stateIndexPath, bi), threshold))
+      val deltas = w.prior(labelsPath,
+        new StructType().add("doc_id", LongType).add("rep", LongType))
       val prior = scope.truncate(graft.ops.Windows.topKPerGroup(
         deltas, Seq("doc_id"), Seq(col("wave").desc), k = 1).drop("wave"))
       // Batch side pre-contracted through its exact-dup membership:
@@ -180,34 +211,26 @@ object EventStreams {
         .join(batch.select(col(idCol).as("doc_id")), Seq("doc_id"))
         .select(col("doc_id"), col("rep"))
         .unionByName(changed)
-      StateFiles.writeWave(delta, labelsPath, wave)
-      StateFiles.writeWave(bi.membership, membershipPath, wave)
-      StateFiles.writeWave(bi.repIdx, repIdxPath, wave)
+      w.write(labelsPath, delta)
+      w.write(stateIndexPath + "/membership", bi.membership)
+      w.write(stateIndexPath + "/rep_index", bi.repIdx)
     } finally scope.close()
   }
 
   /** Streaming hot-item profiling — the heavy-hitters member of the
     * incremental-state sinks: each micro-batch writes its ONE-ROW
-    * Misra–Gries summary ([[graft.ops.Profile.hhSummarize]]) keyed by
-    * wave. Replay safety is the wave-keyed dynamic-overwrite contract of
-    * the other sinks: an at-least-once retry REPLACES its own wave's
-    * summary instead of double-counting it. The current heavy hitters
-    * resolve at READ time — [[graft.ops.Profile.hhMergeAll]] folds the
-    * wave summaries in one merge level (error ≤ 2n/(k+1) regardless of
-    * stream age), then [[graft.ops.Profile.hhResolve]] recounts the ≤ k
-    * candidates exactly. State on disk is O(waves · k), never the key
-    * space.
+    * Misra–Gries summary ([[graft.ops.Profile.hhSummarize]]) as its
+    * wave, so an at-least-once retry REPLACES its own wave's summary
+    * instead of double-counting it ([[WaveState]]). The current heavy
+    * hitters resolve at READ time — [[graft.ops.Profile.hhMergeAll]]
+    * folds the wave summaries in one merge level (error ≤ 2n/(k+1)
+    * regardless of stream age), then [[graft.ops.Profile.hhResolve]]
+    * recounts the ≤ k candidates exactly. State on disk is O(waves · k),
+    * never the key space.
     */
   def heavyHittersSink(items: DataFrame, itemCol: String, k: Int,
                        statePath: String, checkpoint: String): StreamingQuery =
-    items.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateFiles.writeWave(graft.ops.Profile.hhSummarize(batch, itemCol, k), statePath, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drive(items, checkpoint)(w => w.write(statePath, graft.ops.Profile.hhSummarize(w.batch, itemCol, k)))
 
   /** Typed event row for streaming tests and stateful ops. */
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -372,22 +395,21 @@ object EventStreams {
     * index scores EXACTLY like a full rebuild, O(batch) per wave,
     * history never re-tokenized).
     *
-    * The sink OWNS its compaction cadence: every `compactEvery` waves
-    * (0 disables) the committed waves' small slice files consolidate
-    * into the reserved `wave=-1` partition via the size-tiered
-    * [[graft.ops.Compact.consolidateWaves]] — rewrite cost bounded by
-    * the newly-appended span (top-tier files move by metadata rename),
-    * so an unattended stream stays bounded in file count without anyone
-    * remembering to run maintenance, and without the per-tick
-    * O(history) rewrite a full compaction would cost. The current wave
-    * is never consolidated (it may still replay — see below);
-    * result-transparency is the fold contract the `text_bm25_compacted`
-    * gate proves and `streaming_bm25_live`'s full-rebuild oracle
-    * re-proves with the cadence armed.
+    * The sink OWNS its compaction cadence ([[WaveState.compact]]):
+    * every second wave the committed waves' small slice files
+    * consolidate into the reserved `wave=-1` partition via the
+    * size-tiered [[graft.ops.Compact.consolidateWaves]] — rewrite cost
+    * bounded by the newly-appended span (top-tier files move by metadata
+    * rename), so an unattended stream stays bounded in file count
+    * without anyone remembering to run maintenance, and without the
+    * per-tick O(history) rewrite a full compaction would cost. The
+    * current wave is never consolidated (it may still replay — see
+    * below); result-transparency is the fold contract the
+    * `text_bm25_compacted` gate proves and `streaming_bm25_live`'s
+    * full-rebuild oracle re-proves with the cadence running.
     *
-    * Replay safety matches [[corpusDedupSink]]: both outputs are
-    * wave-partitioned (wave = batchId) and written with dynamic
-    * partition overwrite, so an at-least-once retry REPLACES its own
+    * Replay safety is [[WaveState]]'s: both outputs are waves of
+    * wave-partitioned tables, so an at-least-once retry REPLACES its own
     * wave instead of double-counting its documents in df and avgdl —
     * and consolidation only touches waves whose batch has committed,
     * which can never re-fire.
@@ -398,27 +420,15 @@ object EventStreams {
     * whole two-sidecar compaction tick must replay idempotently.
     */
   def bm25IndexSink(docs: DataFrame, idCol: String, textCol: String,
-                    terms: Seq[String], statePath: String,
-                    checkpoint: String, compactEvery: Int = 0,
-                    compactMaxFiles: Int = 8,
+                    terms: Seq[String], statePath: String, checkpoint: String,
                     chaosAfterTick: Long => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (tf, stats) = graft.text.Bm25.buildIndex(batch, idCol, textCol, terms)
-        StateFiles.writeWave(tf, statePath + "/tf", batchId)
-        StateFiles.writeWave(stats, statePath + "/stats", batchId)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          Seq("/tf", "/stats").foreach { sub =>
-            graft.ops.Compact.consolidateWaves(
-              batch.sparkSession, statePath + sub, currentWave = batchId,
-              maxFiles = compactMaxFiles)
-          }
-        chaosAfterTick(batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drive(docs, checkpoint) { w =>
+      val (tf, stats) = graft.text.Bm25.buildIndex(w.batch, idCol, textCol, terms)
+      w.write(statePath + "/tf", tf)
+      w.write(statePath + "/stats", stats)
+      w.compact(statePath + "/tf", statePath + "/stats")
+      chaosAfterTick(w.wave)
+    }
 
   /** Streaming corpus-LM maintenance: each micro-batch of documents is
     * tokenized once and its (doc_id, term, tf) slice appended to the
@@ -431,29 +441,16 @@ object EventStreams {
     * sidecar; the full-vocabulary tf wire cost is the operator's
     * inherent cost (the LM must count everything once).
     *
-    * Replay safety and compaction cadence are [[bm25IndexSink]]'s:
-    * wave-partitioned dynamic overwrite (a retry replaces its own
-    * wave), committed waves consolidated size-tiered into wave=-1
-    * every `compactEvery` waves.
+    * Replay safety and compaction cadence are [[bm25IndexSink]]'s.
     */
   def lmIndexSink(docs: DataFrame, idCol: String, textCol: String,
                   statePath: String, checkpoint: String,
-                  maxDocTokens: Int = 0, compactEvery: Int = 0,
-                  compactMaxFiles: Int = 8): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateFiles.writeWave(graft.text.LanguageModel.tfSlice(batch, idCol, textCol, maxDocTokens),
-          statePath + "/tf", batchId)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          graft.ops.Compact.consolidateWaves(
-            batch.sparkSession, statePath + "/tf", currentWave = batchId,
-            maxFiles = compactMaxFiles)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+                  maxDocTokens: Int = 0): StreamingQuery =
+    drive(docs, checkpoint) { w =>
+      w.write(statePath + "/tf",
+        graft.text.LanguageModel.tfSlice(w.batch, idCol, textCol, maxDocTokens))
+      w.compact(statePath + "/tf")
+    }
 
   /** Streaming ORDER-1 corpus-LM maintenance: each micro-batch is
     * tokenized once and appends TWO slices — the (doc_id, w1, w2, tf)
@@ -469,32 +466,19 @@ object EventStreams {
     * with the vocab derived from `/tf`) equals the one-shot
     * [[graft.text.LanguageModel.bigramSurprisal]] exactly.
     *
-    * Replay safety and compaction cadence are [[bm25IndexSink]]'s:
-    * wave-partitioned dynamic overwrite (a retry replaces its own
-    * wave), committed waves consolidated size-tiered into wave=-1
-    * every `compactEvery` waves, both slices on the same tick.
+    * Replay safety and compaction cadence are [[bm25IndexSink]]'s, both
+    * slices on the same tick.
     */
   def lmBigramIndexSink(docs: DataFrame, idCol: String, textCol: String,
                         statePath: String, checkpoint: String,
-                        maxDocTokens: Int = 0, compactEvery: Int = 0,
-                        compactMaxFiles: Int = 8): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateFiles.writeWave(graft.text.LanguageModel
-          .bigramTfSlice(batch, idCol, textCol, maxDocTokens), statePath + "/bitf", batchId)
-        StateFiles.writeWave(graft.text.LanguageModel
-          .tfSlice(batch, idCol, textCol, maxDocTokens), statePath + "/tf", batchId)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          Seq("/bitf", "/tf").foreach { sub =>
-            graft.ops.Compact.consolidateWaves(
-              batch.sparkSession, statePath + sub, currentWave = batchId,
-              maxFiles = compactMaxFiles)
-          }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+                        maxDocTokens: Int = 0): StreamingQuery =
+    drive(docs, checkpoint) { w =>
+      w.write(statePath + "/bitf",
+        graft.text.LanguageModel.bigramTfSlice(w.batch, idCol, textCol, maxDocTokens))
+      w.write(statePath + "/tf",
+        graft.text.LanguageModel.tfSlice(w.batch, idCol, textCol, maxDocTokens))
+      w.compact(statePath + "/bitf", statePath + "/tf")
+    }
 
   /** Streaming exact-substring window-index maintenance: each
     * micro-batch appends its [[graft.text.SpanDedup.windowSlice]]
@@ -507,9 +491,7 @@ object EventStreams {
     * fold ([[graft.text.SpanDedup.ngramSpanStatsFromSlice]]) equals the
     * one-shot stats exactly (window rows are a per-doc function of the
     * text; waves partition the docs). Replay safety and compaction
-    * cadence are [[bm25IndexSink]]'s: wave-partitioned dynamic
-    * overwrite, committed waves consolidated size-tiered into `wave=-1`
-    * every `compactEvery` waves.
+    * cadence are [[bm25IndexSink]]'s.
     *
     * The live form is what makes ExactSubstr dedup deployable on an
     * ingest stream: a new document's spans are checked against the
@@ -518,7 +500,7 @@ object EventStreams {
     *
     * `chaosAfterTick(batchId)` is a test-only failure-injection hook
     * invoked at the END of the batch body — after the wave write AND
-    * the compaction branch, before the checkpoint commits — so a gate
+    * the compaction tick, before the checkpoint commits — so a gate
     * can kill the stream at the worst replay point (the whole
     * compaction tick re-executes on restart: the dynamic wave
     * overwrite must replace its own wave and the consolidation must
@@ -526,51 +508,12 @@ object EventStreams {
     */
   def spanIndexSink(docs: DataFrame, idCol: String, textCol: String, w: Int,
                     statePath: String, checkpoint: String,
-                    compactEvery: Int = 0,
-                    compactMaxFiles: Int = 8,
                     chaosAfterTick: Long => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateFiles.writeWave(graft.text.SpanDedup.windowSlice(batch, idCol, textCol, w),
-          statePath + "/win", batchId)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          graft.ops.Compact.consolidateWaves(
-            batch.sparkSession, statePath + "/win", currentWave = batchId,
-            maxFiles = compactMaxFiles)
-        chaosAfterTick(batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Hive-partitioned twin of [[mergeSink]]: each micro-batch is one
-    * [[graft.ops.Merge.mergeInto]] with `partitionCol`, the same
-    * touched-file merge and manifest swap as [[mergeSink]]'s flat state,
-    * within the partition directories whose value the batch holds — so
-    * a batch reads and rewrites only those partitions' files whose key
-    * ranges overlap its own, plus their small files; a partition the
-    * batch does not hold is never rewritten. The same
-    * total order as [[mergeSink]] carries the dedup and
-    * the replay convergence — which here additionally requires
-    * `partitionCol` to be functionally dependent on `keys` (the gate
-    * passes `event_type`, which IS a key; see
-    * [[graft.ops.Merge.mergeInto]]'s contract).
-    */
-  def mergeSinkPartitioned(stream: DataFrame, statePath: String,
-                           keys: Seq[String], precedence: Seq[Column],
-                           partitionCol: String,
-                           checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Merge.mergeInto(batch.sparkSession, statePath, batch, keys, precedence,
-          incomingWins = false, partitionCol = Some(partitionCol))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drive(docs, checkpoint) { ws =>
+      ws.write(statePath + "/win", graft.text.SpanDedup.windowSlice(ws.batch, idCol, textCol, w))
+      ws.compact(statePath + "/win")
+      chaosAfterTick(ws.wave)
+    }
 
   /** Incremental MERGE sink: each micro-batch is last-write-wins-merged
     * into the Parquet state table on `keys` by one
@@ -584,17 +527,21 @@ object EventStreams {
     * to the same state as a batch dedup over all events (exactly-once-
     * equivalent semantics on top of an at-least-once source), also after
     * a process death mid-swap (the next batch recovers the swap first).
+    *
+    * With `partitionCol` the state is hive-partitioned by it: a batch
+    * reads and rewrites only the files, within the partition directories
+    * whose value it holds, whose key ranges overlap its own, plus their
+    * small files; a partition the batch does not hold is never
+    * rewritten. Replay convergence then additionally requires
+    * `partitionCol` to be functionally dependent on `keys` (the
+    * `streaming_merge_partitioned` gate passes `event_type`, which IS a
+    * key; see [[graft.ops.Merge.mergeInto]]'s contract).
     */
   def mergeSink(stream: DataFrame, statePath: String, keys: Seq[String],
-                precedence: Seq[Column], checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Merge.mergeInto(batch.sparkSession, statePath, batch, keys, precedence,
-          incomingWins = false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+                precedence: Seq[Column], checkpoint: String,
+                partitionCol: Option[String] = None): StreamingQuery =
+    drive(stream, checkpoint) { w =>
+      Merge.mergeInto(w.batch.sparkSession, statePath, w.batch, keys, precedence,
+        incomingWins = false, partitionCol = partitionCol)
+    }
 }

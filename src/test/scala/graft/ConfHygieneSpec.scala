@@ -18,7 +18,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * `ParquetWritesLeft`. File-system renames and deletes there are held
   * to a third: state moves only through the one swap protocol
   * ([[graft.ops.Compact]]), apart from the sites pinned in
-  * `FsMovesLeft`. */
+  * `FsMovesLeft`. Streaming has one start path, held to a fourth:
+  * under `graft/streaming` and `graft/Queries*.scala`, a `foreachBatch`
+  * sink starts only in `EventStreams`' driver, an AvailableNow trigger
+  * only there and in `QueriesStreaming`'s gate runner, and a
+  * shuffle-partition scope only in that runner; under `graft/streaming`,
+  * a wave write and a wave consolidation happen only in the
+  * `WaveState` handle (`StartPath`). */
 class ConfHygieneSpec extends AnyFunSuite {
 
   private val EntryPoints =
@@ -56,6 +62,18 @@ class ConfHygieneSpec extends AnyFunSuite {
   /** Renames and deletes outside the swap, per file: the wave-fixture
     * staging rename and the orphaned bucketed-table reclaim. */
   private val FsMovesLeft = Map("graft/io/Tables.scala" -> 1, "graft/io/Sinks.scala" -> 1)
+
+  private val Driver = "graft/streaming/EventStreams.scala"
+  private val Runner = "graft/QueriesStreaming.scala"
+
+  /** The start-path calls, each with its one site per file, and whether
+    * `graft/Queries*.scala` is held to it as well as `graft/streaming`. */
+  private val StartPath: Seq[(Regex, String, Map[String, Int], Boolean)] = Seq(
+    ("""\.foreachBatch""".r, "foreachBatch starts", Map(Driver -> 1), true),
+    ("""Trigger\.AvailableNow""".r, "AvailableNow triggers", Map(Driver -> 1, Runner -> 1), true),
+    ("""withShufflePartitions\(""".r, "shuffle-partition scopes", Map(Runner -> 1), true),
+    ("""StateFiles\.writeWave\(""".r, "wave writes", Map(Driver -> 1), false),
+    ("""consolidateWaves\(""".r, "wave consolidations", Map(Driver -> 1), false))
 
   /** `(path relative to root, file)` for every Scala file under `root`. */
   private def scalaFiles(root: Path): Seq[(String, Path)] = {
@@ -116,6 +134,16 @@ class ConfHygieneSpec extends AnyFunSuite {
     ratchet(hits(root, FsMove, Set(Swap)).filter { case (rel, _) => StateDirs.exists(rel.startsWith) },
       FsMovesLeft, "renames/deletes")
 
+  /** Every start-path call in a file whose count differs from its pin. */
+  private def startPathViolations(root: Path): Seq[String] =
+    StartPath.flatMap { case (pattern, what, pins, queriesToo) =>
+      val found = hits(root, pattern, Set.empty).filter { case (rel, _) =>
+        rel.startsWith("graft/streaming/") ||
+          queriesToo && rel.matches("graft/Queries[^/]*\\.scala")
+      }
+      ratchet(found, pins, what)
+    }
+
   private def mainRoot: Path = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
@@ -144,6 +172,37 @@ class ConfHygieneSpec extends AnyFunSuite {
     val found = fsMoveViolations(mainRoot)
     assert(found.isEmpty,
       "move or drop state through graft.ops.Compact's swap:\n" + found.mkString("\n"))
+  }
+
+  test("streaming starts, partition scopes and wave state go through the one start path") {
+    val found = startPathViolations(mainRoot)
+    assert(found.isEmpty,
+      "start streams through EventStreams' driver or QueriesStreaming's runner, and " +
+        "touch wave state through WaveState:\n" + found.mkString("\n"))
+  }
+
+  test("the start-path check names the file and line, within its scope only") {
+    val root = Files.createTempDirectory("graft_hygiene_start")
+    Seq("streaming", "ops").foreach(d => Files.createDirectories(root.resolve(s"graft/$d")))
+    def put(rel: String, text: String) = Files.writeString(root.resolve(rel), text)
+    put(Driver, ".foreachBatch(f)\n.trigger(Trigger.AvailableNow())\n" +
+      "StateFiles.writeWave(df, p, w)\nCompact.consolidateWaves(s, p, w)\n")
+    put("graft/streaming/Other.scala", "q.foreachBatch(f)\n")
+    put(Runner, "withShufflePartitions(s, n)(a)\nwithShufflePartitions(s, n)(b)\n" +
+      "Trigger.AvailableNow()\n")
+    put("graft/QueriesShared.scala", "def withShufflePartitions[T](s: S, n: Int)\n" +
+      "StateFiles.writeWave(df, p, w)\n")
+    put("graft/QueriesText.scala", ".trigger(Trigger.AvailableNow())\n")
+    put("graft/ops/Compact.scala", "def consolidateWaves(s: S)\nconsolidateWaves(s, p, w)\n")
+    val found = startPathViolations(root).map(_.replace(s"$root/", ""))
+    assert(found == Seq(
+      "graft/streaming/Other.scala: 0 foreachBatch starts pinned, 1 found",
+      "graft/streaming/Other.scala:1: q.foreachBatch(f)",
+      "graft/QueriesText.scala: 0 AvailableNow triggers pinned, 1 found",
+      "graft/QueriesText.scala:1: .trigger(Trigger.AvailableNow())",
+      "graft/QueriesStreaming.scala: 1 shuffle-partition scopes pinned, 2 found",
+      "graft/QueriesStreaming.scala:1: withShufflePartitions(s, n)(a)",
+      "graft/QueriesStreaming.scala:2: withShufflePartitions(s, n)(b)"), found)
   }
 
   test("the rename/delete check names the file and line, and spares the swap") {

@@ -85,7 +85,7 @@ class CompactSpec extends SparkSpec {
         .write.mode("append").partitionBy("wave").parquet(path)
     }
     val before = spark.read.parquet(path).drop("wave").orderBy("id").collect()
-    val stats = Compact.consolidateWaves(spark, path, currentWave = 3, maxFiles = 4)
+    val stats = Compact.consolidateWaves(spark, path, currentWave = 3)
     assert(stats.rowsRewritten === 3000L) // waves 0-2; wave 3 never read
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -105,7 +105,7 @@ class CompactSpec extends SparkSpec {
     // A follow-up tick with a fresh committed wave keeps the merged file.
     spark.range(4000, 5000).withColumn("wave", lit(4)).repartition(6)
       .write.mode("append").partitionBy("wave").parquet(path)
-    val next = Compact.consolidateWaves(spark, path, currentWave = 5, maxFiles = 4)
+    val next = Compact.consolidateWaves(spark, path, currentWave = 5)
     assert(next.keptFiles >= 1, s"merged file was rewritten: $next")
     assert(next.rowsRewritten === 2000L) // waves 3 and 4 only
   }
@@ -172,7 +172,7 @@ class CompactSpec extends SparkSpec {
     assert(fs.rename(hp(path), hp(path + "__compact_old")))
     spark.range(2000, 3000).withColumn("wave", lit(2)).repartition(2)
       .write.mode("append").partitionBy("wave").parquet(path)
-    val stats = Compact.consolidateWaves(spark, path, currentWave = 2, maxFiles = 4)
+    val stats = Compact.consolidateWaves(spark, path, currentWave = 2)
     // All 3000 rows survive, exactly once (wave=2 from the replay copy).
     val got = spark.read.parquet(path).drop("wave").orderBy("id")
       .collect().map(_.getLong(0))

@@ -133,7 +133,7 @@ class EventStreamsSpec extends SparkSpec {
     assert(state == Map((1L, "click") -> 7.0, (2L, "view") -> 9.0))
   }
 
-  test("mergeSinkPartitioned: touched-partition merge; an old replayed wave cannot regress state") {
+  test("mergeSink by partitionCol: touched-partition merge; an old replayed wave cannot regress state") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
@@ -142,8 +142,8 @@ class EventStreamsSpec extends SparkSpec {
     val keys = Seq("user_id", "event_type")
     val prec = Seq(col("ts").desc, col("event_id").desc)
     def run(): Unit =
-      EventStreams.mergeSinkPartitioned(input.toDF(), statePath, keys, prec,
-        "event_type", ckpt).awaitTermination(60000)
+      EventStreams.mergeSink(input.toDF(), statePath, keys, prec, ckpt,
+        partitionCol = Some("event_type")).awaitTermination(60000)
 
     input.addData(
       event(1, "2024-01-01 10:00:00", 1, "click", 1.0),
@@ -211,6 +211,52 @@ class EventStreamsSpec extends SparkSpec {
     assert(deltas200 == 1L)
   }
 
+  test("wave state replay: a re-run wave leaves one run's rows; a crashed dedup wave converges on restart") {
+    implicit val sqlCtx = spark.sqlContext
+    def text(from: Int) = (from until from + 16).map(k => s"w$k").mkString(" ")
+    val wave0 = Seq((10L, text(0)), (20L, "lone wave zero document with private vocabulary"),
+      (30L, text(100)))
+    // Wave 1: an exact copy of doc 10 with a smaller id (doc 10's label
+    // moves to 5), a near-dup of doc 30, and a new doc with an in-batch copy.
+    val wave1 = Seq((5L, text(0)), (31L, text(104)), (40L, text(200)), (41L, text(200)))
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+    def rows(path: String) = spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+
+    def labelRuns(wave1Runs: Int): Seq[Seq[String]] = {
+      val index = tmp("graft_wsl_state") + "/index"
+      val labels = tmp("graft_wsl_lbl") + "/labels"
+      EventStreams.labelWave(wave0.toDF("doc_id", "text"), "doc_id", "text", 0, index, labels)
+      (1 to wave1Runs).foreach(_ =>
+        EventStreams.labelWave(wave1.toDF("doc_id", "text"), "doc_id", "text", 1, index, labels))
+      Seq(labels, index + "/membership", index + "/rep_index").map(rows)
+    }
+    val once = labelRuns(1)
+    assert(once.head.contains("[10,5,1]"), s"wave 1 must relabel doc 10: ${once.head}")
+    assert(labelRuns(2) == once, "a replayed wave changed the label state")
+
+    def dedupRun(crash: Boolean): Set[Long] = {
+      val input = MemoryStream[(Long, String)]
+      val index = tmp("graft_wsd_state") + "/index"
+      val accepted = tmp("graft_wsd_acc") + "/accepted"
+      val ckpt = tmp("graft_wsd_ck")
+      val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val chaos: Long => Unit = b =>
+        if (crash && b == 1L && tripped.compareAndSet(false, true))
+          throw new RuntimeException("injected: accepted wave committed, index waves lost")
+      def run(): Unit = EventStreams.corpusDedupSink(input.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", index, accepted, ckpt, chaosAfterAccept = chaos).awaitTermination(120000)
+      input.addData(wave0: _*)
+      run()
+      input.addData(wave1: _*)
+      if (crash) intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+      run()
+      spark.read.parquet(accepted).select("doc_id").as[Long].collect().toSet
+    }
+    val uninterrupted = dedupRun(crash = false)
+    assert(uninterrupted == Set(10L, 20L, 30L, 40L), uninterrupted)
+    assert(dedupRun(crash = true) == uninterrupted)
+  }
+
   test("bm25IndexSink: compaction cadence bounds state files; consolidated index scores like a rebuild") {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
@@ -231,8 +277,7 @@ class EventStreamsSpec extends SparkSpec {
     docsByWave.foreach { docs =>
       input.addData(docs: _*)
       EventStreams.bm25IndexSink(input.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", terms, statePath, ckpt,
-        compactEvery = 2, compactMaxFiles = 4).awaitTermination(120000)
+        "doc_id", "text", terms, statePath, ckpt).awaitTermination(120000)
     }
     val tfDir = new java.io.File(statePath + "/tf")
     val waveDirs = tfDir.listFiles().filter(_.isDirectory).map(_.getName).toSet
@@ -277,8 +322,7 @@ class EventStreamsSpec extends SparkSpec {
     docsByWave.foreach { docs =>
       input.addData(docs: _*)
       EventStreams.lmBigramIndexSink(input.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", statePath, ckpt,
-        compactEvery = 2, compactMaxFiles = 4).awaitTermination(120000)
+        "doc_id", "text", statePath, ckpt).awaitTermination(120000)
     }
     // Steady-state wave shape on BOTH slices: {wave=-1, wave=3}.
     Seq("/bitf", "/tf").foreach { sub =>
@@ -326,8 +370,7 @@ class EventStreamsSpec extends SparkSpec {
     docsByWave.foreach { docs =>
       input.addData(docs: _*)
       EventStreams.spanIndexSink(input.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", w = 4, statePath, ckpt,
-        compactEvery = 2, compactMaxFiles = 4).awaitTermination(120000)
+        "doc_id", "text", w = 4, statePath, ckpt).awaitTermination(120000)
     }
     val waveDirs = new java.io.File(statePath + "/win").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
