@@ -126,8 +126,7 @@ object Pipeline {
     */
   def run(spark: SparkSession, bronzeIncomeDir: String, statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpIncome).json(bronzeIncomeDir)
-    val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    (Merge.mergeInto(spark, statePath, clean, StateKeys, IncomePrecedence), bad)
+    quarantineAndMerge(spark, normalizeIncome(bronze), statePath, IncomePrecedence)
   }
 
   /** Full reference flow through the custom DataSourceV2 source
@@ -146,8 +145,7 @@ object Pipeline {
       .option("root", root).option("endpoint", "income-statement")
       .option("symbols", symbols.mkString(","))
       .option("dataset", "income").load()
-    val (clean, bad) = Quality.quarantine(normalizeIncome(bronze), validRow)
-    (Merge.mergeInto(spark, statePath, clean, StateKeys, IncomePrecedence), bad)
+    quarantineAndMerge(spark, normalizeIncome(bronze), statePath, IncomePrecedence)
   }
 
   /** Run the analyst-estimates flow (reference S3+S11, load.py:163-200):
@@ -156,7 +154,14 @@ object Pipeline {
   def runEstimates(spark: SparkSession, bronzeEstimatesDir: String,
                    statePath: String): (DataFrame, DataFrame) = {
     val bronze = spark.read.schema(Schemas.fmpEstimates).json(bronzeEstimatesDir)
-    val (clean, bad) = Quality.quarantine(normalizeEstimates(bronze), validRow)
-    (Merge.mergeInto(spark, statePath, clean, StateKeys, EstimatesPrecedence), bad)
+    quarantineAndMerge(spark, normalizeEstimates(bronze), statePath, EstimatesPrecedence)
+  }
+
+  /** The tail of the three flows: quarantine the normalized batch, merge
+    * its clean rows into the state table, return (loadedState, quarantined). */
+  private def quarantineAndMerge(spark: SparkSession, normalized: DataFrame, statePath: String,
+                                 precedence: Seq[Column]): (DataFrame, DataFrame) = {
+    val (clean, bad) = Quality.quarantine(normalized, validRow)
+    (Merge.mergeInto(spark, statePath, clean, StateKeys, precedence), bad)
   }
 }

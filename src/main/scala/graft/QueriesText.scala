@@ -578,9 +578,10 @@ private[graft] object QueriesText {
     // State-table COMPACTION transparency: the same incremental dedup,
     // but the persisted index is first fragmented the way a
     // thousand-wave ingest leaves it (48-way write => 48 small files per
-    // table) and then compacted (ops/Compact: distributed rewrite + dir
-    // swap). Oracle identical to dedup_incremental's — compaction may
-    // only change file layout, never a row — and the file-count drop is
+    // table) and then compacted (ops/Compact.compactTiered: 48 similar
+    // files form a flat tier past 8, so the tick merges them whole).
+    // Oracle identical to dedup_incremental's — compaction may only
+    // change file layout, never a row — and the file-count drop is
     // asserted inline so a no-op "compaction" fails loudly.
     "dedup_incremental_compacted" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
@@ -590,7 +591,7 @@ private[graft] object QueriesText {
         st.repIdx.repartition(48).write.parquet(root + "/rep_index")
         st.membership.repartition(48).write.parquet(root + "/membership")
         Seq("/rep_index", "/membership").foreach { sub =>
-          val stats = graft.ops.Compact.compactParquet(s, root + sub)
+          val stats = graft.ops.Compact.compactTiered(s, root + sub)
           require(stats.filesAfter < stats.filesBefore,
             s"compaction did not reduce $sub: $stats")
         }

@@ -32,7 +32,7 @@ object Sinks {
     */
   def atomicSwapWrite(spark: SparkSession, df: DataFrame, tablePath: String,
                       keep: Seq[Path] = Nil, partitionBy: Seq[String] = Nil): Unit = {
-    Compact.swapIn(spark, tablePath, keep)(StateFiles.write(df, _, partitionBy))
+    Compact.swapIn(spark, tablePath, keep.map(Compact.Carry(_)))(StateFiles.write(df, _, partitionBy))
     // Invalidate cached file listings so subsequent reads see the new
     // generation. (DataFrames created BEFORE the swap hold the old file
     // list and will fail — swap semantics, same as any non-ACID overwrite;

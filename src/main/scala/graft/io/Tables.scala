@@ -101,10 +101,19 @@ object Tables {
     */
   private def rawTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (tsColumns.contains(name))
-      // Must be set before the read: a TIMESTAMP(NANOS) file otherwise
+      // Must hold before the read: a TIMESTAMP(NANOS) file otherwise
       // throws PARQUET_TYPE_ILLEGAL before any normalization could run.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      requireConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")(_.equalsIgnoreCase("true"))
     assertDeclared(name, spark.read.parquet(s"$dir/$name.parquet"))
+  }
+
+  /** Fails, naming `key` and the session builder, unless the caller's
+    * session holds `key` as `ok` accepts: these readers need two session
+    * confs, and they check the caller's session instead of writing it. */
+  private def requireConf(spark: SparkSession, key: String, want: String)(ok: String => Boolean): Unit = {
+    val got = spark.conf.getOption(key).getOrElse("unset")
+    if (!ok(got)) throw new IllegalStateException(s"$key must be $want on this session, " +
+      s"got $got: build it with graft.GraftSession, or set the conf when building it")
   }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
@@ -146,12 +155,12 @@ object Tables {
         df.withColumn(c, expr(s"timestamp_micros(`$c` DIV 1000)"))
       case TimestampNTZType =>
         // The cast reinterprets NTZ wall-clock micros in the SESSION
-        // timezone and is lossless only under UTC. Pin it here
-        // (mirroring the nanosAsLong defense) so a session built
-        // without the project's UTC conf reads correct instants
-        // instead of silently shifted ones. Scoped to the NTZ branch:
-        // the other encodings carry their own zone and don't need it.
-        df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
+        // timezone and is lossless only under UTC, so a session built
+        // without the project's UTC conf fails here instead of reading
+        // silently shifted instants. Scoped to the NTZ branch: the
+        // other encodings carry their own zone and don't need it.
+        requireConf(df.sparkSession, "spark.sql.session.timeZone", "UTC")(tz =>
+          java.time.ZoneId.of(tz).normalized == java.time.ZoneOffset.UTC)
         df.withColumn(c, col(c).cast(TimestampType))
       case _ => df
     }
@@ -170,9 +179,9 @@ object Tables {
     * plus the same [[normalizeEventTs]] encoding normalization.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Footer-only read; the RAW (pre-normalization) schema — the stream's
-    // declared schema must match the files' actual encoding.
+    // Footer-only read (it checks nanosAsLong first); the RAW
+    // (pre-normalization) schema — the stream's declared schema must
+    // match the files' actual encoding.
     val schema = rawTable(spark, dir, "events").schema
     // The file source requires a directory. When the events table IS a
     // directory (standard multi-part write layout) stream it directly; a
@@ -248,10 +257,9 @@ object Tables {
                                  org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.functions._
     require(nWaves >= 2, s"a multi-wave fixture needs >= 2 waves, got $nWaves")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // table() normalizes BEFORE staging: the wave files then carry plain
-    // TIMESTAMP whatever the source encoding, and the stream needs no
-    // per-encoding branch of its own.
+    // table() checks nanosAsLong and normalizes BEFORE staging: the
+    // wave files then carry plain TIMESTAMP whatever the source
+    // encoding, and the stream needs no per-encoding branch of its own.
     val raw = table(spark, dir, "events")
     // Staging (the min/max collect + the full write) is FIXTURE
     // construction, not the operator any waved gate measures — in Bench

@@ -10,19 +10,20 @@ import graft.io.StateFiles
   * batch gates' state writes — adds `shuffle.partitions` parquet files to
   * the persisted index. At one wave per minute a year of ingest is ~4 M
   * files: scan planning, footer reads, and namenode metadata dominate
-  * long before data volume does (the classic small-file problem). This
-  * rewrites a parquet directory down to a bounded file count as a fully
-  * distributed job, preserving rows, schema, and any hive-style partition
-  * layout, then swaps the rewrite in via two directory renames. Every
-  * rewrite is written zstd-compressed through the one state writer
+  * long before data volume does (the classic small-file problem). The
+  * two compaction entry points here — [[compactTiered]] for a flat
+  * table, [[consolidateWaves]] for a wave-partitioned one — share one
+  * size-tiered span rewrite: a fully distributed job that preserves rows
+  * and schema, written zstd-compressed through the one state writer
   * ([[graft.io.StateFiles.write]]).
   *
-  * Crash-safety contract of the engine's one directory swap, which every
-  * state rewrite goes through — the three compactions here and
-  * [[Merge.mergeInto]] in both its flat and its hive-partitioned layout,
-  * which rewrites only the files a batch can touch and carries the rest
-  * over as kept files. [[recover]] is the only crash recovery merged or
-  * compacted state has: original files NEVER leave the live table tree
+  * Crash-safety contract of the engine's one directory swap,
+  * [[swapIn]], which every state rewrite goes through — both
+  * compactions here and [[Merge.mergeInto]] in both its flat and its
+  * hive-partitioned layout, which rewrites only the files a batch can
+  * touch and carries the rest over as kept files. [[recover]] is the
+  * only crash recovery merged or compacted state has: original files
+  * NEVER leave the live table tree
   * until the swap has completed. The rewrite stages in
   * `<path>__compact_tmp` together with a `_GRAFT_KEEP` manifest naming
   * the untouched files to carry over; the swap renames
@@ -43,21 +44,22 @@ import graft.io.StateFiles
   */
 object Compact {
 
-  /** Post-compaction accounting, from the rewritten directory. */
-  final case class Stats(rows: Long, filesBefore: Int, filesAfter: Int)
-
-  /** Size-tiered accounting: `rowsRewritten`/`bytesRewritten` cover only
-    * the merged small span; `keptFiles` moved untouched (metadata
-    * renames, zero bytes read). A no-op tick returns
-    * `filesBefore == filesAfter` with zero rewritten.
+  /** Size-tiered accounting: `rowsRewritten` covers only the merged
+    * small span; `keptFiles` moved untouched (metadata renames, zero
+    * bytes read). A no-op tick returns `filesBefore == filesAfter` with
+    * zero rewritten.
     */
-  final case class TieredStats(rowsRewritten: Long, bytesRewritten: Long,
-                               filesBefore: Int, filesAfter: Int,
+  final case class TieredStats(rowsRewritten: Long, filesBefore: Int, filesAfter: Int,
                                rewrittenFiles: Int, keptFiles: Int)
 
-  /** One post-swap carry-over: a path to move from the staged-aside
-    * original into the live table, both '/'-relative to the table root
-    * (may name a file or a whole directory, e.g. the current wave dir).
+  /** A carry-over handed to [[swapIn]]: a data file or directory of the
+    * table, and where it goes, '/'-relative to the table root — by
+    * default its own place. */
+  private[graft] final case class Carry(src: Path, dst: Option[String] = None)
+
+  /** One post-swap move in the manifest: from the staged-aside original
+    * into the live table, both '/'-relative to the table root (may name a
+    * file or a whole directory, e.g. the current wave dir).
     */
   private final case class Keep(src: String, dst: String)
 
@@ -213,16 +215,40 @@ object Compact {
   private def staged(p: Path): (Path, Path) =
     (new Path(p.toString + "__compact_tmp"), new Path(p.toString + "__compact_old"))
 
-  /** The directory-level swap every rewrite goes through. `tmp` holds
-    * the finished rewrite (copies only — no originals); `moves` are the
-    * untouched files to carry over from the staged-aside original AFTER
-    * the swap. Writes the manifest, swaps `p -> old, tmp -> p`, then
-    * re-homes the kept files by metadata rename and clears `old`. If the
-    * swap-in itself fails, `old` is still the complete original and the
-    * rollback rename restores it whole.
+  /** Replaces the table at `path` with what `write` stages in the tmp
+    * dir plus the carry-overs in `keep` — the one swap every state
+    * rewrite goes through. Runs [[recover]], then `write(tmp)`; when no
+    * table exists yet, one publish rename (a crash before it leaves only
+    * tmp, which [[recover]] drops). Otherwise it writes the manifest of
+    * the moves into tmp, swaps `p -> old, tmp -> p`, moves each kept
+    * file or directory from the staged-aside original to its
+    * destination by metadata rename, and clears `old` and the manifest.
+    * If the swap-in itself fails, `old` is still the complete original
+    * and the rollback rename restores it whole. A kept path sits directly
+    * under `path` or one partition directory down (`part=A/<file>`);
+    * Spark's part-file names are unique per write, so a kept file never
+    * collides with a staged one. Returns what `write` returns.
     */
-  private def stageAndSwap(fs: FileSystem, p: Path, moves: Seq[Keep]): Unit = {
+  private[graft] def swapIn[T](spark: SparkSession, path: String, keep: Seq[Carry] = Nil)
+                              (write: String => T): T = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(fs, p)
+    val qp = fs.makeQualified(p)
+    val moves = keep.map { case Carry(f, dst) =>
+      val q = fs.makeQualified(f)
+      require(q.getParent == qp || q.getParent.getParent == qp,
+        s"compact: kept file $f must sit at most one directory under $path")
+      val rel = if (q.getParent == qp) q.getName else s"${q.getParent.getName}/${q.getName}"
+      Keep(rel, dst.getOrElse(rel))
+    }
     val (tmp, old) = staged(p)
+    val out = write(tmp.toString)
+    if (!fs.exists(p)) {
+      if (!fs.rename(tmp, p))
+        throw new java.io.IOException(s"compact: cannot publish $tmp as $p")
+      return out
+    }
     require(!fs.exists(old),
       s"compact: $old exists after recovery — refusing to overwrite history")
     writeManifest(fs, new Path(tmp, KeepManifest), moves)
@@ -241,37 +267,44 @@ object Compact {
     }
     fs.delete(old, true)
     fs.delete(new Path(p, KeepManifest), false)
+    out
   }
 
-  /** Replaces the table at `path` with what `write` stages in the tmp
-    * dir plus the table's data files named in `keep`: [[recover]],
-    * `write(tmp)`, then [[stageAndSwap]] carrying each kept file over
-    * under its own relative path — or one publish rename when no table
-    * exists yet (a crash before it leaves only tmp, which [[recover]]
-    * drops). `keep` names files directly under `path` or one partition
-    * directory down (`part=A/<file>`); Spark's part-file names are unique
-    * per write, so a kept file never collides with a staged one. Returns
-    * what `write` returns.
+  /** The span rewrite both compactions share: reads the `small` files by
+    * path, counts them, and writes their rows as ceil(rows /
+    * [[TargetRows]]) files through [[swapIn]] into `into` (a partition
+    * directory such as `wave=-1`; the table root when None). The `big`
+    * files carry over into the same directory, plus `alsoKeep`. After the
+    * swap it reads the rewritten files back and requires the same row
+    * count. Files read by explicit path lose any directory-derived
+    * partition column, so every rewritten row re-homes under `into`.
     */
-  private[graft] def swapIn[T](spark: SparkSession, path: String, keep: Seq[Path] = Nil)
-                              (write: String => T): T = {
+  private def rewriteSpan(spark: SparkSession, path: String, before: Int, small: Seq[Path],
+                          big: Seq[Path], into: Option[String],
+                          alsoKeep: Seq[Carry] = Nil): TieredStats = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, p)
-    val qp = fs.makeQualified(p)
-    val moves = keep.map { f =>
-      val q = fs.makeQualified(f)
-      require(q.getParent == qp || q.getParent.getParent == qp,
-        s"compact: kept file $f must sit at most one directory under $path")
-      val rel = if (q.getParent == qp) q.getName else s"${q.getParent.getName}/${q.getName}"
-      Keep(rel, rel)
+    val keep = big.map(f => Carry(f, into.map(d => s"$d/${f.getName}"))) ++ alsoKeep
+    val (rows, rewritten) = swapIn(spark, path, keep) { tmp =>
+      if (small.isEmpty) (0L, Nil)
+      else {
+        val df = spark.read.parquet(small.map(_.toString): _*)
+        val n = df.count()
+        val out = into.fold(new Path(tmp))(new Path(tmp, _))
+        StateFiles.write(df.repartition(math.max(1L, (n + TargetRows - 1) / TargetRows).toInt),
+          out.toString)
+        // A partition directory holds no marker: the wave writes leave none.
+        if (into.nonEmpty) fs.delete(new Path(out, "_SUCCESS"), false)
+        (n, listData(fs, out).map(_._1.getName))
+      }
     }
-    val (tmp, _) = staged(p)
-    val out = write(tmp.toString)
-    if (fs.exists(p)) stageAndSwap(fs, p, moves)
-    else if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"compact: cannot publish $tmp as $p")
-    out
+    val after = listData(fs, p).size
+    if (rewritten.nonEmpty) {
+      val back = into.fold(p)(new Path(p, _))
+      val rowsBack = spark.read.parquet(rewritten.map(n => new Path(back, n).toString): _*).count()
+      require(rowsBack == rows, s"compact: rewritten rows changed $rows -> $rowsBack at $path")
+    }
+    TieredStats(rows, before, after, rewritten.size, big.size)
   }
 
   /** Size-tiered (LSM-style) compaction of an UNPARTITIONED parquet
@@ -280,9 +313,8 @@ object Compact {
     * compaction tick costs O(newly-appended slices), never
     * O(index history), which is what lets a long-lived incremental
     * index (the BM25 tf table) compact on every fold without its
-    * rewrite bill growing with the index. [[compactParquet]] remains
-    * the full-rewrite form for one-shot use and hive-partitioned
-    * layouts.
+    * rewrite bill growing with the index. A fragmented table of more
+    * than 8 similar files merges whole (the flat-tier case).
     */
   def compactTiered(spark: SparkSession, path: String): TieredStats = {
     val p = new Path(path)
@@ -291,27 +323,11 @@ object Compact {
     require(fs.exists(p), s"compactTiered: no table at $path")
     val files = listData(fs, p)
     require(files.forall(_._1.getParent == fs.makeQualified(p)),
-      s"compactTiered: $path is partitioned — use consolidateWaves/compactParquet")
+      s"compactTiered: $path is partitioned — use consolidateWaves")
     val before = files.size
     selectSmallSpan(files) match {
-      case None =>
-        TieredStats(0L, 0L, before, before, 0, before)
-      case Some((small, big)) =>
-        val smallSet = small.toSet
-        val bytes = files.collect { case (f, len) if smallSet(f) => len }.sum
-        val df = spark.read.parquet(small.map(_.toString): _*)
-        val rows = df.count()
-        val nOut = math.max(1L, (rows + TargetRows - 1) / TargetRows).toInt
-        val rewritten = swapIn(spark, path, big) { tmp =>
-          StateFiles.write(df.repartition(nOut), tmp)
-          listData(fs, new Path(tmp)).map(_._1.getName)
-        }
-        val after = listData(fs, p).size
-        val rowsBack = spark.read.parquet(
-          rewritten.map(n => new Path(p, n).toString): _*).count()
-        require(rowsBack == rows,
-          s"compactTiered: rewritten rows changed $rows -> $rowsBack at $path")
-        TieredStats(rows, bytes, before, after, rewritten.size, big.size)
+      case None => TieredStats(0L, before, before, 0, before)
+      case Some((small, big)) => rewriteSpan(spark, path, before, small, big, None)
     }
   }
 
@@ -332,19 +348,18 @@ object Compact {
     * result-transparent (the `streaming_bm25_live` gate's oracle is the
     * full-rebuild SQL).
     *
-    * The swap contract matches [[compactTiered]] (see [[stageAndSwap]]
-    * and [[recover]]): kept files and the current-wave dir carry over
+    * The swap is [[swapIn]]'s: kept files re-home from `wave=N/<f>` to
+    * `wave=-1/<f>` and the current-wave dir carries over whole, both
     * from the staged-aside original by post-swap metadata rename, so a
     * crash anywhere — including a batch replay recreating the table dir
-    * before the next tick — is recovered without losing committed
-    * history.
+    * before the next tick — is recovered ([[recover]]) without losing
+    * committed history.
     */
   def consolidateWaves(spark: SparkSession, path: String, currentWave: Long): TieredStats = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recover(fs, p)
     require(fs.exists(p), s"consolidateWaves: no table at $path")
-    val qp = fs.makeQualified(p)
     val waveDirs = fs.listStatus(p).filter(_.isDirectory)
       .filter(_.getPath.getName.startsWith("wave="))
     require(waveDirs.nonEmpty || listData(fs, p).isEmpty,
@@ -360,84 +375,10 @@ object Compact {
     // says nothing is worth merging, e.g. a single slice file per wave
     // under AQE-coalesced writes — carries over into wave=-1 by metadata
     // rename, zero bytes read.
-    val outside = committed.filterNot(_._1.getParent.getName == "wave=-1")
-    val (small, big) =
-      selectSmallSpan(committed, WaveMaxFiles) match {
-        case Some((s, b)) => (s, b)
-        case None         => (Nil, committed.map(_._1))
-      }
-    if (small.isEmpty && outside.isEmpty)
-      return TieredStats(0L, 0L, before, before, 0, before)
-    val smallSet = small.toSet
-    val bytes = committed.collect { case (f, len) if smallSet(f) => len }.sum
-    val mergedDir = new Path(staged(p)._1, "wave=-1")
-    val rows =
-      if (small.isEmpty) { fs.mkdirs(mergedDir); 0L }
-      else {
-        // Files read by explicit path lose the directory-derived wave
-        // column — exactly right: every consolidated row re-homes under
-        // the wave=-1 dir the write lands in.
-        val df = spark.read.parquet(small.map(_.toString): _*)
-        val n = df.count()
-        val nOut = math.max(1L, (n + TargetRows - 1) / TargetRows).toInt
-        StateFiles.write(df.repartition(nOut), mergedDir.toString)
-        fs.delete(new Path(mergedDir, "_SUCCESS"), false)
-        n
-      }
-    val rewritten = listData(fs, mergedDir).map(_._1.getName)
-    // Kept big files join the merged partition by post-swap rename
-    // (their wave value was directory-derived, so re-homing is a pure
-    // move); the current wave's whole dir carries over as one rename.
-    val moves =
-      big.map(f => Keep(s"${f.getParent.getName}/${f.getName}",
-                        s"wave=-1/${f.getName}")) ++
-        currentDirs.map(d => Keep(d.getPath.getName, d.getPath.getName)).toSeq
-    stageAndSwap(fs, p, moves)
-    val after = listData(fs, p).size
-    if (rewritten.nonEmpty) {
-      val rowsBack = spark.read.parquet(
-        rewritten.map(n => new Path(new Path(qp, "wave=-1"), n).toString): _*).count()
-      require(rowsBack == rows,
-        s"consolidateWaves: rewritten rows changed $rows -> $rowsBack at $path")
-    }
-    TieredStats(rows, bytes, before, after, rewritten.size, big.size)
-  }
-
-  /** Rewrites the parquet table at `path` into ceil(rows / targetRows)
-    * files (per partition-column tuple when `partitionCols` is set — the
-    * wave-partitioned streaming state keeps its `wave=N` dirs, so the
-    * sinks' dynamic-overwrite replay safety survives compaction).
-    * Returns the row count and before/after data-file counts; row count
-    * is read back from the REWRITTEN table so the stat doubles as a
-    * cheap post-swap sanity check. Full rewrite, zero carry-overs — the
-    * same [[swapIn]] the state-table writes go through.
-    */
-  def compactParquet(spark: SparkSession, path: String,
-                     partitionCols: Seq[String] = Nil,
-                     targetRows: Long = TargetRows): Stats = {
-    require(targetRows > 0, "targetRows must be positive")
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (rows, before) = swapIn(spark, path) { tmp =>
-      require(fs.exists(p), s"compactParquet: no table at $path")
-      val before = listData(fs, p).size
-      val df = spark.read.parquet(path)
-      val rows = df.count()
-      val nOut = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-      // Repartition by the partition columns so each hive partition is
-      // written by the tasks that own its rows (no thousand-task fan-out
-      // of tiny files); unpartitioned tables get a plain nOut-way shuffle.
-      val shaped =
-        if (partitionCols.nonEmpty)
-          df.repartition(nOut, partitionCols.map(df.col): _*)
-        else df.repartition(nOut)
-      StateFiles.write(shaped, tmp, partitionCols)
-      (rows, before)
-    }
-    val after = listData(fs, p).size
-    val rowsAfter = spark.read.parquet(path).count()
-    require(rowsAfter == rows,
-      s"compactParquet: row count changed $rows -> $rowsAfter at $path")
-    Stats(rows, before, after)
+    val (small, big) = selectSmallSpan(committed, WaveMaxFiles).getOrElse((Nil, committed.map(_._1)))
+    if (small.isEmpty && committed.forall(_._1.getParent.getName == "wave=-1"))
+      TieredStats(0L, before, before, 0, before)
+    else rewriteSpan(spark, path, before, small, big, Some("wave=-1"),
+      currentDirs.map(d => Carry(d.getPath)).toSeq)
   }
 }

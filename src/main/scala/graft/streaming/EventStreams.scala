@@ -77,12 +77,12 @@ object EventStreams {
 
   /** Continuous corpus ingestion with incremental near-dup dedup: each
     * micro-batch of documents is paired against the PERSISTED
-    * accepted-corpus shingle index plus itself
-    * ([[graft.text.Dedup.incrementalNearDupPairs]]), surviving docs are
-    * appended to `acceptedPath` (tagged with their micro-batch id) and
-    * their index edges appended to `stateIndexPath` — so the accepted
-    * corpus's history is never re-paired against itself, and a crawl
-    * can dedup-ingest forever at per-batch cost.
+    * accepted-corpus shingle index plus itself, both collapsed to
+    * representatives ([[graft.text.Dedup.incrementalNearDupPairsCollapsed]]),
+    * surviving docs are appended to `acceptedPath` (tagged with their
+    * micro-batch id) and their index edges appended to `stateIndexPath`
+    * — so the accepted corpus's history is never re-paired against
+    * itself, and a crawl can dedup-ingest forever at per-batch cost.
     *
     * Replay safety is [[WaveState]]'s: every output is one wave of a
     * wave-partitioned table and the state reads exclude the current
@@ -139,7 +139,7 @@ object EventStreams {
 
   /** Streaming CLUSTER-LABEL maintenance ("registry mode"): every wave is
     * ingested, and the persisted near-dup cluster labeling is folded
-    * forward via [[graft.text.Dedup.clusterRepresentativesIncremental]] —
+    * forward via [[graft.text.Dedup.clusterRepresentativesIncrementalCollapsed]] —
     * batch pairs map through the prior labels, CC runs over the
     * contracted graph only, so the fold costs O(batch + touched
     * components) whatever the corpus's age.

@@ -35,9 +35,9 @@ class ConfHygieneSpec extends AnyFunSuite {
   private val ConfWrite = """conf\.(set|unset)\b""".r
 
   /** Session-conf writes library code still makes, per file: the shuffle
-    * partition count around the streaming gates, and the nanosAsLong /
-    * UTC settings of the events reads. Lower a pin when a site goes. */
-  private val ConfWritesLeft = Map("graft/QueriesShared.scala" -> 2, "graft/io/Tables.scala" -> 4)
+    * partition count around the streaming gates. Lower a pin when a site
+    * goes. */
+  private val ConfWritesLeft = Map("graft/QueriesShared.scala" -> 2)
 
   /** A DataFrame write chain ending in a Parquet write, within one
     * statement: `.write`, then a `.` call (possibly lines later), and
@@ -245,21 +245,21 @@ class ConfHygieneSpec extends AnyFunSuite {
   test("the check names the file and line of a read, and spares the entry points") {
     val root = Files.createTempDirectory("graft_hygiene")
     Files.createDirectories(root.resolve("graft/util"))
-    Files.createDirectories(root.resolve("graft/io"))
     Files.writeString(root.resolve("graft/util/Knob.scala"),
       "object Knob {\n  val on = System.getProperty(\"x\") != null\n  spark.conf.unset(\"y\")\n}\n")
     Files.writeString(root.resolve("graft/Bench.scala"), "object Bench { sys.env }\n")
     Files.writeString(root.resolve("graft/GraftSession.scala"), "spark.conf.set(\"a\", \"b\")\n")
-    Files.writeString(root.resolve("graft/QueriesShared.scala"),
-      "s.conf.set(\"p\", n)\ns.conf.set(\"p\", prev)\n")
-    Files.writeString(root.resolve("graft/io/Tables.scala"),
-      "spark.conf.set(\"n\", \"true\")\n" * 5)
+    val shared = root.resolve("graft/QueriesShared.scala")
+    Files.writeString(shared, "s.conf.set(\"p\", n)\n" * 3)
     val found = violations(root)
     assert(found.size == 1, found)
     assert(found.head.contains("graft/util/Knob.scala:2:"), found.head)
     val writes = confWriteViolations(root)
-    assert(writes.head == "graft/io/Tables.scala: 4 conf writes pinned, 5 found", writes)
+    assert(writes.head == "graft/QueriesShared.scala: 2 conf writes pinned, 3 found", writes)
     assert(writes.exists(_.contains("graft/util/Knob.scala:3:")), writes)
-    assert(!writes.exists(w => w.contains("GraftSession") || w.contains("QueriesShared")), writes)
+    assert(!writes.exists(_.contains("GraftSession")), writes)
+    // A file at its pin is spared.
+    Files.writeString(shared, "s.conf.set(\"p\", n)\ns.conf.set(\"p\", prev)\n")
+    assert(!confWriteViolations(root).exists(_.contains("QueriesShared")))
   }
 }

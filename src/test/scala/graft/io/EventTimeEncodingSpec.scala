@@ -86,4 +86,14 @@ class EventTimeEncodingSpec extends SparkSpec {
       assert(got == want, s"waved delivery: $tag differs from $refTag")
     }
   }
+
+  test("NTZ events on a non-UTC session fail, naming the zone conf, and leave it unchanged") {
+    val ntz = encodings.toMap.apply("ntz") // staged under the UTC session
+    val zone = "spark.sql.session.timeZone"
+    withConf(zone -> "America/New_York") {
+      val e = intercept[IllegalStateException](Tables.events(spark, ntz))
+      assert(e.getMessage.contains(zone) && e.getMessage.contains("GraftSession"), e.getMessage)
+      assert(spark.conf.get(zone) == "America/New_York")
+    }
+  }
 }

@@ -6,50 +6,18 @@ import org.apache.spark.sql.functions._
 class CompactSpec extends SparkSpec {
   import spark.implicits._
 
-  test("compactParquet: rows and content preserved, file count bounded") {
+  test("compactTiered: rows and content preserved, file count bounded") {
     val path = graft.util.Scratch.dir("compact_flat") + "/t"
     spark.range(0, 10000).select(col("id"), (col("id") % 7).as("k"))
       .repartition(40).write.parquet(path)
     val before = spark.read.parquet(path).orderBy("id").collect()
-    val stats = Compact.compactParquet(spark, path)
-    assert(stats.rows === 10000L)
+    // 40 similar files: a flat tier past 8, merged whole.
+    val stats = Compact.compactTiered(spark, path)
+    assert(stats.rowsRewritten === 10000L)
     assert(stats.filesBefore === 40)
     assert(stats.filesAfter === 1)
     val after = spark.read.parquet(path).orderBy("id").collect()
     assert(after === before)
-  }
-
-  test("compactParquet: targetRows bounds output file count from below") {
-    val path = graft.util.Scratch.dir("compact_target") + "/t"
-    spark.range(0, 9000).repartition(30).write.parquet(path)
-    val stats = Compact.compactParquet(spark, path, targetRows = 4000L)
-    assert(stats.filesAfter === 3) // ceil(9000 / 4000)
-  }
-
-  test("compactParquet: hive partition layout survives (streaming wave state)") {
-    val path = graft.util.Scratch.dir("compact_part") + "/t"
-    // Three "waves" of 8 files each — the shape corpusDedupSink's
-    // per-micro-batch appends leave behind.
-    (0 until 3).foreach { w =>
-      spark.range(w * 1000, (w + 1) * 1000)
-        .withColumn("wave", lit(w)).repartition(8)
-        .write.mode("append").partitionBy("wave").parquet(path)
-    }
-    val before = spark.read.parquet(path).orderBy("id").collect()
-    val stats = Compact.compactParquet(spark, path, partitionCols = Seq("wave"))
-    assert(stats.rows === 3000L)
-    assert(stats.filesBefore === 24)
-    assert(stats.filesAfter <= 3) // at most one file per wave here
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (0 until 3).foreach { w =>
-      assert(fs.exists(new org.apache.hadoop.fs.Path(path, s"wave=$w")),
-        s"wave=$w partition dir lost by compaction")
-    }
-    // Wave-keyed reads (the sinks' replay-safety filter) still work.
-    val after = spark.read.parquet(path).orderBy("id").collect()
-    assert(after === before)
-    assert(spark.read.parquet(path).where(col("wave") === 1).count() === 1000L)
   }
 
   test("compactTiered: second tick merges only the new span, keeps the big file") {
@@ -110,7 +78,7 @@ class CompactSpec extends SparkSpec {
     assert(next.rowsRewritten === 2000L) // waves 3 and 4 only
   }
 
-  // --- crash-recovery protocol (the stageAndSwap/recover contract) ---
+  // --- crash-recovery protocol (the swapIn/recover contract) ---
 
   private def hfs(path: String) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -181,10 +149,43 @@ class CompactSpec extends SparkSpec {
     assert(!fs.exists(hp(path + "__compact_old")))
   }
 
-  test("compactParquet: refuses a missing table") {
+  test("recover: crash after a wave consolidation's swap-in finishes the re-homing moves") {
+    val path = graft.util.Scratch.dir("compact_crash_rehome") + "/t"
+    val fs = hfs(path)
+    def wave(w: Int, from: Long, until: Long, files: Int): Unit =
+      spark.range(from, until).withColumn("wave", lit(w)).repartition(files)
+        .write.mode("append").partitionBy("wave").parquet(path)
+    wave(0, 0, 1000, 4)      // small span: merged into wave=-1
+    wave(1, 1000, 21000, 1)  // top tier: re-homes to wave=-1
+    wave(2, 21000, 22000, 2) // current wave: carried over whole
+    val big = fs.listStatus(hp(path + "/wave=1")).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).head.getName
+    // The swap-in of consolidateWaves(currentWave = 2) completed: the
+    // table is aside whole, the live dir holds the merged wave=0 rows and
+    // a manifest whose moves are still pending, except wave=2's.
+    assert(fs.rename(hp(path), hp(path + "__compact_old")))
+    spark.range(0, 1000).repartition(1).write.parquet(path + "/wave=-1")
+    assert(fs.delete(hp(path + "/wave=-1/_SUCCESS"), false))
+    assert(fs.rename(hp(path + "__compact_old/wave=2"), hp(path + "/wave=2")))
+    val out = fs.create(hp(path + "/_GRAFT_KEEP"), true)
+    out.write(s"wave=1/$big\twave=-1/$big\nwave=2\twave=2\n".getBytes("UTF-8"))
+    out.close()
+    // The replayed batch's tick recovers first. Recovery alone must
+    // re-home the big file, so the tick itself has nothing to move.
+    val stats = Compact.consolidateWaves(spark, path, currentWave = 2)
+    val got = spark.read.parquet(path).drop("wave").orderBy("id").collect().map(_.getLong(0))
+    assert(got === (0L until 22000L).toArray)
+    assert(stats === Compact.TieredStats(0L, 4, 4, 0, 4), "recovery left work for the tick")
+    assert(fs.exists(hp(s"$path/wave=-1/$big")), "the kept big file must sit under wave=-1")
+    assert(!fs.exists(hp(path + "/wave=1")))
+    assert(!fs.exists(hp(path + "__compact_old")))
+    assert(!fs.exists(hp(path + "/_GRAFT_KEEP")))
+  }
+
+  test("compactTiered: refuses a missing table") {
     val missing = graft.util.Scratch.dir("compact_missing") + "/nope"
     val e = intercept[IllegalArgumentException] {
-      Compact.compactParquet(spark, missing)
+      Compact.compactTiered(spark, missing)
     }
     assert(e.getMessage.contains("no table at"))
   }
