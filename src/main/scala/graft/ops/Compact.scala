@@ -23,11 +23,10 @@ import graft.io.StateFiles
   * hive-partitioned layout, which rewrites only the files a batch can
   * touch and carries the rest over as kept files. [[recover]] is the
   * only crash recovery merged or compacted state has: original files
-  * NEVER leave the live table tree
-  * until the swap has completed. The rewrite stages in
-  * `<path>__compact_tmp` together with a `_GRAFT_KEEP` manifest naming
-  * the untouched files to carry over; the swap renames
-  * `<path>` aside to `<path>__compact_old` (the complete original) and
+  * NEVER leave the live table tree until the swap has completed. The
+  * rewrite stages in `<path>__compact_tmp` together with a
+  * `_GRAFT_KEEP` manifest naming the untouched files to carry over; the
+  * swap renames `<path>` aside to `<path>__compact_old` (the complete original) and
   * `tmp` in; only then do the kept files move `old -> <path>` by
   * metadata rename, after which `old` and the manifest are removed. A
   * crash at ANY point leaves either the intact original at `<path>` (or
@@ -274,10 +273,12 @@ object Compact {
     * path, counts them, and writes their rows as ceil(rows /
     * [[TargetRows]]) files through [[swapIn]] into `into` (a partition
     * directory such as `wave=-1`; the table root when None). The `big`
-    * files carry over into the same directory, plus `alsoKeep`. After the
-    * swap it reads the rewritten files back and requires the same row
-    * count. Files read by explicit path lose any directory-derived
-    * partition column, so every rewritten row re-homes under `into`.
+    * files carry over into the same directory by rename, plus
+    * `alsoKeep`. After the swap it reads the rewritten files back and
+    * requires the same row count. A partition value lives only in the
+    * directory name, so re-homing a kept file is a pure move, and files
+    * read by explicit path lose it: every rewritten row lands under
+    * `into`.
     */
   private def rewriteSpan(spark: SparkSession, path: String, before: Int, small: Seq[Path],
                           big: Seq[Path], into: Option[String],
