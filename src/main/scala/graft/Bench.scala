@@ -206,6 +206,10 @@ object Bench {
     // first measured seeded looks 10x faster for measurement reasons, not
     // engine reasons).
     val seededBy = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
+    // Per-gate whole-stage/projection compiles across its reps: a gate
+    // whose plan shape changes per rep (or whose classes overflow the
+    // codegen cache) pays compiles every rep, not just the first.
+    val compiles = scala.collection.mutable.ArrayBuffer[(String, Long, Double)]()
     val inSuite: Seq[(String, Either[String, Double])] =
       selected.map { case (name, fn) =>
       if (warmTarget) {
@@ -214,6 +218,7 @@ object Bench {
         cleanup()
       }
       graft.util.StateSeed.drainTouched()  // discard warm-up/prior noise
+      val (classes0, ms0) = compileCounter()
       var err: Option[String] = None
       var failedReps = 0
       val times = (1 to reps).flatMap { _ =>
@@ -230,6 +235,8 @@ object Bench {
         cleanup()
         if (ok) Some(dt) else None
       }.sorted
+      val (classes1, ms1) = compileCounter()
+      compiles += ((name, classes1 - classes0, ms1 - ms0))
       val touchedTags = graft.util.StateSeed.drainTouched()
       if (seedState && touchedTags.nonEmpty) seededBy(name) = touchedTags
       if (times.isEmpty) {
@@ -300,7 +307,8 @@ object Bench {
         s""""failed":$failedJson,"failed_count":${failed.size},""" +
         s""""flaky":$flakyJson,""" +
         s""""methodology":$methodology,"host_state":$hostState,""" +
-        s""""seeded_state":$seedState,"seeded_queries":$seededJson,"sf":"$sfDir"}"""
+        s""""seeded_state":$seedState,"seeded_queries":$seededJson,""" +
+        s""""compiles":${compilesJson(compiles.toSeq)},"sf":"$sfDir"}"""
     if (failed.nonEmpty)
       System.err.println(s"[bench] *** ${failed.size}/${results.size} queries FAILED" +
         s" (excluded from total): ${failed.map(_._1).mkString(", ")} ***")
@@ -336,6 +344,19 @@ object Bench {
     println(compactLine(total, ok, failed, flakyJson, seedState, sfDir, out,
       cpus = cpus))
   }
+
+  /** Generated classes compiled so far in this JVM and their total
+    * compile milliseconds (Spark's own codegen counters; local mode, so
+    * task-side compiles count too). */
+  private[graft] def compileCounter(): (Long, Double) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
+
+  /** The full artifact's per-gate compile record: classes compiled and
+    * compile ms across the gate's reps. */
+  private[graft] def compilesJson(c: Seq[(String, Long, Double)]): String =
+    c.map { case (k, n, ms) => s"""${jsonStr(k)}:{"classes":$n,"ms":${fmt3(ms)}}""" }
+      .mkString("{", ",", "}")
 
   /** The trailing compact artifact line: headline fields plus as many of
     * the most expensive queries as fit `budget` characters. Always valid

@@ -1,12 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Normalization column-functions: the reference's type-coercion layer
-  * re-expressed as pure Catalyst expressions (no UDFs — everything stays
-  * inside whole-stage codegen and survives predicate pushdown).
+/** Normalization column-functions: the reference's type-coercion layer.
+  *
+  * The row rules with real logic — the multi-format date parse, its
+  * label-path variant, the quarter label, safe-decimal coercion, the
+  * millions validator and the truthy key's falsiness test — are kernels
+  * ([[graft.functions.NormalizeExpressions]]): each evaluates its input
+  * once inside whole-stage codegen and costs one static call of generated
+  * code per use. Written as composed Catalyst trees they
+  * re-referenced their input 3-8 times, so a plan applying them held each
+  * rule dozens of times and compiled into 4,600-5,500-line classes on
+  * every market batch. The rest stay plain built-in expressions.
   *
   * Semantics derive from the reference (read-only at /root/reference):
   *  - multi-format date parse        (transform.py:141-166)
@@ -17,32 +25,22 @@ import org.apache.spark.sql.types._
   *  - Python-truthiness key coalesce (transform.py:82)
   *
   * All functions are ANSI-mode safe (Spark 4 default): parse/cast failures
-  * yield null via `try_*`, never a task failure — mirroring the reference's
+  * yield null, never a task failure — mirroring the reference's
   * row-level tolerance (transform.py:98-100).
   */
 object Normalize {
+  import graft.functions.NormalizeExpressions.{Falsy, MillionsValidator, ParseDate, QuarterLabel, SafeDecimal}
 
-  /** Multi-format lenient date parse (reference transform.py:141-166).
-    * Tries `yyyy-MM-dd`, `yyyy-MM-dd HH:mm:ss`, `MM/dd/yyyy`, then the
-    * bare-year rule (int/float year -> Dec 31 of that year); anything else
-    * is null. Pure built-ins; each `try_to_date` is codegen'd.
-    *
-    * Each format is guarded by a shape regex BEFORE the parse: a
-    * `coalesce(try_to_date x3)` chain makes every non-matching format
-    * throw-and-swallow inside the parser per row (measured ~85 us/row —
-    * 25x slower than a plain scan); with the rlike dispatch exactly one
-    * parse runs per row and the hot path is exception-free. A string can
-    * match at most one shape, so dispatch order cannot change results.
+  private def stringOf(c: Column) = GraftShims.expression(c.cast(StringType))
+
+  /** Multi-format lenient date parse (reference transform.py:141-166):
+    * `yyyy-MM-dd`, `yyyy-MM-dd HH:mm:ss`, `MM/dd/yyyy`, then the bare-year
+    * rule (int/float year -> Dec 31 of that year); anything else is null.
+    * Each format is guarded by its shape, so exactly one parse runs per
+    * row and the hot path is exception-free (a `coalesce(try_to_date x3)`
+    * chain throws and swallows inside the parser per row, ~85 us/row).
     */
-  def parseDateMulti(c: Column): Column = {
-    val s = c.cast(StringType)
-    when(s.rlike("^\\d{4}-\\d{2}-\\d{2}$"), try_to_date(s, "yyyy-MM-dd"))
-      .when(s.rlike("^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}$"),
-        try_to_date(s, "yyyy-MM-dd HH:mm:ss"))
-      .when(s.rlike("^\\d{2}/\\d{2}/\\d{4}$"), try_to_date(s, "MM/dd/yyyy"))
-      .when(s.rlike("^\\d{4}(\\.0+)?$"),
-        make_date(s.cast(DoubleType).cast(IntegerType), lit(12), lit(31)))
-  }
+  def parseDateMulti(c: Column): Column = GraftShims.column(ParseDate(stringOf(c), labelPath = false))
 
   /** The LABEL path's 4-format variant (reference transform.py:36-49,
     * `standardize_quarter_date`): like [[parseDateMulti]] but with a
@@ -51,27 +49,18 @@ object Normalize {
     * path rejects non-strings). Only strings the month-first parse
     * rejects pay the second parse.
     */
-  def parseDateLabelPath(c: Column): Column = {
-    val s = c.cast(StringType)
-    when(s.rlike("^\\d{4}-\\d{2}-\\d{2}$"), try_to_date(s, "yyyy-MM-dd"))
-      .when(s.rlike("^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}$"),
-        try_to_date(s, "yyyy-MM-dd HH:mm:ss"))
-      .when(s.rlike("^\\d{2}/\\d{2}/\\d{4}$"),
-        coalesce(try_to_date(s, "MM/dd/yyyy"), try_to_date(s, "dd/MM/yyyy")))
-  }
+  def parseDateLabelPath(c: Column): Column = GraftShims.column(ParseDate(stringOf(c), labelPath = true))
 
   /** `"YYYY-QN"` quarter label (reference transform.py:51-53; month->quarter
-    * mapping is exactly Spark's `quarter()`). Null date -> null label.
+    * mapping is exactly Spark's `quarter()`). Null date -> null label; a
+    * non-date input is cast to date first, as `year()` casts it.
     */
-  def quarterLabel(d: Column): Column =
-    concat(year(d).cast(StringType), lit("-Q"), quarter(d).cast(StringType))
-
-  /** Strings treated as missing after cleanup (reference transform.py:175-178). */
-  private val MissingTokens = Seq("", "N/A", "n/a", "-")
+  def quarterLabel(d: Column): Column = GraftShims.column(QuarterLabel(GraftShims.expression(d.cast(DateType))))
 
   /** Safe decimal coercion (reference transform.py:168-186): strip
-    * `[,$%\s]`, map sentinel strings to null, cast (invalid -> null via
-    * try_cast), then the millions heuristic: `0 < v < 1e6  =>  v * 1e6`.
+    * `[,$%\s]`, map the sentinel strings `""`, `N/A`, `n/a`, `-` to null,
+    * parse (invalid -> null), then the millions heuristic:
+    * `0 < v < 1e6  =>  v * 1e6`.
     *
     * The parse happens at `scale+6` fractional digits and quantizes to
     * `(precision, scale)` only AFTER the heuristic — the reference parses
@@ -81,31 +70,17 @@ object Normalize {
     * 10^(precision-scale) overflow to null under the default bound; pass
     * `precision = 38` for the unbounded-like range.
     */
-  def safeDecimal(c: Column, precision: Int = 15, scale: Int = 2): Column = {
-    val cleaned = regexp_replace(c.cast(StringType), "[,$%\\s]", "")
-    val nulled  = when(cleaned.isin(MissingTokens: _*), lit(null)).otherwise(cleaned)
-    // Extra fractional digits only as far as precision can actually grow:
-    // at precision 38 the wide parse degrades to the plain cast rather
-    // than silently narrowing the integer range (38,8 has six fewer
-    // integer digits than 38,2 — the "unbounded-like" escape hatch must
-    // keep its full magnitude).
-    val wideP   = math.min(precision + 6, 38)
-    val wide    = DecimalType(wideP, scale + (wideP - precision))
-    val v       = nulled.try_cast(wide)
-    val scaled  = when(v > 0 && v < 1000000L, v * 1000000L).otherwise(v)
-    scaled.try_cast(DecimalType(precision, scale))
-  }
+  def safeDecimal(c: Column, precision: Int = 15, scale: Int = 2): Column =
+    GraftShims.column(SafeDecimal(stringOf(c), precision, scale))
 
   /** The Pydantic validator's *second* millions heuristic
-    * (reference config.py:89-97): scales ANY value `< 1e6` — including
-    * negatives — by 1e6. Applied after [[safeDecimal]] only to
+    * (reference config.py:89-97): scales ANY decimal value `< 1e6` —
+    * including negatives — by 1e6. Applied after [[safeDecimal]] only to
     * revenue/gross_profit fields; the composition is the canonical
     * semantics (SURVEY.md §7.5.1).
     */
   def millionsValidator(v: Column, precision: Int = 15, scale: Int = 2): Column =
-    when(v.isNotNull && v < 1000000L, v * 1000000L)
-      .otherwise(v)
-      .try_cast(DecimalType(precision, scale))
+    GraftShims.column(MillionsValidator(GraftShims.expression(v), precision, scale))
 
   /** EPS estimation (reference transform.py:188-201):
     * `eps = (net_income/1e6)/shares if net_income >= 1e6 else net_income/shares`,
@@ -141,14 +116,13 @@ object Normalize {
     * `record.get('eps') or record.get('netIncomePerShare')` — `or` skips
     * null, empty string AND zero). Faithful form; see [[coalesceKey]] for
     * the null-only variant (decision documented in SURVEY.md §7.5.2).
-    * The zero test goes through `try_cast` so string-typed inputs never
-    * raise under ANSI mode: a non-numeric string is truthy (kept).
+    * The falsiness test is the `graft_falsy` kernel: the pushed-down
+    * quarantine filter repeats the date key's coalesce three times, and
+    * as a composed cast tree each copy cost ~100 lines of generated code.
+    * A string a double cast cannot read is truthy (kept), never an error.
     */
-  def coalesceKeyTruthy(a: Column, b: Column): Column = {
-    val falsy = a.isNull || a.cast(StringType) === "" ||
-      coalesce(a.try_cast(DoubleType) === 0, lit(false))
-    when(falsy, b).otherwise(a)
-  }
+  def coalesceKeyTruthy(a: Column, b: Column): Column =
+    when(GraftShims.column(Falsy(GraftShims.expression(a))), b).otherwise(a)
 
   /** Null-only coalesce — the cleaner semantics the engine defaults to. */
   def coalesceKey(a: Column, b: Column): Column = coalesce(a, b)

@@ -77,6 +77,20 @@ class BenchSpec extends AnyFunSuite {
     assert(line.endsWith("\"queries\":{}}"))
   }
 
+  test("per-gate compile record counts the classes a gate compiles") {
+    import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.LongType
+    val (n0, ms0) = Bench.compileCounter()
+    // A literal no other test uses: a cache hit would compile nothing.
+    GenerateUnsafeProjection.generate(Seq(
+      Add(BoundReference(0, LongType, nullable = false), Literal(System.nanoTime()))))
+    val (n1, ms1) = Bench.compileCounter()
+    assert(n1 >= n0 + 1 && ms1 > ms0)
+    val json = Bench.compilesJson(Seq(("q1_agg", n1 - n0, 12.3456), ("fn_safe_decimal", 0L, 0.0)))
+    assert(json == """{"q1_agg":{"classes":1,"ms":12.346},"fn_safe_decimal":{"classes":0,"ms":0.000}}""")
+  }
+
   test("compact line stays valid JSON when nothing fits the budget") {
     val ok = Seq(("x" * 400, 1.0))
     val line = Bench.compactLine(total = 1.0, ok = ok,

@@ -378,6 +378,40 @@ class PlanContractSpec extends SparkSpec {
     assert(!p.contains("array_max"), "composed assignment leaked back in")
   }
 
+  test("income normalize + quarantine runs the normalize kernels in small classes") {
+    // Written as composed trees the rules re-read their input 3-8 times and
+    // the quarantine filter inlined the date parse again below the
+    // projection: 72 regexp_replace in the optimized plan and a 4,649-line
+    // generated class, compiled again on every market batch. The kernels
+    // must be in the plan and keep every generated class small.
+    import org.apache.spark.sql.functions.col
+    val bronze = java.nio.file.Files.createTempDirectory("income_plan").toString + "/b"
+    spark.read.schema(graft.model.Schemas.fmpIncome)
+      .json(spark.createDataset(Seq(
+        """{"date":"2024-03-31","symbol":"TSLA","revenue":"$1,200","eps":"0.5",""" +
+          """"grossProfit":"300","netIncome":"100","calendarYear":"2024"}"""))(
+        org.apache.spark.sql.Encoders.STRING))
+      .write.json(bronze)
+    val normalized = Pipeline.normalizeIncome(
+      spark.read.schema(graft.model.Schemas.fmpIncome).json(bronze))
+    val (clean, bad) = graft.ops.Quality.quarantine(normalized, Pipeline.validRow)
+    for (df <- Seq(clean, bad)) {
+      val p = df.queryExecution.optimizedPlan.toString
+      Seq("graft_parse_date_multi", "graft_safe_decimal", "graft_millions",
+        "graft_quarter_label", "graft_falsy")
+        .foreach(k => assert(p.contains(k), s"$k missing:\n${p.take(1200)}"))
+      assert(!p.contains("regexp_replace"), s"composed safeDecimal leaked back in:\n$p")
+      val classes = org.apache.spark.sql.execution.debug.codegenStringSeq(
+        df.queryExecution.executedPlan)
+      assert(classes.nonEmpty)
+      val largest = classes.map(_._2.linesIterator.size).max
+      assert(largest <= 600, s"largest generated class has $largest lines")
+    }
+    assert(clean.count() == 1 && bad.count() == 0)
+    assert(clean.select(col("revenue")).head().getDecimal(0) ==
+      new java.math.BigDecimal("1200000000.00"))
+  }
+
   test("withL2Normalized computes the norm ONCE per row, never per element") {
     // The 64-dim dot must sit in its own projection (SQRT(graft_dot) AS
     // _l2n) with the transform lambda dividing by the ATTRIBUTE — if a
