@@ -291,8 +291,8 @@ object NormalizeExpressions {
       val monthFirst = tryParse(s, fmts(2), zone)
       if (monthFirst != NoDate || !labelPath) monthFirst else tryParse(s, fmts(3), zone)
     } else if (!labelPath && bareYear(s, len)) {
-      // The built-in rule read the year through a double cast, whose
-      // trim drops only ASCII terminators; a non-ASCII one made it null.
+      // The rule reads the year as a trimmed double, and the trim drops
+      // only ASCII terminators: a non-ASCII one leaves no year.
       if (len < s.numBytes() && (s.getByte(len) & 0x80) != 0) NoDate
       else {
         val year = (s.getByte(0) - '0') * 1000 + (s.getByte(1) - '0') * 100 +
@@ -328,20 +328,15 @@ object NormalizeExpressions {
   /** Kernel shared by [[SafeDecimal]]'s eval and codegen paths. */
   def safeDecimal(s: UTF8String, precision: Int, scale: Int): Decimal = {
     val n = s.numBytes()
-    var keep = 0
+    val out = new Array[Byte](n)
+    var kept = 0
     var i = 0
-    while (i < n) { if (!stripped(s.getByte(i))) keep += 1; i += 1 }
-    val cleaned = if (keep == n) s else {
-      val out = new Array[Byte](keep)
-      var j = 0
-      i = 0
-      while (i < n) {
-        val b = s.getByte(i)
-        if (!stripped(b)) { out(j) = b; j += 1 }
-        i += 1
-      }
-      UTF8String.fromBytes(out)
+    while (i < n) {
+      val b = s.getByte(i)
+      if (!stripped(b)) { out(kept) = b; kept += 1 }
+      i += 1
     }
+    val cleaned = if (kept == n) s else UTF8String.fromBytes(out, 0, kept)
     if (cleaned.numBytes() <= 3 && Sentinels.contains(cleaned)) return null
     val v = Decimal.fromString(cleaned)
     // Extra fractional digits only as far as precision can grow: at

@@ -29,7 +29,8 @@ import org.apache.spark.sql.types._
   * row-level tolerance (transform.py:98-100).
   */
 object Normalize {
-  import graft.functions.NormalizeExpressions.{Falsy, MillionsValidator, ParseDate, QuarterLabel, SafeDecimal}
+  import graft.functions.NormalizeExpressions.{Falsy, MillionsValidator, ParseDate, QuarterLabel,
+    SafeDecimal}
 
   private def stringOf(c: Column) = GraftShims.expression(c.cast(StringType))
 
@@ -40,7 +41,8 @@ object Normalize {
     * row and the hot path is exception-free (a `coalesce(try_to_date x3)`
     * chain throws and swallows inside the parser per row, ~85 us/row).
     */
-  def parseDateMulti(c: Column): Column = GraftShims.column(ParseDate(stringOf(c), labelPath = false))
+  def parseDateMulti(c: Column): Column =
+    GraftShims.column(ParseDate(stringOf(c), labelPath = false))
 
   /** The LABEL path's 4-format variant (reference transform.py:36-49,
     * `standardize_quarter_date`): like [[parseDateMulti]] but with a
@@ -49,13 +51,15 @@ object Normalize {
     * path rejects non-strings). Only strings the month-first parse
     * rejects pay the second parse.
     */
-  def parseDateLabelPath(c: Column): Column = GraftShims.column(ParseDate(stringOf(c), labelPath = true))
+  def parseDateLabelPath(c: Column): Column =
+    GraftShims.column(ParseDate(stringOf(c), labelPath = true))
 
   /** `"YYYY-QN"` quarter label (reference transform.py:51-53; month->quarter
     * mapping is exactly Spark's `quarter()`). Null date -> null label; a
     * non-date input is cast to date first, as `year()` casts it.
     */
-  def quarterLabel(d: Column): Column = GraftShims.column(QuarterLabel(GraftShims.expression(d.cast(DateType))))
+  def quarterLabel(d: Column): Column =
+    GraftShims.column(QuarterLabel(GraftShims.expression(d.cast(DateType))))
 
   /** Safe decimal coercion (reference transform.py:168-186): strip
     * `[,$%\s]`, map the sentinel strings `""`, `N/A`, `n/a`, `-` to null,
