@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.time.{DateTimeException, LocalDate, ZoneId}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TimeZoneAwareExpression, UnaryExpression}
@@ -23,9 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Every kernel returns exactly what the built-in tree returned (pinned
   * row by row against that tree in `NormalizeKernelSpec`):
-  *  - the shape tests mirror `rlike`, which is `find()`: `$` also matches
-  *    before ONE trailing line terminator (`\n`, `\r\n`, `\r`, `\u0085`,
-  *    `\u2028`, `\u2029`), and the parse then sees the whole string;
+  *  - the shape tests are the tree's own patterns, matched with `find()`
+  *    as `rlike` matches them (`$` also matches before one trailing line
+  *    terminator), and the parse then sees the whole string;
   *  - date parses call Spark's own `TimestampFormatter` (session zone,
   *    session parser policy) and swallow the same exceptions as
   *    `try_to_date`;
@@ -157,7 +158,8 @@ object NormalizeExpressions {
     * null, the empty string, or anything a double cast reads as zero
     * (`"0"`, `"0.00"`, `0`, `false`); a non-numeric string is truthy. The
     * pushed-down quarantine filter repeats the date key's coalesce three
-    * times, so its test must stay a few lines of generated code.
+    * times: with the composed cast test the income normalize + quarantine
+    * class is 777 lines, with this kernel 509.
     */
   case class Falsy(child: Expression) extends UnaryExpression {
 
@@ -206,7 +208,8 @@ object NormalizeExpressions {
     * `concat(cast(year(d) as string), '-Q', cast(quarter(d) as string))`
     * as one call. The quarantine filter validates the label of the parsed
     * date, so the label's tree was inlined into the filter as well as the
-    * projection.
+    * projection: with the composed label the income normalize + quarantine
+    * class is 622 lines, with this kernel 509.
     */
   case class QuarterLabel(child: Expression) extends UnaryExpression {
 
@@ -239,43 +242,15 @@ object NormalizeExpressions {
   /** "No date": never a day number of a 4-digit year. */
   private final val NoDate = Int.MinValue
 
-  /** Bytes before the one line terminator `$` may match in front of. */
-  private def bodyLength(s: UTF8String): Int = {
-    val n = s.numBytes()
-    def at(i: Int): Int = if (i >= 0) s.getByte(i) & 0xff else -1
-    if (at(n - 1) == '\n') { if (at(n - 2) == '\r') n - 2 else n - 1 }
-    else if (at(n - 1) == '\r') n - 1
-    else if (at(n - 2) == 0xc2 && at(n - 1) == 0x85) n - 2
-    else if (at(n - 3) == 0xe2 && at(n - 2) == 0x80 && (at(n - 1) == 0xa8 || at(n - 1) == 0xa9)) n - 3
-    else n
-  }
-
-  /** Whether bytes [0, len) of `s` match `shape`, where `9` stands for
-    * one ASCII digit and every other char for itself. */
-  private def fits(s: UTF8String, len: Int, shape: String): Boolean =
-    len == shape.length && {
-      var i = 0
-      var ok = true
-      while (ok && i < len) {
-        val b = s.getByte(i)
-        val c = shape.charAt(i)
-        ok = if (c == '9') b >= '0' && b <= '9' else b == c
-        i += 1
-      }
-      ok
-    }
-
-  /** `^\d{4}(\.0+)?$` over bytes [0, len). */
-  private def bareYear(s: UTF8String, len: Int): Boolean =
-    len >= 4 && fits(s, 4, "9999") && (len == 4 || (len >= 6 && s.getByte(4) == '.' && {
-      var i = 5
-      while (i < len && s.getByte(i) == '0') i += 1
-      i == len
-    }))
+  /** The rule's shape tests, matched as `rlike` matches them (`find()`). */
+  private val IsoDate = Pattern.compile("^\\d{4}-\\d{2}-\\d{2}$")
+  private val IsoDateTime = Pattern.compile("^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}$")
+  private val MonthFirst = Pattern.compile("^\\d{2}/\\d{2}/\\d{4}$")
+  private val BareYear = Pattern.compile("^\\d{4}(\\.0+)?$")
 
   /** One `try_to_date(s, fmt)`: NoDate where it returned null. */
-  private def tryParse(s: UTF8String, fmt: TimestampFormatter, zone: ZoneId): Int =
-    try DateTimeUtils.microsToDays(fmt.parse(s.toString), zone)
+  private def tryParse(s: String, fmt: TimestampFormatter, zone: ZoneId): Int =
+    try DateTimeUtils.microsToDays(fmt.parse(s), zone)
     catch {
       case _: DateTimeException | _: java.text.ParseException => NoDate
     }
@@ -284,21 +259,17 @@ object NormalizeExpressions {
     * number, or NoDate. `fmts` is in [[DateFormats]] order. */
   def parseDate(s: UTF8String, fmts: Array[TimestampFormatter], zone: ZoneId,
                 labelPath: Boolean): Int = {
-    val len = bodyLength(s)
-    if (fits(s, len, "9999-99-99")) tryParse(s, fmts(0), zone)
-    else if (fits(s, len, "9999-99-99 99:99:99")) tryParse(s, fmts(1), zone)
-    else if (fits(s, len, "99/99/9999")) {
-      val monthFirst = tryParse(s, fmts(2), zone)
-      if (monthFirst != NoDate || !labelPath) monthFirst else tryParse(s, fmts(3), zone)
-    } else if (!labelPath && bareYear(s, len)) {
-      // The rule reads the year as a trimmed double, and the trim drops
-      // only ASCII terminators: a non-ASCII one leaves no year.
-      if (len < s.numBytes() && (s.getByte(len) & 0x80) != 0) NoDate
-      else {
-        val year = (s.getByte(0) - '0') * 1000 + (s.getByte(1) - '0') * 100 +
-          (s.getByte(2) - '0') * 10 + (s.getByte(3) - '0')
-        LocalDate.of(year, 12, 31).toEpochDay.toInt
-      }
+    val str = s.toString
+    if (IsoDate.matcher(str).find()) tryParse(str, fmts(0), zone)
+    else if (IsoDateTime.matcher(str).find()) tryParse(str, fmts(1), zone)
+    else if (MonthFirst.matcher(str).find()) {
+      val monthFirst = tryParse(str, fmts(2), zone)
+      if (monthFirst != NoDate || !labelPath) monthFirst else tryParse(str, fmts(3), zone)
+    } else if (!labelPath && BareYear.matcher(str).find()) {
+      // The rule reads the year through a trimming double cast, and the
+      // trim drops only ASCII terminators: a non-ASCII one leaves no year.
+      if (str.charAt(str.length - 1) > 0x7f) NoDate
+      else LocalDate.of(Integer.parseInt(str, 0, 4, 10), 12, 31).toEpochDay.toInt
     } else NoDate
   }
 
