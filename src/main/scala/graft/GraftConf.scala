@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - `noPlanCut`: `CacheScope.truncate` persists instead of cutting.
   *  - `reliableCheckpoint`: cut through `checkpoint()`, not `localCheckpoint()`.
   *  - `checkpointDir`: reliable checkpoints' dir when the context has none.
-  *  - `streamParts`: fixed shuffle partitions for the stateful streaming gates.
+  *  - `streamParts`: fixed shuffle partitions for stateful streaming plans
+  *    (`streaming.StreamSession.sized`).
   *  - `seedState`: `util.StateSeed` builds fixtures once per JVM (Bench).
   */
 final case class GraftConf(

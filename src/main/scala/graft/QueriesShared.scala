@@ -75,60 +75,6 @@ private[graft] object QueriesShared {
 
   val Dec152 = DecimalType(15, 2)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to `n`,
-    * restoring the session value after. The live-streaming gates use
-    * this: every stateful streaming op materializes ONE state store per
-    * shuffle partition, so partition count should track stateful-key
-    * cardinality (~150 users / few-k windows here), not CPU count —
-    * 32 state stores for 150 keys is pure per-batch overhead. At real
-    * scale the same knob is sized UP with the keyspace (SCALE.md knobs).
-    */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Shuffle partitions for the stateful streaming gates, sized to the
-    * streamed table's on-disk bytes (one file-system listing, no scan):
-    * `clamp(bytes / 4 MB, 8, session cores)`. The old fixed 8 was the
-    * right small-SF choice (8 state stores for ~150 stateful keys; see
-    * [[withShufflePartitions]]) but becomes the bottleneck exactly where
-    * the rung is expensive: at sf10 the stream-stream interval join ran
-    * 4.1x faster at 32 partitions than at 8 (217.8 -> 52.8 s,
-    * identical output; SCALE.md "Streaming shuffle partitions sized to
-    * the input"), because 8 partitions cap the
-    * stateful stages at a quarter of the box. The rule keeps 8 through
-    * sf1 (events 16 MB -> 8) and widens to the core count at sf10
-    * (162 MB -> 32) — the local-mode analogue of sizing
-    * shuffle.partitions to the data on a cluster (SCALE.md knobs table:
-    * ~2-3x total cores with AQE coalescing at 100 TB). Partition count
-    * never changes results — stateful ops are key-partitioned whatever
-    * the count — which is what makes this a pure throughput knob.
-    *
-    * The session's `spark.graft.streamParts` ([[GraftConf]]) overrides
-    * the rule: the small test SFs all resolve to 8, so the widened path
-    * is proven by forcing 32 and re-running the full oracle compare.
-    */
-  def streamParts(s: SparkSession, dir: String, table: String = "events"): Int =
-    GraftConf(s).streamParts.getOrElse {
-      val bytes =
-        try {
-          val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-          p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .getContentSummary(p).getLength
-        } catch { case _: Throwable => 0L }
-      sizeStreamParts(bytes, s.sparkContext.defaultParallelism)
-    }
-
-  /** The [[streamParts]] arithmetic, pure for testing:
-    * `max(8, min(cores, bytes / 4 MB))` — the 8-partition floor wins
-    * over the core cap on a narrow session (a <8-core box still gets 8
-    * state stores; the floor is a state-granularity choice, not a
-    * parallelism one). */
-  private[graft] def sizeStreamParts(bytes: Long, cores: Int): Int =
-    math.max(8, math.min(cores, (bytes / (4L << 20)).toInt))
-
   /** Batch sessionization over the events table (gap > 30 min starts a
     * session): lag + running sum of start flags assigns session ids in
     * two window passes over ONE shuffle (same partitioning), then one

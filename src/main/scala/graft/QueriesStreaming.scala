@@ -30,51 +30,49 @@ private[graft] object QueriesStreaming {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
       .exists(t => String.valueOf(t.getMessage).contains(needle))
 
-  /** The one start path of the streaming gates: `query` is built and
-    * started with `spark.sql.shuffle.partitions` at [[streamParts]] of
-    * `table` (a streaming query fixes its stateful partition count when
-    * it starts), then drained.
+  /** The one start path of the streaming gates: `start` starts the
+    * gate's query over `stream` re-bound by
+    * [[graft.streaming.StreamSession.sized]], so the query, its
+    * foreachBatch bodies included, plans at the partition count sized to
+    * the stream's input; the query it returns is then drained.
     */
-  private def runStream(s: SparkSession, dir: String, table: String = "events")
-                       (query: => StreamingQuery): Unit =
-    withShufflePartitions(s, streamParts(s, dir, table))(query.awaitTermination())
+  private def runStream(stream: DataFrame)(start: DataFrame => StreamingQuery): Unit =
+    start(graft.streaming.StreamSession.sized(stream)).awaitTermination()
 
   /** A sink-to-Parquet gate: `stream` appended (Append mode, AvailableNow)
     * to a fresh Parquet table, checkpointed and stored under scratch
     * dirs named by `tag`, and read back once drained.
     */
-  private def appendParquet(s: SparkSession, dir: String, tag: String)
-                           (stream: => DataFrame): DataFrame = {
+  private def appendParquet(s: SparkSession, tag: String)(stream: DataFrame): DataFrame = {
     val ckpt = graft.util.Scratch.dir(tag + "_ck")
     val out = graft.util.Scratch.dir(tag + "_out") + "/t"
-    runStream(s, dir) {
-      stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", out).start()
-    }
+    runStream(stream)(_.writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .format("parquet").option("path", out).start())
     s.read.parquet(out)
   }
 
-  /** A restart gate: `sink(chaos)` runs until `chaos` throws at batch 1
-    * (`what` names the point it fails at) and must die of exactly that
-    * failure; the same sink then restarts from the unchanged checkpoint,
-    * which REPLAYS batch 1 (foreachBatch is at-least-once), and drains.
+  /** A restart gate: `sink(stream, chaos)` runs until `chaos` throws at
+    * batch 1 (`what` names the point it fails at) and must die of
+    * exactly that failure; the same sink then restarts from the
+    * unchanged checkpoint, which REPLAYS batch 1 (foreachBatch is
+    * at-least-once), and drains.
     */
-  private def crashAndReplay(s: SparkSession, dir: String, gate: String, what: String)
-                            (sink: (Long => Unit) => StreamingQuery): Unit = {
+  private def crashAndReplay(stream: DataFrame, gate: String, what: String)
+                            (sink: (DataFrame, Long => Unit) => StreamingQuery): Unit = {
     val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
     val chaos: Long => Unit = b =>
       if (b == 1L && tripped.compareAndSet(false, true))
         throw new RuntimeException(s"injected: $what")
-    runStream(s, dir, "documents") {
-      val q1 = sink(chaos)
+    runStream(stream) { st =>
+      val q1 = sink(st, chaos)
       try { q1.awaitTermination(); throw new IllegalStateException(
         s"$gate: the injected failure never fired")
       } catch {
         case e: StreamingQueryException if causeChainContains(e, "injected") => () // the planned crash
       }
-      sink(chaos)
+      sink(st, chaos)
     }
   }
 
@@ -119,17 +117,15 @@ private[graft] object QueriesStreaming {
     * on (user_id, event_type), the latest (ts, event_id) winning — the
     * order every merge oracle replicates.
     */
-  private def mergeEvents(s: SparkSession, dir: String, tag: String, events: => DataFrame,
+  private def mergeEvents(s: SparkSession, tag: String, events: DataFrame,
                           partitionCol: Option[String] = None): DataFrame = {
     val ckpt = graft.util.Scratch.dir(tag + "_ck")
     val statePath = graft.util.Scratch.dir(tag + "_state") + "/state"
     val cols = Seq("user_id", "event_type", "event_id", "ts", "value").map(col)
-    runStream(s, dir) {
-      graft.streaming.EventStreams.mergeSink(events.select(cols: _*), statePath,
-        keys = Seq("user_id", "event_type"),
-        precedence = Seq(col("ts").desc, col("event_id").desc),
-        checkpoint = ckpt, partitionCol = partitionCol)
-    }
+    runStream(events.select(cols: _*))(graft.streaming.EventStreams.mergeSink(_, statePath,
+      keys = Seq("user_id", "event_type"),
+      precedence = Seq(col("ts").desc, col("event_id").desc),
+      checkpoint = ckpt, partitionCol = partitionCol))
     s.read.parquet(statePath).select(cols: _*)
   }
 
@@ -160,7 +156,7 @@ private[graft] object QueriesStreaming {
     // 0s delay) has closed, so the oracle is the batch aggregate minus
     // windows whose end is past the last event.
     "streaming_tumbling_live" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_stream")(graft.streaming.EventStreams
+      appendParquet(s, "graft_stream")(graft.streaming.EventStreams
           .tumblingAgg(Tables.eventsStream(s, dir), watermark = "0 seconds"))
         .select(col("hour_start"), col("event_type"), col("cnt"),
           col("sum_value").cast(DoubleType).as("sum_value"))),
@@ -172,7 +168,7 @@ private[graft] object QueriesStreaming {
     // so emission is per-window: the younger of an event's two windows
     // can stay open (unemitted) while the older one closes.
     "streaming_sliding_live" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_sslide")(graft.streaming.EventStreams
+      appendParquet(s, "graft_sslide")(graft.streaming.EventStreams
           .slidingAgg(Tables.eventsStream(s, dir), watermark = "0 seconds"))
         .select(col("win_start"), col("event_type"), col("cnt"),
           col("sum_value").cast(DoubleType).as("sum_value"))),
@@ -183,7 +179,7 @@ private[graft] object QueriesStreaming {
     // older window drops it, the overlap behavior the tumbling late gate
     // can never exercise (EventStreamsSpec pins the two-window boundary).
     "streaming_sliding_late" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_sslate2")(graft.streaming.EventStreams
+      appendParquet(s, "graft_sslate2")(graft.streaming.EventStreams
           .slidingAgg(Tables.lateWavedEventsStream(s, dir, nWaves = 4),
             watermark = "96 hours"))
         .select(col("win_start"), col("event_type"), col("cnt"),
@@ -222,10 +218,8 @@ private[graft] object QueriesStreaming {
       val stream = docWaves(s, dir, docs, "graft_bm25w", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_bm25w_state")
       val ckpt = graft.util.Scratch.dir("graft_bm25w_ck")
-      runStream(s, dir, "documents") {
-        graft.streaming.EventStreams.bm25IndexSink(stream, "doc_id", "text",
-          terms, statePath, ckpt)
-      }
+      runStream(stream)(graft.streaming.EventStreams.bm25IndexSink(_, "doc_id", "text",
+        terms, statePath, ckpt))
       requireConsolidated(statePath, "/tf")
       Bm25.scoreIndex(
         s.read.parquet(statePath + "/tf").drop("wave"),
@@ -252,9 +246,9 @@ private[graft] object QueriesStreaming {
       val stream = docWaves(s, dir, docs, "graft_bm25rw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_bm25rw_state")
       val ckpt = graft.util.Scratch.dir("graft_bm25rw_ck")
-      crashAndReplay(s, dir, "streaming_bm25_restart",
-          "both sidecars written and compacted, tick commit lost") { chaos =>
-        graft.streaming.EventStreams.bm25IndexSink(stream, "doc_id", "text",
+      crashAndReplay(stream, "streaming_bm25_restart",
+          "both sidecars written and compacted, tick commit lost") { (st, chaos) =>
+        graft.streaming.EventStreams.bm25IndexSink(st, "doc_id", "text",
           terms, statePath, ckpt, chaosAfterTick = chaos)
       }
       requireConsolidated(statePath, "/tf", "/stats")
@@ -276,9 +270,8 @@ private[graft] object QueriesStreaming {
       val stream = docWaves(s, dir, docs, "graft_lmw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_lmw_state")
       val ckpt = graft.util.Scratch.dir("graft_lmw_ck")
-      runStream(s, dir, "documents") {
-        graft.streaming.EventStreams.lmIndexSink(stream, "doc_id", "text", statePath, ckpt)
-      }
+      runStream(stream)(graft.streaming.EventStreams.lmIndexSink(_, "doc_id", "text",
+        statePath, ckpt))
       requireConsolidated(statePath, "/tf")
       graft.text.LanguageModel.surprisalFromTf(
         graft.util.CacheScope.untracked(
@@ -299,9 +292,8 @@ private[graft] object QueriesStreaming {
       val stream = docWaves(s, dir, docs, "graft_lmbw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_lmbw_state")
       val ckpt = graft.util.Scratch.dir("graft_lmbw_ck")
-      runStream(s, dir, "documents") {
-        graft.streaming.EventStreams.lmBigramIndexSink(stream, "doc_id", "text", statePath, ckpt)
-      }
+      runStream(stream)(graft.streaming.EventStreams.lmBigramIndexSink(_, "doc_id", "text",
+        statePath, ckpt))
       requireConsolidated(statePath, "/bitf", "/tf")
       val utf = s.read.parquet(statePath + "/tf").drop("wave")
       graft.text.LanguageModel.bigramSurprisalFromTf(
@@ -326,10 +318,8 @@ private[graft] object QueriesStreaming {
       val stream = docWaves(s, dir, docs, "graft_spanw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_spanw_state")
       val ckpt = graft.util.Scratch.dir("graft_spanw_ck")
-      runStream(s, dir, "documents") {
-        graft.streaming.EventStreams.spanIndexSink(stream, "doc_id", "text",
-          w = 8, statePath, ckpt)
-      }
+      runStream(stream)(graft.streaming.EventStreams.spanIndexSink(_, "doc_id", "text",
+        w = 8, statePath, ckpt))
       requireConsolidated(statePath, "/win")
       graft.text.SpanDedup.ngramSpanStatsFromSlice(
         graft.util.CacheScope.untracked(
@@ -352,9 +342,9 @@ private[graft] object QueriesStreaming {
       val stream = docWaves(s, dir, docs, "graft_spanrw", filesPerWave = Tables.WaveStageFiles)
       val statePath = graft.util.Scratch.dir("graft_spanrw_state")
       val ckpt = graft.util.Scratch.dir("graft_spanrw_ck")
-      crashAndReplay(s, dir, "streaming_span_dedup_restart",
-          "wave written and compacted, tick commit lost") { chaos =>
-        graft.streaming.EventStreams.spanIndexSink(stream, "doc_id", "text",
+      crashAndReplay(stream, "streaming_span_dedup_restart",
+          "wave written and compacted, tick commit lost") { (st, chaos) =>
+        graft.streaming.EventStreams.spanIndexSink(st, "doc_id", "text",
           w = 8, statePath, ckpt, chaosAfterTick = chaos)
       }
       requireConsolidated(statePath, "/win")
@@ -370,10 +360,8 @@ private[graft] object QueriesStreaming {
       val statePath = graft.util.Scratch.dir("graft_incw_state") + "/index"
       val acceptedPath = graft.util.Scratch.dir("graft_incw_acc") + "/accepted"
       val ckpt = graft.util.Scratch.dir("graft_incw_ck")
-      runStream(s, dir, "documents") {
-        graft.streaming.EventStreams.corpusDedupSink(stream, "doc_id", "text",
-          statePath, acceptedPath, ckpt)
-      }
+      runStream(stream)(graft.streaming.EventStreams.corpusDedupSink(_, "doc_id", "text",
+        statePath, acceptedPath, ckpt))
       s.read.parquet(acceptedPath)
     }),
 
@@ -390,10 +378,8 @@ private[graft] object QueriesStreaming {
       val statePath = graft.util.Scratch.dir("graft_lblw_state") + "/index"
       val labelsPath = graft.util.Scratch.dir("graft_lblw_lbl") + "/labels"
       val ckpt = graft.util.Scratch.dir("graft_lblw_ck")
-      runStream(s, dir, "documents") {
-        graft.streaming.EventStreams.corpusLabelSink(stream, "doc_id", "text",
-          statePath, labelsPath, ckpt)
-      }
+      runStream(stream)(graft.streaming.EventStreams.corpusLabelSink(_, "doc_id", "text",
+        statePath, labelsPath, ckpt))
       graft.ops.Windows.topKPerGroup(s.read.parquet(labelsPath),
           Seq("doc_id"), Seq(col("wave").desc), k = 1)
         .select(col("doc_id"), col("rep"))
@@ -413,9 +399,9 @@ private[graft] object QueriesStreaming {
       val statePath = graft.util.Scratch.dir("graft_rsw_state") + "/index"
       val acceptedPath = graft.util.Scratch.dir("graft_rsw_acc") + "/accepted"
       val ckpt = graft.util.Scratch.dir("graft_rsw_ck")
-      crashAndReplay(s, dir, "streaming_dedup_restart",
-          "accepted wave committed, index waves lost") { chaos =>
-        graft.streaming.EventStreams.corpusDedupSink(stream, "doc_id", "text",
+      crashAndReplay(stream, "streaming_dedup_restart",
+          "accepted wave committed, index waves lost") { (st, chaos) =>
+        graft.streaming.EventStreams.corpusDedupSink(st, "doc_id", "text",
           statePath, acceptedPath, ckpt, chaosAfterAccept = chaos)
       }
       s.read.parquet(acceptedPath)
@@ -436,7 +422,7 @@ private[graft] object QueriesStreaming {
     // Watermarked streaming dedup on the natural key; oracle: every
     // events row once.
     "streaming_dedup_live" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_sdedup")(graft.streaming.EventStreams
+      appendParquet(s, "graft_sdedup")(graft.streaming.EventStreams
         .dedupStream(Tables.eventsStream(s, dir), watermark = "2 hours")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts"), col("value")))),
@@ -455,7 +441,7 @@ private[graft] object QueriesStreaming {
     // (maxFilesPerTrigger unset — see EventStreams.sessionize's
     // single-wave ordering contract).
     "streaming_sessionize_live" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_ssess")(streamSessions(s, Tables.eventsStream(s, dir)))),
+      appendParquet(s, "graft_ssess")(streamSessions(s, Tables.eventsStream(s, dir)))),
 
     // ---- live incremental MERGE sink ---------------------------------------
     // foreachBatch MERGE into Parquet state, executed for real: the
@@ -463,7 +449,7 @@ private[graft] object QueriesStreaming {
     // state equals a batch last-write-wins dedup over all events no
     // matter how the stream micro-batched (the convergence contract).
     "streaming_merge_live" -> ((s, dir) =>
-      mergeEvents(s, dir, "graft_smerge", Tables.eventsStream(s, dir))),
+      mergeEvents(s, "graft_smerge", Tables.eventsStream(s, dir))),
 
     // ---- multi-wave delivery twins ----------------------------------------
     // The same sessionize / merge pipelines driven through the waved
@@ -474,7 +460,7 @@ private[graft] object QueriesStreaming {
     // IDENTICAL to the _live twins: re-batching must not change a single
     // answer — that is the cross-micro-batch state contract.
     "streaming_sessionize_waves" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_ssessw")(
+      appendParquet(s, "graft_ssessw")(
         streamSessions(s, Tables.wavedEventsStream(s, dir, nWaves = 3)))),
 
     // Partition-scoped streaming MERGE: each of the three waves rewrites
@@ -484,11 +470,11 @@ private[graft] object QueriesStreaming {
     // replays cannot change a winner: the oracle is the identical batch
     // LWW dedup the other merge gates share.
     "streaming_merge_partitioned" -> ((s, dir) =>
-      mergeEvents(s, dir, "graft_smergep", Tables.wavedEventsStream(s, dir, nWaves = 3),
+      mergeEvents(s, "graft_smergep", Tables.wavedEventsStream(s, dir, nWaves = 3),
         partitionCol = Some("event_type"))),
 
     "streaming_merge_waves" -> ((s, dir) =>
-      mergeEvents(s, dir, "graft_smergew", Tables.wavedEventsStream(s, dir, nWaves = 3))),
+      mergeEvents(s, "graft_smergew", Tables.wavedEventsStream(s, dir, nWaves = 3))),
 
     // ---- late/out-of-order delivery twins ---------------------------------
     // The same pipelines driven through the LATE fixture
@@ -502,18 +488,18 @@ private[graft] object QueriesStreaming {
     // the delivery schedule and per-wave watermark sequence exactly
     // (boundary rules pinned by EventStreamsSpec's late-semantics probes).
     "streaming_tumbling_late" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_stlate")(graft.streaming.EventStreams
+      appendParquet(s, "graft_stlate")(graft.streaming.EventStreams
           .tumblingAgg(Tables.lateWavedEventsStream(s, dir, nWaves = 4),
             watermark = "96 hours"))
         .select(col("hour_start"), col("event_type"), col("cnt"),
           col("sum_value").cast(DoubleType).as("sum_value"))),
 
     "streaming_sessionize_late" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_sslate")(streamSessions(s,
+      appendParquet(s, "graft_sslate")(streamSessions(s,
         Tables.lateWavedEventsStream(s, dir, nWaves = 4), watermark = "96 hours"))),
 
     "streaming_merge_late" -> ((s, dir) =>
-      mergeEvents(s, dir, "graft_smlate", Tables.lateWavedEventsStream(s, dir, nWaves = 4))),
+      mergeEvents(s, "graft_smlate", Tables.lateWavedEventsStream(s, dir, nWaves = 4))),
 
     // ---- live heavy-hitter sketch maintenance -----------------------------
     // Three waved micro-batches each write their one-row Misra-Gries
@@ -524,11 +510,8 @@ private[graft] object QueriesStreaming {
     "streaming_heavy_hitters_live" -> ((s, dir) => {
       val ckpt = graft.util.Scratch.dir("graft_shh_ck")
       val statePath = graft.util.Scratch.dir("graft_shh_state") + "/state"
-      runStream(s, dir) {
-        graft.streaming.EventStreams.heavyHittersSink(
-          Tables.wavedEventsStream(s, dir, nWaves = 3).select(col("user_id")),
-          "user_id", k = 120 * 16, statePath, ckpt)
-      }
+      runStream(Tables.wavedEventsStream(s, dir, nWaves = 3).select(col("user_id")))(
+        graft.streaming.EventStreams.heavyHittersSink(_, "user_id", k = 120 * 16, statePath, ckpt))
       graft.ops.Profile.hhResolve(
         Tables.events(s, dir).select(col("user_id")),
         graft.ops.Profile.hhMergeAll(
@@ -542,7 +525,7 @@ private[graft] object QueriesStreaming {
     // sides watermarked (bounded join state) — the streaming as-of window,
     // executed for real and graded against the batch theta-join oracle.
     "streaming_join_live" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_sjoin")(graft.streaming.EventStreams
+      appendParquet(s, "graft_sjoin")(graft.streaming.EventStreams
         .clickPurchaseJoin(Tables.eventsStream(s, dir), watermark = "2 hours"))),
 
     // Late/out-of-order twin of the stream-stream interval join: rows
@@ -555,7 +538,7 @@ private[graft] object QueriesStreaming {
     // derivation comment). EventStreamsSpec pins the drop-vs-match rule
     // per side on a controlled fixture.
     "streaming_join_late" -> ((s, dir) =>
-      appendParquet(s, dir, "graft_sjlate")(graft.streaming.EventStreams
+      appendParquet(s, "graft_sjlate")(graft.streaming.EventStreams
         .clickPurchaseJoin(Tables.lateWavedEventsStream(s, dir, nWaves = 4),
           watermark = "96 hours")))
   )

@@ -17,6 +17,18 @@ object GraftShims {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.get
 
+  /** A copy of `spark`'s session state (confs, temp views, functions)
+    * over the same SparkContext, which later writes on either side do
+    * not reach (`cloneSession` is `private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `ds`'s analyzed plan bound to `spark`: the same rows, planned and
+    * started under `spark`'s confs. */
+  def withSession[T](ds: Dataset[T], spark: SparkSession): Dataset[T] =
+    classic.Dataset[T](spark.asInstanceOf[classic.SparkSession],
+      ds.asInstanceOf[classic.Dataset[T]].logicalPlan)(ds.encoder)
+
   /** Register a temp function builder on a live session (the function
     * registry sits behind `private[sql] sessionState`). */
   def registerFunction(spark: SparkSession, name: String,

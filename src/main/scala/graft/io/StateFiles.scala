@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -121,10 +122,14 @@ object StateFiles {
     * schema (from the metadata Spark's writer stores) and the file's
     * range of each of `keys` over all row groups. A key column drops out
     * of `ranges` when any non-empty row group lacks its statistics, or
-    * when its type has no [[comparable]] form.
+    * when its type has no [[comparable]] form. Build `options` once per
+    * batch of footers (`HadoopReadOptions.builder(conf).build()`): a
+    * reader opened without them builds a fresh `Configuration`, which
+    * re-parses the default resources for every file.
     */
-  def footer(conf: Configuration, file: Path, keys: Seq[(String, DataType)]): Footer = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+  def footer(conf: Configuration, options: ParquetReadOptions, file: Path,
+             keys: Seq[(String, DataType)]): Footer = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), options)
     val meta = try reader.getFooter finally reader.close()
     val schema = Option(meta.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
       .map(DataType.fromJson(_).asInstanceOf[StructType])

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.io.StateFiles
@@ -75,16 +75,22 @@ object Compact {
   private val WaveMaxFiles = 4
 
   /** Every data file under `root` with its length (names starting with
-    * `_` or `.` — markers, manifests, checksums — are not data). */
+    * `_` or `.` — markers, manifests, checksums — are not data), depth
+    * first in listing order, as `fs.listFiles(root, true)` lists them.
+    * The walk uses `listStatus`: `listFiles`' located statuses load each
+    * file's permission, which the local file system reads by running
+    * `ls -ld` per file. A directory that goes away mid-walk is skipped,
+    * as `listFiles` skips it. */
   private[graft] def listData(fs: FileSystem, root: Path): Seq[(Path, Long)] = {
-    val it = fs.listFiles(root, true)
     val out = Seq.newBuilder[(Path, Long)]
-    while (it.hasNext) {
-      val f = it.next()
+    def walk(statuses: Array[FileStatus]): Unit = statuses.foreach { f =>
       val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith("."))
-        out += ((f.getPath, f.getLen))
+      if (f.isFile) {
+        if (!name.startsWith("_") && !name.startsWith(".")) out += ((f.getPath, f.getLen))
+      } else try walk(fs.listStatus(f.getPath))
+      catch { case _: java.io.FileNotFoundException => () }
     }
+    walk(fs.listStatus(root))
     out.result()
   }
 

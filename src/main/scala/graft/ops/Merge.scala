@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -158,7 +159,8 @@ object Merge {
         s"mergeInto: $statePath is not partitioned by $pc alone")
     }
     val keyTypes = keys.map(k => k -> incoming.schema(k).dataType)
-    val footers = files.map { case (f, _) => f -> StateFiles.footer(conf, f, keyTypes) }
+    val readOptions = HadoopReadOptions.builder(conf).build()
+    val footers = files.map { case (f, _) => f -> StateFiles.footer(conf, readOptions, f, keyTypes) }
     val stored = footers.head._2.schema.getOrElse(spark.read.parquet(statePath).schema)
     val schema = partitionCol.fold(stored)(pc =>
       StructType(stored.filterNot(_.name == pc) :+ incoming.schema(pc)))

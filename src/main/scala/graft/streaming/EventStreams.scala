@@ -260,17 +260,19 @@ object EventStreams {
   /** Tumbling-window aggregate with a watermark (the streaming twin of the
     * `events_tumbling` batch query): count + exact decimal sum per
     * (hour, event_type). Late rows beyond `watermark` are dropped, which
-    * bounds state.
+    * bounds state. A streaming result is on a [[StreamSession.sized]]
+    * clone of the input's session, as are the other stateful operators'
+    * below.
     */
   def tumblingAgg(events: DataFrame, watermark: String = "2 hours",
                   windowLen: String = "1 hour"): DataFrame =
-    events
+    StreamSession.sized(events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), windowLen), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
         sum(col("value").cast(DecimalType(18, 6))).cast(DecimalType(20, 6)).as("sum_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
-        col("cnt"), col("sum_value"))
+        col("cnt"), col("sum_value")))
 
   /** Sliding-window aggregate with a watermark (the streaming twin of the
     * `events_sliding` batch query): each event lands in windowLen/slide
@@ -284,13 +286,13 @@ object EventStreams {
     */
   def slidingAgg(events: DataFrame, watermark: String = "2 hours",
                  windowLen: String = "2 hours", slide: String = "1 hour"): DataFrame =
-    events
+    StreamSession.sized(events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
         sum(col("value").cast(DecimalType(18, 6))).cast(DecimalType(20, 6)).as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
-        col("cnt"), col("sum_value"))
+        col("cnt"), col("sum_value")))
 
   /** Custom-state sessionization via flatMapGroupsWithState: a session is
     * a run of events per user with gaps < `gapMs`. A session closes either
@@ -318,7 +320,7 @@ object EventStreams {
   def sessionize(events: Dataset[Event], gapMs: Long,
                  watermark: String = "0 seconds"): Dataset[Session] = {
     import events.sparkSession.implicits._
-    events
+    StreamSession.sized(events
       .withWatermark("ts", watermark)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
@@ -355,7 +357,7 @@ object EventStreams {
             }
             closed.result().iterator
           }
-      }
+      })
   }
 
   /** Watermarked streaming dedup on the natural key: exactly-once output
@@ -363,8 +365,8 @@ object EventStreams {
     * watermark (the unbounded-state dedup is the 100 TB failure mode).
     */
   def dedupStream(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("user_id", "event_type", "event_id")
+    StreamSession.sized(events.withWatermark("ts", watermark)
+      .dropDuplicatesWithinWatermark("user_id", "event_type", "event_id"))
 
   /** Stream-stream interval join: each click joins purchases of the same
     * user within [-1h, 0] event time — both sides watermarked so join
@@ -379,12 +381,12 @@ object EventStreams {
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_user_id"),
         col("ts").as("purchase_ts"), col("value").as("purchase_value"))
       .withWatermark("purchase_ts", watermark)
-    clicks.join(purchases,
+    StreamSession.sized(clicks.join(purchases,
       col("user_id") === col("p_user_id") &&
         col("purchase_ts") <= col("click_ts") &&
         col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR"))
       .select(col("click_id"), col("user_id"), col("click_ts"),
-        col("purchase_id"), col("purchase_ts"), col("purchase_value"))
+        col("purchase_id"), col("purchase_ts"), col("purchase_value")))
   }
 
   /** Streaming BM25 retrieval-index maintenance: each micro-batch of

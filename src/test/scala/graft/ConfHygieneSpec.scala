@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `src/main/scala` reads env vars or JVM properties except the entry
   * points and their one session builder. Session-conf writes are held
   * to a ratchet: only [[GraftSession]] may write confs, apart from the
-  * per-file sites still pinned in `ConfWritesLeft`. Parquet writes under
+  * per-file sites pinned in `ConfWrites`; session clones are held to
+  * the one re-binding helper (`Clones`). Parquet writes under
   * `graft/ops`, `graft/io` and `graft/streaming` are held to a second
   * ratchet: they go through the one state writer
   * ([[graft.io.StateFiles]]), apart from the sites pinned in
@@ -20,11 +21,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[graft.ops.Compact]]), apart from the sites pinned in
   * `FsMovesLeft`. Streaming has one start path, held to a fourth:
   * under `graft/streaming` and `graft/Queries*.scala`, a `foreachBatch`
-  * sink starts only in `EventStreams`' driver, an AvailableNow trigger
-  * only there and in `QueriesStreaming`'s gate runner, and a
-  * shuffle-partition scope only in that runner; under `graft/streaming`,
-  * a wave write and a wave consolidation happen only in the
-  * `WaveState` handle (`StartPath`). */
+  * sink starts only in `EventStreams`' driver, and an AvailableNow
+  * trigger only there and in `QueriesStreaming`'s gate runner (which
+  * sizes the gate's partitions through the stream-session helper);
+  * under `graft/streaming`, a wave write and a wave consolidation
+  * happen only in the `WaveState` handle (`StartPath`). */
 class ConfHygieneSpec extends AnyFunSuite {
 
   private val EntryPoints =
@@ -34,10 +35,20 @@ class ConfHygieneSpec extends AnyFunSuite {
 
   private val ConfWrite = """conf\.(set|unset)\b""".r
 
-  /** Session-conf writes library code still makes, per file: the shuffle
-    * partition count around the streaming gates. Lower a pin when a site
-    * goes. */
-  private val ConfWritesLeft = Map("graft/QueriesShared.scala" -> 2)
+  /** The one stream-session helper: it clones a caller's session and
+    * writes only the clone's conf. */
+  private val Helper = "graft/streaming/StreamSession.scala"
+
+  /** Session-conf writes library code makes, per file: the partition
+    * count the helper sets on the clone it builds. No library code
+    * writes a caller's session (`graft/QueriesShared.scala` held the
+    * last two such writes, a shuffle-partition scope). */
+  private val ConfWrites = Map(Helper -> 1)
+
+  private val CloneCall = """\.cloneSession\(""".r
+
+  /** Session clones, per file: the helper's, through the bridge's. */
+  private val Clones = Map(Helper -> 1, "graft/functions/SparkShims.scala" -> 1)
 
   /** A DataFrame write chain ending in a Parquet write, within one
     * statement: `.write`, then a `.` call (possibly lines later), and
@@ -71,7 +82,6 @@ class ConfHygieneSpec extends AnyFunSuite {
   private val StartPath: Seq[(Regex, String, Map[String, Int], Boolean)] = Seq(
     ("""\.foreachBatch""".r, "foreachBatch starts", Map(Driver -> 1), true),
     ("""Trigger\.AvailableNow""".r, "AvailableNow triggers", Map(Driver -> 1, Runner -> 1), true),
-    ("""withShufflePartitions\(""".r, "shuffle-partition scopes", Map(Runner -> 1), true),
     ("""StateFiles\.writeWave\(""".r, "wave writes", Map(Driver -> 1), false),
     ("""consolidateWaves\(""".r, "wave consolidations", Map(Driver -> 1), false))
 
@@ -109,10 +119,14 @@ class ConfHygieneSpec extends AnyFunSuite {
   private def violations(root: Path): Seq[String] = hits(root, Read, EntryPoints).map(_._2)
 
   /** Every conf write in a file whose write count differs from its pin
-    * (zero for files not in `ConfWritesLeft`), plus pinned files that
-    * no longer have their count. */
+    * (zero for files not in `ConfWrites`), plus pinned files that no
+    * longer have their count. */
   private def confWriteViolations(root: Path): Seq[String] =
-    ratchet(hits(root, ConfWrite, Set("graft/GraftSession.scala")), ConfWritesLeft, "conf writes")
+    ratchet(hits(root, ConfWrite, Set("graft/GraftSession.scala")), ConfWrites, "conf writes")
+
+  /** Every session clone in a file whose count differs from `Clones`. */
+  private def cloneViolations(root: Path): Seq[String] =
+    ratchet(hits(root, CloneCall, Set.empty), Clones, "session clones")
 
   /** Every Parquet write chain under the state dirs outside the writer,
     * reported at the line of its `.write`, held to `ParquetWritesLeft`. */
@@ -162,6 +176,25 @@ class ConfHygieneSpec extends AnyFunSuite {
       "library code must not write the caller's session confs:\n" + found.mkString("\n"))
   }
 
+  test("sessions are cloned only by the one stream-session helper") {
+    val found = cloneViolations(mainRoot)
+    assert(found.isEmpty,
+      "re-bind a plan to a session clone through graft.streaming.StreamSession:\n" +
+        found.mkString("\n"))
+  }
+
+  test("the clone check names the file and line outside the helper") {
+    val root = Files.createTempDirectory("graft_hygiene_clones")
+    Seq("streaming", "functions", "ops").foreach(d => Files.createDirectories(root.resolve(s"graft/$d")))
+    def put(rel: String, text: String) = Files.writeString(root.resolve(rel), text)
+    put(Helper, "val c = GraftShims.cloneSession(caller)\n")
+    put("graft/functions/SparkShims.scala", "def cloneSession(s: S): S = s.cloneSession()\n")
+    put("graft/ops/Merge.scala", "val c = GraftShims.cloneSession(spark)\n")
+    val found = cloneViolations(root).map(_.replace(s"$root/", ""))
+    assert(found == Seq("graft/ops/Merge.scala: 0 session clones pinned, 1 found",
+      "graft/ops/Merge.scala:1: val c = GraftShims.cloneSession(spark)"), found)
+  }
+
   test("state Parquet writes go through the one writer, apart from the pinned sites") {
     val found = parquetWriteViolations(mainRoot)
     assert(found.isEmpty,
@@ -188,21 +221,19 @@ class ConfHygieneSpec extends AnyFunSuite {
     put(Driver, ".foreachBatch(f)\n.trigger(Trigger.AvailableNow())\n" +
       "StateFiles.writeWave(df, p, w)\nCompact.consolidateWaves(s, p, w)\n")
     put("graft/streaming/Other.scala", "q.foreachBatch(f)\n")
-    put(Runner, "withShufflePartitions(s, n)(a)\nwithShufflePartitions(s, n)(b)\n" +
-      "Trigger.AvailableNow()\n")
-    put("graft/QueriesShared.scala", "def withShufflePartitions[T](s: S, n: Int)\n" +
-      "StateFiles.writeWave(df, p, w)\n")
+    put(Runner, "Trigger.AvailableNow()\n.trigger(Trigger.AvailableNow())\n")
+    put("graft/QueriesShared.scala", "StateFiles.writeWave(df, p, w)\n")
     put("graft/QueriesText.scala", ".trigger(Trigger.AvailableNow())\n")
     put("graft/ops/Compact.scala", "def consolidateWaves(s: S)\nconsolidateWaves(s, p, w)\n")
     val found = startPathViolations(root).map(_.replace(s"$root/", ""))
     assert(found == Seq(
       "graft/streaming/Other.scala: 0 foreachBatch starts pinned, 1 found",
       "graft/streaming/Other.scala:1: q.foreachBatch(f)",
+      "graft/QueriesStreaming.scala: 1 AvailableNow triggers pinned, 2 found",
+      "graft/QueriesStreaming.scala:1: Trigger.AvailableNow()",
+      "graft/QueriesStreaming.scala:2: .trigger(Trigger.AvailableNow())",
       "graft/QueriesText.scala: 0 AvailableNow triggers pinned, 1 found",
-      "graft/QueriesText.scala:1: .trigger(Trigger.AvailableNow())",
-      "graft/QueriesStreaming.scala: 1 shuffle-partition scopes pinned, 2 found",
-      "graft/QueriesStreaming.scala:1: withShufflePartitions(s, n)(a)",
-      "graft/QueriesStreaming.scala:2: withShufflePartitions(s, n)(b)"), found)
+      "graft/QueriesText.scala:1: .trigger(Trigger.AvailableNow())"), found)
   }
 
   test("the rename/delete check names the file and line, and spares the swap") {
@@ -255,11 +286,12 @@ class ConfHygieneSpec extends AnyFunSuite {
     assert(found.size == 1, found)
     assert(found.head.contains("graft/util/Knob.scala:2:"), found.head)
     val writes = confWriteViolations(root)
-    assert(writes.head == "graft/QueriesShared.scala: 2 conf writes pinned, 3 found", writes)
+    assert(writes.head == "graft/QueriesShared.scala: 0 conf writes pinned, 3 found", writes)
     assert(writes.exists(_.contains("graft/util/Knob.scala:3:")), writes)
     assert(!writes.exists(_.contains("GraftSession")), writes)
     // A file at its pin is spared.
-    Files.writeString(shared, "s.conf.set(\"p\", n)\ns.conf.set(\"p\", prev)\n")
-    assert(!confWriteViolations(root).exists(_.contains("QueriesShared")))
+    Files.createDirectories(root.resolve(Helper).getParent)
+    Files.writeString(root.resolve(Helper), "clone.conf.set(\"p\", n)\n")
+    assert(!confWriteViolations(root).exists(_.contains(Helper)))
   }
 }

@@ -29,16 +29,16 @@ class GraftConfSpec extends SparkSpec {
   }
 
   test("a bad spark.graft.streamParts fails with the key named") {
+    val rate = spark.readStream.format("rate").load()
     for (bad <- Seq("x", "0", "-3")) {
       val e = intercept[IllegalArgumentException](
         withConf(GraftConf.StreamParts -> bad)(GraftConf(spark)))
       assert(e.getMessage.contains(GraftConf.StreamParts), e.getMessage)
       val e2 = intercept[IllegalArgumentException](
-        withConf(GraftConf.StreamParts -> bad)(QueriesShared.streamParts(spark, "/nonexistent")))
+        withConf(GraftConf.StreamParts -> bad)(streaming.StreamSession.parts(rate)))
       assert(e2.getMessage.contains(GraftConf.StreamParts), e2.getMessage)
     }
-    assert(withConf(GraftConf.StreamParts -> "32")(
-      QueriesShared.streamParts(spark, "/nonexistent")) == 32)
+    assert(withConf(GraftConf.StreamParts -> "32")(streaming.StreamSession.parts(rate)) == 32)
   }
 
   test("a switch that is not a boolean fails with the key named") {

@@ -23,12 +23,12 @@ object StreamDrive {
     val q1 = streaming.EventStreams.dedupStream(stream)
       .writeStream.format("memory").queryName("dd").outputMode("append").start()
     q1.processAllAvailable(); q1.stop()
-    println(s"DEDUP_ROWS=${spark.table("dd").count()} SRC=${ev.count()}")
+    println(s"DEDUP_ROWS=${q1.sparkSession.table("dd").count()} SRC=${ev.count()}")
 
     val q2 = streaming.EventStreams.clickPurchaseJoin(stream)
       .writeStream.format("memory").queryName("cp").outputMode("append").start()
     q2.processAllAvailable(); q2.stop()
-    val streamed = spark.table("cp").count()
+    val streamed = q2.sparkSession.table("cp").count()
     val clicks = ev.where(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
     val purch = ev.where(col("event_type") === "purchase")
@@ -48,7 +48,7 @@ object StreamDrive {
     val q3 = streaming.EventStreams.sessionize(evStream, gapMs = 30 * 60 * 1000)
       .writeStream.format("memory").queryName("sess").outputMode("append").start()
     q3.processAllAvailable(); q3.stop()
-    val streamedSessions = spark.table("sess")
+    val streamedSessions = q3.sparkSession.table("sess")
       .select("user_id", "session_start", "session_end", "n_events")
       .collect().map(_.toSeq).toSet
     val w = org.apache.spark.sql.expressions.Window

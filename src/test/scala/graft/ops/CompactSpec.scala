@@ -189,4 +189,19 @@ class CompactSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("no table at"))
   }
+
+  test("listData lists the data files in listFiles' order, markers and checksums left out") {
+    val root = graft.util.Scratch.dir("compact_listdata") + "/t"
+    spark.range(0, 40, 1, 4).withColumn("w", col("id") % 3)
+      .write.partitionBy("w").parquet(root)
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(root + "/w=1/_marker")).close()
+    val it = fs.listFiles(p, true)
+    val expected = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(f => !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .map(f => (f.getPath, f.getLen)).toSeq
+    assert(expected.size == 12 && expected.forall(_._1.getName.endsWith(".parquet")), expected)
+    assert(Compact.listData(fs, p) == expected)
+  }
 }

@@ -107,7 +107,9 @@ class MergeQualitySpec extends SparkSpec {
     history.write.option("parquet.column.statistics.enabled", "false").parquet(statePath)
     val before = dataFiles(statePath)
     val f = new org.apache.hadoop.fs.Path(statePath, before.keys.head)
-    val footer = graft.io.StateFiles.footer(spark.sparkContext.hadoopConfiguration, f,
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footer = graft.io.StateFiles.footer(conf,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build(), f,
       history.schema.fields.toSeq.filter(s => Keys.contains(s.name)).map(s => s.name -> s.dataType))
     assert(footer.ranges.isEmpty && footer.schema.isDefined, footer)
     // Disjoint from the stored keys, yet nothing proves it: the file is touched.

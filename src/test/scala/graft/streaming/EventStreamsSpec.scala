@@ -30,7 +30,7 @@ class EventStreamsSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val streamed = spark.table("tumbling_test")
+    val streamed = q.sparkSession.table("tumbling_test")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
         BigDecimal(r.getDecimal(3)))).toSet
     val batch = EventStreams.tumblingAgg(events.toDF())
@@ -60,7 +60,7 @@ class EventStreamsSpec extends SparkSpec {
 
     // The first session closes when event 3 arrives past the gap; the
     // second stays open in state (no timeout fired in AvailableNow-style run).
-    val got = spark.table("session_test").as[Session].collect()
+    val got = q.sparkSession.table("session_test").as[Session].collect()
     assert(got.length == 1)
     assert(got.head.user_id == 1L)
     assert(got.head.n_events == 2L)
@@ -81,7 +81,7 @@ class EventStreamsSpec extends SparkSpec {
       .outputMode(OutputMode.Append()).start()
     q.processAllAvailable()
     q.stop()
-    val got = spark.table("dedup_stream_test").collect()
+    val got = q.sparkSession.table("dedup_stream_test").collect()
     assert(got.length == 2)
   }
 
@@ -98,7 +98,7 @@ class EventStreamsSpec extends SparkSpec {
       .outputMode(OutputMode.Append()).start()
     q.processAllAvailable()
     q.stop()
-    val got = spark.table("cpjoin_test").collect()
+    val got = q.sparkSession.table("cpjoin_test").collect()
       .map(r => (r.getAs[Long]("click_id"), r.getAs[Long]("purchase_id"))).toSet
     assert(got == Set((3L, 1L)))
   }
@@ -417,7 +417,7 @@ class EventStreamsSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val got = spark.table("tumbling_late_probe")
+    val got = q.sparkSession.table("tumbling_late_probe")
       .collect().map(r => (r.getTimestamp(0), r.getLong(2))).toMap
     assert(got(ts("2024-01-01 10:00:00")) == 1L, s"late row behind closed window must drop: $got")
     assert(got(ts("2024-01-01 11:00:00")) == 2L, s"in-watermark late row must fold: $got")
@@ -452,7 +452,7 @@ class EventStreamsSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val got = spark.table("sliding_late_probe")
+    val got = q.sparkSession.table("sliding_late_probe")
       .collect().map(r => (r.getTimestamp(0), r.getLong(2))).toMap
     assert(got(ts("2024-01-01 09:00:00")) == 1L, s"closed [09,11) must not see the late row: $got")
     assert(got(ts("2024-01-01 10:00:00")) == 1L, s"closed [10,12) must not see either late row: $got")
@@ -488,7 +488,7 @@ class EventStreamsSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
 
-    val got = spark.table("session_late_probe").as[Session].collect()
+    val got = q.sparkSession.table("session_late_probe").as[Session].collect()
       .map(s => (s.user_id, s.session_start, s.session_end, s.n_events)).toSet
     assert(got == Set(
       (1L, ts("2024-01-01 11:30:00"), ts("2024-01-01 11:40:00"), 3L),
@@ -529,7 +529,7 @@ class EventStreamsSpec extends SparkSpec {
       event(10, "2024-01-01 19:10:00", 4, "purchase", 4.0))
     q.processAllAvailable()
     q.stop()
-    val got = spark.table("join_late_probe")
+    val got = q.sparkSession.table("join_late_probe")
       .select("click_id", "purchase_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((2L, 1L), (3L, 4L), (6L, 7L), (11L, 10L)), got.toString)
