@@ -78,14 +78,13 @@ object StreamSession {
     * measured 662 ms per micro-batch at 4 partitions against 65 ms at 1
     * (perfbench ingest_stream), and its stateful stage held every local
     * slot while the other sinks' stages queued behind it. Up to 4 MB a
-    * source is one task's work.
-    * Above it the count widens with the input: at sf10 (events 162 MB)
-    * the interval join ran 4.1x faster at 32 partitions than at 8 on a
-    * 32-core box (SCALE.md "Streaming shuffle partitions sized to the
-    * input"), because 8 partitions capped the stateful stages at a
-    * quarter of the box. The cap keeps the stores at one per core, the
-    * local-mode analogue of sizing shuffle partitions to a cluster's
-    * cores (SCALE.md knobs table).
+    * source is one task's work. Above it the count widens with the
+    * input: at sf10 (events 162 MB) the interval join ran 4.1x faster at
+    * 32 partitions than at 8 on a 32-core box (SCALE.md "Streaming
+    * shuffle partitions sized to the input"), because 8 partitions
+    * capped the stateful stages at a quarter of the box. The cap keeps
+    * the stores at one per core, the local-mode analogue of sizing
+    * shuffle partitions to a cluster's cores (SCALE.md knobs table).
     */
   private[graft] def sizeStreamParts(bytes: Long, cores: Int): Int =
     math.max(1, math.min(cores, (bytes / (4L << 20)).toInt))
